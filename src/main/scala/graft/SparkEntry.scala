@@ -419,8 +419,7 @@ FROM events GROUP BY 1 ORDER BY day""",
     "substring_dup_execute" -> OracleSql.substringDupExecute,
     "self_repeat" -> OracleSql.selfRepeat,
     "self_repeat_execute" -> OracleSql.selfRepeatExecute,
-    // the chunked forms are pinned by the SAME oracles: at sf0.01 every
-    // document fits one chunk, where chunked == unchunked by design
+    // the _chunked keys run the same calls as their plain twins
     "substring_dup_chunked" -> OracleSql.substringDup,
     "self_repeat_chunked" -> OracleSql.selfRepeat,
     "domain_stats" -> OracleSql.domainStats,

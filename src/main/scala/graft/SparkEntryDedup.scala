@@ -558,18 +558,16 @@ private[graft] trait SparkEntryDedup { this: SparkEntry.type =>
     "self_repeat_execute" -> ((s, dir) =>
       Dedup.selfRepeatExecute(documents(s, dir), "doc_id", "text")
         .orderBy("doc_id")),
-    // chunking front-end (r11): the substring family accepting ANY
-    // document length — over-cap docs split into k−1-overlap char
-    // chunks, anchors deduped across overlaps, offsets remapped to
-    // GLOBAL coordinates. With every sf0.01 doc under one chunk the
-    // results are EXACTLY the unchunked forms', so both keys share the
-    // unchunked hash oracles; the >2^20-char path is spec-driven
+    // the chunking front-end is the substring family's only path, so
+    // these keys are the same calls as substring_dup / self_repeat; they
+    // stay as names the benchmark and the oracle map use. Every
+    // sf0.01 doc is one chunk; the >2^20-char path is spec-driven
     // (Round11Spec).
     "substring_dup_chunked" -> ((s, dir) =>
-      Dedup.substringDupChunked(documents(s, dir), "doc_id", "text")
+      Dedup.substringDup(documents(s, dir), "doc_id", "text")
         .orderBy("id_a", "id_b")),
     "self_repeat_chunked" -> ((s, dir) =>
-      Dedup.selfRepeatChunked(documents(s, dir), "doc_id", "text")
+      Dedup.selfRepeat(documents(s, dir), "doc_id", "text")
         .orderBy("doc_id")),
     // span-level train/eval decontamination (E161): verbatim runs leaking
     // from the corpus into a pseudo held-out slice (doc_id % 101 == 0)

@@ -4,12 +4,19 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
-
-/** Dedup — exact-substring spans: duplicate/contamination/self-repeat + chunked variants
-  * (split from the former 2.5k-line operators/Dedup.scala, VERDICT r13
-  * task 5). Self-typed to the aggregator so families compose freely;
-  * scale contracts live on each member's scaladoc. */
+/** Dedup — exact-substring spans: cross-document duplicates, train/eval
+  * contamination and intra-document repeats, with their executors and
+  * the coverage readout (split from the former 2.5k-line
+  * operators/Dedup.scala, VERDICT r13 task 5). All three span relations
+  * come from ONE chunked pipeline, [[spanCore]]: documents split into
+  * k−1-overlap character chunks ([[charChunks]]), winnowing anchors,
+  * one keyed window for overlap dedup and the occurrence cap, a capped
+  * self-join, per-chunk-pair text joins, `common_extend`, and offsets
+  * remapped to GLOBAL document coordinates — so every member accepts
+  * documents of any length. The three callers differ only in the
+  * candidate key, which sites face each other, and the pair predicate.
+  * Self-typed to the aggregator so families compose freely; scale
+  * contracts live on each member's scaladoc. */
 private[graft] trait DedupSubstringOps { this: Dedup.type =>
 
   /** Exact-substring duplicate spans (E156) — the dedup family the
@@ -53,8 +60,8 @@ private[graft] trait DedupSubstringOps { this: Dedup.type =>
     * join, bounding candidates at #hashes·cap² — linear in corpus size
     * (the r10 winnow doctrine); the optional pre-flight guard computes
     * the exact candidate count and refuses a blow-up loudly. Texts ship
-    * only to surviving candidates (two equi-joins on id), so payload
-    * movement is candidate-bounded, not corpus-bounded.
+    * once per candidate CHUNK PAIR (two equi-joins on chunk id), so
+    * payload movement is candidate-bounded, not corpus-bounded.
     *
     * Cites reference scope: dedup is absent from awsdataprofiler
     * (Profiler.scala:166-253 profiles only) — extension per SURVEY §2.E. */
@@ -100,56 +107,16 @@ private[graft] trait DedupSubstringOps { this: Dedup.type =>
       k: Int = 8,
       w: Int = 4,
       maxOccFreq: Int = DefaultHotFingerprintCap,
-      maxCandidatePairs: Option[Long] = Some(2000000000L)): DataFrame = {
-    graft.functions.CommonExtend.register(df.sparkSession)
-    // anchor sites: (id, pos, hash) — positions kept, unlike the
-    // near-dup path's per-doc distinct sets
-    val fp = winnowFingerprints(df, idCol, textCol, k, w)
-      .localCheckpoint(true)
-    // ABSOLUTE occurrence cap: a k-gram window appearing more than
-    // maxOccFreq times across the corpus is boilerplate (license
-    // headers, templates) — and occurrence (not document) frequency is
-    // what bounds the candidate join, Σ occ² ≤ #hashes·cap²
-    val kept = fp.join(
-      fp.groupBy("hash").agg(count(lit(1)).as("occ"))
-        .where(col("occ") <= maxOccFreq)
-        .select("hash"),
-      Seq("hash"))
-    maxCandidatePairs.foreach { bound =>
-      val est = kept.groupBy("hash").agg(count(lit(1)).as("f"))
-        .agg(coalesce(
-          sum(col("f") * (col("f") - 1L) / lit(2L)), lit(0L)).cast("long"))
-        .head().getLong(0)
-      require(est <= bound,
-        s"substringDup pre-flight: $est anchor candidate pairs under " +
-          s"occurrence cap $maxOccFreq exceed maxCandidatePairs=$bound — " +
-          "refusing the quadratic join; lower maxOccFreq or raise " +
-          "maxCandidatePairs deliberately")
-    }
-    val cands = kept.select(
-      col("id").as("id_a"), col("pos").as("pos_a"), col("hash"))
-      .join(kept.select(
-        col("id").as("id_b"), col("pos").as("pos_b"), col("hash")),
-        Seq("hash"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "pos_a", "id_b", "pos_b")
-    val texts = df.select(col(idCol).as("id"), col(textCol).as("t"))
-    val P = graft.functions.WinnowSelect.PosBase // 2^20: the packing base
-    val ext = cands
-      .join(texts.select(col("id").as("id_a"), col("t").as("ta")), Seq("id_a"))
-      .join(texts.select(col("id").as("id_b"), col("t").as("tb")), Seq("id_b"))
-      .select(
-        col("id_a"), col("id_b"),
-        call_function("common_extend",
-          col("ta"), col("pos_a"), col("tb"), col("pos_b"), lit(k)).as("enc"))
-      .where(col("enc") >= 0L)
-      .distinct() // many anchors inside one span encode the SAME span
-    ext.select(
-      col("id_a"), col("id_b"),
-      expr(s"enc div ${P * P}").cast("long").as("start_a"),
-      pmod(expr(s"enc div $P"), lit(P)).cast("long").as("start_b"),
-      pmod(col("enc"), lit(P)).cast("long").as("len"))
-  }
+      maxCandidatePairs: Option[Long] = Some(2000000000L)): DataFrame =
+    // the occurrence cap is ABSOLUTE and per hash: a k-gram window
+    // appearing more than maxOccFreq times across the corpus is
+    // boilerplate (license headers, templates) — and occurrence (not
+    // document) frequency is what bounds the candidate join
+    spanCore(Seq(df), idCol, textCol, k, w, Seq("hash"),
+      col("doc_a") < col("doc_b"), maxOccFreq, maxCandidatePairs,
+      "substringDup")
+      .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"),
+        col("start_a"), col("start_b"), col("len"))
 
   /** Cross-table exact-substring contamination (E161) — the span-level
     * train/eval decontamination pass (the application Lee et al. and the
@@ -214,49 +181,14 @@ private[graft] trait DedupSubstringOps { this: Dedup.type =>
       k: Int = 8,
       w: Int = 4,
       maxOccFreq: Int = DefaultHotFingerprintCap,
-      maxCandidatePairs: Option[Long] = Some(2000000000L)): DataFrame = {
-    graft.functions.CommonExtend.register(corpus.sparkSession)
-    val fpC = winnowFingerprints(corpus, idCol, textCol, k, w)
-      .localCheckpoint(true)
-    val fpB = winnowFingerprints(eval, idCol, textCol, k, w)
-      .localCheckpoint(true)
-    val ok = fpC.select("hash").unionAll(fpB.select("hash"))
-      .groupBy("hash").agg(count(lit(1)).as("occ"))
-      .where(col("occ") <= maxOccFreq)
-      .select("hash")
-    val keptC = fpC.join(ok, Seq("hash"))
-    val keptB = fpB.join(ok, Seq("hash"))
-    maxCandidatePairs.foreach { bound =>
-      val est = keptC.groupBy("hash").agg(count(lit(1)).as("fc"))
-        .join(keptB.groupBy("hash").agg(count(lit(1)).as("fb")), Seq("hash"))
-        .agg(coalesce(sum(col("fc") * col("fb")), lit(0L)).cast("long"))
-        .head().getLong(0)
-      require(est <= bound,
-        s"substringContamination pre-flight: $est cross candidates under " +
-          s"occurrence cap $maxOccFreq exceed maxCandidatePairs=$bound")
-    }
-    val P = graft.functions.WinnowSelect.PosBase
-    val ext = keptC.select(
-      col("id").as("corpus_id"), col("pos").as("pos_c"), col("hash"))
-      .join(keptB.select(
-        col("id").as("eval_id"), col("pos").as("pos_b"), col("hash")),
-        Seq("hash"))
-      .join(corpus.select(col(idCol).as("corpus_id"), col(textCol).as("tc")),
-        Seq("corpus_id"))
-      .join(eval.select(col(idCol).as("eval_id"), col(textCol).as("tb")),
-        Seq("eval_id"))
-      .select(
-        col("corpus_id"), col("eval_id"),
-        call_function("common_extend",
-          col("tc"), col("pos_c"), col("tb"), col("pos_b"), lit(k)).as("enc"))
-      .where(col("enc") >= 0L)
-      .distinct()
-    ext.select(
-      col("corpus_id"), col("eval_id"),
-      expr(s"enc div ${P * P}").cast("long").as("start_corpus"),
-      pmod(expr(s"enc div $P"), lit(P)).cast("long").as("start_eval"),
-      pmod(col("enc"), lit(P)).cast("long").as("len"))
-  }
+      maxCandidatePairs: Option[Long] = Some(2000000000L)): DataFrame =
+    // corpus and eval sites share one tagged union: the occurrence cap
+    // counts both sides together, the pair join is corpus × eval only
+    spanCore(Seq(corpus, eval), idCol, textCol, k, w, Seq("hash"),
+      lit(true), maxOccFreq, maxCandidatePairs, "substringContamination")
+      .select(col("doc_a").as("corpus_id"), col("doc_b").as("eval_id"),
+        col("start_a").as("start_corpus"), col("start_b").as("start_eval"),
+        col("len"))
 
   /** Interval-cut kernel shared by the decontamination and self-dedup
     * EXECUTORS: given per-document 1-based char intervals `(id, s, e)`
@@ -449,42 +381,14 @@ private[graft] trait DedupSubstringOps { this: Dedup.type =>
       k: Int = 8,
       w: Int = 4,
       maxSiteFreq: Int = DefaultHotFingerprintCap,
-      maxCandidatePairs: Option[Long] = Some(2000000000L)): DataFrame = {
-    graft.functions.CommonExtend.register(df.sparkSession)
-    val fp = winnowFingerprints(df, idCol, textCol, k, w)
-      .localCheckpoint(true)
-    val kept = fp.join(
-      fp.groupBy("id", "hash").agg(count(lit(1)).as("occ"))
-        .where(col("occ") <= maxSiteFreq)
-        .select("id", "hash"),
-      Seq("id", "hash"))
-    maxCandidatePairs.foreach { bound =>
-      val est = kept.groupBy("id", "hash").agg(count(lit(1)).as("f"))
-        .agg(coalesce(
-          sum(col("f") * (col("f") - 1L) / lit(2L)), lit(0L)).cast("long"))
-        .head().getLong(0)
-      require(est <= bound,
-        s"selfRepeat pre-flight: $est intra-document candidate pairs " +
-          s"under site cap $maxSiteFreq exceed maxCandidatePairs=$bound")
-    }
-    val P = graft.functions.WinnowSelect.PosBase
-    val ext = kept.select(col("id"), col("pos").as("p1"), col("hash"))
-      .join(kept.select(col("id"), col("pos").as("p2"), col("hash")),
-        Seq("id", "hash"))
-      .where(col("p1") < col("p2"))
-      .join(df.select(col(idCol).as("id"), col(textCol).as("t")), Seq("id"))
-      .select(
-        col("id"),
-        call_function("common_extend",
-          col("t"), col("p1"), col("t"), col("p2"), lit(k)).as("enc"))
-      .where(col("enc") >= 0L)
-      .distinct()
-    ext.select(
-      col("id"),
-      expr(s"enc div ${P * P}").cast("long").as("s1"),
-      pmod(expr(s"enc div $P"), lit(P)).cast("long").as("s2"),
-      pmod(col("enc"), lit(P)).cast("long").as("len"))
-  }
+      maxCandidatePairs: Option[Long] = Some(2000000000L)): DataFrame =
+    // the two sites may sit in different chunks of the same document —
+    // `common_extend` takes two texts, each side extends on its own chunk
+    spanCore(Seq(df), idCol, textCol, k, w, Seq("doc", "hash"),
+      col("gpos_a") < col("gpos_b"), maxSiteFreq, maxCandidatePairs,
+      "selfRepeat")
+      .select(col("doc_a").as("id"), col("start_a").as("s1"),
+        col("start_b").as("s2"), col("len"))
 
   /** Intra-document repetition-removal EXECUTOR (E188) — the action half
     * of [[selfRepeat]], and [[substringDupExecute]]'s WITHIN-document
@@ -593,298 +497,153 @@ private[graft] trait DedupSubstringOps { this: Dedup.type =>
           .as("dup_char_fraction"))
   }
 
-  /** Default chunk width for the substring family's chunking front-end:
-    * half the 2²⁰ packing cap — far above any qualifying span while
-    * keeping every chunk safely below [[graft.functions.WinnowSelect]]'s
-    * position-packing limit. */
-  val DefaultChunkChars: Int = 1 << 19
+  /** Chunk width of the span pipeline: 2²⁰−1, the longest text
+    * [[winnowFingerprints]]' position packing admits. Every document
+    * that fits is ONE chunk — extension never truncates inside it —
+    * and only longer documents split. */
+  private val ChunkChars: Int =
+    (graft.functions.WinnowSelect.PosBase - 1).toInt
 
   /** Overlapping character chunks (r11, VERDICT r10 task 6 — the
     * front-end that lets the substring family accept ANY document
-    * length): each document splits into `chunkChars`-char windows with
+    * length): each document splits into [[ChunkChars]]-char windows with
     * k−1 chars of overlap, so every k-gram of the original lies wholly
     * inside at least one chunk and no winnowing anchor is lost. Columns:
-    * `(id, ci, off, t)` with `off` the 0-based global char offset of the
-    * chunk (local 1-based position p ⇒ global 1-based position p+off).
-    * Pure per-row explode+substring — no shuffle. */
-  private[operators] def charChunks(
-      df: DataFrame, idCol: String, textCol: String,
-      k: Int, chunkChars: Int): DataFrame = {
-    val PosBase = graft.functions.WinnowSelect.PosBase
-    require(k >= 1 && chunkChars > 4 * k && chunkChars < PosBase,
-      s"charChunks: need 4k < chunkChars < $PosBase")
-    val stride = chunkChars - (k - 1)
+    * `(id, ci, t)`; chunk `ci` starts at 0-based global char offset
+    * `ci·(ChunkChars−k+1)` (local 1-based position p ⇒ global 1-based
+    * position p + that offset). Pure per-row explode+substring — no
+    * shuffle. */
+  private[graft] def charChunks(
+      df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
+    require(k >= 1 && 4 * k < ChunkChars,
+      s"charChunks: k=$k outside [1, ${(ChunkChars - 1) / 4}]")
+    val stride = ChunkChars - (k - 1)
     val n = coalesce(length(col(textCol)), lit(0))
-    val lastIdx = when(n > chunkChars,
-      ceil((n - chunkChars).cast("double") / stride).cast("int"))
+    val lastIdx = when(n > ChunkChars,
+      ceil((n - ChunkChars).cast("double") / stride).cast("int"))
       .otherwise(lit(0))
     df.select(col(idCol).as("id"), col(textCol).as("txt"),
       explode(when(n > 0, sequence(lit(0), lastIdx)).otherwise(
         array().cast("array<int>"))).as("ci"))
       .select(
         col("id"), col("ci").cast("long").as("ci"),
-        (col("ci").cast("long") * stride).as("off"),
-        expr(s"substring(txt, ci * $stride + 1, $chunkChars)").as("t"))
+        expr(s"substring(txt, ci * $stride + 1, $ChunkChars)").as("t"))
   }
 
-  /** RAW chunked anchor sites with GLOBAL positions — MAP-ONLY since r17:
-    * the former shape joined `chunks` back in to fetch `off` (a full
-    * shuffle of the fingerprint relation), but `off = ci·stride` is pure
-    * per-row arithmetic; and it collapsed the overlap region's double
-    * detections in a dedicated `groupBy(doc, hash, gpos)` exchange, but
-    * both consumers immediately re-shuffle by their occurrence-cap key —
-    * the dedup now rides THAT window's exchange instead (first row per
-    * gpos under `(…, gpos, ci, pos)` order ≡ the old `min(struct(ci,
-    * pos))` representative). Two corpus-sized exchanges gone per caller. */
-  private[graft] def chunkedAnchorSites(
-      chunks: DataFrame, k: Int, w: Int, chunkChars: Int): DataFrame = {
-    val stride = (chunkChars - (k - 1)).toLong
-    val fp = winnowFingerprints(
-      chunks.select(struct(col("id"), col("ci")).as("cid"), col("t")),
-      "cid", "t", k, w)
-    fp.select(
-      col("id.id").as("doc"), col("hash"),
-      (col("pos") + col("id.ci") * stride).as("gpos"),
-      col("id.ci").as("ci"), col("pos"))
-  }
-
-  /** [[substringDupSpans]] through the chunking front-end — accepts
-    * documents of ANY length (the bare form fails loudly at the 2²⁰-char
-    * packing cap). Identical machinery per chunk (winnowing anchors,
-    * verbatim re-check, maximal extension, absolute occurrence cap,
-    * pre-flight guard), with anchors deduplicated across the k−1-char
-    * chunk overlaps and all offsets remapped to GLOBAL document
-    * coordinates. The one semantic difference vs the unchunked form:
-    * extension truncates at chunk boundaries, so a verbatim run longer
-    * than a chunk surfaces as up-to-chunk-sized pieces (still far above
-    * any `minLen`); with every document under `chunkChars`, the output
-    * is exactly [[substringDupSpans]]'s (parity-tested, Round11Spec). */
-  def substringDupSpansChunked(
-      df: DataFrame,
+  /** The one exact-substring span pipeline behind [[substringDupSpans]],
+    * [[substringContaminationSpans]] and [[selfRepeatSpans]]. Returns the
+    * DISTINCT maximal spans `(doc_a, doc_b, start_a, start_b, len)` in
+    * 1-based GLOBAL document coordinates.
+    *
+    *  - `inputs`: one frame pairs its sites all × all; two frames
+    *    (corpus, eval) are tagged `side` 0/1 in one union and pair side 0
+    *    × side 1 only, so corpus × corpus pairs are never generated;
+    *  - `key`: the candidate key — `hash`, or `(doc, hash)` for
+    *    intra-document pairs. The occurrence cap `maxOcc` counts sites
+    *    per key (both sides together), and the pre-flight guard refuses
+    *    more than `maxCandidatePairs` Σ f(f−1)/2 (one frame) or Σ fA·fB
+    *    (two frames) candidates per key;
+    *  - `pairPred`: the pair predicate over the `_a`/`_b` site columns
+    *    (`side`, `doc`, `hash`, `gpos`, `ci`, `pos`).
+    *
+    * ONE key-partitioned window exchange (r17) carries the overlap dedup
+    * and the cap: sorted by (side, doc, gpos, ci, pos), the first row of
+    * each (side, doc, gpos) tie-group is the chunk-overlap
+    * representative, the count of those firsts is the occurrence count,
+    * and sites of keys seen once are dropped early (they pair with
+    * nothing and add 0 to the estimate). Pairs come from a codegen'd
+    * self-join over the FILTERED sites (an interpreted in-array
+    * comprehension was measured and rejected: AQE coalesces the tiny
+    * exchange and the lambdas serialize in one task); then ONE row per
+    * chunk pair rides the text joins — chunk texts never ride the
+    * candidate relation (guide §8: move heavy bytes once, decide on
+    * metadata). A verbatim run longer than a chunk surfaces as
+    * up-to-chunk-sized pieces, far above any `minLen`. */
+  private def spanCore(
+      inputs: Seq[DataFrame],
       idCol: String,
       textCol: String,
-      k: Int = 8,
-      w: Int = 4,
-      maxOccFreq: Int = DefaultHotFingerprintCap,
-      maxCandidatePairs: Option[Long] = Some(2000000000L),
-      chunkChars: Int = DefaultChunkChars): DataFrame = {
-    graft.functions.CommonExtend.register(df.sparkSession)
+      k: Int,
+      w: Int,
+      key: Seq[String],
+      pairPred: Column,
+      maxOcc: Int,
+      maxCandidatePairs: Option[Long],
+      caller: String): DataFrame = {
+    val cross = inputs.size == 2
+    graft.functions.CommonExtend.register(inputs.head.sparkSession)
     val P = graft.functions.WinnowSelect.PosBase
-    val chunks = charChunks(df, idCol, textCol, k, chunkChars)
+    val stride = (ChunkChars - (k - 1)).toLong
+    val chunks = inputs.zipWithIndex
+      .map { case (df, side) =>
+        charChunks(df, idCol, textCol, k).withColumn("side", lit(side)) }
+      .reduce(_ unionByName _)
       .localCheckpoint(true)
-    val raw = chunkedAnchorSites(chunks, k, w, chunkChars)
-    // ONE hash-keyed exchange (r17) carries what used to take five
-    // corpus-sized ones (off-join, gpos-dedup groupBy, occ groupBy, occ
-    // join-back, candidate self-join): within a `hash` window sorted by
-    // (doc, gpos, ci, pos), the first row of each (doc, gpos) tie-group
-    // IS the old min(ci, pos) overlap representative; the count of those
-    // firsts is the old deduped occurrence count; and the surviving
-    // ≤`maxOccFreq` site arrays generate the doc_a < doc_b pairs IN
-    // PLACE (array comprehension over ≤cap elements — bounded, tiny).
-    // Sites of occ = 1 hashes are dropped early: they can produce no
-    // pair and contribute 0 to the pre-flight estimate.
-    val wd = Window.partitionBy("hash")
-      .orderBy("doc", "gpos", "ci", "pos")
+    // anchor sites with GLOBAL positions: map-only, gpos = pos + ci·stride
+    val raw = winnowFingerprints(
+      chunks.select(struct(col("side"), col("id"), col("ci")).as("cid"),
+        col("t")), "cid", "t", k, w)
+      .select(col("id.side").as("side"), col("id.id").as("doc"),
+        col("hash"), (col("pos") + col("id.ci") * stride).as("gpos"),
+        col("id.ci").as("ci"), col("pos"))
+    val wd = Window.partitionBy(key.map(col): _*)
+      .orderBy("side", "doc", "gpos", "ci", "pos")
     val wAll = wd.rowsBetween(
       Window.unboundedPreceding, Window.unboundedFollowing)
-    val lagDoc = lag(col("doc"), 1).over(wd)
-    val lagG = lag(col("gpos"), 1).over(wd)
-    val isFirst = lagDoc.isNull || lagDoc =!= col("doc") ||
-      lagG =!= col("gpos")
+    def sameAsPrev(c: String): Column = lag(col(c), 1).over(wd) <=> col(c)
     val sites = raw
-      .withColumn("fst", isFirst)
+      .withColumn("fst",
+        !(sameAsPrev("side") && sameAsPrev("doc") && sameAsPrev("gpos")))
       .withColumn("occ",
         sum(when(col("fst"), 1L).otherwise(0L)).over(wAll))
-      .where(col("fst") && col("occ") >= 2L && col("occ") <= maxOccFreq)
-      .select("hash", "doc", "gpos", "ci", "pos")
+      .where(col("fst") && col("occ") >= 2L && col("occ") <= maxOcc)
+      .select("side", "doc", "hash", "gpos", "ci", "pos")
       .localCheckpoint(true)
     maxCandidatePairs.foreach { bound =>
-      val est = sites.groupBy("hash").agg(count(lit(1)).as("f"))
-        .agg(coalesce(
-          sum(col("f") * (col("f") - 1L) / lit(2L)), lit(0L)).cast("long"))
+      val fa = col("fa"); val f = col("f")
+      val est = sites.groupBy(key.map(col): _*)
+        .agg(sum(when(col("side") === 0, 1L).otherwise(0L)).as("fa"),
+          count(lit(1)).as("f"))
+        .agg(coalesce(sum(
+          if (cross) fa * (f - fa) else f * (f - 1L) / lit(2L)),
+          lit(0L)).cast("long"))
         .head().getLong(0)
       require(est <= bound,
-        s"substringDupSpansChunked pre-flight: $est anchor candidate " +
-          s"pairs under occurrence cap $maxOccFreq exceed " +
-          s"maxCandidatePairs=$bound")
+        s"$caller pre-flight: $est anchor candidate pairs under " +
+          s"occurrence cap $maxOcc exceed maxCandidatePairs=$bound — " +
+          "refusing the quadratic join; lower the cap or raise " +
+          "maxCandidatePairs deliberately")
     }
-    // pair generation by codegen'd self-join — but over the FILTERED
-    // site relation (occ ≥ 2, ≤ cap): the former shape joined the full
-    // 10×-bigger uncapped relation (an interpreted array-comprehension
-    // variant was measured here and rejected: AQE coalesces the tiny
-    // exchange to one partition and 200k lambda evaluations serialize
-    // in a single 1.2 s task). Then ONE row per (doc_a, ci_a, doc_b,
-    // ci_b) chunk pair through the text joins — the chunk texts never
-    // ride the candidate relation (guide §8: move heavy bytes once,
-    // decide on metadata).
-    val pairs = sites
-      .select(col("hash"), col("doc").as("doc_a"), col("ci").as("ci_a"),
-        col("pos").as("pos_a"))
-      .join(sites.select(col("hash"), col("doc").as("doc_b"),
-        col("ci").as("ci_b"), col("pos").as("pos_b")), Seq("hash"))
-      .where(col("doc_a") < col("doc_b"))
-      .select("doc_a", "ci_a", "pos_a", "doc_b", "ci_b", "pos_b")
-    val byChunkPair = pairs
-      .groupBy("doc_a", "ci_a", "doc_b", "ci_b")
+    def suffixed(df: DataFrame, sfx: String): DataFrame =
+      df.select(df.columns.map(c => col(c).as(c + sfx)): _*)
+    val (left, right) =
+      if (cross) (sites.where(col("side") === 0), sites.where(col("side") === 1))
+      else (sites, sites)
+    val pairs = suffixed(left, "_a").join(suffixed(right, "_b"),
+      key.map(c => col(c + "_a") === col(c + "_b")).reduce(_ && _) &&
+        pairPred)
+    val texts = chunks.select(col("side"), col("id").as("doc"), col("ci"),
+      col("t"))
+    pairs
+      .groupBy("side_a", "doc_a", "ci_a", "side_b", "doc_b", "ci_b")
       .agg(collect_list(struct(col("pos_a"), col("pos_b"))).as("ps"))
-    val texts = chunks.select(col("id").as("doc"), col("ci"), col("t"))
-    val stride = (chunkChars - (k - 1)).toLong
-    byChunkPair
-      .join(texts.select(col("doc").as("doc_a"), col("ci").as("ci_a"),
-        col("t").as("ta")), Seq("doc_a", "ci_a"))
-      .join(texts.select(col("doc").as("doc_b"), col("ci").as("ci_b"),
-        col("t").as("tb")), Seq("doc_b", "ci_b"))
+      .join(suffixed(texts, "_a"), Seq("side_a", "doc_a", "ci_a"))
+      .join(suffixed(texts, "_b"), Seq("side_b", "doc_b", "ci_b"))
       .select(col("doc_a"), col("doc_b"), col("ci_a"), col("ci_b"),
-        col("ta"), col("tb"), explode(col("ps")).as("p"))
+        col("t_a"), col("t_b"), explode(col("ps")).as("p"))
       .select(
-        col("doc_a").as("id_a"), col("doc_b").as("id_b"),
-        col("ci_a"), col("ci_b"),
+        col("doc_a"), col("doc_b"), col("ci_a"), col("ci_b"),
         call_function("common_extend",
-          col("ta"), col("p.pos_a"), col("tb"), col("p.pos_b"), lit(k))
+          col("t_a"), col("p.pos_a"), col("t_b"), col("p.pos_b"), lit(k))
           .as("enc"))
       .where(col("enc") >= 0L)
       .select(
-        col("id_a"), col("id_b"),
+        col("doc_a"), col("doc_b"),
         (expr(s"enc div ${P * P}") + col("ci_a") * stride)
           .cast("long").as("start_a"),
         (pmod(expr(s"enc div $P"), lit(P)) + col("ci_b") * stride)
           .cast("long").as("start_b"),
         pmod(col("enc"), lit(P)).cast("long").as("len"))
-      .distinct()
-  }
-
-  /** [[substringDup]] through the chunking front-end — the per-pair
-    * longest-span report for corpora containing over-cap documents. */
-  def substringDupChunked(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int = 8,
-      w: Int = 4,
-      minLen: Int = 30,
-      maxOccFreq: Int = DefaultHotFingerprintCap,
-      maxCandidatePairs: Option[Long] = Some(2000000000L),
-      chunkChars: Int = DefaultChunkChars): DataFrame = {
-    require(minLen >= w + k - 1,
-      s"substringDupChunked: minLen=$minLen below the winnowing " +
-        s"detection guarantee w+k-1=${w + k - 1}")
-    substringDupSpansChunked(
-      df, idCol, textCol, k, w, maxOccFreq, maxCandidatePairs, chunkChars)
-      .groupBy("id_a", "id_b")
-      .agg(
-        max(struct(col("len"), col("start_a"), col("start_b"))).as("best"),
-        count(lit(1)).as("n_spans"))
-      .select(
-        col("id_a"), col("id_b"),
-        col("best.len").as("overlap_len"),
-        col("best.start_a").as("start_a"),
-        col("best.start_b").as("start_b"),
-        col("n_spans"))
-      .where(col("overlap_len") >= minLen)
-  }
-
-  /** [[selfRepeat]] through the chunking front-end — intra-document
-    * repeats for documents of ANY length: global-position site pairs
-    * (gpos₁ < gpos₂, per-(doc,hash) site cap on the deduplicated global
-    * sites), each side extended on its OWN chunk's text (the two sites
-    * may live in different chunks of the same document — `common_extend`
-    * takes two texts), offsets remapped to document coordinates. With
-    * every document under `chunkChars` the output is exactly
-    * [[selfRepeat]]'s (parity-tested). */
-  def selfRepeatChunked(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int = 8,
-      w: Int = 4,
-      minLen: Int = 20,
-      maxSiteFreq: Int = DefaultHotFingerprintCap,
-      maxCandidatePairs: Option[Long] = Some(2000000000L),
-      chunkChars: Int = DefaultChunkChars): DataFrame = {
-    require(minLen >= w + k - 1,
-      s"selfRepeatChunked: minLen=$minLen below the winnowing detection " +
-        s"guarantee w+k-1=${w + k - 1}")
-    graft.functions.CommonExtend.register(df.sparkSession)
-    val P = graft.functions.WinnowSelect.PosBase
-    val chunks = charChunks(df, idCol, textCol, k, chunkChars)
-      .localCheckpoint(true)
-    val raw = chunkedAnchorSites(chunks, k, w, chunkChars)
-    // ONE (doc, hash)-keyed exchange (r17) replacing five corpus-sized
-    // ones — the substringDupSpansChunked recipe with the intra-document
-    // key: overlap dedup (first row per gpos under (gpos, ci, pos)
-    // order), deduped site count, site cap, and g1 < g2 pair generation
-    // from the surviving ≤`maxSiteFreq` arrays, all on one shuffle.
-    val wd = Window.partitionBy("doc", "hash")
-      .orderBy("gpos", "ci", "pos")
-    val wAll = wd.rowsBetween(
-      Window.unboundedPreceding, Window.unboundedFollowing)
-    val lagG = lag(col("gpos"), 1).over(wd)
-    val sites = raw
-      .withColumn("fst", lagG.isNull || lagG =!= col("gpos"))
-      .withColumn("occ",
-        sum(when(col("fst"), 1L).otherwise(0L)).over(wAll))
-      .where(col("fst") && col("occ") >= 2L && col("occ") <= maxSiteFreq)
-      .select("doc", "hash", "gpos", "ci", "pos")
-      .localCheckpoint(true)
-    maxCandidatePairs.foreach { bound =>
-      val est = sites.groupBy("doc", "hash").agg(count(lit(1)).as("f"))
-        .agg(coalesce(
-          sum(col("f") * (col("f") - 1L) / lit(2L)), lit(0L)).cast("long"))
-        .head().getLong(0)
-      require(est <= bound,
-        s"selfRepeatChunked pre-flight: $est intra-document candidate " +
-          s"pairs under site cap $maxSiteFreq exceed " +
-          s"maxCandidatePairs=$bound")
-    }
-    val stride = (chunkChars - (k - 1)).toLong
-    // pairs by codegen'd self-join over the FILTERED sites (the
-    // substringDupSpansChunked note: an in-array comprehension was
-    // measured and rejected — AQE coalesces the tiny exchange and the
-    // interpreted lambdas serialize in one task), then one row per
-    // (doc, ci1, ci2) chunk pair through the text joins (guide §8:
-    // texts never ride the candidate relation).
-    val pairs = sites
-      .select(col("doc"), col("hash"), col("gpos").as("g1"),
-        col("ci").as("ci1"), col("pos").as("p1"))
-      .join(sites.select(col("doc"), col("hash"), col("gpos").as("g2"),
-        col("ci").as("ci2"), col("pos").as("p2")), Seq("doc", "hash"))
-      .where(col("g1") < col("g2"))
-      .select(col("doc"), col("ci1"), col("p1"), col("ci2"), col("p2"))
-    val byChunkPair = pairs.groupBy("doc", "ci1", "ci2")
-      .agg(collect_list(struct(col("p1"), col("p2"))).as("ps"))
-    val texts = chunks.select(col("id").as("doc"), col("ci"), col("t"))
-    val ext = byChunkPair
-      .join(texts.select(col("doc"), col("ci").as("ci1"),
-        col("t").as("t1")), Seq("doc", "ci1"))
-      .join(texts.select(col("doc"), col("ci").as("ci2"),
-        col("t").as("t2")), Seq("doc", "ci2"))
-      .select(col("doc"), col("ci1"), col("ci2"), col("t1"), col("t2"),
-        explode(col("ps")).as("p"))
-      .select(
-        col("doc"), col("ci1"), col("ci2"),
-        call_function("common_extend",
-          col("t1"), col("p.p1"), col("t2"), col("p.p2"), lit(k)).as("enc"))
-      .where(col("enc") >= 0L)
-      .select(
-        col("doc"),
-        (expr(s"enc div ${P * P}") + col("ci1") * stride)
-          .cast("long").as("s1"),
-        (pmod(expr(s"enc div $P"), lit(P)) + col("ci2") * stride)
-          .cast("long").as("s2"),
-        pmod(col("enc"), lit(P)).cast("long").as("len"))
-      .where(col("s1") =!= col("s2"))
-      .distinct()
-    ext
-      .groupBy("doc")
-      .agg(
-        max(struct(col("len"), col("s1"), col("s2"))).as("best"),
-        count(lit(1)).as("n_repeat_spans"))
-      .select(
-        col("doc").as(idCol),
-        col("best.len").as("repeat_len"),
-        col("best.s1").as("start_1"),
-        col("best.s2").as("start_2"),
-        col("n_repeat_spans"))
-      .where(col("repeat_len") >= minLen)
+      .distinct() // many anchors inside one span encode the SAME span
   }
 }

@@ -1,6 +1,6 @@
 package graft.profiler
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -112,10 +112,12 @@ object ExactQuantiles {
     val totRows = freq.groupBy("idx").agg(
       sum("cnt").as("n"),
       // accuracy 100: boundary placement affects only chunk balance,
-      // never results — ±1% rank error on a chunk edge is noise
+      // never results — ±1% rank error on a chunk edge is noise. NaN
+      // stays out of the boundaries: it is pinned to the last chunk
+      // below, and an interior NaN split would break chunk monotonicity
       (if (grid.isEmpty) first(lit(Array.empty[Double]))
-       else percentile_approx(
-         col("v"), lit(grid.toArray), lit(100))).as("bounds"))
+       else percentile_approx(when(!isnan(col("v")), col("v")),
+         lit(grid.toArray), lit(100))).as("bounds"))
       .collect()
     val nMap: Map[Int, Long] = totRows
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -224,24 +226,43 @@ object ExactQuantiles {
       .map(r => r.getAs[Int]("idx") -> r).toMap
 
     exprs.zipWithIndex.map { case ((name, _), idx) =>
-      name -> ((nMap.get(idx), rows.get(idx)) match {
-        case (Some(n), Some(r)) => Some(
-          ps.zipWithIndex.map { case (pct, i) =>
-            // Percentile.getPercentile, verbatim arithmetic
-            val position = pct * (n - 1)
-            val lower = position.floor.toLong
-            val higher = position.ceil.toLong
-            val lowerKey = r.getAs[Double](s"lo_$i")
-            if (higher == lower) lowerKey
-            else {
-              val higherKey = r.getAs[Double](s"hi_$i")
-              if (higherKey == lowerKey) lowerKey
-              else (higher - position) * lowerKey +
-                (position - lower) * higherKey
-            }
-          })
-        case _ => None
-      })
+      name -> nMap.get(idx).map(n => interpolate(name, n, ps,
+        rows.getOrElse(idx, throw new MissingQuantileBracket(
+          s"ExactQuantiles: column '$name' (n=$n) has no bracket row"))))
     }.toMap
   }
+
+  /** `Percentile.getPercentile`'s arithmetic, verbatim, over one column's
+    * bracket row (`lo_i`/`hi_i` per percentage). A null bracket, like a
+    * missing bracket row in [[quantiles]], means no CDF row covered the
+    * target rank — a bookkeeping bug upstream — and raises
+    * [[MissingQuantileBracket]] instead of unboxing null to 0.0. */
+  private[graft] def interpolate(
+      name: String, n: Long, ps: Seq[Double], r: Row): Seq[Double] = {
+    def bracket(field: String, pct: Double): Double = {
+      val i = r.fieldIndex(field)
+      if (r.isNullAt(i)) throw new MissingQuantileBracket(
+        s"ExactQuantiles: column '$name' (n=$n) has no $field bracket " +
+          s"value for p=$pct — no CDF row covered the target rank")
+      r.getDouble(i)
+    }
+    ps.zipWithIndex.map { case (pct, i) =>
+      val position = pct * (n - 1)
+      val lower = position.floor.toLong
+      val higher = position.ceil.toLong
+      val lowerKey = bracket(s"lo_$i", pct)
+      if (higher == lower) lowerKey
+      else {
+        val higherKey = bracket(s"hi_$i", pct)
+        if (higherKey == lowerKey) lowerKey
+        else (higher - position) * lowerKey +
+          (position - lower) * higherKey
+      }
+    }
+  }
 }
+
+/** The exact-quantile invariant "exactly one CDF row brackets each target
+  * rank" failed: a wrong quantile would follow, so the battery stops. */
+final class MissingQuantileBracket(msg: String)
+    extends IllegalStateException(msg)

@@ -90,7 +90,7 @@ object ScanMetrics {
   /** Order-independent exact sum — null if any value is out of decimal
     * range or the decimal total itself overflows (try_sum).
     *
-    * Cost profile (measured at sf0.1, PerfLab): the double→decimal cast is
+    * Cost profile (measured at sf0.1): the double→decimal cast is
     * the pass's floor — Spark quantizes through
     * `BigDecimal.valueOf(d).setScale(6, HALF_UP)`, i.e. a Double.toString
     * round trip per value (~0.5 µs), which also pins the rounding semantics

@@ -121,8 +121,10 @@ class OptimizationR16Spec extends AnyFunSuite {
       }
     for (trial <- 1 to 8) {
       val n = 1 + rng.nextInt(40)
-      // heavy-tie 2-dp grid values + nulls + an all-null column — the
-      // regimes where interpolation and tie handling can diverge
+      // heavy-tie 2-dp grid values + nulls + an all-null column + a
+      // NaN-heavy column (most ranks, and the approximate chunk
+      // boundaries' input, dominated by NaN) — the regimes where
+      // interpolation, tie handling and chunk ordering can diverge
       val data = Seq.fill(n)((
         if (rng.nextDouble() < 0.25) null
         else if (rng.nextDouble() < 0.2)
@@ -131,16 +133,19 @@ class OptimizationR16Spec extends AnyFunSuite {
         if (rng.nextDouble() < 0.3) null
         else if (rng.nextDouble() < 0.15) Double.box(-0.0)
         else Double.box(rng.nextInt(4).toDouble),
-        null: java.lang.Double))
-      val df = data.toDF("x", "y", "z").localCheckpoint(true)
+        null: java.lang.Double,
+        if (rng.nextDouble() < 0.7) Double.box(Double.NaN)
+        else Double.box(rng.nextInt(6) - 3.0)))
+      val df = data.toDF("x", "y", "z", "u").localCheckpoint(true)
       val ps = grids(trial % grids.size)
+      val cols = Seq("x", "y", "z", "u")
       val res = graft.profiler.ExactQuantiles.quantiles(
-        df, Seq("x" -> col("x"), "y" -> col("y"), "z" -> col("z")), ps)
+        df, cols.map(c => c -> col(c)), ps)
       val exp = df.agg(
         percentile(col("x"), array(ps.map(lit): _*)).as("x"),
-        percentile(col("y"), array(ps.map(lit): _*)).as("y"),
-        percentile(col("z"), array(ps.map(lit): _*)).as("z")).head()
-      for (c <- Seq("x", "y", "z")) {
+        cols.tail.map(c => percentile(col(c), array(ps.map(lit): _*)).as(c)): _*)
+        .head()
+      for (c <- cols) {
         val e = if (exp.isNullAt(exp.fieldIndex(c))) None
           else Some(exp.getSeq[Double](exp.fieldIndex(c)).toSeq)
         assert(bitEq(res(c), e), s"trial $trial col $c ps $ps: ${res(c)} vs $e")
@@ -158,5 +163,30 @@ class OptimizationR16Spec extends AnyFunSuite {
       .agg(percentile(col("x"), array(ps.map(lit): _*)).as("x")).head()
     assert(bitEq(res("x"), Some(exp.getSeq[Double](0).toSeq)),
       s"boundary: ${res("x")} vs ${exp.getSeq[Double](0).toSeq}")
+  }
+
+  test("ExactQuantiles: a missing bracket value fails loudly instead of reading 0.0") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq("lo_0", "hi_0", "lo_1", "hi_1")
+      .map(StructField(_, DoubleType, nullable = true)))
+    def row(vs: java.lang.Double*): Row =
+      new GenericRowWithSchema(vs.toArray[Any], schema)
+    val ps = Seq(0.5, 0.25)
+    // n = 5: p=0.5 lands on rank 2 (lo only), p=0.25 on rank 1 (lo only)
+    assert(graft.profiler.ExactQuantiles.interpolate(
+      "c", 5L, ps, row(2.0, 2.0, 1.0, 1.0)) == Seq(2.0, 1.0))
+    val e = intercept[graft.profiler.MissingQuantileBracket] {
+      graft.profiler.ExactQuantiles.interpolate(
+        "c", 5L, ps, row(2.0, 2.0, null, 1.0))
+    }
+    assert(e.getMessage.contains("'c'") && e.getMessage.contains("lo_1"),
+      e.getMessage)
+    // n = 4, p = 0.5: position 1.5 interpolates, so the hi bracket is read
+    intercept[graft.profiler.MissingQuantileBracket] {
+      graft.profiler.ExactQuantiles.interpolate(
+        "c", 4L, Seq(0.5), row(1.0, null, null, null))
+    }
   }
 }

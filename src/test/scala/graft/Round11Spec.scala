@@ -214,21 +214,6 @@ class Round11Spec extends AnyFunSuite {
     }
   }
 
-  test("chunked substring family equals the unchunked forms when every doc fits one chunk") {
-    import graft.operators.Dedup
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val a = Dedup.substringDupSpans(docs, "doc_id", "text")
-      .collect().map(_.toSeq).toSet
-    val b = Dedup.substringDupSpansChunked(docs, "doc_id", "text")
-      .collect().map(_.toSeq).toSet
-    assert(a == b)
-    val c = Dedup.selfRepeat(docs, "doc_id", "text")
-      .collect().map(_.toSeq).toSet
-    val d = Dedup.selfRepeatChunked(docs, "doc_id", "text")
-      .collect().map(_.toSeq).toSet
-    assert(c == d)
-  }
-
   test("chunked substring family drives a >2^20-char document end-to-end with correct global offsets") {
     import spark.implicits._
     import graft.operators.Dedup
@@ -251,16 +236,15 @@ class Round11Spec extends AnyFunSuite {
     val s2 = (prefix.length + passage.length + mid.length + 4).toLong
     val small = rand(300) + "5" + passage + "6" + rand(100)
     val sSmall = 302L
-    // the bare form refuses the over-cap doc loudly...
-    val err = intercept[Exception] {
-      Dedup.substringDup(
-        Seq((1L, big), (2L, small)).toDF("doc_id", "text"), "doc_id", "text")
-        .collect()
-    }
-    assert(err.getMessage.contains("2^20") ||
-      err.getMessage.contains("packing cap"))
-    // ...the chunked form accepts it and reports GLOBAL offsets
-    val pair = Dedup.substringDupChunked(
+    // a doc of exactly 2^20-1 chars is still ONE chunk (the widest text
+    // the position packing admits); the big doc splits
+    val edge = Seq((0L, "x" * (cap - 1)), (1L, big)).toDF("doc_id", "text")
+    val nChunks = Dedup.charChunks(edge, "doc_id", "text", 8)
+      .groupBy("id").count().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(nChunks(0L) == 1L && nChunks(1L) == 2L, s"$nChunks")
+    // every member accepts the over-cap doc and reports GLOBAL offsets
+    val pair = Dedup.substringDup(
       Seq((1L, big), (2L, small)).toDF("doc_id", "text"), "doc_id", "text")
       .collect()
     assert(pair.length == 1)
@@ -272,8 +256,19 @@ class Round11Spec extends AnyFunSuite {
       s"start_a=${r.getAs[Long]("start_a")} != $s2")
     assert(r.getAs[Long]("start_b") == sSmall)
     assert(r.getAs[Long]("n_spans") == 2L) // passage planted twice in big
+    // contamination, big doc as corpus: the reported span is its later
+    // copy (ties take the larger start_corpus), both copies counted
+    val leak = Dedup.substringContamination(
+      Seq((1L, big)).toDF("doc_id", "text"),
+      Seq((2L, small)).toDF("doc_id", "text"), "doc_id", "text")
+      .collect()
+    assert(leak.length == 1)
+    assert(leak.head.getAs[Long]("overlap_len") == passage.length.toLong)
+    assert(leak.head.getAs[Long]("start_corpus") == s2)
+    assert(leak.head.getAs[Long]("start_eval") == sSmall)
+    assert(leak.head.getAs[Long]("n_spans") == 2L)
     // intra-doc: the two planted copies inside the big doc
-    val sr = Dedup.selfRepeatChunked(
+    val sr = Dedup.selfRepeat(
       Seq((1L, big)).toDF("doc_id", "text"), "doc_id", "text")
       .collect()
     assert(sr.length == 1)
