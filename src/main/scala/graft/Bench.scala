@@ -233,7 +233,7 @@ object Bench {
         if (idx > 0) {
           spark.catalog.clearCache()
           spark.sparkContext.getPersistentRDDs.values.foreach(
-            _.unpersist(blocking = true))
+            _.unpersist(true))
           System.gc()
         }
         var status = "ok"

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DateType
 
@@ -407,32 +407,23 @@ private[graft] trait SparkEntryProfiler { this: SparkEntry.type =>
     // list (the schema_df precedent): a sketch accuracy regression flips a
     // row to false and hash-fails the round.
     "approx_error_audit" -> ((s, dir) => {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
       val li = lineitem(s, dir)
       val cols = OracleSql.Lineitem.numeric
       val ps = graft.profiler.ScanMetrics.quantilePs(10)
       val eps = 2.0 / 100 // 2 * (1/accuracy) rank slack
       // pass 1 (sketches) and pass 2 (exact distinct) are independent —
       // submit concurrently like ScanMetrics.compute's pass families
-      val f1 = Future(scala.concurrent.blocking {
-        val src = graft.profiler.ScanMetrics.spread(li)
-        val aggs = cols.flatMap { c =>
+      val passes = Seq[Seq[Column]](
+        cols.flatMap { c =>
           Seq(
             approx_count_distinct(col(c)).as(s"acd_$c"),
             percentile_approx(col(c), array(ps.map(lit): _*), lit(100))
               .cast("array<double>").as(s"aq_$c"))
-        }
-        src.agg(aggs.head, aggs.tail: _*).head()
-      })
-      val f2 = Future(scala.concurrent.blocking {
-        val src = graft.profiler.ScanMetrics.spread(li)
-        val aggs = cols.map(c => count_distinct(col(c)).as(s"cd_$c"))
-        src.agg(aggs.head, aggs.tail: _*).head()
-      })
-      val r1 = Await.result(f1, Duration.Inf)
-      val r2 = Await.result(f2, Duration.Inf)
+        },
+        cols.map(c => count_distinct(col(c)).as(s"cd_$c")))
+      val Seq(r1, r2) = Par.map(s, passes, 2) { aggs =>
+        graft.profiler.ScanMetrics.spread(li).agg(aggs.head, aggs.tail: _*).head()
+      }
       // pass 3: rank intervals of the returned values — plain counts,
       // whole-stage codegen, no spread needed
       // all-null column: percentile_approx returns null — no ranks to

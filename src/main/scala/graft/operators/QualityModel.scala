@@ -496,17 +496,10 @@ object QualityModel {
       (0 to 3).map(j => last.getAs[Double](s"w$j"))
     }
     // the two chains are independent (disjoint splits of the checkpointed
-    // feature relation) — overlap their per-iteration jobs (opt guide
-    // §2.6: submit independent jobs from driver threads so one chain's
-    // collect latency back-fills the other's); results are unchanged
-    val (wMain, wIrr) = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fm = Future(scala.concurrent.blocking(finalWeights(trainSplit)))
-      val fi = Future(scala.concurrent.blocking(finalWeights(holdout)))
-      (Await.result(fm, Duration.Inf), Await.result(fi, Duration.Inf))
-    }
+    // feature relation) — overlap their per-iteration jobs so one chain's
+    // collect latency back-fills the other's; results are unchanged
+    val Seq(wMain, wIrr) =
+      graft.Par.map(docs.sparkSession, Seq(trainSplit, holdout), 2)(finalWeights)
     def logit(w: Seq[Double]): Column =
       lit(w(0)) + lit(w(1)) * col("x1") +
         lit(w(2)) * col("x2") + lit(w(3)) * col("x3")

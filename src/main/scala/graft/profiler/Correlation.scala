@@ -84,20 +84,13 @@ object Correlation {
         s"CQb_$k" -> corrOf(b, a, sq = true))
     }
 
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val slots = (perCol ++ perPair).toIndexedSeq
-    val futures = slots.grouped(SlotsPerPass).toSeq.map { g =>
-      Future(scala.concurrent.blocking {
-        val row = df.agg(
-          g.head._2.alias(g.head._1),
-          g.tail.map { case (nm, e) => e.alias(nm) }: _*).head()
-        g.indices.map(i => g(i)._1 -> row.get(i)).toMap
-      })
-    }
-    val v: Map[String, Any] =
-      futures.map(f => Await.result(f, Duration.Inf)).reduce(_ ++ _)
+    val passes = (perCol ++ perPair).toIndexedSeq.grouped(SlotsPerPass).toSeq
+    val v: Map[String, Any] = graft.Par.map(df.sparkSession, passes, passes.size) { g =>
+      val row = df.agg(
+        g.head._2.alias(g.head._1),
+        g.tail.map { case (nm, e) => e.alias(nm) }: _*).head()
+      g.indices.map(i => g(i)._1 -> row.get(i)).toMap
+    }.reduce(_ ++ _)
 
     def dec(name: String): Option[JBigDecimal] =
       Option(v(name)).map(_.asInstanceOf[JBigDecimal])
@@ -176,43 +169,31 @@ object Correlation {
       maxRows: Long = graft.operators.WindowGuard.MaxWindowCells): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(pairs.nonEmpty, "need at least one column pair")
-    // per-pair computations are independent ([[matrix]] collects eagerly),
-    // so they are submitted from driver threads (guide §2.6): pair 2's
-    // rank-window job back-fills cores while pair 1's single-task sort
-    // runs, instead of serializing one eager collect per pair. Results
-    // are assembled in the caller's pair order — output unchanged.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    // bounded concurrency (ADVICE r16): each pair's rank window is a
-    // single-partition global sort — one Future per pair on the global
-    // pool would stack every pair's full-column sort in executor memory
-    // simultaneously on a wide pair list. Two in flight keeps the §2.6
-    // back-fill win with bounded peak memory.
-    def one(a: String, b: String): Future[DataFrame] =
-      Future(scala.concurrent.blocking {
-        val complete = dfIn
-          .where(col(a).isNotNull && col(b).isNotNull)
-          .select(col(a).cast(DoubleType).as("va"), col(b).cast(DoubleType).as("vb"))
-        // the guard's cell count comes from an unordered global frame —
-        // same single-partition exchange the rank window already forces,
-        // so enforcement adds no pass and no shuffle
-        val nRows = count(lit(1)).over(
-          Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
-        def avgRank(vc: String) =
-          graft.operators.WindowGuard.guarded(
-            rank().over(Window.orderBy(col(vc))).cast("long"),
-            nRows, maxRows, "Correlation.spearman").cast(DoubleType) +
-            (count(lit(1)).over(Window.partitionBy(col(vc))) - lit(1))
-              .cast(DoubleType) / lit(2.0)
-        val ranked = complete.select(avgRank("va").as("ra"), avgRank("vb").as("rb"))
-        matrix(ranked, Seq("ra", "rb"))
-          .select(lit(a).as("col_a"), lit(b).as("col_b"),
-            col("n"), col("corr").as("spearman"))
-      })
-    pairs.grouped(2).flatMap { chunk =>
-      chunk.map { case (a, b) => one(a, b) }
-        .map(f => Await.result(f, Duration.Inf))
+    // per-pair computations are independent ([[matrix]] collects eagerly):
+    // pair 2's rank-window job back-fills cores while pair 1's
+    // single-task sort runs. Two in flight (ADVICE r16): each pair's rank
+    // window is a single-partition global sort, so a wide pair list must
+    // not stack every pair's full-column sort in executor memory at once.
+    // Results are assembled in the caller's pair order.
+    graft.Par.map(dfIn.sparkSession, pairs, 2) { case (a, b) =>
+      val complete = dfIn
+        .where(col(a).isNotNull && col(b).isNotNull)
+        .select(col(a).cast(DoubleType).as("va"), col(b).cast(DoubleType).as("vb"))
+      // the guard's cell count comes from an unordered global frame —
+      // same single-partition exchange the rank window already forces,
+      // so enforcement adds no pass and no shuffle
+      val nRows = count(lit(1)).over(
+        Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+      def avgRank(vc: String) =
+        graft.operators.WindowGuard.guarded(
+          rank().over(Window.orderBy(col(vc))).cast("long"),
+          nRows, maxRows, "Correlation.spearman").cast(DoubleType) +
+          (count(lit(1)).over(Window.partitionBy(col(vc))) - lit(1))
+            .cast(DoubleType) / lit(2.0)
+      val ranked = complete.select(avgRank("va").as("ra"), avgRank("vb").as("rb"))
+      matrix(ranked, Seq("ra", "rb"))
+        .select(lit(a).as("col_a"), lit(b).as("col_b"),
+          col("n"), col("corr").as("spearman"))
     }.reduce(_ unionByName _)
   }
 

@@ -79,29 +79,16 @@ object Runner {
       cfg: ProfilerConfig,
       fams: Set[String],
       tableParallelism: Int = 4): org.apache.spark.sql.DataFrame = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
     val tables = catalog.listTables
     require(tables.nonEmpty, s"catalog ${catalog.name} has no tables")
-    // per-table batteries are independent Spark jobs — submit a few
-    // concurrently (the run() loop's tableParallelism pattern); results
-    // are assembled in listTables order so the union is deterministic
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(tableParallelism, tables.size)))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val per =
-      try Await.result(
-        Future.traverse(tables) { t =>
-          Future {
-            val rows = Profiler.metrics(catalog.load(t), cfg, fams)
-            Profiler.metricsDF(spark, rows)
-              .withColumn("db_name", org.apache.spark.sql.functions.lit(catalog.name))
-              .withColumn("table_name", org.apache.spark.sql.functions.lit(t))
-          }
-        },
-        Duration.Inf)
-      finally { pool.shutdown(); () }
+    // per-table batteries are independent Spark jobs; results are
+    // assembled in listTables order so the union is deterministic
+    val per = graft.Par.map(spark, tables, tableParallelism) { t =>
+      val rows = Profiler.metrics(catalog.load(t), cfg, fams)
+      Profiler.metricsDF(spark, rows)
+        .withColumn("db_name", org.apache.spark.sql.functions.lit(catalog.name))
+        .withColumn("table_name", org.apache.spark.sql.functions.lit(t))
+    }
     per.reduce(_.unionByName(_))
   }
 
@@ -136,21 +123,8 @@ object Runner {
         }
       table -> n
     }
-    val tables = catalog.listTables
-    if (args.tableParallelism <= 1) tables.map(profileOne).toMap
-    else {
-      // bounded driver-side parallelism: each thread submits independent
-      // Spark jobs (per-table sinks touch disjoint paths, so no contention)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(args.tableParallelism)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.traverse(tables)(t =>
-            scala.concurrent.Future(profileOne(t))),
-          scala.concurrent.duration.Duration.Inf).toMap
-      finally { pool.shutdown(); () }
-    }
+    // per-table sinks touch disjoint paths, so tables publish concurrently
+    graft.Par.map(spark, catalog.listTables, args.tableParallelism)(profileOne).toMap
   }
 
   def main(argv: Array[String]): Unit =

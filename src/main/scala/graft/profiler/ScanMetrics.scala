@@ -1,6 +1,6 @@
 package graft.profiler
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -276,16 +276,17 @@ object ScanMetrics {
     * on many-row-group (at-scale) inputs the passes re-read the parquet
     * scan — the right trade at size — instead of paying a full-table
     * MEMORY_AND_DISK materialization the small-input shape was probed
-    * on. Callers should project to the needed columns first (§2.3). */
+    * on. A nondeterministic input (rand(), uuid(), …) is checkpointed
+    * even then: re-reading it would hand every pass a different relation.
+    * Callers should project to the needed columns first (§2.3). */
   def spreadCheckpoint(df: DataFrame): DataFrame = {
     val t = spreadTarget(df)
-    if (t == 0) df else df.repartition(t).localCheckpoint(true)
+    if (t != 0) df.repartition(t).localCheckpoint(true)
+    else if (!df.queryExecution.analyzed.deterministic) df.localCheckpoint(true)
+    else df
   }
 
   def compute(df: DataFrame, slots: Seq[AggSlot]): Seq[MetricRow] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     // spread() is one full-data exchange — worth it only when the pass has
     // per-row work to parallelize (sketches, distinct's Expand, decimal
     // sums). A cheap codegen'd Plain-only battery (count/min/max) finishes
@@ -316,25 +317,13 @@ object ScanMetrics {
       Seq(slots.filter(_.kind == AggKind.Plain)) ++
         slots.filter(_.kind == AggKind.Sketch).grouped(2).toSeq ++
         Seq(slots.filter(_.kind == AggKind.Distinct))
-    val jobs = groups.map { group =>
-      val fut =
-        if (group.isEmpty) Future.successful(None)
-        else {
-          val aliased = group.zipWithIndex.map { case (s, i) => s.expr.alias(s"m$i") }
-          // blocking{}: head() parks the thread in a Spark wait — let the
-          // fork-join pool grow instead of starving under --tableParallelism
-          Future(Some(scala.concurrent.blocking {
-            src.agg(aliased.head, aliased.tail: _*).head()
-          }))
-        }
-      (group, fut)
+    val passes = groups.filter(_.nonEmpty)
+    val rows = graft.Par.map(df.sparkSession, passes, passes.size) { group =>
+      val aliased = group.zipWithIndex.map { case (s, i) => s.expr.alias(s"m$i") }
+      src.agg(aliased.head, aliased.tail: _*).head()
     }
-    jobs.flatMap { case (group, fut) =>
-      Await.result(fut, Duration.Inf) match {
-        case None => Nil
-        case Some(row: Row) =>
-          group.zipWithIndex.flatMap { case (s, i) => s.extract(row.get(i)) }
-      }
+    passes.zip(rows).flatMap { case (group, row) =>
+      group.zipWithIndex.flatMap { case (s, i) => s.extract(row.get(i)) }
     }
   }
 }

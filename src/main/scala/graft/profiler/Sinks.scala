@@ -1,6 +1,6 @@
 package graft.profiler
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.time.OffsetDateTime
 import java.time.format.DateTimeFormatter
 
@@ -161,8 +161,17 @@ object Sinks {
       else parse(Files.readString(p))
     }
 
-    private def write(table: String, meta: TableMeta): Unit =
-      Files.writeString(path(table), render(meta))
+    // temp file in the same directory, then one atomic rename: a crash
+    // mid-write leaves the previous file intact, never a truncated JSON
+    // that every later upsert of the table fails to parse
+    private def write(table: String, meta: TableMeta): Unit = {
+      val tmp = Paths.get(dir, s".$table.json.${java.util.UUID.randomUUID()}.tmp")
+      try {
+        Files.writeString(tmp, render(meta))
+        Files.move(tmp, path(table),
+          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      } finally { Files.deleteIfExists(tmp); () }
+    }
 
     // -- minimal flat JSON (two-level string maps only; keys escaped) --
 

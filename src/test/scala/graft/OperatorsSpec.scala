@@ -363,6 +363,18 @@ class ClusteringSpec extends AnyFunSuite {
     }
   }
 
+  test("dupPagerank: 20 iterations run with internal checkpoints; ranks sum to 1") {
+    import spark.implicits._
+    val a = "one two three four five six seven eight"
+    val b = "three four five six seven eight nine ten"
+    val c = "six seven eight nine ten eleven twelve thirteen"
+    val docs = Seq((1L, a), (2L, b), (3L, c), (4L, a + " nine")).toDF("doc_id", "text")
+    val ranks = Clustering.dupPagerank(docs, "doc_id", "text", threshold = 0.3, iterations = 20)
+      .collect().map(_.getAs[Double]("rank"))
+    assert(ranks.length == 4)
+    assert(math.abs(ranks.sum - 1.0) < 1e-9, ranks.toSeq)
+  }
+
   test("dedupClusters assigns transitive near-dup groups a canonical min doc") {
     import spark.implicits._
     // pairwise output: (1,2) J=1.0 and (1,3),(2,3) J=0.5 — one cluster {1,2,3}

@@ -149,4 +149,35 @@ class ProfilerSpec extends AnyFunSuite {
     assert(types("name") == "string")
     assert(p.filter(_.getString(0) == "Dataset").forall(_.isNullAt(4)))
   }
+
+  test("ScanMetrics.compute: every pass job carries the caller's current tag") {
+    val sc = spark.sparkContext
+    val key = "graft.test.scan"
+    val d = df(Seq((1.0, "a"), (null, "b"), (3.0, "a"), (1.0, null)))
+    val slots = ScanMetrics.slots(d.schema, cfg, Profiler.referenceBattery)
+    def runTagged(tag: String): Seq[String] = {
+      sc.setLocalProperty(key, tag)
+      try new JobTags(sc, key).of(ScanMetrics.compute(d, slots))
+      finally sc.setLocalProperty(key, null)
+    }
+    // a thread reused from the first run must not carry its tag into the
+    // second
+    assert(runTagged("a").forall(_ == "a"))
+    val b = runTagged("b")
+    assert(b.size > 1 && b.forall(_ == "b"), b)
+  }
+
+  test("spreadCheckpoint: nondeterministic input is checkpointed, a parquet read is not") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val noisy = spark.range(0, 64, 1, 4).withColumn("r", org.apache.spark.sql.functions.rand(7))
+    assert(ScanMetrics.spreadTarget(noisy) == 0) // spread alone would not checkpoint
+    val pinned = ScanMetrics.spreadCheckpoint(noisy)
+    assert(pinned.queryExecution.analyzed.isInstanceOf[LogicalRDD])
+    assert(pinned.collect().toSeq == pinned.collect().toSeq)
+    val dir = java.nio.file.Files.createTempDirectory("graft-spread").resolve("t").toString
+    spark.range(0, 64, 1, 4).write.parquet(dir)
+    val pq = spark.read.parquet(dir)
+    assert(ScanMetrics.spreadTarget(pq) == 0)
+    assert(ScanMetrics.spreadCheckpoint(pq) eq pq)
+  }
 }

@@ -1,9 +1,13 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.time.{OffsetDateTime, ZoneOffset}
 
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.concurrent.{ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 import graft.profiler._
 
@@ -79,6 +83,15 @@ class SinksSpec extends AnyFunSuite {
     assert(meta.columnParams("c") == Map("DQP__Maximum" -> "3.0"))
   }
 
+  test("metadata upsert replaces the file atomically and leaves no temp file") {
+    val dir = tmp()
+    val sink = new Sinks.JsonMetadataSink(dir.toString)
+    sink.upsert("t", "DQP__", Map("DQP__Size" -> "1.0"), Map.empty)
+    sink.upsert("t", "DQP__", Map("DQP__Size" -> "2.0"), Map.empty)
+    assert(sink.read("t").tableParams == Map("DQP__Size" -> "2.0"))
+    assert(RunnerSpec.entries(dir) == Seq("t.json"))
+  }
+
   test("metadata upsert skips entirely when there are no table metrics") {
     val sink = new Sinks.JsonMetadataSink(tmp().toString)
     sink.upsert("t", "DQP__", Map.empty, Map("c" -> Map("DQP__X" -> "1")))
@@ -97,7 +110,15 @@ class SinksSpec extends AnyFunSuite {
   }
 }
 
-class RunnerSpec extends AnyFunSuite {
+object RunnerSpec {
+  def entries(dir: Path): Seq[String] = {
+    val ls = Files.list(dir)
+    try ls.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+    finally ls.close()
+  }
+}
+
+class RunnerSpec extends AnyFunSuite with TimeLimits {
   private lazy val spark = TestSpark.spark
 
   test("parseArgs: required flags, defaults, unknowns") {
@@ -147,6 +168,27 @@ class RunnerSpec extends AnyFunSuite {
     val meta = new Sinks.JsonMetadataSink(s"${out}_metadata").read("region")
     assert(meta.tableParams.keySet.contains("DQP__Size"))
     assert(meta.columnParams.nonEmpty)
+  }
+
+  test("a fatal error in one table fails the parallel run instead of hanging it") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-runner-fatal").toString
+    val catalog = new TableCatalog {
+      def name = "fatal"
+      def listTables = Seq("ok", "deep")
+      def load(t: String) =
+        if (t == "deep") throw new StackOverflowError("deep plan")
+        else Seq((1L, "a"), (2L, "b")).toDF("id", "s")
+    }
+    val args = Runner.RunnerArgs(dbName = "fatal", outPrefix = out, tableParallelism = 2)
+    // ThreadSignaler interrupts the test thread, so a hung run fails this
+    // test instead of stalling the suite
+    val e = failAfter(Span(120, Seconds)) {
+      intercept[StackOverflowError](Runner.run(spark, catalog, args))
+    }(ThreadSignaler)
+    assert(e.getMessage == "deep plan")
+    // the table that did publish left a complete file, no temp file
+    assert(RunnerSpec.entries(Paths.get(s"${out}_metadata")) == Seq("ok.json"))
   }
 }
 
