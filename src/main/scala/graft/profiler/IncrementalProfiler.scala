@@ -2,7 +2,6 @@ package graft.profiler
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Mergeable incremental profiling (SURVEY.md §4.4 optional extension —
   * the 100 TB operating mode): profile each partition/day/ingest batch
@@ -21,81 +20,48 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * exact-frequency family (CountDistinct/Entropy/Histogram/Uniqueness),
   * which provably needs the full value dictionary, requires a rescan.
   *
-  * Metric parity: Size/Completeness/Sum/Mean/StandardDeviation/Minimum/
-  * Maximum derived from a merged state are EXACTLY the whole-table values:
-  * the sums quantize each addend to DECIMAL(38,6) straight from the native
-  * column type (no double hop, so bigints beyond 2^53 stay exact), and
-  * decimal aggregation is order- and partition-independent. This is what
-  * the `incremental_profile` oracle asserts by splitting lineitem in two,
-  * merging, and hash-matching the whole-table DuckDB result.
-  *
-  * ANSI safety at scale mirrors [[ScanMetrics]]: addends are range-guarded
-  * (|x| ≤ 1e19 for sums, ≤ 1e15 for squares) and aggregated with `try_sum`,
-  * so a pathological column cannot crash a snapshot; `oor`/`oor_sq` count
-  * the guarded-out values and any overflow nulls propagate through merge,
-  * so an inexact column silently omits its Sum/Mean/StandardDeviation rows
-  * instead of reporting a wrong exact value. ApproxCountDistinct uses the
-  * DataSketches estimate (mergeable, unlike HLL++ `approx_count_distinct`
-  * buffers).
+  * Metric parity: the exact metrics of a merged state are EXACTLY the
+  * whole-table values, because the state is [[ColumnState]]'s
+  * (decimal-exact, order- and partition-independent; a column outside the
+  * exact range omits its Sum/Mean/StandardDeviation rows instead of
+  * reporting a wrong exact value) and any overflow null propagates through
+  * merge. The `incremental_profile` oracle asserts it by splitting
+  * lineitem in two, merging, and hash-matching the whole-table DuckDB
+  * result. ApproxCountDistinct uses the DataSketches estimate (mergeable,
+  * unlike HLL++ `approx_count_distinct` buffers).
   */
 object IncrementalProfiler {
 
-  private val Dec = DecimalType(38, 6)
-  // Same exact-path bounds as the scan battery (ScanMetrics.SumAbsBound /
-  // SqAbsBound): sums of 10^12 in-range rows stay inside DECIMAL(38,6).
-  private val SumAbsBound = 1e19
-  private val SqAbsBound = 1e15
-
   /** One pass over the table: numeric columns stacked to
-    * `(instance, v, vd, sq)` tuples, grouped by column — a single shuffle
-    * of partial states. `vd` casts the NATIVE value to DECIMAL(38,6)
-    * (exact for any in-range integral or decimal; quantizes doubles like
-    * the oracle's `CAST(c AS DECIMAL(38,6))`); `sq` matches ScanMetrics'
-    * square form `CAST(double(c) * double(c) AS DECIMAL(38,6))`. */
-  private def snapshotAggs: Seq[Column] = Seq(
-    count(lit(1)).as("n"),
-    count(col("v")).as("nn"),
-    try_sum(col("vd")).as("dec_sum"),
-    count(when(col("v").isNotNull && col("vd").isNull, lit(1))).as("oor"),
-    try_sum(col("sq")).as("dec_sum_sq"),
-    count(when(col("v").isNotNull && col("sq").isNull, lit(1))).as("oor_sq"),
-    min(col("v")).as("mn"),
-    max(col("v")).as("mx"),
-    // DataSketches HLL takes int/long/string/binary only; the string
-    // form of a double is injective, so distinct counts are preserved
-    hll_sketch_agg(col("v").cast("string")).as("hll"),
-    // mergeable KLL quantile sketch — percentile_approx buffers cannot
-    // be persisted across batches; this can (see KllAggs)
-    graft.functions.KllAggs.kllSketchAgg(col("v")).as("kll"))
-
-  private def stacked(df: DataFrame, excluded: Set[String]): DataFrame = {
+    * `(instance, v, vd, sq)` tuples ([[ColumnState.addends]]), grouped by
+    * instance (and segment) — a single shuffle of partial states: the
+    * [[ColumnState]] fields plus this path's mergeable sketches. */
+  private def snapshotKeyed(df: DataFrame, seg: Option[String]): DataFrame = {
+    graft.functions.KllAggs.register(df.sparkSession)
     val cols = df.schema.fields
       .filter(f => ColumnClass.of(f.dataType) == ColumnClass.Numeric)
-      .map(_.name).toSeq.filterNot(excluded)
+      .map(_.name).toSeq.filterNot(seg.contains)
     require(cols.nonEmpty, "no numeric columns to profile")
-    val stackArgs: Seq[Column] =
-      lit(cols.size) +: cols.flatMap { c =>
-        val xd = col(c).cast(DoubleType)
-        Seq(
-          lit(c),
-          xd,
-          when(abs(xd) <= SumAbsBound, col(c).cast(Dec)),
-          when(abs(xd) <= SqAbsBound, (xd * xd).cast(Dec)))
-      }
+    val stackArgs = lit(cols.size) +: cols.flatMap(c => lit(c) +: ColumnState.addends(col(c)))
+    val keys = seg.map(_ => "segment").toSeq :+ "instance"
+    val aggs = ColumnState.aggs(col("v"), col("vd"), col("sq"), ColumnState.families.toSet) ++ Seq(
+      // DataSketches HLL takes int/long/string/binary only; the string
+      // form of a double is injective, so distinct counts are preserved
+      hll_sketch_agg(col("v").cast("string")).as("hll"),
+      // mergeable KLL quantile sketch — percentile_approx buffers cannot
+      // be persisted across batches; this can (see KllAggs)
+      graft.functions.KllAggs.kllSketchAgg(col("v")).as("kll"))
     // single-row-group sources serialize the stack+partial phase — see
     // ScanMetrics.spread; all state fields are order-independent
     ScanMetrics.spread(df)
       .select(col("*"), stack(stackArgs: _*).as(Seq("instance", "v", "vd", "sq")))
-  }
-
-  def snapshot(df: DataFrame): DataFrame = {
-    graft.functions.KllAggs.register(df.sparkSession)
-    val aggs = snapshotAggs
-    stacked(df, Set.empty)
-      .select("instance", "v", "vd", "sq")
-      .groupBy("instance")
+      .select(seg.map(s => col(s).cast("string").as("segment")).toSeq ++
+        Seq(col("instance"), col("v"), col("vd"), col("sq")): _*)
+      .groupBy(keys.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
   }
+
+  def snapshot(df: DataFrame): DataFrame = snapshotKeyed(df, None)
 
   /** Segmented snapshot (E100): the same mergeable state keyed
     * (segment, instance) — per-tenant / per-event-type / per-day
@@ -105,66 +71,85 @@ object IncrementalProfiler {
     * associatively per segment, so daily segmented states roll up across
     * any partitioning. Null segments profile as their own segment (the
     * E79 contract). */
-  def snapshotBy(df: DataFrame, segCol: String): DataFrame = {
-    graft.functions.KllAggs.register(df.sparkSession)
-    val aggs = snapshotAggs
-    stacked(df, Set(segCol))
-      .select(col(segCol).cast("string").as("segment"),
-        col("instance"), col("v"), col("vd"), col("sq"))
-      .groupBy("segment", "instance")
-      .agg(aggs.head, aggs.tail: _*)
-  }
+  def snapshotBy(df: DataFrame, segCol: String): DataFrame = snapshotKeyed(df, Some(segCol))
 
   /** Combine any number of state relations — associative and commutative,
     * so states can merge across days, partitions or clusters in any order.
     * A snapshot whose decimal total overflowed (`try_sum` → null with
     * nn > 0) poisons the merged total to null rather than being silently
     * skipped by `sum`'s null-ignoring semantics. */
-  private def mergeAggs: Seq[Column] = Seq(
-    sum(col("n")).as("n"),
-    sum(col("nn")).as("nn"),
-    count(when(col("dec_sum").isNull && col("nn") > 0, lit(1))).as("sum_bad"),
-    try_sum(col("dec_sum")).as("dec_sum_raw"),
-    sum(col("oor")).as("oor"),
-    count(when(col("dec_sum_sq").isNull && col("nn") > 0, lit(1))).as("sq_bad"),
-    try_sum(col("dec_sum_sq")).as("dec_sum_sq_raw"),
-    sum(col("oor_sq")).as("oor_sq"),
-    min(col("mn")).as("mn"),
-    max(col("mx")).as("mx"),
-    hll_union_agg(col("hll")).as("hll"),
-    graft.functions.KllAggs.kllMergeAgg(col("kll")).as("kll"))
-
-  private def mergeFinal(keyCols: Seq[String]): Seq[Column] =
-    keyCols.map(col) ++ Seq(
-      col("n"), col("nn"),
-      when(col("sum_bad") === 0, col("dec_sum_raw")).as("dec_sum"),
-      col("oor"),
-      when(col("sq_bad") === 0, col("dec_sum_sq_raw")).as("dec_sum_sq"),
-      col("oor_sq"),
-      col("mn"), col("mx"), col("hll"), col("kll"))
-
-  def merge(states: Seq[DataFrame]): DataFrame = {
+  private def mergeKeyed(states: Seq[DataFrame], keys: Seq[String]): DataFrame = {
     states.foreach(s => graft.functions.KllAggs.register(s.sparkSession))
-    val aggs = mergeAggs
+    val aggs = Seq(
+      sum(col("n")).as("n"),
+      sum(col("nn")).as("nn"),
+      count(when(col("dec_sum").isNull && col("nn") > 0, lit(1))).as("sum_bad"),
+      try_sum(col("dec_sum")).as("dec_sum_raw"),
+      sum(col("oor")).as("oor"),
+      count(when(col("dec_sum_sq").isNull && col("nn") > 0, lit(1))).as("sq_bad"),
+      try_sum(col("dec_sum_sq")).as("dec_sum_sq_raw"),
+      sum(col("oor_sq")).as("oor_sq"),
+      min(col("mn")).as("mn"),
+      max(col("mx")).as("mx"),
+      hll_union_agg(col("hll")).as("hll"),
+      graft.functions.KllAggs.kllMergeAgg(col("kll")).as("kll"))
     states.reduce(_ unionByName _)
-      .groupBy("instance")
+      .groupBy(keys.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
-      .select(mergeFinal(Seq("instance")): _*)
+      .select(keys.map(col) ++ Seq(
+        col("n"), col("nn"),
+        when(col("sum_bad") === 0, col("dec_sum_raw")).as("dec_sum"),
+        col("oor"),
+        when(col("sq_bad") === 0, col("dec_sum_sq_raw")).as("dec_sum_sq"),
+        col("oor_sq"),
+        col("mn"), col("mx"), col("hll"), col("kll")): _*)
   }
+
+  def merge(states: Seq[DataFrame]): DataFrame = mergeKeyed(states, Seq("instance"))
 
   /** Segmented merge (E100): [[merge]] keyed (segment, instance). */
-  def mergeBy(states: Seq[DataFrame]): DataFrame = {
-    states.foreach(s => graft.functions.KllAggs.register(s.sparkSession))
-    val aggs = mergeAggs
-    states.reduce(_ unionByName _)
-      .groupBy("segment", "instance")
-      .agg(aggs.head, aggs.tail: _*)
-      .select(mergeFinal(Seq("segment", "instance")): _*)
+  def mergeBy(states: Seq[DataFrame]): DataFrame =
+    mergeKeyed(states, Seq("segment", "instance"))
+
+  /** `(segment, instance, name, value)` rows of a (possibly merged) state,
+    * the segment null when the state is unsegmented, with one Size row
+    * (instance `*`) per segment. */
+  private def metricsKeyed(
+      state: DataFrame, quantiles: Int, segmented: Boolean): DataFrame = {
+    import org.apache.datasketches.hll.HllSketch
+    import org.apache.datasketches.memory.Memory
+    val ps = ScanMetrics.quantilePs(quantiles)
+    val rows = Seq.newBuilder[(String, String, String, Double)]
+    val maxN = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    state.collect().foreach { r =>
+      val seg = if (segmented) r.getAs[String]("segment") else null
+      val inst = r.getAs[String]("instance")
+      def bytes(f: String): Option[Array[Byte]] = Option(r.getAs[Array[Byte]](f))
+      maxN(seg) = math.max(maxN.getOrElse(seg, 0L), r.getAs[Long]("n"))
+      ColumnState.derive(r, ColumnState.families.toSet).foreach {
+        case (name, v) => v.foreach(x => rows += ((seg, inst, name, x)))
+      }
+      bytes("hll").filter(_.nonEmpty).foreach { b =>
+        // same rounding as Spark's hll_sketch_estimate (bigint estimate)
+        rows += ((seg, inst, MetricNames.ApproxCountDistinct,
+          Math.round(HllSketch.heapify(Memory.wrap(b)).getEstimate).toDouble))
+      }
+      bytes("kll").foreach { b =>
+        graft.functions.KllAggs.quantiles(b, ps).foreach { qs =>
+          ps.zip(qs).foreach { case (p, q) =>
+            rows += ((seg, inst, MetricNames.approxQuantile(p), q))
+          }
+        }
+      }
+    }
+    maxN.foreach { case (seg, n) => rows += ((seg, "*", MetricNames.Size, n.toDouble)) }
+    state.sparkSession.createDataFrame(rows.result())
+      .toDF("segment", "instance", "name", "value")
   }
 
-  /** Metrics relation from a (possibly merged) state.
-    * Sum/Mean/StandardDeviation appear only when the exact decimal path
-    * held end to end (no out-of-range addends, no overflow);
+  /** Metrics relation `(instance, name, value)` from a (possibly merged)
+    * state. Sum/Mean/StandardDeviation appear only when the exact decimal
+    * path held end to end (no out-of-range addends, no overflow);
     * ApproxQuantiles come from the merged KLL sketch (error-bounded,
     * declared approximate like ApproxCountDistinct).
     *
@@ -176,67 +161,10 @@ object IncrementalProfiler {
     * emitting a LocalRelation is the same eager-materialization move the
     * reference stack makes for its metrics (SURVEY.md §4.2), and it lets
     * the sketch decoding run as plain JVM code instead of a UDF. The
-    * arithmetic (decimal→double cast, then IEEE double ops) is exactly the
-    * previous column-expression sequence, so oracle hashes are unchanged. */
-  /** Instance-level metric rows derived from one state row — the shared
-    * arithmetic of [[metrics]] and [[metricsBy]] (ONE definition so the
-    * whole-table and segmented paths cannot drift). */
-  private def rowMetrics(
-      r: org.apache.spark.sql.Row, ps: Seq[Double]): Seq[(String, String, Double)] = {
-    import org.apache.datasketches.hll.HllSketch
-    import org.apache.datasketches.memory.Memory
-    def nullable[T](name: String): Option[T] = {
-      val i = r.fieldIndex(name)
-      if (r.isNullAt(i)) None else Some(r.getAs[T](i))
-    }
-    val rows = Seq.newBuilder[(String, String, Double)]
-    val inst = r.getAs[String]("instance")
-    val n = r.getAs[Long]("n")
-    val nn = r.getAs[Long]("nn")
-    if (n > 0) rows += ((inst, "Completeness", nn.toDouble / n))
-    val decSum = nullable[java.math.BigDecimal]("dec_sum")
-    val sumOk = nn > 0 && r.getAs[Long]("oor") == 0 && decSum.isDefined
-    if (sumOk) {
-      val sumD = decSum.get.doubleValue
-      rows += ((inst, "Mean", sumD / nn))
-      rows += ((inst, "Sum", sumD))
-      val decSumSq = nullable[java.math.BigDecimal]("dec_sum_sq")
-      if (r.getAs[Long]("oor_sq") == 0 && decSumSq.isDefined) {
-        val sqD = decSumSq.get.doubleValue
-        rows += ((inst, "StandardDeviation",
-          math.sqrt(math.max(sqD / nn - math.pow(sumD / nn, 2), 0.0))))
-      }
-    }
-    nullable[Double]("mn").foreach(v => rows += ((inst, "Minimum", v)))
-    nullable[Double]("mx").foreach(v => rows += ((inst, "Maximum", v)))
-    nullable[Array[Byte]]("hll").filter(_.nonEmpty).foreach { b =>
-      // same rounding as Spark's hll_sketch_estimate (bigint estimate)
-      rows += ((inst, MetricNames.ApproxCountDistinct,
-        Math.round(HllSketch.heapify(Memory.wrap(b)).getEstimate).toDouble))
-    }
-    nullable[Array[Byte]]("kll").foreach { b =>
-      graft.functions.KllAggs.quantiles(b, ps).foreach { qs =>
-        ps.zip(qs).foreach { case (p, q) =>
-          rows += ((inst, MetricNames.approxQuantile(p), q))
-        }
-      }
-    }
-    rows.result()
-  }
-
-  def metrics(state: DataFrame, quantiles: Int = 10): DataFrame = {
-    val spark = state.sparkSession
-    val ps = ScanMetrics.quantilePs(quantiles)
-    val collected = state.collect()
-    val rows = Seq.newBuilder[(String, String, Double)]
-    var maxN = 0L
-    collected.foreach { r =>
-      maxN = math.max(maxN, r.getAs[Long]("n"))
-      rows ++= rowMetrics(r, ps)
-    }
-    if (collected.nonEmpty) rows += (("*", MetricNames.Size, maxN.toDouble))
-    spark.createDataFrame(rows.result()).toDF("instance", "name", "value")
-  }
+    * exact metrics come from [[ColumnState.derive]], the same derivation
+    * the scan battery uses. */
+  def metrics(state: DataFrame, quantiles: Int = 10): DataFrame =
+    metricsKeyed(state, quantiles, segmented = false).drop("segment")
 
   /** Segmented metrics (E100): [[metrics]] per segment, with a
     * per-segment Size row (instance `*`). The state is one row per
@@ -244,23 +172,6 @@ object IncrementalProfiler {
     * cardinality, so the eager collect policy carries over; for
     * unbounded segment domains the state RELATION itself is the product
     * (publish it to a sink), not this driver-side metric view. */
-  def metricsBy(state: DataFrame, quantiles: Int = 10): DataFrame = {
-    val spark = state.sparkSession
-    val ps = ScanMetrics.quantilePs(quantiles)
-    val collected = state.collect()
-    val rows = Seq.newBuilder[(String, String, String, Double)]
-    val maxN = scala.collection.mutable.Map.empty[String, Long]
-    collected.foreach { r =>
-      val seg = Option(r.getAs[String]("segment")).orNull
-      val segKey = if (seg == null) null else seg
-      maxN(segKey) = math.max(
-        maxN.getOrElse(segKey, 0L), r.getAs[Long]("n"))
-      rowMetrics(r, ps).foreach { case (i, m, v) => rows += ((segKey, i, m, v)) }
-    }
-    maxN.foreach { case (seg, n) =>
-      rows += ((seg, "*", MetricNames.Size, n.toDouble))
-    }
-    spark.createDataFrame(rows.result())
-      .toDF("segment", "instance", "name", "value")
-  }
+  def metricsBy(state: DataFrame, quantiles: Int = 10): DataFrame =
+    metricsKeyed(state, quantiles, segmented = true)
 }

@@ -9,11 +9,13 @@ import org.apache.spark.sql.types._
   * ([[FreqMetrics]]) and the schema-relation join, mirroring the reference's
   * `computeProfilerStats` (reference Profiler.scala:257-311) Spark-first.
   *
-  * Execution shape per table (SURVEY.md §3.2): one job for ALL scan-shareable
-  * metrics of ALL columns, plus — only when `compExp` — two small jobs per
-  * text column (shared frequency table + histogram). Metrics materialize on
-  * the driver as a tiny LocalRelation, exactly like Deequ's
-  * `successMetricsAsDataFrame` (SURVEY.md §4.2 "keep").
+  * Execution shape per table (SURVEY.md §3.2): the scan battery's passes
+  * (one Plain aggregation for ALL scan-shareable metrics of ALL columns,
+  * plus the Sketch and Distinct passes when requested), and — only when
+  * `compExp` — ONE shuffle stacking every text column into a shared
+  * frequency relation ([[FreqMetrics.batched]]), not Deequ's jobs per
+  * column. Metrics materialize on the driver as a tiny LocalRelation,
+  * exactly like Deequ's `successMetricsAsDataFrame` (SURVEY.md §4.2 "keep").
   */
 object Profiler {
 

@@ -41,8 +41,12 @@ object Runner {
       compExp, statsPrefix, profileUnsupportedTypes, noOfBins, quantiles)
   }
 
-  /** Hand-rolled `--flag value` parser (no scopt in the environment). */
+  /** Hand-rolled `--flag value` parser (no scopt in the environment). A
+    * malformed value is a usage error (`Left`), not an exception; the
+    * message carries the exception's class, since its message may be null. */
   def parseArgs(args: Array[String]): Either[String, RunnerArgs] = {
+    def read[T](flag: String, v: String)(p: String => T): Either[String, T] =
+      scala.util.Try(p(v)).toEither.left.map(e => s"bad value for $flag: '$v' ($e)")
     def loop(rest: List[String], acc: RunnerArgs): Either[String, RunnerArgs] =
       rest match {
         case Nil =>
@@ -52,14 +56,17 @@ object Runner {
         case "--dbName" :: v :: t => loop(t, acc.copy(dbName = v))
         case "--outPrefix" :: v :: t => loop(t, acc.copy(outPrefix = v))
         case "--region" :: _ :: t => loop(t, acc) // accepted, ignored
-        case "--compExp" :: v :: t => loop(t, acc.copy(compExp = v.toBoolean))
+        case (f @ "--compExp") :: v :: t =>
+          read(f, v)(_.toBoolean).flatMap(b => loop(t, acc.copy(compExp = b)))
         case "--statsPrefix" :: v :: t => loop(t, acc.copy(statsPrefix = v))
-        case "--profileUnsupportedTypes" :: v :: t =>
-          loop(t, acc.copy(profileUnsupportedTypes = v.toBoolean))
-        case "--noOfBins" :: v :: t => loop(t, acc.copy(noOfBins = v.toInt))
-        case "--quantiles" :: v :: t => loop(t, acc.copy(quantiles = v.toInt))
-        case "--tableParallelism" :: v :: t =>
-          loop(t, acc.copy(tableParallelism = v.toInt))
+        case (f @ "--profileUnsupportedTypes") :: v :: t =>
+          read(f, v)(_.toBoolean).flatMap(b => loop(t, acc.copy(profileUnsupportedTypes = b)))
+        case (f @ "--noOfBins") :: v :: t =>
+          read(f, v)(_.toInt).flatMap(n => loop(t, acc.copy(noOfBins = n)))
+        case (f @ "--quantiles") :: v :: t =>
+          read(f, v)(_.toInt).flatMap(n => loop(t, acc.copy(quantiles = n)))
+        case (f @ "--tableParallelism") :: v :: t =>
+          read(f, v)(_.toInt).flatMap(n => loop(t, acc.copy(tableParallelism = n)))
         case other :: _ => Left(s"unknown argument: $other")
       }
     loop(args.toList, RunnerArgs())

@@ -1,6 +1,6 @@
 package graft.profiler
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -27,8 +27,8 @@ object AggKind {
   * stack's one real multi-query optimization (Deequ scan-sharing,
   * SURVEY.md §4.2). At 100 TB this is the difference between 1 scan of the
   * data and ~20.
-  */
-/** `heavy` marks slots whose PER-ROW update cost dominates the pass (the
+  *
+  * `heavy` marks slots whose PER-ROW update cost dominates the pass (the
   * decimal-quantized exact sums: a Double.toString round trip per value) —
   * the signal that parallelizing the partial phase is worth one exchange
   * on a single-row-group source (see [[ScanMetrics.spread]]). */
@@ -41,16 +41,14 @@ final case class AggSlot(
 /** Builders for the scan-shareable metric family (SURVEY.md §2.A: D1, N1-N9,
   * T1-T5) — everything computable in a single wide aggregation over the table.
   *
-  * Determinism design (SURVEY.md §7.3/§7.4.3): double summation is not
-  * associative, so a 32-partition local run, a 1000-executor cluster run and
-  * the sequential DuckDB oracle would disagree in the last ulps. `Sum`, `Mean`
-  * and `StandardDeviation` therefore quantize each addend to DECIMAL(38,6)
-  * first — decimal aggregation is exact and order-independent, and the oracle
-  * SQL applies the identical quantization. Decimal aggregation stays inside
-  * whole-stage codegen, and DECIMAL(38,6) holds > 10^31, so 100 TB-scale sums
-  * cannot overflow.
+  * Completeness, Minimum, Maximum, Mean, Sum and StandardDeviation come from
+  * one [[ColumnState]] per column in the Plain pass (decimal-exact moments,
+  * derived on the driver by the same function the incremental profiler
+  * uses). A column outside the exact decimal range falls back to the double
+  * `sum`/`avg`/`stddev_pop` of the same pass (correct, order-dependent in
+  * the last ulps).
   *
-  * `Distinctness` uses `count_distinct` inside the same aggregation: Catalyst
+  * `Distinctness` uses `count_distinct` in its own Distinct pass: Catalyst
   * rewrites multi-column distinct aggregates into one Expand + two-phase
   * HashAggregate — one shuffle total, versus Deequ's one groupBy job per
   * column.
@@ -58,85 +56,45 @@ final case class AggSlot(
 object ScanMetrics {
   import MetricNames._
 
-  private val Dec = DecimalType(38, 6)
-
   private def num(a: Any): Option[Double] = a match {
     case null => None
     case n: java.lang.Number => Some(n.doubleValue)
     case _ => None
   }
 
-  private def colSlot(
-      inst: String, name: String, expr: Column, heavy: Boolean = false): AggSlot =
-    AggSlot(
-      expr, a => num(a).map(v => MetricRow("Column", inst, name, v)).toSeq,
-      heavy = heavy)
+  private def colSlot(inst: String, name: String, expr: Column): AggSlot =
+    AggSlot(expr, a => num(a).map(v => MetricRow("Column", inst, name, v)).toSeq)
 
   /** Null (→ no metric row) instead of an ANSI divide-by-zero on empty /
     * all-null inputs. */
   private def safeDiv(n: Column, d: Column): Column = when(d > 0, n / d)
 
-  // Range guards for the exact-decimal path: |x| ≤ 1e19 keeps sums of 10^12
-  // rows inside DECIMAL(38,6); |x| ≤ 1e15 keeps squares inside it. Values
-  // beyond that (e.g. epoch-nanos columns) would overflow the decimal cast
-  // under ANSI mode, so those columns take the documented fallback below.
-  private val SumAbsBound = 1e19
-  private val SqAbsBound = 1e15
-
-  private def xd(c: Column): Column = c.cast(DoubleType)
-
-  private def inRange(c: Column, bound: Double): Column = abs(xd(c)) <= bound
-
-  /** Order-independent exact sum — null if any value is out of decimal
-    * range or the decimal total itself overflows (try_sum).
-    *
-    * Cost profile (measured at sf0.1): the double→decimal cast is
-    * the pass's floor — Spark quantizes through
-    * `BigDecimal.valueOf(d).setScale(6, HALF_UP)`, i.e. a Double.toString
-    * round trip per value (~0.5 µs), which also pins the rounding semantics
-    * the DuckDB oracle matches. Splitting the accumulator (integer/fraction
-    * parts to keep Decimal adds in compact-long form) was measured and
-    * rejected: <5% faster and NOT bit-identical, because any algebraic
-    * re-association changes which decimal string gets rounded. Catalyst
-    * does dedup the repeated decSum/count subtrees across the guarded
-    * expressions (8 columns of the full stddev battery plan exactly 36
-    * aggregate buffers), so the guards are buffer-free; the decimal
-    * quantization is simply the deliberate, linear, codegen-resident price
-    * of cluster-order-independent exactness. */
-  private def decSum(c: Column): Column =
-    try_sum(when(inRange(c, SumAbsBound), c.cast(Dec))).cast(DoubleType)
-
-  private def decSumSq(c: Column): Column =
-    try_sum(when(inRange(c, SqAbsBound), (xd(c) * xd(c)).cast(Dec))).cast(DoubleType)
-
-  /** True iff every non-null value passed the range guard AND the decimal
-    * total did not overflow — i.e. the exact path is valid. */
-  private def exactOk(c: Column, bound: Double, total: Column): Column =
-    count(c) > 0 &&
-      count(when(inRange(c, bound), lit(1))) === count(c) &&
-      total.isNotNull
-
-  /** Exact decimal sum with graceful degradation: columns whose magnitude
-    * exceeds the decimal range fall back to the plain double sum (correct,
-    * order-dependent in the last ulps). */
-  private def sumMetric(c: Column): Column =
-    when(exactOk(c, SumAbsBound, decSum(c)), decSum(c)).otherwise(sum(xd(c)))
-
-  private def meanMetric(c: Column): Column =
-    when(exactOk(c, SumAbsBound, decSum(c)), decSum(c) / count(c)).otherwise(avg(xd(c)))
-
-  /** Population standard deviation sqrt(E[x²] − E[x]²) (Deequ's
-    * StandardDeviation is population, not sample — SURVEY.md §2.A N6),
-    * clamped at 0 against floating-point cancellation on constant columns.
-    * Exact-decimal moments when in range; Welford-style `stddev_pop`
-    * fallback outside it. */
-  private def stddevPopMetric(c: Column): Column =
-    when(
-      exactOk(c, SqAbsBound, decSumSq(c)) && decSum(c).isNotNull,
-      sqrt(greatest(
-        decSumSq(c) / count(c) - pow(decSum(c) / count(c), lit(2)),
-        lit(0.0))))
-      .otherwise(stddev_pop(xd(c)))
+  /** The [[ColumnState]] of one column as a struct slot holding only the
+    * fields its requested state families read, plus the double fallback of
+    * each requested moment (a field named after its metric); None when no
+    * state family is requested. Heavy when it aggregates decimal addends.
+    * Catalyst shares identical aggregates across slots, so two state slots
+    * of one column cost no extra buffers. */
+  private def stateSlot(
+      inst: String, v: Column, vd: Column, sq: Column, fams: Set[String]): Option[AggSlot] = {
+    val want = fams.intersect(ColumnState.families.toSet)
+    val fallbacks = Seq(
+      "mean" -> avg(v).as(Mean), "sum" -> sum(v).as(Sum),
+      "stddev_pop" -> stddev_pop(v).as(StandardDeviation))
+      .collect { case (f, agg) if want(f) => agg }
+    // state fields are lower-case, so a metric-named field is a fallback
+    def fallback(r: Row, name: String): Option[Double] =
+      if (r.schema.fieldNames.contains(name)) num(r.getAs[Any](name)) else None
+    if (want.isEmpty) None
+    else Some(AggSlot(
+      struct(ColumnState.aggs(v, vd, sq, want) ++ fallbacks: _*),
+      { case r: Row =>
+        ColumnState.derive(r, want).flatMap { case (name, exact) =>
+          exact.orElse(fallback(r, name)).map(MetricRow("Column", inst, name, _))
+        }
+      },
+      heavy = fallbacks.nonEmpty))
+  }
 
   def quantilePs(q: Int): Seq[Double] = (1 to q).map(_.toDouble / q)
 
@@ -161,9 +119,11 @@ object ScanMetrics {
         count(lit(1)).cast(DoubleType),
         a => num(a).map(v => MetricRow("Dataset", "*", Size, v)).toSeq)
 
-    def shared(i: String, c: Column): Unit = {
-      if (fams("completeness"))
-        b += colSlot(i, Completeness, safeDiv(count(c).cast(DoubleType), count(lit(1))))
+    // Completeness is a state slot of its own so that metric rows keep
+    // their order (Completeness, ApproxCountDistinct, then the moments)
+    val completeness = fams.intersect(Set("completeness"))
+    def shared(i: String, c: Column, completenessSlot: Option[AggSlot]): Unit = {
+      b ++= completenessSlot
       if (fams("approx_count_distinct"))
         b += colSlot(i, ApproxCountDistinct, approx_count_distinct(c).cast(DoubleType))
       if (fams("distinctness"))
@@ -178,13 +138,9 @@ object ScanMetrics {
       val i = f.name
       ColumnClass.of(f.dataType) match {
         case ColumnClass.Numeric =>
-          shared(i, c)
-          if (fams("minimum")) b += colSlot(i, Minimum, min(c).cast(DoubleType))
-          if (fams("maximum")) b += colSlot(i, Maximum, max(c).cast(DoubleType))
-          if (fams("mean")) b += colSlot(i, Mean, meanMetric(c), heavy = true)
-          if (fams("sum")) b += colSlot(i, Sum, sumMetric(c), heavy = true)
-          if (fams("stddev_pop"))
-            b += colSlot(i, StandardDeviation, stddevPopMetric(c), heavy = true)
+          val Seq(v, vd, sq) = ColumnState.addends(c)
+          shared(i, c, stateSlot(i, v, vd, sq, completeness))
+          b ++= stateSlot(i, v, vd, sq, fams - "completeness")
           if (fams("approx_quantiles")) {
             val ps = quantilePs(cfg.quantiles)
             // accuracy 100 = 1 / Deequ's relativeError 0.01 (SURVEY.md §2.A N8)
@@ -198,7 +154,7 @@ object ScanMetrics {
           // value-map slot it replaced paid a single-threaded final merge
           // per column chunk.
         case ColumnClass.Text =>
-          shared(i, c)
+          shared(i, c, stateSlot(i, c, lit(null), lit(null), completeness))
           if (fams("max_length")) b += colSlot(i, MaxLength, max(length(c)).cast(DoubleType))
           if (fams("min_length")) b += colSlot(i, MinLength, min(length(c)).cast(DoubleType))
         case _ => () // Castable handled by Profiler.castUnsupported; Skipped: Size only
@@ -207,18 +163,6 @@ object ScanMetrics {
     b.result()
   }
 
-  /** Evaluate the slots, one `df.agg(...)` per [[AggKind]] pass (see AggKind
-    * doc), and extract the metric rows. The result rows are tiny by
-    * construction (one cell per metric), so collecting them to the driver is
-    * the correct move at any scale — the aggregation itself has already
-    * reduced the 100 TB.
-    *
-    * The passes are independent, so their jobs are SUBMITTED concurrently
-    * (driver threads; Spark schedules jobs from multiple threads fine):
-    * one pass's shuffle/sketch phase overlaps another's scan instead of
-    * serializing three cluster round trips. Results are assembled in the
-    * fixed Plain/Sketch/Distinct order, so output is identical to the
-    * sequential evaluation. */
   /** Parquet splits at ROW-GROUP boundaries: a table written as one row
     * group scans as ONE task no matter the split config, serializing the
     * partial-aggregation phase (where nearly all of an aggregate battery's
@@ -286,25 +230,24 @@ object ScanMetrics {
     else df
   }
 
+  /** Evaluate the slots, one `df.agg(...)` per [[AggKind]] pass (see AggKind
+    * doc), and extract the metric rows. The result rows are tiny by
+    * construction (one cell per slot), so collecting them to the driver is
+    * the correct move at any scale — the aggregation itself has already
+    * reduced the 100 TB.
+    *
+    * The passes are independent, so their jobs are SUBMITTED concurrently
+    * (driver threads; Spark schedules jobs from multiple threads fine):
+    * one pass's shuffle/sketch phase overlaps another's scan instead of
+    * serializing three cluster round trips. Results are assembled in the
+    * fixed Plain/Sketch/Distinct order, so output is identical to the
+    * sequential evaluation. */
   def compute(df: DataFrame, slots: Seq[AggSlot]): Seq[MetricRow] = {
     // spread() is one full-data exchange — worth it only when the pass has
     // per-row work to parallelize (sketches, distinct's Expand, decimal
     // sums). A cheap codegen'd Plain-only battery (count/min/max) finishes
     // the serial partial phase faster than the shuffle it would buy.
     val needSpread = slots.exists(s => s.kind != AggKind.Plain || s.heavy)
-    // localCheckpoint (r16): with several concurrent passes over the same
-    // spread exchange, each pass's job re-ran the scan+exchange (probed:
-    // two 22 MB exchange-write jobs in profile_lineitem_full) — a shared
-    // materialization runs it once and every pass reads the cached blocks
-    val multiPass = ((if (slots.exists(_.kind == AggKind.Plain)) 1 else 0) +
-      (slots.count(_.kind == AggKind.Sketch) + 1) / 2 +
-      (if (slots.exists(_.kind == AggKind.Distinct)) 1 else 0)) > 1
-    // the checkpoint is gated on spread() actually firing (ADVICE r16,
-    // see spreadCheckpoint): at-scale inputs keep re-reading the scan
-    val src =
-      if (needSpread && multiPass) spreadCheckpoint(df)
-      else if (needSpread) spread(df)
-      else df
     // Sketch slots (TypedImperativeAggregate buffers — exact percentile
     // value maps, KLL) pay a single-threaded final-merge per pass;
     // chunking them into a few concurrent jobs overlaps those merges
@@ -313,11 +256,21 @@ object ScanMetrics {
     // 3.2 s at 4, 3.8 s at 1 — per-slot jobs thrash the scan). Plain and
     // Distinct stay one pass each — their codegen'd partials want ONE
     // scan, not many.
-    val groups: Seq[Seq[AggSlot]] =
+    val passes: Seq[Seq[AggSlot]] = (
       Seq(slots.filter(_.kind == AggKind.Plain)) ++
         slots.filter(_.kind == AggKind.Sketch).grouped(2).toSeq ++
-        Seq(slots.filter(_.kind == AggKind.Distinct))
-    val passes = groups.filter(_.nonEmpty)
+        Seq(slots.filter(_.kind == AggKind.Distinct))).filter(_.nonEmpty)
+    // localCheckpoint (r16): with several concurrent passes over the same
+    // spread exchange, each pass's job re-ran the scan+exchange (probed:
+    // two 22 MB exchange-write jobs in profile_lineitem_full) — a shared
+    // materialization runs it once and every pass reads the cached blocks.
+    // The checkpoint is gated on spread() actually firing (ADVICE r16,
+    // see spreadCheckpoint): at-scale inputs keep re-reading the scan
+    val multiPass = passes.size > 1
+    val src =
+      if (needSpread && multiPass) spreadCheckpoint(df)
+      else if (needSpread) spread(df)
+      else df
     val rows = graft.Par.map(df.sparkSession, passes, passes.size) { group =>
       val aliased = group.zipWithIndex.map { case (s, i) => s.expr.alias(s"m$i") }
       src.agg(aliased.head, aliased.tail: _*).head()

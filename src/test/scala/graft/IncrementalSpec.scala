@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.profiler.IncrementalProfiler
+import graft.profiler.{ColumnClass, IncrementalProfiler, Profiler, ProfilerConfig}
 
 /** Mergeable incremental profiling: merged partial states must reproduce
   * the whole-table profile exactly (for the exact metrics) regardless of
@@ -54,5 +54,50 @@ class IncrementalSpec extends AnyFunSuite {
       val est = merged(("l_quantity", s"ApproxQuantiles-$p"))
       assert(math.abs(est - ex) <= 3.0, s"p=$p est=$est exact=$ex")
     }
+  }
+
+  test("scan battery and incremental snapshot derive bit-identical exact metrics") {
+    import spark.implicits._
+    val fams = Set("size", "completeness", "minimum", "maximum", "mean", "sum", "stddev_pop")
+    def bits(kv: Seq[((String, String), Double)]): Map[(String, String), Long] =
+      kv.map { case (k, v) => k -> java.lang.Double.doubleToRawLongBits(v) }.toMap
+    /** The (instance, name) pairs only the scan battery emits. */
+    def scanOnly(df: org.apache.spark.sql.DataFrame): Set[(String, String)] = {
+      val scan = bits(Profiler.metrics(df, ProfilerConfig(), fams)
+        .map(m => (m.instance, m.name) -> m.value))
+      val inc = bits(IncrementalProfiler.metrics(IncrementalProfiler.snapshot(df))
+        .collect().toSeq
+        .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2))
+        .filterNot { case ((_, name), _) =>
+          name == "ApproxCountDistinct" || name.startsWith("ApproxQuantiles") })
+      assert((inc.keySet -- scan.keySet).isEmpty, s"incremental-only: ${inc.keySet -- scan.keySet}")
+      for (k <- inc.keySet)
+        assert(scan(k) == inc(k), s"$k: scan ${java.lang.Double.longBitsToDouble(scan(k))} " +
+          s"vs incremental ${java.lang.Double.longBitsToDouble(inc(k))}")
+      scan.keySet -- inc.keySet
+    }
+    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val textCompleteness = li.schema.fields
+      .filter(f => ColumnClass.of(f.dataType) == ColumnClass.Text)
+      .map(f => (f.name, "Completeness")).toSet
+    assert(textCompleteness.nonEmpty)
+    assert(scanOnly(li) == textCompleteness)
+    // ±0.0 (min/max kept unambiguous), NaN, nulls, an all-null column,
+    // 2e16 and a bigint past 2^53 (square out of range), 5e19 (sum out of
+    // range): only the scan's double fallbacks of the out-of-range moments
+    // and the text column's Completeness are left unmatched
+    val odd = Seq[(Option[Double], Option[Double], Option[Double], Option[Double],
+        Option[Double], Option[Long], Option[String], Option[Double])](
+      (Some(-0.0), Some(-0.0), Some(1.0), Some(2e16), Some(5e19), Some(1L), Some("a"), None),
+      (Some(0.0), None, Some(Double.NaN), Some(1.0), Some(1.0),
+        Some(4611686018427387903L), None, None),
+      (Some(-1.5), Some(-0.0), Some(2.0), None, Some(-3.0), None, Some("bb"), None),
+      (Some(2.5), Some(-0.0), None, Some(3.0), Some(2.0), Some(7L), Some("a"), None),
+      (None, None, Some(4.0), Some(-2e16), None, Some(-5L), None, None))
+      .toDF("z", "negz", "nan", "big", "huge", "k", "s", "none")
+    val moments = Set("Mean", "Sum", "StandardDeviation")
+    assert(scanOnly(odd) == Set("s" -> "Completeness") ++
+      moments.map("nan" -> _) ++ moments.map("huge" -> _) +
+      ("big" -> "StandardDeviation") + ("k" -> "StandardDeviation"))
   }
 }

@@ -130,6 +130,16 @@ class RunnerSpec extends AnyFunSuite with TimeLimits {
     assert(ok == Right(Runner.RunnerArgs(
       dbName = "/d", outPrefix = "/o", compExp = true, noOfBins = 7)))
     assert(Runner.parseArgs(Array("--dbName", "/d", "--outPrefix", "/o", "--bogus", "1")).isLeft)
+    // malformed values are usage errors naming the flag and the exception
+    // class, not exceptions out of the parser
+    val base = Array("--dbName", "/d", "--outPrefix", "/o")
+    val badBool = Runner.parseArgs(base ++ Array("--compExp", "yes"))
+    assert(badBool.left.exists(m => m.contains("--compExp") &&
+      m.contains("IllegalArgumentException")), badBool)
+    val badInt = Runner.parseArgs(base ++ Array("--noOfBins", "ten"))
+    assert(badInt.left.exists(m => m.contains("--noOfBins") &&
+      m.contains("NumberFormatException")), badInt)
+    assert(Runner.parseArgs(base ++ Array("--tableParallelism", "")).isLeft)
   }
 
   test("parallel table loop produces the same results and sinks as sequential") {
