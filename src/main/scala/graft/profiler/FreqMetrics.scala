@@ -1,14 +1,14 @@
 package graft.profiler
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The frequency-based metric family (SURVEY.md §2.A: F1-F5), computed from
-  * ONE `groupBy(col).count()` relation per profiled column — Deequ's shared
-  * frequency table (SURVEY.md §4.2), re-expressed as two plain DataFrame
-  * aggregations.
+  * ONE frequency relation `(instance, v, cnt)` shared by every text column
+  * ([[FreqMetrics.batched]]) — Deequ's shared frequency table (SURVEY.md
+  * §4.2), re-expressed as plain DataFrame aggregations.
   *
   * Denominator semantics are the reference contract (§2.A, §7.4.2): with
   * `nn` = non-null rows, `|V|` = distinct non-null values, `|U|` = values
@@ -22,43 +22,6 @@ import org.apache.spark.sql.types._
   */
 object FreqMetrics {
   import MetricNames._
-
-  /** Per-column frequency table `(v, cnt)` over non-null values. At scale this
-    * is one hash-partitioned shuffle on the column's values; partial
-    * aggregation (map-side combine) happens automatically. */
-  def freqTable(df: DataFrame, c: String): DataFrame =
-    df.select(col(c).as("v")).where(col("v").isNotNull)
-      .groupBy("v").agg(count(lit(1)).as("cnt"))
-
-  /** CountDistinct, Entropy, UniqueValueRatio and Uniqueness from a single
-    * aggregation over the frequency table.
-    *
-    * Entropy uses the algebraic rewrite
-    *   H = ln(nn) − (Σ cnt·ln cnt) / nn
-    * of −Σ (cnt/nn)·ln(cnt/nn), so one pass suffices without knowing `nn`
-    * beforehand. The oracle SQL applies the identical formula.
-    */
-  def metrics(df: DataFrame, c: String, fams: Set[String]): Seq[MetricRow] = {
-    val row = freqTable(df, c).agg(
-      count(lit(1)).as("nv"),
-      sum("cnt").as("nn"),
-      sum(when(col("cnt") === 1, 1L).otherwise(0L)).as("nu"),
-      sum(col("cnt").cast(DoubleType) * log(col("cnt").cast(DoubleType))).as("slc")
-    ).head()
-    if (row.isNullAt(1)) Nil // column has no non-null values
-    else {
-      val nv = row.getLong(0).toDouble
-      val nn = row.getLong(1).toDouble
-      val nu = row.getLong(2).toDouble
-      val slc = row.getDouble(3)
-      val b = Seq.newBuilder[MetricRow]
-      if (fams("count_distinct")) b += MetricRow("Column", c, CountDistinct, nv)
-      if (fams("entropy")) b += MetricRow("Column", c, Entropy, math.log(nn) - slc / nn)
-      if (fams("unique_value_ratio")) b += MetricRow("Column", c, UniqueValueRatio, nu / nv)
-      if (fams("uniqueness")) b += MetricRow("Column", c, Uniqueness, nu / nn)
-      b.result()
-    }
-  }
 
   /** All frequency-family metrics for ALL text columns from ONE shuffle.
     *
@@ -148,33 +111,5 @@ object FreqMetrics {
       }
       b.result()
     } finally { freq.unpersist(); () }
-  }
-
-  /** Histogram (F3) — the one analyzer with its own pass even inside Deequ
-    * (SURVEY.md §2.A impl note): null-INclusive, values stringified with the
-    * plain Spark cast, nulls bucketed as `"NullValue"`, ratio denominator `n`
-    * (all rows), detail bins capped at `noOfBins` with the deterministic
-    * `(count DESC, value ASC)` tie-break (SURVEY.md §7.3).
-    *
-    * The grouped table is persisted because both the bin count (`|V|`, before
-    * the cap) and the top-N are derived from it; it is at most one row per
-    * distinct value and far smaller than the source.
-    */
-  def histogram(df: DataFrame, c: String, noOfBins: Int, n: Long): Seq[MetricRow] = {
-    val f = df.select(coalesce(col(c).cast(StringType), lit(NullBucket)).as("v"))
-      .groupBy("v").agg(count(lit(1)).as("cnt"))
-      .persist()
-    try {
-      val bins = f.count()
-      val top = f.orderBy(col("cnt").desc, col("v").asc).limit(noOfBins).collect()
-      MetricRow("Column", c, HistogramBins, bins.toDouble) +:
-        top.toSeq.flatMap { r =>
-          val v = r.getString(0)
-          val cnt = r.getLong(1)
-          Seq(
-            MetricRow("Column", c, histogramAbs(v), cnt.toDouble),
-            MetricRow("Column", c, histogramRatio(v), cnt.toDouble / n))
-        }
-    } finally { f.unpersist(); () }
   }
 }

@@ -1,6 +1,8 @@
 package graft.profiler
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.classic
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,6 +18,10 @@ import org.apache.spark.sql.types._
   * frequency relation ([[FreqMetrics.batched]]), not Deequ's jobs per
   * column. Metrics materialize on the driver as a tiny LocalRelation,
   * exactly like Deequ's `successMetricsAsDataFrame` (SURVEY.md §4.2 "keep").
+  *
+  * Execution mode: a table whose plan-size estimate is under 512 KiB runs
+  * its battery in a child session with code generation off (see
+  * [[metrics]]); larger tables run codegen'd on the caller's session.
   */
 object Profiler {
 
@@ -59,8 +65,54 @@ object Profiler {
 
   /** Compute the requested metric families over every applicable column.
     * This is the engine's analytical core; everything returned is exact
-    * unless the family is explicitly approximate (N7/N8). */
-  def metrics(df0: DataFrame, cfg: ProfilerConfig, fams: Set[String]): Seq[MetricRow] = {
+    * unless the family is explicitly approximate (N7/N8).
+    *
+    * The one execution-mode gate: a table under [[InterpretedBelowBytes]]
+    * runs the battery interpreted ([[interpretedSession]]), every other
+    * table runs it on the caller's session. Small tables are bound by
+    * per-table fixed costs, and codegen is most of them: each new table
+    * shape pays a Janino compile and the JIT warm-up of every generated
+    * class, while interpreted expressions are the same Spark classes for
+    * every table, so the JIT warms them once per JVM. Results are the same
+    * in both modes (pinned bit-for-bit by ExecutionModeSpec). */
+  def metrics(df: DataFrame, cfg: ProfilerConfig, fams: Set[String]): Seq[MetricRow] =
+    battery(if (interpreted(df)) interpretedSession(df) else df, cfg, fams)
+
+  /** Plan-size estimate under which [[metrics]] runs interpreted. Measured
+    * on a 4-core VM: a catalog of 4–317 KB tables used 30 % less CPU with
+    * all of them under it, while codegen off for the sf0.1 tables
+    * (2–11 MB) cost about 35 %. On the sf0.1 catalog, 256 KiB, 512 KiB
+    * and 1,000,000 B read the same within noise. sf0.01 `lineitem`
+    * (1,042,463 B) stays above it. */
+  private[graft] val InterpretedBelowBytes: BigInt = BigInt(512L << 10)
+
+  /** Whether [[metrics]] runs `df`'s battery interpreted. The estimate is
+    * the optimized plan's `sizeInBytes` (for a file scan, the files'
+    * total size; no job runs). */
+  private[graft] def interpreted(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes < InterpretedBelowBytes
+
+  /** `df` rebound to a new child session of its own with whole-stage and
+    * expression codegen off. The child shares the SparkContext (so jobs
+    * keep the thread's local properties) and the cache manager (so
+    * persisted inputs stay hits); it gets every runtime conf the caller
+    * set (ANSI mode changes results), which `newSession` does not copy.
+    * The frame is rebound through its analyzed plan, so a frame over the
+    * caller's temp view still resolves. Query-execution listeners
+    * registered on the caller's session do not see the child's queries. */
+  private[graft] def interpretedSession(df: DataFrame): DataFrame = {
+    val parent = df.sparkSession
+    val child = parent.newSession()
+    parent.conf.getAll.foreach { case (k, v) =>
+      if (parent.conf.isModifiable(k)) child.conf.set(k, v)
+    }
+    child.conf.set("spark.sql.codegen.wholeStage", "false")
+    child.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    new classic.Dataset[Row](child, df.queryExecution.analyzed, df.encoder)
+  }
+
+  /** The battery of [[metrics]] on `df0`'s own session, ungated. */
+  private[graft] def battery(df0: DataFrame, cfg: ProfilerConfig, fams: Set[String]): Seq[MetricRow] = {
     val df = if (cfg.profileUnsupportedTypes) castUnsupported(df0) else df0
     // quantiles_exact runs as the frequency-CDF battery (ExactQuantiles,
     // r16): same numbers as the percentile-aggregate slot it replaces
@@ -123,16 +175,21 @@ object Profiler {
   /** The metrics ⟕ schema relation from ALREADY-COMPUTED metric rows — the
     * one join shape (R6, reference Profiler.scala:299-303) shared by
     * [[profile]] and Runner's publish loop, so the sink and the query
-    * surface cannot drift. The schema side is a handful of rows —
-    * broadcast explicitly. The Dataset row (`*`) gets a null type, as in
-    * the reference. */
+    * surface cannot drift. Both sides are already on the driver, so the
+    * join is a map lookup and the result one LocalRelation: writing it
+    * runs one job, not a broadcast plus the write. Columns `(entity,
+    * instance, name, value, type)` in metric-row order; `value` is not
+    * null, and the Dataset row (`*`) gets a null type, as in the
+    * reference. */
   def profileRelation(
       spark: SparkSession,
       rows: Seq[MetricRow],
-      df: DataFrame): DataFrame =
-    metricsDF(spark, rows)
-      .join(broadcast(schemaDF(spark, df)), Seq("instance"), "left")
-      .select(col("entity"), col("instance"), col("name"), col("value"), col("type"))
+      df: DataFrame): DataFrame = {
+    val types = df.schema.fields.iterator.map(f => f.name -> f.dataType.catalogString).toMap
+    spark.createDataFrame(rows.map(r =>
+      (r.entity, r.instance, r.name, r.value, types.get(r.instance).orNull)))
+      .toDF("entity", "instance", "name", "value", "type")
+  }
 
   /** Full profile of one table: compute the battery, then [[profileRelation]]. */
   def profile(

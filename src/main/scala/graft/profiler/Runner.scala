@@ -125,7 +125,8 @@ object Runner {
           rows.size
         } catch {
           case e: Exception =>
-            System.err.println(s"[runner] table $table failed: ${e.getMessage}")
+            // the class too: many exceptions carry a null message
+            System.err.println(s"[runner] table $table failed: $e")
             -1
         }
       table -> n

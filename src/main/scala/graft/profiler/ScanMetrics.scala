@@ -7,12 +7,17 @@ import org.apache.spark.sql.types._
 /** Which aggregation pass a slot belongs to. Mixing aggregate classes in
   * one `agg(...)` forces the weakest execution strategy onto all of them
   * (measured ~10x at sf0.1), so the scan battery runs as up to three passes:
-  *   - Plain: declarative aggregates + HLL — whole-stage-codegen'd
-  *     HashAggregate, the hot pass holding the decimal-exact sums;
+  *   - Plain: declarative aggregates + HLL — HashAggregate, the hot pass
+  *     holding the decimal-exact sums. Whole-stage codegen'd only when no
+  *     `approx_count_distinct` is requested: HLL++ is an
+  *     ImperativeAggregate, so with it neither HashAggregate of the pass
+  *     is codegen'd (its expressions still are);
   *   - Sketch: percentile sketches (TypedImperativeAggregate) —
   *     ObjectHashAggregate, no codegen, kept away from the Plain pass;
   *   - Distinct: all `count_distinct`s — one Expand + two-phase
-  *     HashAggregate, a single shuffle covering every column. */
+  *     HashAggregate, a single shuffle covering every column.
+  * A table under `Profiler.InterpretedBelowBytes` runs every pass with
+  * codegen off (see [[Profiler.metrics]]). */
 sealed trait AggKind
 object AggKind {
   case object Plain extends AggKind

@@ -2,13 +2,13 @@ package graft.profiler
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.time.OffsetDateTime
-import java.time.format.DateTimeFormatter
+import java.time.temporal.ChronoUnit
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DateType, TimestampType}
+import org.apache.spark.sql.types.TimestampType
 
 /** Publication side of the engine (reference R8/R12/R13).
   *
@@ -43,22 +43,22 @@ object Sinks {
 
   /** Enrich a metrics relation with run identity before the parquet sink
     * (reference R8, Profiler.scala:234-242): db/table literals plus run
-    * date and timestamp columns. `run_ts` uses `HH` (24-hour) — a
-    * deliberate divergence from the reference's `hh` 12-hour-clock bug
-    * (SURVEY.md §1.4.2). */
+    * date and timestamp columns. `run_ts` is the run's wall clock to the
+    * second (24-hour `HH`, a deliberate divergence from the reference's
+    * `hh` 12-hour-clock bug, SURVEY.md §1.4.2) read in the session time
+    * zone. Typed literals, not string casts, so both columns stay
+    * non-nullable whatever plan the metrics relation has. */
   def enrich(
       metrics: DataFrame,
       dbName: String,
       tableName: String,
-      runDt: OffsetDateTime): DataFrame = {
-    val dateStr = runDt.format(DateTimeFormatter.ofPattern("yyyy-MM-dd"))
-    val tsStr = runDt.format(DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
+      runDt: OffsetDateTime): DataFrame =
     metrics
       .withColumn("db_name", lit(dbName))
       .withColumn("table_name", lit(tableName))
-      .withColumn("profiler_run_dt", lit(dateStr).cast(DateType))
-      .withColumn("profiler_run_ts", lit(tsStr).cast(TimestampType))
-  }
+      .withColumn("profiler_run_dt", lit(runDt.toLocalDate))
+      .withColumn("profiler_run_ts",
+        lit(runDt.toLocalDateTime.truncatedTo(ChronoUnit.SECONDS)).cast(TimestampType))
 
   /** Hive-style path-partitioned append (reference R12,
     * Profiler.scala:244-251): partition values encoded in the path so

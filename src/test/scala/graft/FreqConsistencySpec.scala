@@ -1,14 +1,72 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.profiler._
+import graft.profiler.MetricNames._
 
 /** The batched (stack-based, one-shuffle) frequency path and the
   * per-column reference path must agree exactly — they implement the same
-  * §2.A semantics and must not drift apart. */
+  * §2.A semantics and must not drift apart. The per-column path lives here:
+  * it is the reference `batched` is checked against, not engine code. */
 class FreqConsistencySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  /** Per-column frequency table `(v, cnt)` over non-null values. */
+  private def freqTable(df: DataFrame, c: String): DataFrame =
+    df.select(col(c).as("v")).where(col("v").isNotNull)
+      .groupBy("v").agg(count(lit(1)).as("cnt"))
+
+  /** CountDistinct, Entropy, UniqueValueRatio and Uniqueness from one
+    * aggregation over the column's frequency table, with the entropy
+    * rewrite H = ln(nn) − (Σ cnt·ln cnt) / nn that `batched` and the
+    * oracle SQL use. */
+  private def perColumn(df: DataFrame, c: String, fams: Set[String]): Seq[MetricRow] = {
+    val row = freqTable(df, c).agg(
+      count(lit(1)).as("nv"),
+      sum("cnt").as("nn"),
+      sum(when(col("cnt") === 1, 1L).otherwise(0L)).as("nu"),
+      sum(col("cnt").cast(DoubleType) * log(col("cnt").cast(DoubleType))).as("slc")
+    ).head()
+    if (row.isNullAt(1)) Nil // column has no non-null values
+    else {
+      val nv = row.getLong(0).toDouble
+      val nn = row.getLong(1).toDouble
+      val nu = row.getLong(2).toDouble
+      val slc = row.getDouble(3)
+      val b = Seq.newBuilder[MetricRow]
+      if (fams("count_distinct")) b += MetricRow("Column", c, CountDistinct, nv)
+      if (fams("entropy")) b += MetricRow("Column", c, Entropy, math.log(nn) - slc / nn)
+      if (fams("unique_value_ratio")) b += MetricRow("Column", c, UniqueValueRatio, nu / nv)
+      if (fams("uniqueness")) b += MetricRow("Column", c, Uniqueness, nu / nn)
+      b.result()
+    }
+  }
+
+  /** Histogram (F3) of one column: null-inclusive, values stringified with
+    * the plain Spark cast, nulls bucketed as `"NullValue"`, ratio
+    * denominator `n` (all rows), detail bins capped at `noOfBins` with the
+    * `(count DESC, value ASC)` tie-break. */
+  private def histogram(df: DataFrame, c: String, noOfBins: Int, n: Long): Seq[MetricRow] = {
+    val f = df.select(coalesce(col(c).cast(StringType), lit(NullBucket)).as("v"))
+      .groupBy("v").agg(count(lit(1)).as("cnt"))
+      .persist()
+    try {
+      val bins = f.count()
+      val top = f.orderBy(col("cnt").desc, col("v").asc).limit(noOfBins).collect()
+      MetricRow("Column", c, HistogramBins, bins.toDouble) +:
+        top.toSeq.flatMap { r =>
+          val v = r.getString(0)
+          val cnt = r.getLong(1)
+          Seq(
+            MetricRow("Column", c, histogramAbs(v), cnt.toDouble),
+            MetricRow("Column", c, histogramRatio(v), cnt.toDouble / n))
+        }
+    } finally { f.unpersist(); () }
+  }
 
   test("batched == per-column on a null-heavy mixed frame") {
     import spark.implicits._
@@ -19,7 +77,7 @@ class FreqConsistencySpec extends AnyFunSuite {
     val fams = Profiler.freqFamilies
     val batched = FreqMetrics.batched(df, Seq("s1", "s2"), fams, noOfBins = 10, n = 8L)
     val perCol = Seq("s1", "s2").flatMap { c =>
-      FreqMetrics.metrics(df, c, fams) ++ FreqMetrics.histogram(df, c, 10, 8L)
+      perColumn(df, c, fams) ++ histogram(df, c, 10, 8L)
     }
     assert(batched.toSet == perCol.toSet,
       s"batched:\n${batched.sortBy(r => (r.instance, r.name)).mkString("\n")}\n" +

@@ -150,6 +150,30 @@ class ProfilerSpec extends AnyFunSuite {
     assert(p.filter(_.getString(0) == "Dataset").forall(_.isNullAt(4)))
   }
 
+  test("profileRelation: the driver-built relation equals the broadcast-join shape") {
+    import java.time.{OffsetDateTime, ZoneOffset}
+    import org.apache.spark.sql.functions.{broadcast, col, lit}
+    val d = df(Seq((1.0, "a"), (null, "b"), (3.0, "a"), (1.0, null)))
+    val joined = Profiler.metricsDF(spark, rows)
+      .join(broadcast(Profiler.schemaDF(spark, d)), Seq("instance"), "left")
+      .select(col("entity"), col("instance"), col("name"), col("value"), col("type"))
+    val built = Profiler.profileRelation(spark, rows, d)
+    assert(built.schema == joined.schema) // nullability included
+    assert(built.collect().toSeq == joined.collect().toSeq) // row order included
+    // the sink relation too, run identity columns included: the written
+    // (physical) schema, where the string casts are constant-folded
+    val run = OffsetDateTime.of(2026, 8, 12, 13, 5, 6, 789, ZoneOffset.UTC)
+    val stringCast = joined
+      .withColumn("db_name", lit("db"))
+      .withColumn("table_name", lit("t"))
+      .withColumn("profiler_run_dt", lit("2026-08-12").cast(DateType))
+      .withColumn("profiler_run_ts", lit("2026-08-12 13:05:06").cast(TimestampType))
+    val enriched = Sinks.enrich(built, "db", "t", run)
+    assert(enriched.queryExecution.executedPlan.schema ==
+      stringCast.queryExecution.executedPlan.schema)
+    assert(enriched.collect().toSeq == stringCast.collect().toSeq)
+  }
+
   test("ScanMetrics.compute: every pass job carries the caller's current tag") {
     val sc = spark.sparkContext
     val key = "graft.test.scan"

@@ -200,6 +200,30 @@ class RunnerSpec extends AnyFunSuite with TimeLimits {
     // the table that did publish left a complete file, no temp file
     assert(RunnerSpec.entries(Paths.get(s"${out}_metadata")) == Seq("ok.json"))
   }
+
+  test("a table that throws fails alone, and its line names the exception class") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-runner-fail").toString
+    val catalog = new TableCatalog {
+      def name = "failing"
+      def listTables = Seq("a", "bad", "c")
+      def load(t: String) =
+        if (t == "bad") throw new UnsupportedOperationException() // null message
+        else Seq((1L, "x"), (2L, "y")).toDF("id", "s")
+    }
+    val args = Runner.RunnerArgs(dbName = "failing", outPrefix = out, tableParallelism = 2)
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val results =
+      try Runner.run(spark, catalog, args)
+      finally System.setErr(stderr)
+    assert(results("bad") == -1)
+    assert(results("a") > 0 && results("c") > 0, results)
+    assert(RunnerSpec.entries(Paths.get(s"${out}_metadata")) == Seq("a.json", "c.json"))
+    val line = err.toString.linesIterator.find(_.contains("table bad failed")).getOrElse("")
+    assert(line.contains("java.lang.UnsupportedOperationException"), err.toString)
+  }
 }
 
 class CatalogFormatsSpec extends AnyFunSuite {
