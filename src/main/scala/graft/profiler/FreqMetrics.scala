@@ -23,22 +23,27 @@ import org.apache.spark.sql.types._
 object FreqMetrics {
   import MetricNames._
 
-  /** All frequency-family metrics for ALL text columns from ONE shuffle.
+  /** All frequency-family metrics for ALL text columns from ONE plan.
     *
     * Instead of Deequ's one-two jobs per column (SURVEY.md §3.2 stage 4 —
-    * O(columns) shuffles), the columns are stacked into `(instance, v)`
+    * O(columns) shuffles), the columns are stacked into `(instance, value)`
     * pairs with `stack()` and grouped once: a single hash-partitioned
-    * exchange keyed on (column, value) carries every column's frequency
+    * exchange keyed on (column, bucket) carries every column's frequency
     * table. Partial aggregation still collapses hot values map-side, so the
     * shuffle volume is bounded by the total number of distinct
-    * (column, value) pairs — at 100 TB this turns ~2·C jobs into 1 + 3
-    * small jobs over the persisted (far smaller) frequency relation.
+    * (column, value) pairs.
     *
-    * The histogram view re-aggregates the frequency relation on the
-    * stringified value with nulls folded into the `"NullValue"` bucket
-    * (merging with any genuine "NullValue" strings, Deequ semantics), so
-    * base metrics (null-exclusive) and Histogram (null-inclusive) share the
-    * one shuffle without semantic bleed.
+    * The bucket is the value with nulls folded into the `"NullValue"`
+    * bucket (merging with any genuine "NullValue" strings, Deequ
+    * semantics), and each bucket carries two counts: all of its rows for
+    * the Histogram (null-inclusive), and its non-null rows — the frequency
+    * of its one distinct non-null value — for the base metrics
+    * (null-exclusive). The base metrics (a `groupBy(instance)`) and the
+    * histogram (a window per column) are the two branches of one union,
+    * collected at once: the stack exchange runs once, read by both
+    * branches, and nothing is persisted. That is 4 jobs per table with
+    * both branches (the stack exchange, one exchange per branch, the
+    * result).
     *
     * @param n total row count for Histogram's ratio denominator (by-name:
     *          only evaluated when the histogram family is requested).
@@ -56,60 +61,63 @@ object FreqMetrics {
     // (instance, v) payload the spread would, so pre-spreading doubles the
     // shuffle volume to parallelize a map phase that is just stack+hash —
     // measured slower at every scale point (r3 0.39 s → r4 1.95 s for
-    // single-family uniqueness at sf0.1)
+    // single-family uniqueness at sf0.1).
+    // Both counts sit in ONE struct column: column pruning then keeps the
+    // same aggregate under each branch, and the branches share its exchange.
     val freq = df
-      .select(stack(stackArgs: _*).as(Seq("instance", "v")))
-      .groupBy("instance", "v").agg(count(lit(1)).as("cnt"))
-      .persist()
-    try {
-      val b = Seq.newBuilder[MetricRow]
-      if ((fams - "histogram").nonEmpty) {
-        val rows = freq.where(col("v").isNotNull).groupBy("instance").agg(
+      .select(stack(stackArgs: _*).as(Seq("instance", "value")))
+      .groupBy(col("instance"), coalesce(col("value"), lit(NullBucket)).as("v"))
+      .agg(struct(count(lit(1)).as("all"), count(col("value")).as("nn")).as("cnt"))
+    val base =
+      if ((fams - "histogram").isEmpty) None
+      else {
+        val f = col("cnt.nn")
+        Some(freq.where(f > 0).groupBy("instance").agg(
           count(lit(1)).as("nv"),
-          sum("cnt").as("nn"),
-          sum(when(col("cnt") === 1, 1L).otherwise(0L)).as("nu"),
-          sum(col("cnt").cast(DoubleType) * log(col("cnt").cast(DoubleType))).as("slc")
-        ).collect()
-        rows.foreach { r =>
-          val c = r.getString(0)
-          val nv = r.getLong(1).toDouble
-          val nn = r.getLong(2).toDouble
-          val nu = r.getLong(3).toDouble
-          val slc = r.getDouble(4)
-          if (fams("count_distinct")) b += MetricRow("Column", c, CountDistinct, nv)
-          if (fams("entropy")) b += MetricRow("Column", c, Entropy, math.log(nn) - slc / nn)
-          if (fams("unique_value_ratio")) b += MetricRow("Column", c, UniqueValueRatio, nu / nv)
-          if (fams("uniqueness")) b += MetricRow("Column", c, Uniqueness, nu / nn)
-        }
+          sum(f).as("nn"),
+          sum(when(f === 1, 1L).otherwise(0L)).as("nu"),
+          sum(f.cast(DoubleType) * log(f.cast(DoubleType))).as("slc")))
       }
-      if (fams("histogram")) {
-        val total = n
-        val hfreq = freq
-          .select(
-            col("instance"),
-            coalesce(col("v").cast(StringType), lit(NullBucket)).as("v"),
-            col("cnt"))
-          .groupBy("instance", "v").agg(sum("cnt").as("cnt"))
-        // one window job yields both the capped top-N and the pre-cap bin
-        // count (count over the unordered partition = all bins)
+    // one window yields both the capped top-N and the pre-cap bin count
+    // (count over the unordered partition = all bins)
+    val hist =
+      if (!fams("histogram")) None
+      else {
         val byCol = Window.partitionBy("instance")
-        val rows = hfreq.select(
-          col("instance"), col("v"), col("cnt"),
-          row_number().over(byCol.orderBy(col("cnt").desc, col("v").asc)).as("rn"),
+        Some(freq.select(
+          col("instance"), col("v"), col("cnt.all").as("cnt"),
+          row_number().over(byCol.orderBy(col("cnt.all").desc, col("v").asc)).as("rn"),
           count(lit(1)).over(byCol).as("bins"))
           .where(col("rn") <= noOfBins)
-          .collect()
-        rows.groupBy(_.getString(0)).foreach { case (c, rs) =>
-          b += MetricRow("Column", c, HistogramBins, rs.head.getLong(4).toDouble)
-          rs.foreach { r =>
-            val v = r.getString(1)
-            val cnt = r.getLong(2)
-            b += MetricRow("Column", c, histogramAbs(v), cnt.toDouble)
-            b += MetricRow("Column", c, histogramRatio(v), cnt.toDouble / total)
-          }
+          .drop("rn"))
+      }
+    // a base row has every histogram column null and vice versa
+    val rows = (base ++ hist).reduce(_.unionByName(_, allowMissingColumns = true)).collect()
+    val (histRows, baseRows) = rows.partition(r => base.isEmpty || r.isNullAt(r.fieldIndex("nv")))
+    val b = Seq.newBuilder[MetricRow]
+    baseRows.foreach { r =>
+      val c = r.getAs[String]("instance")
+      val nv = r.getAs[Long]("nv").toDouble
+      val nn = r.getAs[Long]("nn").toDouble
+      val nu = r.getAs[Long]("nu").toDouble
+      val slc = r.getAs[Double]("slc")
+      if (fams("count_distinct")) b += MetricRow("Column", c, CountDistinct, nv)
+      if (fams("entropy")) b += MetricRow("Column", c, Entropy, math.log(nn) - slc / nn)
+      if (fams("unique_value_ratio")) b += MetricRow("Column", c, UniqueValueRatio, nu / nv)
+      if (fams("uniqueness")) b += MetricRow("Column", c, Uniqueness, nu / nn)
+    }
+    if (hist.nonEmpty) {
+      val total = n
+      histRows.groupBy(_.getAs[String]("instance")).foreach { case (c, rs) =>
+        b += MetricRow("Column", c, HistogramBins, rs.head.getAs[Long]("bins").toDouble)
+        rs.foreach { r =>
+          val v = r.getAs[String]("v")
+          val cnt = r.getAs[Long]("cnt")
+          b += MetricRow("Column", c, histogramAbs(v), cnt.toDouble)
+          b += MetricRow("Column", c, histogramRatio(v), cnt.toDouble / total)
         }
       }
-      b.result()
-    } finally { freq.unpersist(); () }
+    }
+    b.result()
   }
 }

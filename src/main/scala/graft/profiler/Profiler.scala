@@ -1,6 +1,6 @@
 package graft.profiler
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SessionBridge, SparkSession}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
@@ -14,14 +14,18 @@ import org.apache.spark.sql.types._
   * Execution shape per table (SURVEY.md §3.2): the scan battery's passes
   * (one Plain aggregation for ALL scan-shareable metrics of ALL columns,
   * plus the Sketch and Distinct passes when requested), and — only when
-  * `compExp` — ONE shuffle stacking every text column into a shared
-  * frequency relation ([[FreqMetrics.batched]]), not Deequ's jobs per
-  * column. Metrics materialize on the driver as a tiny LocalRelation,
-  * exactly like Deequ's `successMetricsAsDataFrame` (SURVEY.md §4.2 "keep").
+  * `compExp` — ONE plan stacking every text column into a shared
+  * frequency relation ([[FreqMetrics.batched]]: one stack exchange, 4
+  * jobs), not Deequ's jobs per column. Metrics materialize on the driver
+  * as a tiny LocalRelation, exactly like Deequ's
+  * `successMetricsAsDataFrame` (SURVEY.md §4.2 "keep").
   *
   * Execution mode: a table whose plan-size estimate is under 512 KiB runs
-  * its battery in a child session with code generation off (see
-  * [[metrics]]); larger tables run codegen'd on the caller's session.
+  * its battery in a clone of its session with code generation off (see
+  * [[metrics]]), where Plain and Sketch share one aggregation: 2 jobs, 3
+  * more for Distinct, 2 more when the spread and its checkpoint fire.
+  * Larger tables run codegen'd on the caller's session, with Plain and
+  * Sketch as separate passes.
   */
 object Profiler {
 
@@ -92,20 +96,17 @@ object Profiler {
   private[graft] def interpreted(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.stats.sizeInBytes < InterpretedBelowBytes
 
-  /** `df` rebound to a new child session of its own with whole-stage and
-    * expression codegen off. The child shares the SparkContext (so jobs
-    * keep the thread's local properties) and the cache manager (so
-    * persisted inputs stay hits); it gets every runtime conf the caller
-    * set (ANSI mode changes results), which `newSession` does not copy.
-    * The frame is rebound through its analyzed plan, so a frame over the
-    * caller's temp view still resolves. Query-execution listeners
-    * registered on the caller's session do not see the child's queries. */
+  /** `df` rebound to a clone of its session with whole-stage and
+    * expression codegen off. The clone ([[org.apache.spark.sql.SessionBridge]])
+    * carries the caller's runtime confs (ANSI mode changes results) and
+    * query-execution listeners, so a listener on the caller sees the
+    * battery's queries; it shares the SparkContext (so jobs keep the
+    * thread's local properties) and the cache manager (so persisted inputs
+    * stay hits). The codegen confs are set on the clone only. The frame is
+    * rebound through its analyzed plan, so a frame over the caller's temp
+    * view still resolves. */
   private[graft] def interpretedSession(df: DataFrame): DataFrame = {
-    val parent = df.sparkSession
-    val child = parent.newSession()
-    parent.conf.getAll.foreach { case (k, v) =>
-      if (parent.conf.isModifiable(k)) child.conf.set(k, v)
-    }
+    val child = SessionBridge.cloneSession(df.sparkSession)
     child.conf.set("spark.sql.codegen.wholeStage", "false")
     child.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     new classic.Dataset[Row](child, df.queryExecution.analyzed, df.encoder)

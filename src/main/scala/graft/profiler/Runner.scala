@@ -52,7 +52,7 @@ object Runner {
         case Nil =>
           if (acc.dbName.isEmpty) Left("--dbName is required")
           else if (acc.outPrefix.isEmpty) Left("--outPrefix is required")
-          else Right(acc)
+          else scala.util.Try(acc.cfg).toEither.left.map(_.getMessage).map(_ => acc)
         case "--dbName" :: v :: t => loop(t, acc.copy(dbName = v))
         case "--outPrefix" :: v :: t => loop(t, acc.copy(outPrefix = v))
         case "--region" :: _ :: t => loop(t, acc) // accepted, ignored

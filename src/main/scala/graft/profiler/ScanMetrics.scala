@@ -2,6 +2,7 @@ package graft.profiler
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Which aggregation pass a slot belongs to. Mixing aggregate classes in
@@ -16,8 +17,11 @@ import org.apache.spark.sql.types._
   *     ObjectHashAggregate, no codegen, kept away from the Plain pass;
   *   - Distinct: all `count_distinct`s — one Expand + two-phase
   *     HashAggregate, a single shuffle covering every column.
-  * A table under `Profiler.InterpretedBelowBytes` runs every pass with
-  * codegen off (see [[Profiler.metrics]]). */
+  * A table under `Profiler.InterpretedBelowBytes` runs with codegen off
+  * (see [[Profiler.metrics]]). There is then no codegen to protect, so
+  * Plain and Sketch share ONE aggregate (the same values, one job pair
+  * fewer); Distinct keeps its own pass, whose Expand would multiply the
+  * rows every other slot reads. */
 sealed trait AggKind
 object AggKind {
   case object Plain extends AggKind
@@ -236,15 +240,16 @@ object ScanMetrics {
   }
 
   /** Evaluate the slots, one `df.agg(...)` per [[AggKind]] pass (see AggKind
-    * doc), and extract the metric rows. The result rows are tiny by
-    * construction (one cell per slot), so collecting them to the driver is
-    * the correct move at any scale — the aggregation itself has already
+    * doc; Plain and Sketch share one when `df`'s session has whole-stage
+    * codegen off), and extract the metric rows. The result rows are tiny
+    * by construction (one cell per slot), so collecting them to the driver
+    * is the correct move at any scale — the aggregation itself has already
     * reduced the 100 TB.
     *
     * The passes are independent, so their jobs are SUBMITTED concurrently
     * (driver threads; Spark schedules jobs from multiple threads fine):
     * one pass's shuffle/sketch phase overlaps another's scan instead of
-    * serializing three cluster round trips. Results are assembled in the
+    * serializing the cluster round trips. Results are assembled in the
     * fixed Plain/Sketch/Distinct order, so output is identical to the
     * sequential evaluation. */
   def compute(df: DataFrame, slots: Seq[AggSlot]): Seq[MetricRow] = {
@@ -253,17 +258,11 @@ object ScanMetrics {
     // sums). A cheap codegen'd Plain-only battery (count/min/max) finishes
     // the serial partial phase faster than the shuffle it would buy.
     val needSpread = slots.exists(s => s.kind != AggKind.Plain || s.heavy)
-    // Sketch slots (TypedImperativeAggregate buffers — exact percentile
-    // value maps, KLL) pay a single-threaded final-merge per pass;
-    // chunking them into a few concurrent jobs overlaps those merges
-    // (and their scans) instead of serializing them in one wide pass.
-    // Chunk of 2 measured best at sf0.1/local[32] (8 cols: 2.5 s vs
-    // 3.2 s at 4, 3.8 s at 1 — per-slot jobs thrash the scan). Plain and
-    // Distinct stay one pass each — their codegen'd partials want ONE
-    // scan, not many.
+    val plain = slots.filter(_.kind == AggKind.Plain)
+    val sketch = slots.filter(_.kind == AggKind.Sketch)
+    val codegen = df.sparkSession.conf.get(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key).toBoolean
     val passes: Seq[Seq[AggSlot]] = (
-      Seq(slots.filter(_.kind == AggKind.Plain)) ++
-        slots.filter(_.kind == AggKind.Sketch).grouped(2).toSeq ++
+      (if (codegen) Seq(plain, sketch) else Seq(plain ++ sketch)) ++
         Seq(slots.filter(_.kind == AggKind.Distinct))).filter(_.nonEmpty)
     // localCheckpoint (r16): with several concurrent passes over the same
     // spread exchange, each pass's job re-ran the scan+exchange (probed:

@@ -77,6 +77,11 @@ final case class ProfilerConfig(
     profileUnsupportedTypes: Boolean = false,
     noOfBins: Int = 10,
     quantiles: Int = 10) {
+  // fewer would silently drop metrics: no Histogram rows at all, or an
+  // empty percentile array
+  require(noOfBins >= 1, s"noOfBins must be at least 1, got $noOfBins")
+  require(quantiles >= 1, s"quantiles must be at least 1, got $quantiles")
+
   /** Reference appends two underscores once at parse time (Profiler.scala:133). */
   def prefixedKey(metric: String): String = s"${statsPrefix}__$metric"
 }

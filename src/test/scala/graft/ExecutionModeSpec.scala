@@ -136,6 +136,45 @@ class ExecutionModeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     } finally { df.unpersist(); () }
   }
 
+  test("a listener on the caller sees the child's queries; the caller's confs stay") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val factoryMode = "spark.sql.codegen.factoryMode"
+    val before = (spark.conf.getOption(factoryMode), spark.conf.get("spark.sql.codegen.wholeStage"))
+    val childQueries = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.sparkSession ne spark) childQueries.incrementAndGet()
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val df = lineitem("sf0.001")
+      assert(Profiler.interpreted(df))
+      Profiler.metrics(df, cfg, Profiler.referenceBattery)
+      // listener events arrive asynchronously
+      val deadline = System.currentTimeMillis() + 30000
+      while (childQueries.get == 0 && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(childQueries.get > 0, "the caller's listener saw none of the child's queries")
+    } finally spark.listenerManager.unregister(listener)
+    assert((spark.conf.getOption(factoryMode), spark.conf.get("spark.sql.codegen.wholeStage")) == before)
+  }
+
+  test("a gated battery runs one Plain+Sketch pass and a four-job frequency plan") {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobs"
+    val df = edgeTable
+    assert(Profiler.interpreted(df))
+    assert(ScanMetrics.spreadTarget(df) == 0, "a spread would add a checkpoint job")
+    val jobs = new JobTags(sc, key).of {
+      Profiler.metrics(df, cfg, Profiler.referenceBattery)
+    }
+    // Plain+Sketch: 2 (partial aggregate exchange, result); Distinct: 3
+    // (Expand's two aggregation exchanges, result); frequency: 4 (the stack
+    // exchange, read by both branches, one exchange per branch, result)
+    assert(jobs.size == 2 + 3 + 4, jobs)
+  }
+
   test("jobs the child submits carry the caller's local properties") {
     val sc = spark.sparkContext
     val key = "graft.test.mode"

@@ -68,24 +68,54 @@ class FreqConsistencySpec extends AnyFunSuite {
     } finally { f.unpersist(); () }
   }
 
+  /** `batched` over every column of `df` against the per-column reference;
+    * returns the batched rows. */
+  private def assertConsistent(df: DataFrame, noOfBins: Int): Seq[MetricRow] = {
+    val cols = df.columns.toSeq
+    val n = df.count()
+    val fams = Profiler.freqFamilies
+    val batched = FreqMetrics.batched(df, cols, fams, noOfBins, n)
+    val perCol = cols.flatMap { c =>
+      perColumn(df, c, fams) ++ histogram(df, c, noOfBins, n)
+    }
+    assert(batched.size == perCol.size && batched.toSet == perCol.toSet,
+      s"batched:\n${batched.sortBy(r => (r.instance, r.name)).mkString("\n")}\n" +
+        s"perCol:\n${perCol.sortBy(r => (r.instance, r.name)).mkString("\n")}")
+    batched
+  }
+
   test("batched == per-column on a null-heavy mixed frame") {
     import spark.implicits._
     val df = Seq(
       ("a", "x"), ("a", null), ("b", "x"), (null, "y"),
       ("a", "x"), ("c", null), (null, null), ("NullValue", "y"))
       .toDF("s1", "s2")
-    val fams = Profiler.freqFamilies
-    val batched = FreqMetrics.batched(df, Seq("s1", "s2"), fams, noOfBins = 10, n = 8L)
-    val perCol = Seq("s1", "s2").flatMap { c =>
-      perColumn(df, c, fams) ++ histogram(df, c, 10, 8L)
-    }
-    assert(batched.toSet == perCol.toSet,
-      s"batched:\n${batched.sortBy(r => (r.instance, r.name)).mkString("\n")}\n" +
-        s"perCol:\n${perCol.sortBy(r => (r.instance, r.name)).mkString("\n")}")
+    val batched = assertConsistent(df, noOfBins = 10)
     // the genuine "NullValue" string and real nulls merge into one bucket
     val nvAbs = batched.collect {
       case MetricRow(_, "s1", "Histogram.abs.NullValue", v) => v
     }
     assert(nvAbs == Seq(3.0)) // 2 nulls + 1 literal "NullValue"
+  }
+
+  test("batched == per-column: a merged null bucket over the bin cap, all-null and null-free columns") {
+    import spark.implicits._
+    // `merged`: nulls (2) and the literal "NullValue" (2) each lose to "a"
+    // and "b" (3 each) but together lead them, with 5 distinct buckets
+    // over a cap of 2; `none` is all null; `full` has no null
+    val merged = Seq.fill(3)("a") ++ Seq.fill(3)("b") ++ Seq(null, null) ++
+      Seq.fill(2)("NullValue") ++ Seq("c", "d")
+    val df = merged.zipWithIndex.map { case (v, i) =>
+      (v, null: String, if (i % 3 == 0) "x" else s"y$i")
+    }.toDF("merged", "none", "full")
+    val batched = assertConsistent(df, noOfBins = 2)
+    val mergedBins = batched.filter(r => r.instance == "merged" && r.name.startsWith("Histogram"))
+    assert(mergedBins.map(r => r.name -> r.value).toSet == Set(
+      HistogramBins -> 5.0,
+      histogramAbs(NullBucket) -> 4.0, histogramRatio(NullBucket) -> 4.0 / 12,
+      histogramAbs("a") -> 3.0, histogramRatio("a") -> 3.0 / 12))
+    // an all-null column has a histogram and no base metric
+    assert(batched.filter(_.instance == "none").map(r => r.name -> r.value).toSet == Set(
+      HistogramBins -> 1.0, histogramAbs(NullBucket) -> 12.0, histogramRatio(NullBucket) -> 1.0))
   }
 }

@@ -140,6 +140,12 @@ class RunnerSpec extends AnyFunSuite with TimeLimits {
     assert(badInt.left.exists(m => m.contains("--noOfBins") &&
       m.contains("NumberFormatException")), badInt)
     assert(Runner.parseArgs(base ++ Array("--tableParallelism", "")).isLeft)
+    // values that would silently drop metrics are usage errors too
+    for (flag <- Seq("--noOfBins", "--quantiles"); v <- Seq("0", "-1")) {
+      val bad = Runner.parseArgs(base ++ Array(flag, v))
+      assert(bad.left.exists(_.contains(flag.stripPrefix("--"))), bad)
+    }
+    assert(Runner.parseArgs(base ++ Array("--noOfBins", "1", "--quantiles", "1")).isRight)
   }
 
   test("parallel table loop produces the same results and sinks as sequential") {
