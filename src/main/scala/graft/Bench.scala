@@ -29,10 +29,10 @@ import org.apache.spark.sql.SparkSession
   *  - per-query iteration SPREAD (max-min across iterations) rides the
   *    worker protocol and the sidecar: a wide spread marks a noisy
   *    measurement, a tight spread with a high min marks a real cost.
-  *  - after the battery, the N slowest keys (default 10, plus the
-  *    flagship, plus any `SPARK_GRAFT_ISOLATE_KEYS`) are re-run ONE key
-  *    per fresh child JVM and reported as `"isolated"` — the in-suite ≤
-  *    1.3× isolated bound is now checked by every round's own artifact.
+  *  - after the battery, the [[IsolateN]] slowest keys (plus the
+  *    flagship) are re-run ONE key per fresh child JVM and reported as
+  *    `"isolated"` — the in-suite ≤ 1.3× isolated bound is now checked
+  *    by every round's own artifact.
   *
   * Round 16 — timeout survivability + wall-time budget (VERDICT r15 #1:
   * the driver's r15 run hit its ~3,000 s budget mid-battery and the
@@ -43,10 +43,10 @@ import org.apache.spark.sql.SparkSession
   *    `"partial":true` and `n_completed`/`n_total`, so any truncation
   *    of the run still leaves a parseable battery on disk;
   *  - the battery self-bounds: once elapsed wall exceeds
-  *    `SPARK_GRAFT_WALL_BUDGET` (default 2250 s — under the observed
-  *    driver budget with sbt-startup margin) remaining groups and
-  *    isolated rows are SKIPPED (named in the artifact, `n_skipped` in
-  *    the driver line) and the final line always prints;
+  *    [[WallBudget]] (2250 s — under the observed driver budget with
+  *    sbt-startup margin) remaining groups and isolated rows are SKIPPED
+  *    (named in the artifact, `n_skipped` in the driver line) and the
+  *    final line always prints;
   *  - micro keys (committed-sidecar time ≤ 1.0 s) merge into fork
   *    groups of 8: the r15 battery paid a 3-5 s JVM floor for every 3
   *    sub-second keys (126 micro keys / 42 groups ≈ 190 s of floors).
@@ -64,8 +64,8 @@ import org.apache.spark.sql.SparkSession
   *    r17-entry pin) and micro fork groups grow 8 → 16: 49 → ~17 child
   *    JVMs over the micro battery (~5-6 s measured startup each);
   *  - micro-group children share one SparkSession per
-  *    `SPARK_GRAFT_MICRO_SESSION_PER` (default 4) queries, with the FULL
-  *    between-query hygiene block (cache clear + unpersist + System.gc)
+  *    [[MicroSessionPer]] queries, with the FULL between-query hygiene
+  *    block (cache clear + unpersist + System.gc)
   *    the shared-session escape hatch has always run — measured ~1.2 s
   *    of session setup + warmup saved per key not starting a session;
   *    normal (heavy) groups keep session-per-query untouched;
@@ -84,7 +84,7 @@ import org.apache.spark.sql.SparkSession
   *    divergence retry). Only 14/276 keys are genuinely flat; dropping
   *    their second iteration saves ~7 s. Not worth the protocol fork.
   *
-  * Modes (all driven by env, the driver sets none of them):
+  * Modes (all driven by env; the parent sets the worker's):
   *  - parent (default): partitions the query list, forks one child JVM
   *    per group (same classpath + JDK17 add-opens as build.sbt), parses
   *    the children's per-query lines, prints the single JSON line. Any
@@ -92,23 +92,35 @@ import org.apache.spark.sql.SparkSession
   *  - worker (`SPARK_GRAFT_WORKER=1`, set only by the parent): runs its
   *    `SPARK_GRAFT_ONLY` list in-process, one fresh session per query,
   *    prints `GRAFT_BENCH_Q <name> <min-sec> <spread-sec> <ok|fail>` lines.
-  *  - `SPARK_GRAFT_NO_FORK=1` or an explicit `SPARK_GRAFT_ONLY` (the
-  *    local single-query iteration aid): everything in-process.
+  *  - an explicit `SPARK_GRAFT_ONLY` (the local single-query iteration
+  *    aid): everything in-process, unless `SPARK_GRAFT_FORCE_FORK` is set.
+  *
+  * The session is [[Sessions.local]] at `SPARK_GRAFT_CPUS` threads.
   */
 object Bench {
-  private def newSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the wide single-pass profile aggregation has >100 buffer fields;
-      // without this, whole-stage codegen silently falls back (~3x slower)
-      .config("spark.sql.codegen.maxFields", "1000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  // Fixed battery settings (their history is in the doc above)
+  private val ForkPer = 3 // queries per fork group
+  private val MicroMax = 2.5 // s: a key this fast in the committed sidecar is micro
+  private val ForkPerMicro = 16 // micro keys per fork group
+  private val MicroSessionPer = 4 // micro keys per shared session
+  private val WallBudget = 2250.0 // s: groups and isolated rows past it are skipped
+  private val IsolateN = 10 // slowest keys re-run one per fresh JVM
+  // outside-cores ceiling for the IN-RUN contention check (VERDICT r14
+  // #1): average CPU cores consumed by processes OTHER than the forked
+  // child while the row ran. OS background sits well under 0.5 cores.
+  // Streaming keys are exempted up to a HIGHER ceiling (ADVICE r15 /
+  // VERDICT r15 #3): their state-store commits run through kernel
+  // writeback threads (~5 cores observed on an IDLE host) which /proc
+  // attribution cannot assign to the child, so at the 1.0 ceiling they
+  // could never produce an evidence-grade row. The exemption is
+  // exactly the declared-streaming key list (name prefix) and still
+  // bounded — a genuinely contended streaming row (> ~6 outside cores)
+  // stays unclean, and busy-gate + spread + divergence still apply.
+  private val OutsideMax = 1.0
+  private val OutsideMaxStreaming = 6.0
+  private val BusyMax = 0.20 // host busy fraction an isolated row waits for
+  private val LoadWaitBudget = 600L // s: quiet-host wait over all isolated rows
+  private val FullOut = "BENCH_full_local.json" // committed sidecar: prior times in, battery out
 
   /** One query's measurement: best iteration, iteration spread
     * (max − min; 0 with a single iteration), status ok|fail|oom.
@@ -167,17 +179,17 @@ object Bench {
 
   /** Load-gate (VERDICT r13 #1, re-instrumented r14): before an
     * isolated row, wait (bounded) for the host's instantaneous busy-CPU
-    * fraction to fall below `maxBusy` — immediately after the battery
+    * fraction to fall below [[BusyMax]] — immediately after the battery
     * the host is hot from our OWN forked children, and a row taken then
     * measures the host, not the engine (r13 driver artifact: flagship
     * isolated 16.83 s at loadavg 8.87 vs 3.97 s same-tree quiet).
     * Returns the busy fraction actually observed at row start and the
     * seconds spent waiting. */
-  private def awaitQuietHost(maxBusy: Double, perRowWaitSec: Int,
+  private def awaitQuietHost(perRowWaitSec: Int,
       budget: java.util.concurrent.atomic.AtomicLong): (Double, Long) = {
     val t0 = System.nanoTime()
     var busy = cpuBusyFrac()
-    while (busy > maxBusy && busy >= 0 &&
+    while (busy > BusyMax && busy >= 0 &&
         (System.nanoTime() - t0) / 1e9 < perRowWaitSec &&
         budget.get() > 0) {
       Thread.sleep(3500)
@@ -214,10 +226,9 @@ object Bench {
     * the shared-session escape-hatch mode (ADVICE r8). */
   private def runInProcess(
       group: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
-      sfDir: String, cpus: String, iterations: Int,
-      perSession: Int): Seq[(String, QTime)] =
+      sfDir: String, iterations: Int, perSession: Int): Seq[(String, QTime)] =
     group.grouped(perSession).flatMap { sess =>
-      val spark = newSession(cpus)
+      val spark = Sessions.local(Sessions.cpus)
       // per-session warmup OUTSIDE the timed region: scheduler + parquet
       // footer reader + first codegen round, ~0.3 s of fixed cost that
       // would otherwise land on iteration 1 of the first query
@@ -309,7 +320,6 @@ object Bench {
       .defaultModuleOptions().split("\\s+").toSeq.filter(_.nonEmpty)
     val cmd = Seq(javaBin) ++ opens ++ Seq(
       s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
       "-cp", sys.props("java.class.path"), "graft.Bench")
     try {
       val pb = new ProcessBuilder(cmd: _*)
@@ -371,7 +381,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Two iterations per query, report the min: iteration 1 pays one-time
     // codegen (janino) compilation for each unique plan; the min reflects
     // steady-state engine throughput and damps host noise.
@@ -383,44 +392,13 @@ object Bench {
     // escape hatch: queries per session WITHIN a JVM (1 = full isolation)
     val perSession = sys.env.get("SPARK_GRAFT_SESSION_PER")
       .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ > 0).getOrElse(1)
-    // 3 per fork since r13 (was 6): at 6, late-slot keys measured on a
-    // JVM carrying up to 5 prior plans' residue and the ≤1.3×-isolated
-    // bound broke (flagship 2.04× on the r12 artifact). Startup is
-    // untimed; the extra forks cost wall minutes only.
-    val forkPer = sys.env.get("SPARK_GRAFT_FORK_PER")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ > 0).getOrElse(3)
-    // micro keys (committed-sidecar time ≤ microMax) merge into larger
-    // fork groups (r16, VERDICT r15 #1b; thresholds raised r17, VERDICT
-    // r16 #1): their plans leave negligible JVM residue and their
-    // JVM/session floors dominated the battery wall
-    val microMax = sys.env.get("SPARK_GRAFT_MICRO_MAX")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(2.5)
-    val forkPerMicro = sys.env.get("SPARK_GRAFT_FORK_PER_MICRO")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ > 0).getOrElse(16)
-    // queries per shared session INSIDE a micro fork group (r17): the
-    // full hygiene block still runs between queries; normal groups keep
-    // session-per-query
-    val microSessionPer = sys.env.get("SPARK_GRAFT_MICRO_SESSION_PER")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ > 0).getOrElse(4)
-    // self-bounding wall budget (r16, VERDICT r15 #1a): groups and
-    // isolated rows past this elapsed wall are SKIPPED (named in the
-    // artifact) so the final driver line always prints before an
-    // external timeout would kill the run unreported
-    val wallBudget = sys.env.get("SPARK_GRAFT_WALL_BUDGET")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption).filter(_ > 0)
-      .getOrElse(2250.0)
     val tWall0 = System.nanoTime()
     def wallSec(): Double = (System.nanoTime() - tWall0) / 1e9
-    // isolated re-run sample size (0 disables); extra keys via
-    // SPARK_GRAFT_ISOLATE_KEYS=a,b,c
-    val isolateN = sys.env.get("SPARK_GRAFT_ISOLATE_N")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ >= 0).getOrElse(10)
     val loadStart = loadAvg()
     // SPARK_GRAFT_FORCE_FORK: local test aid — exercise the fork path on
     // an ONLY-subset (normally ONLY means single-query iteration, no fork)
-    val noFork = isWorker || sys.env.contains("SPARK_GRAFT_NO_FORK") ||
-      (only.isDefined && !isWorker &&
-        !sys.env.contains("SPARK_GRAFT_FORCE_FORK"))
+    val noFork = isWorker ||
+      (only.isDefined && !sys.env.contains("SPARK_GRAFT_FORCE_FORK"))
     // Throughput-line exclusions (Verify still runs ALL declared keys):
     //  - `*_audit` keys re-run other operators plus brute-force twins;
     //  - `dedup_family_rollup` re-times the five standalone shingle-family
@@ -438,8 +416,7 @@ object Bench {
     // committed prior battery (read BEFORE this run overwrites the
     // sidecar): feeds the micro/normal fork split, the excursion
     // auto-isolation list, and the isolated divergence retry
-    val prev = prevTimes(sys.env.getOrElse(
-      "SPARK_GRAFT_PREV_BENCH", "BENCH_full_local.json"))
+    val prev = prevTimes(FullOut)
     // measurement-mode accounting, reported in the JSON line: a driver
     // environment where forking fails would silently revert to the r8
     // in-process numbers (2-3x late-query inflation) — make that visible
@@ -452,12 +429,8 @@ object Bench {
     // timeout mid-battery still leaves a parseable partial battery.
     // isolated SPARK_GRAFT_ONLY runs are not the battery: writing their
     // 1-2 keys would clobber the full artifact (bench_isolation.sh and
-    // the scale lane run dozens of such JVMs); an explicit
-    // SPARK_GRAFT_FULL_OUT still writes wherever it points
-    val sidecar =
-      if (sys.env.contains("SPARK_GRAFT_ONLY") &&
-        !sys.env.contains("SPARK_GRAFT_FULL_OUT")) None
-      else Some(sys.env.getOrElse("SPARK_GRAFT_FULL_OUT", "BENCH_full_local.json"))
+    // the scale lane run dozens of such JVMs)
+    val sidecar = if (only.isDefined) None else Some(FullOut)
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.2f", java.lang.Double.valueOf(v))
     def map4(m: Iterable[(String, Double)]): String =
@@ -467,10 +440,6 @@ object Bench {
     def names(ns: Seq[String]): String =
       ns.map("\"" + _ + "\"").mkString("[", ",", "]")
     val nTotal = selected.size
-    val outsideMaxDefault = sys.env.get("SPARK_GRAFT_OUTSIDE_MAX")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(1.0)
-    val busyMax = sys.env.get("SPARK_GRAFT_BUSY_MAX")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(0.20)
     case class IsoRow(time: Double, load: Double, outside: Double,
         clean: Boolean)
     /** The one sidecar serializer (partial and final writes both use it,
@@ -495,13 +464,13 @@ object Bench {
         s""""n_queries":${times.size},""" +
         s""""forked_groups":$nForked,"fallback_groups":$nFallback,""" +
         s""""loadavg_start":${fmt(loadStart)},"loadavg_end":${fmt(loadAvg())},""" +
-        s""""busy_max":${fmt(busyMax)},"wall_budget":${fmt(wallBudget)},""" +
+        s""""busy_max":${fmt(BusyMax)},"wall_budget":${fmt(WallBudget)},""" +
         s""""wall_sec":${fmt(wallSec())},""" +
         s""""spreads":${map4(results.map { case (n, qt) => n -> qt.spread })},""" +
         s""""isolated":${map4(isolated)},""" +
         s""""isolated_busy":${map4(isolatedRows.map { case (n, r) => n -> r.load })},""" +
         s""""isolated_outside_cores":${map4(isolatedRows.map { case (n, r) => n -> r.outside })},""" +
-        s""""outside_max":${fmt(outsideMaxDefault)},""" +
+        s""""outside_max":${fmt(OutsideMax)},""" +
         s""""isolated_attempted":$isolatedAttempted,""" +
         s""""isolated_unclean":${names(unclean)},""" +
         s""""isolated_divergent":${names(divergent)},""" +
@@ -515,7 +484,7 @@ object Bench {
     // default to the conservative 3-per-fork class. Normal groups run
     // FIRST so the heavyweight evidence lands before any wall-budget cut.
     val (micro, normal) = selected.partition { case (n, _) =>
-      prev.get(n).exists(p => p > 0 && p <= microMax) }
+      prev.get(n).exists(p => p > 0 && p <= MicroMax) }
     // ASCENDING-TIME DEALING within each pool (r17): alphabetical
     // grouping packed same-lane heavy-plan keys into one JVM (the
     // quality_* cluster), and a key in the slot after a heavy plan
@@ -540,19 +509,19 @@ object Bench {
           case (k, j) if j % g == i => k })
       }
     val groups: Seq[(Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)], Boolean)] =
-      deal(normal, forkPer).map(g => (g, false)) ++
-        deal(micro, forkPerMicro).map(g => (g, true))
+      deal(normal, ForkPer).map(g => (g, false)) ++
+        deal(micro, ForkPerMicro).map(g => (g, true))
     val acc = scala.collection.mutable.LinkedHashMap[String, QTime]()
     val skippedKeys = scala.collection.mutable.ArrayBuffer[String]()
     val results: Map[String, QTime] =
       if (noFork)
-        runInProcess(selected, sfDir, cpus, iterations, perSession).toMap
+        runInProcess(selected, sfDir, iterations, perSession).toMap
       else {
         var gi = 0
         groups.foreach { case (group, isMicro) =>
-          if (wallSec() > wallBudget) skippedKeys ++= group.map(_._1)
+          if (wallSec() > WallBudget) skippedKeys ++= group.map(_._1)
           else {
-            val sessPer = if (isMicro) microSessionPer else perSession
+            val sessPer = if (isMicro) MicroSessionPer else perSession
             val env = if (isMicro)
               Map("SPARK_GRAFT_SESSION_PER" -> sessPer.toString)
             else Map.empty[String, String]
@@ -560,7 +529,7 @@ object Bench {
               case Some(fr) => nForked += 1; acc ++= fr.times
               case None =>
                 nFallback += 1
-                acc ++= runInProcess(group, sfDir, cpus, iterations, sessPer)
+                acc ++= runInProcess(group, sfDir, iterations, sessPer)
             }
             gi += 1
             // incremental artifact (VERDICT r15 #1a): a kill at ANY point
@@ -599,14 +568,13 @@ object Bench {
       case (n, qt) if qt.status == "oom" => n }.toSeq.sorted
     val times = results.map { case (n, qt) => n -> qt.min }
     // Isolated re-pin sample (VERDICT r12 task 1c, hardened r14):
-    //  - the N slowest keys + flagship + SPARK_GRAFT_ISOLATE_KEYS, PLUS
-    //    any key whose in-suite time exceeds 1.3× its previous-round
-    //    value (VERDICT r13 #2). Prior values come from the committed
-    //    battery sidecar (SPARK_GRAFT_PREV_BENCH, default
-    //    BENCH_full_local.json), read before the run overwrites it.
+    //  - the N slowest keys + flagship, PLUS any key whose in-suite time
+    //    exceeds 1.3× its previous-round value (VERDICT r13 #2). Prior
+    //    values come from the committed battery sidecar (FullOut), read
+    //    before the run overwrites it.
     //  - each row is LOAD-GATED (VERDICT r13 #1, re-instrumented r14):
     //    wait (bounded) for the instantaneous busy-CPU fraction ≤
-    //    SPARK_GRAFT_BUSY_MAX before forking, record the busy fraction
+    //    BusyMax before forking, record the busy fraction
     //    actually observed, and re-run once when the row is busy-dirty
     //    or its iteration spread exceeds its min. Rows that never ran
     //    quiet are named in `isolated_unclean`.
@@ -615,37 +583,16 @@ object Bench {
       case (n, t) if t >= excursionFloor &&
         prev.get(n).exists(p => p > 0 && t / p > 1.3) => n
     }.sortBy(n => -(times(n) / prev(n))).take(12) // bound wall-clock
-    // outside-cores ceiling for the IN-RUN contention check (VERDICT r14
-    // #1): average CPU cores consumed by processes OTHER than the forked
-    // child while the row ran. OS background sits well under 0.5 cores.
-    // Streaming keys are exempted up to a HIGHER ceiling (ADVICE r15 /
-    // VERDICT r15 #3): their state-store commits run through kernel
-    // writeback threads (~5 cores observed on an IDLE host) which /proc
-    // attribution cannot assign to the child, so at the 1.0 default they
-    // could never produce an evidence-grade row. The exemption is
-    // exactly the declared-streaming key list (name prefix) and still
-    // bounded — a genuinely contended streaming row (> ~6 outside cores)
-    // stays unclean, and busy-gate + spread + divergence still apply.
-    val outsideMaxStreaming = sys.env.get("SPARK_GRAFT_OUTSIDE_MAX_STREAMING")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(6.0)
-    def outsideMaxFor(name: String): Double =
-      if (name.startsWith("streaming_")) math.max(outsideMaxDefault, outsideMaxStreaming)
-      else outsideMaxDefault
     var isolatedAttempted = 0
     var isolatedSkipped = 0
     val isolatedRows: Map[String, IsoRow] =
-      if (noFork || isolateN == 0) Map.empty
+      if (noFork) Map.empty
       else {
-        val extra = sys.env.get("SPARK_GRAFT_ISOLATE_KEYS")
-          .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-        val sample = (times.toSeq.sortBy(-_._2).take(isolateN).map(_._1) ++
-          Seq("profile_lineitem").filter(times.contains) ++
-          extra.filter(times.contains) ++ excursions).distinct
+        val sample = (times.toSeq.sortBy(-_._2).take(IsolateN).map(_._1) ++
+          Seq("profile_lineitem").filter(times.contains) ++ excursions).distinct
         // total wait budget across all rows: the gate must bound itself
         // (a pathological neighbour process must not hang the bench)
-        val waitBudget = new java.util.concurrent.atomic.AtomicLong(
-          sys.env.get("SPARK_GRAFT_LOAD_WAIT_BUDGET")
-            .flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(600L))
+        val waitBudget = new java.util.concurrent.atomic.AtomicLong(LoadWaitBudget)
         def one(name: String): Option[(Double, Double, Double)] =
           runForked(Seq(name)).flatMap { fr =>
             fr.times.headOption.filter(!_._2.failed)
@@ -660,11 +607,11 @@ object Bench {
         // an unreadable busy fraction (-1) is UNKNOWN, not quiet
         // (ADVICE r14): a row whose host could not be observed is never
         // evidence-grade
-        def busyDirty(b: Double): Boolean = b < 0 || b > busyMax
+        def busyDirty(b: Double): Boolean = b < 0 || b > BusyMax
         // in-run contention: unknown (-1) is likewise not clean; the
-        // ceiling is per-key (streaming kernel-writeback exemption above)
+        // ceiling is per-key (the streaming kernel-writeback exemption)
         def contended(name: String, oc: Double): Boolean =
-          oc < 0 || oc > outsideMaxFor(name)
+          oc < 0 || oc > (if (name.startsWith("streaming_")) OutsideMaxStreaming else OutsideMax)
         // cross-check vs the committed prior battery (VERDICT r14 #1):
         // divergence triggers a retry; a row that STAYS divergent
         // without contention is a genuine regression and is reported
@@ -674,10 +621,10 @@ object Bench {
         sample.flatMap { name =>
           // the wall budget bounds the isolated phase too (r16): rows
           // past it are counted, not silently dropped
-          if (wallSec() > wallBudget) { isolatedSkipped += 1; None }
+          if (wallSec() > WallBudget) { isolatedSkipped += 1; None }
           else {
             isolatedAttempted += 1
-            val (load1, _) = awaitQuietHost(busyMax, 120, waitBudget)
+            val (load1, _) = awaitQuietHost(120, waitBudget)
             one(name).map { case (t1, sp1, oc1) =>
               val dirty = busyDirty(load1) || spreadDirty(t1, sp1) ||
                 contended(name, oc1) || divergent(t1, name)
@@ -688,7 +635,7 @@ object Bench {
                 // under — cleanliness is decided by the kept attempt's
                 // own instrument signals (busy, spread, in-run outside
                 // CPU), never by the divergence flag alone
-                val (load2, _) = awaitQuietHost(busyMax, 60, waitBudget)
+                val (load2, _) = awaitQuietHost(60, waitBudget)
                 one(name) match {
                   case Some((t2, sp2, oc2)) if t2 < t1 =>
                     name -> IsoRow(t2, load2, oc2,
@@ -744,7 +691,7 @@ object Bench {
         s""""partial":${skippedKeys.nonEmpty},"n_skipped":${skippedKeys.size},""" +
         s""""forked_groups":$nForked,"fallback_groups":$nFallback,""" +
         s""""loadavg_start":${fmt(loadStart)},"loadavg_end":${fmt(loadEnd)},""" +
-        s""""busy_max":${fmt(busyMax)},""" +
+        s""""busy_max":${fmt(BusyMax)},""" +
         s""""spread_max":${fmt(spreadMax)},"isolated":$isoJson,""" +
         s""""isolated_attempted":$isolatedAttempted,""" +
         s""""isolated_unclean":${isolatedUnclean.size},""" +
@@ -759,8 +706,8 @@ object Bench {
     }
     var keep = slowestFirst
     var keepFailed = failedQueries
-    // the isolated map participates in truncation (ADVICE r13: with an
-    // unbounded ISOLATE_KEYS list + excursions it could alone blow the
+    // the isolated map participates in truncation (ADVICE r13: with the
+    // excursions on top of the slowest keys it could alone blow the
     // 1850-char budget); slowest-first so the evidence rows survive —
     // the full map is always in the sidecar
     var keepIso = isolated.toSeq.sortBy(-_._2)

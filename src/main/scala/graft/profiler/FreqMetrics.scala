@@ -3,7 +3,6 @@ package graft.profiler
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** The frequency-based metric family (SURVEY.md §2.A: F1-F5), computed from
   * ONE frequency relation `(instance, v, cnt)` shared by every text column
@@ -38,12 +37,16 @@ object FreqMetrics {
     * semantics), and each bucket carries two counts: all of its rows for
     * the Histogram (null-inclusive), and its non-null rows — the frequency
     * of its one distinct non-null value — for the base metrics
-    * (null-exclusive). The base metrics (a `groupBy(instance)`) and the
-    * histogram (a window per column) are the two branches of one union,
-    * collected at once: the stack exchange runs once, read by both
-    * branches, and nothing is persisted. That is 4 jobs per table with
-    * both branches (the stack exchange, one exchange per branch, the
-    * result).
+    * (null-exclusive). The base branch counts each column's values per
+    * frequency `f` (a `groupBy(instance, f)`), and the histogram is a
+    * window per column. The two are the branches of one union, collected
+    * at once: the stack exchange runs once, read by both branches, and
+    * nothing is persisted. That is 4 jobs per table with both branches
+    * (the stack exchange, one exchange per branch, the result).
+    *
+    * The base metrics are sums over a column's values, taken on the
+    * driver in ascending `f`; the base rows and then the histogram rows
+    * come out in `cols` order. Neither depends on the partitioning.
     *
     * @param n total row count for Histogram's ratio denominator (by-name:
     *          only evaluated when the histogram family is requested).
@@ -68,16 +71,11 @@ object FreqMetrics {
       .select(stack(stackArgs: _*).as(Seq("instance", "value")))
       .groupBy(col("instance"), coalesce(col("value"), lit(NullBucket)).as("v"))
       .agg(struct(count(lit(1)).as("all"), count(col("value")).as("nn")).as("cnt"))
+    // nf = how many of the column's distinct values occur f times
     val base =
       if ((fams - "histogram").isEmpty) None
-      else {
-        val f = col("cnt.nn")
-        Some(freq.where(f > 0).groupBy("instance").agg(
-          count(lit(1)).as("nv"),
-          sum(f).as("nn"),
-          sum(when(f === 1, 1L).otherwise(0L)).as("nu"),
-          sum(f.cast(DoubleType) * log(f.cast(DoubleType))).as("slc")))
-      }
+      else Some(freq.where(col("cnt.nn") > 0)
+        .groupBy(col("instance"), col("cnt.nn").as("f")).agg(count(lit(1)).as("nf")))
     // one window yields both the capped top-N and the pre-cap bin count
     // (count over the unordered partition = all bins)
     val hist =
@@ -88,34 +86,36 @@ object FreqMetrics {
           col("instance"), col("v"), col("cnt.all").as("cnt"),
           row_number().over(byCol.orderBy(col("cnt.all").desc, col("v").asc)).as("rn"),
           count(lit(1)).over(byCol).as("bins"))
-          .where(col("rn") <= noOfBins)
-          .drop("rn"))
+          .where(col("rn") <= noOfBins))
       }
     // a base row has every histogram column null and vice versa
     val rows = (base ++ hist).reduce(_.unionByName(_, allowMissingColumns = true)).collect()
-    val (histRows, baseRows) = rows.partition(r => base.isEmpty || r.isNullAt(r.fieldIndex("nv")))
+    val (histRows, baseRows) = rows.partition(r => base.isEmpty || r.isNullAt(r.fieldIndex("nf")))
+    val baseBy = baseRows.groupBy(_.getAs[String]("instance"))
+    val histBy = histRows.groupBy(_.getAs[String]("instance"))
     val b = Seq.newBuilder[MetricRow]
-    baseRows.foreach { r =>
-      val c = r.getAs[String]("instance")
-      val nv = r.getAs[Long]("nv").toDouble
-      val nn = r.getAs[Long]("nn").toDouble
-      val nu = r.getAs[Long]("nu").toDouble
-      val slc = r.getAs[Double]("slc")
-      if (fams("count_distinct")) b += MetricRow("Column", c, CountDistinct, nv)
-      if (fams("entropy")) b += MetricRow("Column", c, Entropy, math.log(nn) - slc / nn)
-      if (fams("unique_value_ratio")) b += MetricRow("Column", c, UniqueValueRatio, nu / nv)
-      if (fams("uniqueness")) b += MetricRow("Column", c, Uniqueness, nu / nn)
+    for (c <- cols; rs <- baseBy.get(c)) {
+      var nv, nn, nu = 0L
+      var slc = 0.0 // Σ over values of f·ln f
+      rs.map(r => (r.getAs[Long]("f"), r.getAs[Long]("nf"))).sortBy(_._1).foreach {
+        case (f, k) =>
+          nv += k; nn += f * k
+          if (f == 1) nu = k
+          slc += k * (f * StrictMath.log(f.toDouble))
+      }
+      if (fams("count_distinct")) b += MetricRow("Column", c, CountDistinct, nv.toDouble)
+      if (fams("entropy")) b += MetricRow("Column", c, Entropy, math.log(nn.toDouble) - slc / nn)
+      if (fams("unique_value_ratio")) b += MetricRow("Column", c, UniqueValueRatio, nu.toDouble / nv)
+      if (fams("uniqueness")) b += MetricRow("Column", c, Uniqueness, nu.toDouble / nn)
     }
-    if (hist.nonEmpty) {
-      val total = n
-      histRows.groupBy(_.getAs[String]("instance")).foreach { case (c, rs) =>
-        b += MetricRow("Column", c, HistogramBins, rs.head.getAs[Long]("bins").toDouble)
-        rs.foreach { r =>
-          val v = r.getAs[String]("v")
-          val cnt = r.getAs[Long]("cnt")
-          b += MetricRow("Column", c, histogramAbs(v), cnt.toDouble)
-          b += MetricRow("Column", c, histogramRatio(v), cnt.toDouble / total)
-        }
+    lazy val total = n
+    for (c <- cols; rs <- histBy.get(c)) {
+      b += MetricRow("Column", c, HistogramBins, rs.head.getAs[Long]("bins").toDouble)
+      rs.sortBy(_.getAs[Int]("rn")).foreach { r =>
+        val v = r.getAs[String]("v")
+        val cnt = r.getAs[Long]("cnt")
+        b += MetricRow("Column", c, histogramAbs(v), cnt.toDouble)
+        b += MetricRow("Column", c, histogramRatio(v), cnt.toDouble / total)
       }
     }
     b.result()

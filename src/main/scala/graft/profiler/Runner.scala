@@ -144,18 +144,10 @@ object Runner {
             "[--noOfBins n] [--quantiles n] [--tableParallelism n]")
         sys.exit(2)
       case Right(args) =>
-        val spark = SparkSession.builder()
-          .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .config("spark.sql.codegen.maxFields", "1000")
-          // TIMESTAMP(NANOS) parquet (events table) is unreadable as a
-          // Spark timestamp; as a raw long the column profiles numerically.
-          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val cpus = graft.Sessions.cpus
+        // SPARK_GRAFT_MASTER: the deployment's master URL, e.g. a cluster's
+        val spark = graft.Sessions.create(
+          sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"), cpus)
         try {
           val results = Runner.run(spark, new ParquetDirCatalog(spark, args.dbName), args)
           results.toSeq.sortBy(_._1).foreach { case (t, n) =>

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-lane data generator: blows the driver's sf0.1 testdata up by an
@@ -180,7 +180,6 @@ object ScaleGen {
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "target/sf1")
     val k = sys.env.get("SPARK_GRAFT_SCALE_K")
       .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ > 1).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     // SPARK_GRAFT_SCALE_SALT=char: content-varying replication (salts
     // every 7th CHARACTER, killing cross-copy char-k-gram sharing) for
     // re-measuring char-gram operators without the replication artifact
@@ -190,13 +189,7 @@ object ScaleGen {
     val tableFilter = sys.env.get("SPARK_GRAFT_SCALE_TABLES")
       .map(_.split(",").map(_.trim).toSet)
     def want(name: String): Boolean = tableFilter.forall(_.contains(name))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
 
     def read(name: String): DataFrame = spark.read.parquet(s"$srcDir/$name.parquet")
 

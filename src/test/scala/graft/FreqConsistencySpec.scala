@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,23 +20,21 @@ class FreqConsistencySpec extends AnyFunSuite {
     df.select(col(c).as("v")).where(col("v").isNotNull)
       .groupBy("v").agg(count(lit(1)).as("cnt"))
 
-  /** CountDistinct, Entropy, UniqueValueRatio and Uniqueness from one
-    * aggregation over the column's frequency table, with the entropy
+  /** CountDistinct, Entropy, UniqueValueRatio and Uniqueness from the
+    * column's frequency-of-frequencies `(f, number of values occurring f
+    * times)`, summed in ascending `f` like `batched`, with the entropy
     * rewrite H = ln(nn) − (Σ cnt·ln cnt) / nn that `batched` and the
     * oracle SQL use. */
   private def perColumn(df: DataFrame, c: String, fams: Set[String]): Seq[MetricRow] = {
-    val row = freqTable(df, c).agg(
-      count(lit(1)).as("nv"),
-      sum("cnt").as("nn"),
-      sum(when(col("cnt") === 1, 1L).otherwise(0L)).as("nu"),
-      sum(col("cnt").cast(DoubleType) * log(col("cnt").cast(DoubleType))).as("slc")
-    ).head()
-    if (row.isNullAt(1)) Nil // column has no non-null values
+    val byF = freqTable(df, c).groupBy("cnt").agg(count(lit(1)))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+    if (byF.isEmpty) Nil // column has no non-null values
     else {
-      val nv = row.getLong(0).toDouble
-      val nn = row.getLong(1).toDouble
-      val nu = row.getLong(2).toDouble
-      val slc = row.getDouble(3)
+      val nv = byF.map(_._2).sum.toDouble
+      val nn = byF.map { case (f, k) => f * k }.sum.toDouble
+      val nu = byF.collectFirst { case (1L, k) => k }.getOrElse(0L).toDouble
+      val slc = byF.foldLeft(0.0) { case (acc, (f, k)) =>
+        acc + k * (f * StrictMath.log(f.toDouble)) }
       val b = Seq.newBuilder[MetricRow]
       if (fams("count_distinct")) b += MetricRow("Column", c, CountDistinct, nv)
       if (fams("entropy")) b += MetricRow("Column", c, Entropy, math.log(nn) - slc / nn)
@@ -117,5 +115,25 @@ class FreqConsistencySpec extends AnyFunSuite {
     // an all-null column has a histogram and no base metric
     assert(batched.filter(_.instance == "none").map(r => r.name -> r.value).toSet == Set(
       HistogramBins -> 1.0, histogramAbs(NullBucket) -> 12.0, histogramRatio(NullBucket) -> 1.0))
+  }
+
+  test("batched: identical rows in identical order at 1 and 4 partitions") {
+    // eight columns with skewed, many-valued frequencies: a partition-order
+    // sum of cnt·ln cnt moves Entropy in its last digits, and hash order
+    // reorders the columns
+    val data = (0 until 3000).map { i =>
+      Row.fromSeq((0 until 8).map(j => s"v${(i * (j + 3)) % (97 + 31 * j) % (i % 53 + 1)}"))
+    }
+    val schema = StructType((0 until 8).map(j => StructField(s"c$j", StringType)))
+    def run(partitions: Int): Seq[MetricRow] = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      val df = s.createDataFrame(s.sparkContext.parallelize(data, partitions), schema)
+      FreqMetrics.batched(df, df.columns.toSeq, Profiler.freqFamilies, 5, data.size)
+    }
+    val one = run(1)
+    assert(one.map(_.instance).distinct.size == 8)
+    assert(run(4) == one)
   }
 }
