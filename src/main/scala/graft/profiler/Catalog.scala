@@ -32,9 +32,14 @@ final class ParquetDirCatalog(spark: SparkSession, dir: String) extends TableCat
   override def name: String =
     dir.split('/').filter(_.nonEmpty).lastOption.getOrElse(dir)
 
-  private def files: Seq[String] =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .iterator.map(_.getName).toSeq
+  /** A missing database fails loudly, as Glue `GetTables` does: a typo'd
+    * path must not read as an empty catalog. */
+  private def files: Seq[String] = {
+    val listed = new java.io.File(dir).listFiles()
+    if (listed == null)
+      throw new IllegalArgumentException(s"catalog directory $dir does not exist or is not a directory")
+    listed.iterator.map(_.getName).toSeq
+  }
 
   override def listTables: Seq[String] = {
     val fs = files

@@ -52,6 +52,8 @@ object Runner {
         case Nil =>
           if (acc.dbName.isEmpty) Left("--dbName is required")
           else if (acc.outPrefix.isEmpty) Left("--outPrefix is required")
+          else if (acc.tableParallelism < 1)
+            Left(s"--tableParallelism must be at least 1, got ${acc.tableParallelism}")
           else scala.util.Try(acc.cfg).toEither.left.map(_.getMessage).map(_ => acc)
         case "--dbName" :: v :: t => loop(t, acc.copy(dbName = v))
         case "--outPrefix" :: v :: t => loop(t, acc.copy(outPrefix = v))

@@ -1,13 +1,12 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.TestSpark.sf001Dir
 
 /** The driver-visible invariant audits (round 6) must be all-true at every
   * scale — here the sf0.001 corpus; the driver re-checks them against
   * their all-true VALUES oracles at sf0.01. */
-class AuditSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = "/root/testdata/sf0.001"
+class AuditSpec extends SparkSuite {
+  private val dir = sf001Dir
 
   private val audits = Seq(
     "approx_error_audit", "minhash_audit", "simhash_audit", "ann_lsh_audit",
@@ -24,6 +23,23 @@ class AuditSpec extends AnyFunSuite {
       assert(boolIdx.nonEmpty, s"$name emitted no boolean columns")
       val bad = out.filter(r => boolIdx.exists(i => r.isNullAt(i) || !r.getBoolean(i)))
       assert(bad.isEmpty, s"$name false rows: ${bad.take(5).mkString("; ")}")
+    }
+  }
+
+  test("auditTwins is total: every no-oracle query key is pinned by a declared audit that exists and is itself fully oracled") {
+    val qs = SparkEntry.queries.keySet
+    val oracled = SparkEntry.oracleSql.keySet
+    val noOracle = qs.filterNot(oracled).filterNot(_.contains("_audit"))
+    val unmapped = noOracle -- SparkEntry.auditTwins.keySet
+    assert(unmapped.isEmpty,
+      s"no-oracle keys without a declared audit twin: ${unmapped.toSeq.sorted}")
+    SparkEntry.auditTwins.foreach { case (key, twin) =>
+      assert(qs.contains(key), s"auditTwins maps a nonexistent key: $key")
+      assert(!oracled.contains(key),
+        s"auditTwins lists $key, but it HAS a full oracle — stale entry")
+      assert(qs.contains(twin), s"audit twin $twin (for $key) is not declared")
+      assert(oracled.contains(twin),
+        s"audit twin $twin (for $key) has no oracle — an unpinned pin")
     }
   }
 }

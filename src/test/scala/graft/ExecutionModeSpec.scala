@@ -10,8 +10,8 @@ import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.{bits, testdata}
 import graft.profiler._
 
 /** The size-gated execution mode of `Profiler.metrics`: a table under the
@@ -20,15 +20,11 @@ import graft.profiler._
   * tests pin the mode from both sides: a Spark upgrade that drops or
   * renames either conf turns the "no compile" / "no whole-stage" checks
   * red instead of silently profiling codegen'd. */
-class ExecutionModeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
-  private lazy val spark = TestSpark.spark
+class ExecutionModeSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   private val cfg = ProfilerConfig(compExp = true, profileUnsupportedTypes = true)
 
-  private def bits(rows: Seq[MetricRow]): Seq[(String, String, String, Long)] =
-    rows.map(r => (r.entity, r.instance, r.name, java.lang.Double.doubleToRawLongBits(r.value)))
-
   private def lineitem(sf: String): DataFrame =
-    spark.read.parquet(s"/root/testdata/$sf/lineitem.parquet")
+    spark.read.parquet(s"$testdata/$sf/lineitem.parquet")
 
   /** ±0.0, NaN, nulls, a decimal, a date and a boolean (cast to text by
     * `profileUnsupportedTypes`) in one in-memory table. */

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.profiler._
 import graft.profiler.MetricNames._
@@ -12,9 +11,7 @@ import graft.profiler.MetricNames._
   * per-column reference path must agree exactly — they implement the same
   * §2.A semantics and must not drift apart. The per-column path lives here:
   * it is the reference `batched` is checked against, not engine code. */
-class FreqConsistencySpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
+class FreqConsistencySpec extends SparkSuite {
   /** Per-column frequency table `(v, cnt)` over non-null values. */
   private def freqTable(df: DataFrame, c: String): DataFrame =
     df.select(col(c).as("v")).where(col("v").isNotNull)

@@ -1,16 +1,15 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.profiler.{ColumnClass, IncrementalProfiler, Profiler, ProfilerConfig}
+import graft.TestSpark.{bits, sf001Dir}
+import graft.profiler.{ColumnClass, IncrementalProfiler, MetricRow, Profiler, ProfilerConfig}
 
 /** Mergeable incremental profiling: merged partial states must reproduce
   * the whole-table profile exactly (for the exact metrics) regardless of
   * how the data was split or in which order states merge. */
-class IncrementalSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = "/root/testdata/sf0.001"
+class IncrementalSpec extends SparkSuite {
+  private val dir = sf001Dir
 
   private def metricMap(df: org.apache.spark.sql.DataFrame): Map[(String, String), Double] =
     df.collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
@@ -59,17 +58,15 @@ class IncrementalSpec extends AnyFunSuite {
   test("scan battery and incremental snapshot derive bit-identical exact metrics") {
     import spark.implicits._
     val fams = Set("size", "completeness", "minimum", "maximum", "mean", "sum", "stddev_pop")
-    def bits(kv: Seq[((String, String), Double)]): Map[(String, String), Long] =
-      kv.map { case (k, v) => k -> java.lang.Double.doubleToRawLongBits(v) }.toMap
+    def keyed(rows: Seq[MetricRow]): Map[(String, String), Long] =
+      bits(rows).map { case (_, instance, name, b) => (instance, name) -> b }.toMap
     /** The (instance, name) pairs only the scan battery emits. */
     def scanOnly(df: org.apache.spark.sql.DataFrame): Set[(String, String)] = {
-      val scan = bits(Profiler.metrics(df, ProfilerConfig(), fams)
-        .map(m => (m.instance, m.name) -> m.value))
-      val inc = bits(IncrementalProfiler.metrics(IncrementalProfiler.snapshot(df))
+      val scan = keyed(Profiler.metrics(df, ProfilerConfig(), fams))
+      val inc = keyed(IncrementalProfiler.metrics(IncrementalProfiler.snapshot(df))
         .collect().toSeq
-        .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2))
-        .filterNot { case ((_, name), _) =>
-          name == "ApproxCountDistinct" || name.startsWith("ApproxQuantiles") })
+        .map(r => MetricRow("", r.getString(0), r.getString(1), r.getDouble(2)))
+        .filterNot(r => r.name == "ApproxCountDistinct" || r.name.startsWith("ApproxQuantiles")))
       assert((inc.keySet -- scan.keySet).isEmpty, s"incremental-only: ${inc.keySet -- scan.keySet}")
       for (k <- inc.keySet)
         assert(scan(k) == inc(k), s"$k: scan ${java.lang.Double.longBitsToDouble(scan(k))} " +
@@ -99,5 +96,32 @@ class IncrementalSpec extends AnyFunSuite {
     assert(scanOnly(odd) == Set("s" -> "Completeness") ++
       moments.map("nan" -> _) ++ moments.map("huge" -> _) +
       ("big" -> "StandardDeviation") + ("k" -> "StandardDeviation"))
+  }
+
+  test("segmented incremental: split+merge equals one-shot; null segment kept") {
+    import spark.implicits._
+    val df = Seq(
+      (Option("a"), Option(1.0)), (Option("a"), Option(3.0)),
+      (Option("b"), Option(10.0)), (Option.empty[String], Option(7.0)),
+      (Option("a"), Option.empty[Double])
+    ).toDF("seg", "x")
+    val p = graft.profiler.IncrementalProfiler
+    val oneShot = p.metricsBy(p.snapshotBy(df, "seg"))
+    val merged = p.metricsBy(p.mergeBy(Seq(
+      p.snapshotBy(df.limit(2), "seg"),
+      p.snapshotBy(df.except(df.limit(2)), "seg"))))
+    def exact(m: org.apache.spark.sql.DataFrame) = m
+      .where(col("name").isin("Completeness", "Mean", "Sum", "Minimum",
+        "Maximum", "Size"))
+      .collect()
+      .map(r => (Option(r.getString(0)), r.getString(1), r.getString(2)) ->
+        r.getDouble(3)).toMap
+    val a = exact(oneShot)
+    assert(a((Some("a"), "x", "Mean")) == 2.0)
+    assert(a((Some("a"), "x", "Completeness")) == 2.0 / 3)
+    assert(a((None, "x", "Sum")) == 7.0)
+    assert(a((Some("b"), "*", "Size")) == 1.0)
+    // exact metrics identical under split+merge (modulo row order)
+    assert(exact(merged) == a)
   }
 }

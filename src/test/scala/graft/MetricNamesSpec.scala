@@ -1,15 +1,12 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.profiler._
 
 /** Golden metric-name parity (SURVEY.md §5.2.4): these exact strings are
   * the reference's observable contract (metric `name` column + prefixed
   * metadata keys). A rename here silently breaks Glue-parameter-key
   * compatibility — this spec makes it loud. */
-class MetricNamesSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+class MetricNamesSpec extends SparkSuite {
   import MetricNames._
 
   test("metric name constants match the reference parity table") {

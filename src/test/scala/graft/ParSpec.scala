@@ -2,56 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import scala.collection.mutable
-
-import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.scalatest.funsuite.AnyFunSuite
-
-/** Records the local property `key` of every job Spark starts. */
-final class JobTags(sc: SparkContext, key: String) extends SparkListener {
-  private val seen = mutable.ArrayBuffer.empty[String]
-
-  override def onJobStart(js: SparkListenerJobStart): Unit = synchronized {
-    seen += Option(js.properties).map(_.getProperty(key)).orNull
-    notifyAll()
-  }
-
-  /** Runs `body` and returns the `key` property of every job it started.
-    * A sentinel job on this thread brackets each side: listener events
-    * arrive in start order, so once the closing sentinel is seen, so are
-    * all of the body's jobs. */
-  def of(body: => Unit): Seq[String] = {
-    sc.addSparkListener(this)
-    try {
-      val from = drain()
-      body
-      val to = drain()
-      synchronized(seen.slice(from + 1, to).toSeq)
-    } finally sc.removeSparkListener(this)
-  }
-
-  private def drain(): Int = {
-    val mark = s"sentinel-${java.util.UUID.randomUUID()}"
-    val prev = sc.getLocalProperty(key)
-    sc.setLocalProperty(key, mark)
-    try sc.parallelize(Seq(1), 1).count()
-    finally sc.setLocalProperty(key, prev)
-    val deadline = System.currentTimeMillis() + 30000
-    synchronized {
-      while (!seen.contains(mark)) {
-        val left = deadline - System.currentTimeMillis()
-        if (left <= 0) throw new IllegalStateException(s"no job start event for $mark")
-        wait(left)
-      }
-      seen.indexOf(mark)
-    }
-  }
-}
-
-class ParSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
+class ParSpec extends SparkSuite {
   test("Par.map: results in input order") {
     val out = Par.map(spark, (1 to 20).toList, 4) { i =>
       Thread.sleep((20 - i) % 7 * 5L)

@@ -2,16 +2,13 @@ package graft
 
 import scala.util.Random
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.profiler._
 
 /** Cross-metric invariants (SURVEY.md §5.2.2) over seeded random small
   * frames — property-style testing without the scalatest-scalacheck bridge
   * (not in the offline dependency set). Few samples, many invariants per
   * sample: Spark jobs are the cost. */
-class PropertySpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+class PropertySpec extends SparkSuite {
   private val cfg = ProfilerConfig(compExp = true)
 
   private def sample(rng: Random): Seq[(Option[Double], Option[String])] = {

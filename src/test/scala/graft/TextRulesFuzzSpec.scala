@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Property-fuzz for the text rule batteries (VERDICT r14 task 5 — the
   * decoder-fuzzing treatment for CorpusStats): the C4/dup-line gate keys
@@ -13,9 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * an independent plain-Scala reimplementation of the rule algebra, plus
   * the cross-operator invariants (executor keep-set ≡ rules keep-set;
   * cleaned sha stable under appending a rule-rejected line). */
-class TextRulesFuzzSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
+class TextRulesFuzzSpec extends SparkSuite {
   // ---- plain-Scala model of the rule algebra (independent re-derivation,
   // not a call into the operators) ----
   private def wsWords(l: String): Int =

@@ -1,174 +1,10 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.functions.{RollingHash, TextFunctions}
 import graft.multimodal.Multimodal
-import graft.streaming.{SessionEvent, StreamingProfile}
 
-class TextFunctionsSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
-  private def one(c: org.apache.spark.sql.Column, text: String): Any = {
-    import spark.implicits._
-    Seq(text).toDF("text").select(c).head().get(0)
-  }
-
-  test("whitespace token count drops empties from leading/trailing/double spaces") {
-    assert(one(TextFunctions.wsTokenCount(col("text")), " a  b c ") == 3L)
-    assert(one(TextFunctions.wsTokenCount(col("text")), "") == 0L)
-  }
-
-  test("bpe-ish token count: letter runs, digit runs, single symbols") {
-    // "ab 12 cd!" -> ab, 12, cd, !
-    assert(one(TextFunctions.bpeishTokenCount(col("text")), "ab 12 cd!") == 4L)
-    assert(one(TextFunctions.bpeishTokenCount(col("text")), "a1b") == 3L)
-  }
-
-  test("language id votes stopwords, tie-break alphabetical") {
-    assert(one(TextFunctions.langId(col("text")), "the cat and the hat") == "en")
-    assert(one(TextFunctions.langId(col("text")), "le chat et la table les") == "fr")
-    // zero hits everywhere: every score equals the max, 'de' wins the order
-    assert(one(TextFunctions.langId(col("text")), "xyzzy plugh") == "de")
-  }
-
-  test("quality score stays in [0,1] and rewards stopword-bearing prose") {
-    val q1 = one(TextFunctions.qualityScore(col("text")),
-      "the quick brown fox jumps over the lazy dog and runs").asInstanceOf[Double]
-    assert(q1 > 0.0 && q1 <= 1.0)
-  }
-
-  test("empty and whitespace-only documents yield null ratios, no ANSI crash") {
-    // ANSI mode is on by default in Spark 4: these would DIVIDE_BY_ZERO
-    // without the when() guards in qualityScore
-    assert(one(TextFunctions.qualityScore(col("text")), "") == null)
-    assert(one(TextFunctions.qualityScore(col("text")), "   ") == null)
-    val q = one(TextFunctions.qualityScore(col("text")), "the dog").asInstanceOf[Double]
-    assert(q > 0.0 && q <= 1.0)
-  }
-
-  test("vocab top-k ranks by frequency with alphabetical tie-break, no global sort") {
-    import spark.implicits._
-    val docs = Seq((1L, "b a a c B"), (2L, "a c d")).toDF("doc_id", "text")
-    val top = TextFunctions.vocabTopK(docs, "text", 3)
-    val rows = top.collect().map(r => (r.getString(0), r.getLong(1)))
-    // a:3, b:2 (lowercased), c:2, d:1 -> tie between b and c broken by name
-    assert(rows.toSeq == Seq(("a", 3L), ("b", 2L), ("c", 2L)))
-    // top-k must plan as a heap (TakeOrdered), never a full sort
-    val p = top.queryExecution.executedPlan.toString
-    assert(p.contains("TakeOrderedAndProject"), s"expected top-k heap plan:\n$p")
-  }
-
-  test("rolling hash: known folds and codegen/interpreted agreement") {
-    RollingHash.register(spark)
-    import spark.implicits._
-    val out = Seq("ab", "", "hello world").toDF("text")
-      .select(expr("rolling_hash(text)")).collect().map(_.getLong(0))
-    assert(out(0) == 97L * 31 + 98) // == 3105, matches the DuckDB fold
-    assert(out(1) == 0L)
-    // cross-check generated code against the interpreted path
-    import org.apache.spark.unsafe.types.UTF8String
-    assert(out(2) == RollingHash.hash(UTF8String.fromString("hello world")))
-  }
-}
-
-class StreamingSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
-  test("sessionize splits on >30min gaps per user") {
-    import spark.implicits._
-    val min = 60L * 1000000L
-    val events = Seq(
-      SessionEvent(1L, 0L), SessionEvent(1L, 10 * min), SessionEvent(1L, 20 * min),
-      SessionEvent(1L, 60 * min), // 40min gap -> new session
-      SessionEvent(2L, 5 * min)
-    ).toDS()
-    val out = StreamingProfile.sessionize(events, gapMinutes = 30)
-      .collect().map(s => (s.user_id, s.session_start_us, s.n_events)).sorted
-    assert(out.toSeq == Seq((1L, 0L, 3L), (1L, 60 * min, 1L), (2L, 5 * min, 1L)))
-  }
-
-  test("sessionize is arrival-order independent and holds O(sessions) state on hot keys") {
-    import spark.implicits._
-    val min = 60L * 1000000L
-    val rng = new scala.util.Random(3)
-    // hot key: 5000 dense events (all one session — one map entry while
-    // streaming through), plus scattered singleton sessions, delivered in
-    // shuffled order; interval-merge must equal the sorted gap scan
-    val dense = (0 until 5000).map(i => SessionEvent(9L, i * 1000L))
-    val sparse = (0 until 50).map(i => SessionEvent(9L, (1000 + i * 100) * min))
-    val events = rng.shuffle(dense ++ sparse)
-    val out = StreamingProfile.sessionize(events.toDS(), gapMinutes = 30)
-      .collect().map(s => (s.session_start_us, s.n_events)).sorted
-    val expected = ((0L, 5000L) +: (0 until 50).map(i => ((1000 + i * 100) * min, 1L))).sorted
-    assert(out.toSeq == expected)
-    // duplicate timestamps all count
-    val dup = StreamingProfile.sessionize(
-      Seq(SessionEvent(1L, 5L), SessionEvent(1L, 5L), SessionEvent(1L, 5L)).toDS(), 30)
-      .collect()
-    assert(dup.map(s => (s.session_start_us, s.n_events)).toSeq == Seq((5L, 3L)))
-  }
-
-  test("property: interval-merge sessionize equals the sorted gap scan on random inputs") {
-    import spark.implicits._
-    // reference implementation: sort all timestamps, split on gaps
-    def reference(ts: Seq[Long], gapUs: Long): Seq[(Long, Long)] = {
-      val sorted = ts.sorted
-      val out = Seq.newBuilder[(Long, Long)]
-      var start = 0
-      for (i <- 1 to sorted.length)
-        if (i == sorted.length || sorted(i) - sorted(i - 1) > gapUs) {
-          out += ((sorted(start), (i - start).toLong))
-          start = i
-        }
-      out.result()
-    }
-    val rng = new scala.util.Random(17)
-    val gapUs = 30L * 60 * 1000000
-    for (_ <- 1 to 5) {
-      // clustered + uniform + duplicate timestamps across a few users
-      val events = (1L to 4L).flatMap { uid =>
-        val n = 1 + rng.nextInt(60)
-        (0 until n).map { _ =>
-          val base = rng.nextInt(5) * 10L * gapUs
-          SessionEvent(uid, base + (rng.nextLong() % (3 * gapUs)).abs)
-        }
-      }
-      val got = StreamingProfile.sessionize(rng.shuffle(events).toDS(), 30)
-        .collect().map(s => (s.user_id, s.session_start_us, s.n_events)).sorted.toSeq
-      val want = events.groupBy(_.user_id).toSeq.flatMap { case (uid, es) =>
-        reference(es.map(_.ts_us), gapUs).map { case (st, n) => (uid, st, n) }
-      }.sorted
-      assert(got == want)
-    }
-  }
-
-  test("streaming windowed profile equals the batch aggregation (stream/batch parity)") {
-    val path = "/root/testdata/sf0.001/events.parquet"
-    val streamed = StreamingProfile.replayParquet(
-      spark, path,
-      df => StreamingProfile.windowedProfileExact(
-        df.withColumn("ts",
-          timestamp_micros(graft.operators.Events.tsMicros(df, "ts")))),
-      "complete")
-      .orderBy("window_start", "event_type")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val raw = spark.read.parquet(path)
-    val batch = raw
-      .withColumn("ts", timestamp_micros(graft.operators.Events.tsMicros(raw, "ts")))
-      .groupBy(date_trunc("hour", col("ts")).cast("string").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy("w", "event_type")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    assert(streamed.nonEmpty)
-    assert(streamed.toSeq == batch.toSeq)
-  }
-}
-
-class MultimodalSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
+class MultimodalSpec extends SparkSuite {
   test("binary plumbing: payload bytes, fingerprints, batched stub decode") {
     import spark.implicits._
     val docs = Seq((1L, "hello"), (2L, ""), (3L, "abc")).toDF("doc_id", "text")
@@ -250,11 +86,141 @@ class MultimodalSpec extends AnyFunSuite {
     assert(frames.map(_.getLong(0)).toSeq == Seq(2L, 2L))
     assert(frames.map(_.getLong(2)).toSeq == Seq(256L, 44L))
   }
+
+  test("bmpDHash: deterministic, orientation-aware, perturbation-local; imageNearDup pairs identical and near-identical images only") {
+    import spark.implicits._
+    import graft.multimodal.Multimodal
+    // determinism + self-consistency
+    val a = Multimodal.syntheticBmp(7L, 16, 16)
+    assert(Multimodal.bmpDHash(a) == Multimodal.bmpDHash(
+      Multimodal.syntheticBmp(7L, 16, 16)))
+    // a one-pixel perturbation stays within a few bits; a different seed
+    // lands ~32 bits away
+    val near = Multimodal.syntheticBmp(7L, 16, 16, perturb = 99L)
+    val far = Multimodal.syntheticBmp(8L, 16, 16)
+    def ham(x: Long, y: Long) = java.lang.Long.bitCount(x ^ y)
+    val (ha, hn, hf) = (Multimodal.bmpDHash(a).get,
+      Multimodal.bmpDHash(near).get, Multimodal.bmpDHash(far).get)
+    assert(ham(ha, hn) <= 4, s"near variant drifted ${ham(ha, hn)} bits")
+    assert(ham(ha, hf) > 5, s"unrelated image too close: ${ham(ha, hf)}")
+    // top-down BMP (negative height) hashes like its bottom-up twin
+    val td = a.clone()
+    // rewrite height field to -16 and reverse pixel rows
+    def p32(buf: Array[Byte], off: Int, v: Int): Unit = (0 to 3).foreach(i =>
+      buf(off + i) = ((v >> (8 * i)) & 0xFF).toByte)
+    p32(td, 22, -16)
+    val rowSize = ((16 * 3 + 3) / 4) * 4
+    (0 until 16).foreach { r =>
+      System.arraycopy(a, 54 + (16 - 1 - r) * rowSize, td, 54 + r * rowSize, rowSize)
+    }
+    assert(Multimodal.bmpDHash(td).contains(ha))
+    // non-images and truncated payloads drop out
+    assert(Multimodal.bmpDHash("BM not an image".getBytes).isEmpty)
+    assert(Multimodal.bmpDHash(a.take(60)).isEmpty)
+    // end-to-end pairing: identical (1,2), near (3), unrelated (4)
+    val bin = Seq(
+      (1L, Multimodal.syntheticBmp(1L, 16, 16)),
+      (2L, Multimodal.syntheticBmp(1L, 16, 16)),
+      (3L, Multimodal.syntheticBmp(1L, 16, 16, perturb = 42L)),
+      (4L, Multimodal.syntheticBmp(999L, 16, 16)),
+      (5L, "just text".getBytes))
+      .toDF("doc_id", "payload")
+    val pairs = Multimodal.imageNearDup(bin, maxHamming = 5)
+      .orderBy("id_a", "id_b").collect()
+    assert(pairs.map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSeq ==
+      Seq((1L, 2L), (1L, 3L), (2L, 3L)))
+    assert(pairs.head.getAs[Int]("hamming") == 0)
+  }
+
+  test("wavDHash + audioNearDup: envelope hash pairs identical and perturbed clips, not unrelated ones; imageDedupExecute keeps the minimum id") {
+    import spark.implicits._
+    import graft.multimodal.Multimodal
+    val a = Multimodal.syntheticWav(3L)
+    assert(Multimodal.wavDHash(a) == Multimodal.wavDHash(Multimodal.syntheticWav(3L)))
+    val near = Multimodal.syntheticWav(3L, perturb = 7L)
+    val far = Multimodal.syntheticWav(4L)
+    def ham(x: Long, y: Long) = java.lang.Long.bitCount(x ^ y)
+    val (ha, hn, hf) = (Multimodal.wavDHash(a).get,
+      Multimodal.wavDHash(near).get, Multimodal.wavDHash(far).get)
+    assert(ham(ha, hn) <= 4, s"perturbed clip drifted ${ham(ha, hn)} bits")
+    assert(ham(ha, hf) > 5, s"unrelated clip too close: ${ham(ha, hf)}")
+    assert(Multimodal.wavDHash("RIFFxxxxWAVEfmt not audio".getBytes).isEmpty)
+    assert(Multimodal.wavDHash(a.take(45)).isEmpty)
+    val bin = Seq(
+      (1L, Multimodal.syntheticWav(1L)),
+      (2L, Multimodal.syntheticWav(1L)),
+      (3L, Multimodal.syntheticWav(1L, perturb = 9L)),
+      (4L, Multimodal.syntheticWav(77L)))
+      .toDF("doc_id", "payload")
+    val pairs = Multimodal.audioNearDup(bin, maxHamming = 5)
+      .orderBy("id_a", "id_b").collect()
+    assert(pairs.map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSeq ==
+      Seq((1L, 2L), (1L, 3L), (2L, 3L)))
+    // executor: the image trio keeps exactly its minimum id
+    val ibin = Seq(
+      (5L, Multimodal.syntheticBmp(1L, 16, 16)),
+      (6L, Multimodal.syntheticBmp(1L, 16, 16)),
+      (7L, Multimodal.syntheticBmp(1L, 16, 16, perturb = 3L)),
+      (8L, Multimodal.syntheticBmp(50L, 16, 16)))
+      .toDF("doc_id", "payload")
+    val kept = Multimodal.imageDedupExecute(ibin, maxHamming = 5)
+      .orderBy("doc_id").collect()
+    assert(kept.map(_.getAs[Long]("doc_id")).toSeq == Seq(5L, 8L))
+    assert(kept.forall(_.getAs[String]("fingerprint").length == 16))
+    // audio executor: identical/near trio keeps min id, unrelated kept
+    val keptA = Multimodal.audioDedupExecute(bin, maxHamming = 5)
+      .orderBy("doc_id").collect()
+    assert(keptA.map(_.getAs[Long]("doc_id")).toSeq == Seq(1L, 4L))
+  }
+
+  test("wavDHash rejects a RIFF/WAVE with a LIST chunk between fmt and data instead of hashing metadata as PCM (ADVICE r12)") {
+    import graft.multimodal.Multimodal
+    val good = Multimodal.syntheticWav(7L, 2080)
+    assert(Multimodal.wavDHash(good).isDefined)
+    // splice a 12-byte LIST chunk between fmt and data
+    val listChunk = "LIST".getBytes("US-ASCII") ++
+      Array[Byte](4, 0, 0, 0) ++ "INFO".getBytes("US-ASCII")
+    val spliced = good.slice(0, 36) ++ listChunk ++ good.drop(36)
+    // fix RIFF size field (bytes 4-7, little-endian)
+    val riffSize = spliced.length - 8
+    (0 until 4).foreach(i => spliced(4 + i) = ((riffSize >> (8 * i)) & 0xFF).toByte)
+    assert(Multimodal.wavDHash(spliced).isEmpty,
+      "non-canonical chunk layout must be rejected, not mis-hashed")
+    // truncated declared data size bounds the hash window: appending
+    // trailing junk after the data chunk must not change the hash
+    val junk = good ++ Array.fill[Byte](64)(0x55)
+    assert(Multimodal.wavDHash(junk) == Multimodal.wavDHash(good),
+      "bytes beyond the declared data chunk must not reach the hash")
+  }
+
+  test("audio signature store rides incrementalSimhash: planted identical clip caught exact+near, perturbed clip caught near-only") {
+    import spark.implicits._
+    import graft.multimodal.Multimodal
+    import graft.operators.Dedup
+    val known = (0L until 40L).map(i =>
+      (i, Multimodal.syntheticWav(i / 4L, 2080)))
+      .toDF("doc_id", "payload")
+    // 100: byte-identical re-ingest of clip 0; 101: level-local edit of
+    // clip 0 (perturb ≠ 0 zeroes one 32-sample region)
+    val batch = Seq(
+      (100L, Multimodal.syntheticWav(0L, 2080)),
+      (101L, Multimodal.syntheticWav(0L, 2080, perturb = 9L)),
+      (102L, Multimodal.syntheticWav(999L, 2080)))
+      .toDF("doc_id", "payload")
+    val out = Dedup.incrementalSimhash(
+      Multimodal.audioDedupState(batch),
+      Multimodal.audioDedupState(known),
+      maxHamming = 5, expectedItems = Some(40L))
+      .collect().map(r => r.getLong(0) ->
+        ((r.getBoolean(1), r.getBoolean(2)))).toMap
+    assert(out(100L) == ((true, true)), s"identical clip: ${out(100L)}")
+    assert(out(101L) == ((false, true)), s"perturbed clip: ${out(101L)}")
+    assert(out(102L) == ((false, false)), s"fresh clip: ${out(102L)}")
+  }
 }
 
-class PiiSpec extends AnyFunSuite {
+class PiiSpec extends SparkSuite {
   import graft.functions.PiiFunctions
-  private lazy val spark = TestSpark.spark
 
   private def scan(texts: String*): Seq[(Int, Int, Int, String)] = {
     import spark.implicits._
@@ -290,9 +256,7 @@ class PiiSpec extends AnyFunSuite {
   }
 }
 
-class RepetitionSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
+class RepetitionSpec extends SparkSuite {
   test("repetition metrics: hand-computed fractions, null guards on degenerate docs") {
     import spark.implicits._
     val docs = Seq(
@@ -324,9 +288,7 @@ class RepetitionSpec extends AnyFunSuite {
   }
 }
 
-class StreamingDedupSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
+class StreamingDedupSpec extends SparkSuite {
   test("streaming dedup state equals the batch dedup table") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_sdedup_").toString
@@ -342,9 +304,7 @@ class StreamingDedupSpec extends AnyFunSuite {
   }
 }
 
-class ChunkingSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
+class ChunkingSpec extends SparkSuite {
   test("chunking: stride grid, short tail, single-chunk and empty docs") {
     import spark.implicits._
     val mk = (n: Int) => (1 to n).map("t" + _).mkString(" ")
@@ -375,9 +335,7 @@ class ChunkingSpec extends AnyFunSuite {
   }
 }
 
-class ChunkingPropertySpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
+class ChunkingPropertySpec extends SparkSuite {
   test("property: chunks tile the token range — full coverage, exact overlap, last ends at n") {
     import spark.implicits._
     val rng = new scala.util.Random(31)

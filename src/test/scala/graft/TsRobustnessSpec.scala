@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Events
 
@@ -12,9 +11,7 @@ import graft.operators.Events
   * dispatches on the ACTUAL read type; this spec pins that all three parquet
   * encodings a writer might emit produce identical epoch-microseconds, so
   * this class of testdata drift can never silently recur. */
-class TsRobustnessSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
-
+class TsRobustnessSpec extends SparkSuite {
   test("tsMicros: identical epoch-micros from INT64-nanos, TIMESTAMP_MICROS-NTZ, TIMESTAMP_MILLIS") {
     import spark.implicits._
     // ms-aligned instants so every encoding represents them exactly
