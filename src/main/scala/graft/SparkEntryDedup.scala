@@ -562,7 +562,7 @@ private[graft] trait SparkEntryDedup { this: SparkEntry.type =>
     // these keys are the same calls as substring_dup / self_repeat; they
     // stay as names the benchmark and the oracle map use. Every
     // sf0.01 doc is one chunk; the >2^20-char path is spec-driven
-    // (DedupSpec).
+    // (Round11Spec).
     "substring_dup_chunked" -> ((s, dir) =>
       Dedup.substringDup(documents(s, dir), "doc_id", "text")
         .orderBy("id_a", "id_b")),

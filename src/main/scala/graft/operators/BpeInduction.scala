@@ -57,7 +57,7 @@ object BpeInduction {
     * adjacent pair counts, greedy left-to-right non-overlapping merge,
     * `(count desc, l asc, r asc)` tie-break under UTF-8 byte order) —
     * parity is property-tested over seeded random corpora ≥200 merges
-    * (BpeInductionSpec). */
+    * (Round11Spec). */
   def bpeMerges(
       df: DataFrame,
       textCol: String,

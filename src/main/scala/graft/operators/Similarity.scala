@@ -395,7 +395,7 @@ object Similarity {
     * rules need the member→centroid cosine, recomputed here against the
     * ASSIGNED centroid alone — one broadcast of the metadata-sized
     * centroid relation, O(N·D) map-only, bit-identical to the in-plan
-    * nearestCentroid value (SimilaritySpec pins equality). */
+    * nearestCentroid value (Round14Spec pins equality). */
   private def assignedWithCos(
       embIn: DataFrame,
       idCol: String,

@@ -43,7 +43,7 @@ import org.apache.spark.sql.types.DoubleType
   *      `Percentile.getPercentile`: `position = p·(n−1)`;
   *      `(higher−position)·lower + (position−lower)·higher`, the same
   *      IEEE operations in the same order — results are bit-identical to
-  *      the built-in aggregate (property-pinned by ExactQuantilesSpec).
+  *      the built-in aggregate (property-pinned by OptimizationR16Spec).
   *
   * Scale note: every stage is bounded by DISTINCT values per range chunk,
   * never by rows or by one column's value set; the only driver state is

@@ -25,21 +25,4 @@ class AuditSpec extends SparkSuite {
       assert(bad.isEmpty, s"$name false rows: ${bad.take(5).mkString("; ")}")
     }
   }
-
-  test("auditTwins is total: every no-oracle query key is pinned by a declared audit that exists and is itself fully oracled") {
-    val qs = SparkEntry.queries.keySet
-    val oracled = SparkEntry.oracleSql.keySet
-    val noOracle = qs.filterNot(oracled).filterNot(_.contains("_audit"))
-    val unmapped = noOracle -- SparkEntry.auditTwins.keySet
-    assert(unmapped.isEmpty,
-      s"no-oracle keys without a declared audit twin: ${unmapped.toSeq.sorted}")
-    SparkEntry.auditTwins.foreach { case (key, twin) =>
-      assert(qs.contains(key), s"auditTwins maps a nonexistent key: $key")
-      assert(!oracled.contains(key),
-        s"auditTwins lists $key, but it HAS a full oracle — stale entry")
-      assert(qs.contains(twin), s"audit twin $twin (for $key) is not declared")
-      assert(oracled.contains(twin),
-        s"audit twin $twin (for $key) has no oracle — an unpinned pin")
-    }
-  }
 }

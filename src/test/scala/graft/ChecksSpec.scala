@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.TestSpark.{guardFires, sf001}
-
 class ChecksSpec extends SparkSuite {
   import graft.profiler.{Checks, Constraint}
 
@@ -30,213 +28,5 @@ class ChecksSpec extends SparkSuite {
     intercept[IllegalArgumentException] {
       Checks.evaluate(spark, metrics, Seq(Constraint("k", "*", "Size", "==", 1.0)))
     }
-  }
-
-  test("histogram drift: PSI near zero for identical snapshots, large for a shift") {
-    import spark.implicits._
-    val base = (1 to 1000).map(i => (i % 100).toDouble).toDF("x")
-    val same = graft.profiler.Checks.histogramDrift(base, base, Seq("x")).head()
-    assert(math.abs(same.getDouble(1)) < 1e-9 && !same.getBoolean(2))
-    // current snapshot shifted into the top of the combined range
-    val shifted = (1 to 1000).map(i => 100.0 + (i % 100)).toDF("x")
-    val drift = graft.profiler.Checks.histogramDrift(base, shifted, Seq("x")).head()
-    assert(drift.getDouble(1) > 0.2 && drift.getBoolean(2), s"psi = ${drift.getDouble(1)}")
-    // decimal-quantized term sum: partitioning-independent
-    val a = graft.profiler.Checks.histogramDrift(
-      base.repartition(13), shifted.repartition(7), Seq("x")).head().getDouble(1)
-    assert(a == drift.getDouble(1))
-  }
-
-  test("constraint suggestion: rules fire from metrics, partial-completeness floor") {
-    import spark.implicits._
-    val df = Seq(
-      (Some(1), Some("a")), (Some(2), Some("b")), (Some(3), None),
-      (Some(4), Some("b")), (None, Some("c"))
-    ).toDF("k", "s")
-    val rows = graft.profiler.Profiler.metrics(
-      df, graft.profiler.ProfilerConfig(),
-      Set("completeness", "distinctness", "minimum"))
-    val out = graft.profiler.Checks.suggestConstraints(
-      graft.profiler.Profiler.metricsDF(spark, rows))
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
-    // k: 4/5 complete -> floored 0.8 threshold; distinct -> unique; min 1 >= 0
-    assert(out(("k", "has_completeness_ge")) == 0.8)
-    assert(out(("k", "is_unique")) == 1.0)
-    assert(out(("k", "non_negative")) == 0.0)
-    assert(!out.contains(("k", "is_complete")))
-    // s: 4/5 complete, 'b' repeats -> no uniqueness suggestion
-    assert(out(("s", "has_completeness_ge")) == 0.8)
-    assert(!out.contains(("s", "is_unique")))
-  }
-
-  test("metric anomaly: z-score vs history, last snapshot is current, flag over threshold") {
-    import spark.implicits._
-    // snapshots 0..3 of a value column; snapshot 3 jumps far outside history
-    val df = (Seq.fill(10)((0L, 10.0)) ++ Seq.fill(10)((1L, 11.0)) ++
-      Seq.fill(10)((2L, 12.0)) ++ Seq.fill(10)((3L, 500.0)))
-      .toDF("snap", "v")
-    val out = graft.profiler.Checks.metricAnomaly(
-      df, col("snap"),
-      Seq(
-        "Sum_v" -> sum(col("v").cast(org.apache.spark.sql.types.DecimalType(38, 6))).cast("double"),
-        "Size" -> count(lit(1))))
-      .collect().map(r => r.getString(0) ->
-        (r.getDouble(1), if (r.isNullAt(4)) null else r.getDouble(4), r.getBoolean(5))).toMap
-    // Size is constant across snapshots: sd = 0 -> null z, not anomalous
-    assert(out("Size")._2 == null && !out("Size")._3)
-    // Sum jumps from {100, 110, 120} to 5000: |z| >> 3 -> anomaly
-    assert(out("Sum_v")._1 == 5000.0)
-    assert(out("Sum_v")._3, s"expected anomaly, z = ${out("Sum_v")._2}")
-  }
-
-  test("key skew: counts, hottest key with min-key tie-break, frequency buckets") {
-    import spark.implicits._
-    val df = (Seq.fill(5)(100L) ++ Seq.fill(5)(7L) ++ Seq(1L, 2L, 3L) ++ Seq.fill(12)(9L))
-      .toDF("k")
-    val r = graft.profiler.Checks.keySkew(df, "k").head()
-    assert(r.getLong(0) == 25L)      // n_rows
-    assert(r.getLong(1) == 6L)       // n_keys
-    assert(r.getString(2) == "9")    // hot_key (string: key-type-independent)
-    assert(r.getLong(3) == 12L)      // hot_freq
-    assert(r.getLong(4) == 3L)       // freq-1 keys
-    assert(r.getLong(5) == 2L)       // 2-9
-    assert(r.getLong(6) == 1L)       // 10-99
-    assert(r.getLong(7) == 0L)       // 100+
-  }
-
-  test("segmentedCompleteness: per-segment nulls surface; null segment is its own group") {
-    import spark.implicits._
-    val df = Seq(
-      (Option("a"), Option(1), Option("x")),
-      (Option("a"), Option(2), Option.empty[String]),
-      (Option("b"), Option.empty[Int], Option("y")),
-      (Option.empty[String], Option(3), Option("z"))
-    ).toDF("seg", "v", "t")
-    val out = graft.profiler.Checks
-      .segmentedCompleteness(df, "seg", Seq("v", "t"))
-      .collect()
-      .map(r => (Option(r.getString(0)), r.getString(1)) ->
-        ((r.getLong(2), r.getLong(3), r.getDouble(4))))
-      .toMap
-    // segment a: 2 rows, v complete, t half-null
-    assert(out((Some("a"), "v")) == ((2L, 0L, 1.0)))
-    assert(out((Some("a"), "t")) == ((2L, 1L, 0.5)))
-    // segment b: v fully null — the breakage whole-table averages hide
-    assert(out((Some("b"), "v")) == ((1L, 1L, 0.0)))
-    // null segment forms its own group
-    assert(out((None, "v")) == ((1L, 0L, 1.0)))
-    assert(out.size == 6)
-  }
-
-  test("ksDrift: identical samples D=0; disjoint D=1; hand-computed shift") {
-    import spark.implicits._
-    val a = Seq(1.0, 2.0, 3.0, 4.0).toDF("v")
-    val same = graft.profiler.Checks.ksDrift(a, a, "v").collect()(0)
-    assert(same.getLong(0) == 4L && same.getDouble(3) == 0.0)
-    val b = Seq(10.0, 11.0).toDF("v")
-    val disj = graft.profiler.Checks.ksDrift(a, b, "v").collect()(0)
-    assert(disj.getDouble(3) == 1.0 && disj.getLong(2) == 6L)
-    // shift by one: a = {1,2,3,4}, c = {2,3,4,5} -> D = 1/4 at v=1 and v=4
-    val c = Seq(2.0, 3.0, 4.0, 5.0).toDF("v")
-    assert(graft.profiler.Checks.ksDrift(a, c, "v").collect()(0).getDouble(3) == 0.25)
-  }
-
-  test("snapshotDiff: all five statuses, null-vs-empty distinct, dup_key guard") {
-    import spark.implicits._
-    val before = Seq(
-      (1L, Option("x"), Option("a")),
-      (2L, Option("y"), Option("b")),
-      (3L, Option("z"), Option.empty[String]),
-      (5L, Option("d"), Option("d")),
-      (5L, Option("d2"), Option("d")),
-      (6L, Option("n"), Option.empty[String])
-    ).toDF("k", "v1", "v2")
-    val after = Seq(
-      (1L, Option("x"), Option("a")),       // unchanged
-      (2L, Option("y"), Option("CHANGED")), // changed
-      (4L, Option("new"), Option("r")),     // added (3 removed)
-      (5L, Option("d"), Option("d")),       // dup_key on the before side
-      (6L, Option("n"), Option(""))         // null -> empty IS a change
-    ).toDF("k", "v1", "v2")
-    val out = graft.profiler.SnapshotDiff
-      .diff(before, after, Seq("k"), Seq("v1", "v2"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out == Map(1L -> "unchanged", 2L -> "changed", 3L -> "removed",
-      4L -> "added", 5L -> "dup_key", 6L -> "changed"))
-  }
-
-  test("patternMatch: anchored vs search semantics, null ratio for all-null column") {
-    import spark.implicits._
-    val df = Seq(
-      (Option("AB-12"), Option.empty[String]),
-      (Option("XY-9"), Option.empty[String]),
-      (Option("bad"), Option.empty[String]),
-      (Option.empty[String], Option.empty[String])
-    ).toDF("code", "empty")
-    val out = graft.profiler.Checks.patternMatch(df, Seq(
-      ("full", "code", "^[A-Z]{2}-[0-9]+$"),
-      ("search", "code", "[0-9]"),
-      ("nullcol", "empty", ".*")))
-      .collect().map(r => r.getString(0) ->
-        ((r.getLong(3), r.getLong(4), Option(r.get(5))))).toMap
-    assert(out("full") == ((3L, 2L, Some(0.666667))))
-    // unanchored: substring search, "bad" has no digit
-    assert(out("search") == ((3L, 2L, Some(0.666667))))
-    assert(out("nullcol") == ((0L, 0L, None)))
-  }
-
-  test("ksDriftApprox: sub-k sketches are exact — D̂ equals the exact D") {
-    import spark.implicits._
-    // 10 values/side, far below k: no compaction, ranks exact.
-    // before 1..10 vs after 6..15: ECDF gap peaks at 5/10 = 0.5
-    val before = (1 to 10).map(_.toDouble).toDF("v")
-    val after = (6 to 15).map(_.toDouble).toDF("v")
-    val r = graft.profiler.Checks.ksDriftApprox(before, after, "v").head()
-    assert(r.getLong(0) == 10L && r.getLong(1) == 10L)
-    assert(r.getDouble(3) == 0.5)
-    val e = graft.profiler.Checks.ksDrift(before, after, "v").head()
-    assert(e.getDouble(3) == 0.5)
-  }
-
-  test("ksDriftApprox: empty side yields null D, zero counts") {
-    import spark.implicits._
-    val before = (1 to 5).map(_.toDouble).toDF("v")
-    val after = Seq.empty[Double].toDF("v")
-    val r = graft.profiler.Checks.ksDriftApprox(before, after, "v").head()
-    assert(r.getLong(0) == 5L && r.getLong(1) == 0L)
-    assert(r.isNullAt(3) && r.isNullAt(4))
-  }
-
-  test("ksDrift: distinct-value window is guarded — oversize input raises, bounded input unchanged") {
-    val a = spark.range(200).select((col("id").cast("double") / 7).as("v"))
-    val b = spark.range(200).select((col("id").cast("double") / 11).as("v"))
-    // ~400 distinct pooled values against a bound of 100: the window
-    // stage itself must raise instead of silently single-tasking a
-    // data-sized value domain (the E109 sketch form is the scale path)
-    assert(guardFires(
-      graft.profiler.Checks.ksDrift(a, b, "v", maxValues = 100).collect()))
-    // same data under the default bound: guard is a value-neutral no-op
-    val r = graft.profiler.Checks.ksDrift(a, a, "v").head()
-    assert(r.getAs[Double]("ks_d") == 0.0)
-    assert(r.getAs[Long]("n_a") == 200L)
-  }
-
-  test("mannWhitneyDrift: hand-computed tie-corrected U and z; identical samples read exactly zero") {
-    val s = spark
-    import s.implicits._
-    // A={1,1}, B={1,2}: tie group t(1)=3 (avg rank 2), rank(2)=4
-    // R_a=4, U=1, mu=2, ties=24, sigma2=(4/12)*(5-24/12)=1 -> z=-1
-    val r = graft.profiler.Checks.mannWhitneyDrift(
-      Seq(1.0, 1.0).toDF("x"), Seq(1.0, 2.0).toDF("x"), "x")
-      .collect().head
-    assert(r.getAs[Long]("n_a") == 2L && r.getAs[Long]("n_b") == 2L)
-    assert(r.getAs[Double]("u") == 1.0, r.toString)
-    assert(r.getAs[Double]("z") == -1.0, r.toString)
-    assert(!r.getAs[Boolean]("drift"))
-    // a sample against itself: every value ties evenly, U = mu -> z = 0
-    val li = sf001("lineitem")
-    val same = graft.profiler.Checks.mannWhitneyDrift(
-      li, li, "l_extendedprice").collect().head
-    assert(same.getAs[Double]("z") == 0.0 && !same.getAs[Boolean]("drift"))
   }
 }

@@ -68,116 +68,4 @@ class ClusteringSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(out == Set((1L, 1L), (2L, 1L), (3L, 1L)))
   }
-
-  test("cluster representative: best quality wins, min id on ties, one keeper per cluster") {
-    import spark.implicits._
-    val clusters = Seq((1L, 1L), (2L, 1L), (3L, 1L), (7L, 7L), (9L, 7L))
-      .toDF("doc_id", "cluster_id")
-    val scores = Seq((1L, 0.5), (2L, 0.9), (3L, 0.9), (7L, 0.1), (9L, 0.1))
-      .toDF("doc_id", "quality")
-    val out = graft.operators.Clustering.bestRepresentative(clusters, scores)
-      .collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap
-    assert(out == Map(1L -> false, 2L -> true, 3L -> false, 7L -> true, 9L -> false))
-  }
-
-  test("dedupYield: size histogram with removal counts over given clusters") {
-    import spark.implicits._
-    val clusters = Seq(
-      (1L, 1L), (2L, 1L), (3L, 1L), // size-3 cluster
-      (4L, 4L), (5L, 4L),           // size-2
-      (6L, 6L), (7L, 6L)            // size-2
-    ).toDF("doc_id", "cluster_id")
-    val corpus = (1L to 20L).toDF("doc_id")
-    val out = Clustering.dedupYield(clusters, corpus)
-      .collect().map(r => r.getAs[Long]("cluster_size") -> r).toMap
-    assert(out(2L).getAs[Long]("n_clusters") == 2L)
-    assert(out(2L).getAs[Long]("n_docs") == 4L)
-    assert(out(2L).getAs[Long]("n_removed") == 2L)
-    assert(out(3L).getAs[Long]("n_removed") == 2L)
-    assert(out(3L).getAs[Long]("n_docs_total") == 20L)
-  }
-
-  test("connected components: driver union-find and alternating-star agree on 25 random graphs") {
-    import spark.implicits._
-    val rng = new scala.util.Random(31)
-    for (_ <- 1 to 25) {
-      val nNodes = 2 + rng.nextInt(40)
-      val nEdges = 1 + rng.nextInt(60)
-      val edges = Seq.fill(nEdges)(
-        (rng.nextInt(nNodes).toLong, rng.nextInt(nNodes).toLong))
-        .filter { case (a, b) => a != b }
-      if (edges.nonEmpty) {
-        val df = edges.toDF("a", "b")
-        def run(threshold: Long) = graft.operators.Clustering
-          .connectedComponents(df, "a", "b", localEdgeThreshold = threshold)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val local = run(1000000L)      // hybrid fast path
-        val dist = run(0L)             // forced alternating-star
-        assert(local == dist, s"paths disagree on $edges")
-        // canonical labels: every component labeled by its min member
-        val byComp = local.groupBy(_._2)
-        for ((comp, members) <- byComp)
-          assert(members.map(_._1).min == comp)
-      }
-    }
-  }
-
-  test("dupPagerank: star center outranks leaves; ranks sum to ~1; isolated docs excluded") {
-    import spark.implicits._
-    import graft.operators.Clustering
-    // three docs sharing 3-gram sets pairwise with the center built by
-    // near-identical texts; doc 99 unrelated (isolated -> excluded)
-    val base = "alpha beta gamma delta epsilon zeta eta theta"
-    val df = Seq(
-      (1L, base), (2L, base + " iota"), (3L, base + " kappa"),
-      (99L, "completely different words nothing shared here at all"))
-      .toDF("doc_id", "text")
-    val out = Clustering.dupPagerank(df, "doc_id", "text")
-      .orderBy("doc_id").collect()
-    assert(out.map(_.getAs[Long]("doc_id")).toSeq == Seq(1L, 2L, 3L))
-    val ranks = out.map(r =>
-      r.getAs[Long]("doc_id") -> r.getAs[Double]("rank")).toMap
-    // 1-2, 1-3, 2-3 all pass Jaccard 0.5 here: complete graph -> equal
-    // ranks; total mass preserved
-    assert(math.abs(ranks.values.sum - 1.0) < 1e-6)
-    assert(out.forall(_.getAs[Long]("degree") == 2L))
-  }
-
-  test("dupPagerank: center of a path graph accumulates rank") {
-    import spark.implicits._
-    import graft.operators.Clustering
-    // b overlaps a AND c; a and c do not overlap each other (path a-b-c)
-    val a = "one two three four five six seven eight"
-    val b = "three four five six seven eight nine ten"
-    val c = "six seven eight nine ten eleven twelve thirteen"
-    val df = Seq((1L, a), (2L, b), (3L, c)).toDF("doc_id", "text")
-    val out = Clustering.dupPagerank(df, "doc_id", "text", threshold = 0.3)
-      .collect().map(r =>
-        r.getAs[Long]("doc_id") -> r.getAs[Double]("rank")).toMap
-    assert(out.size == 3)
-    assert(out(2L) > out(1L) && out(2L) > out(3L),
-      s"center should outrank leaves: $out")
-  }
-
-  test("minhash clusters: identical docs form one min-id-labeled component — agrees with the exact clusters here") {
-    import graft.operators.{Clustering, Dedup}
-    import spark.implicits._
-    val dup = "alpha beta gamma delta epsilon zeta eta theta"
-    val dup2 = "one two three four five six seven eight nine ten"
-    val docs = Seq(
-      (1L, dup), (2L, dup), (5L, dup),
-      (3L, dup2), (4L, dup2),
-      (9L, "a lone document sharing nothing with the others"))
-      .toDF("doc_id", "text")
-    val lsh = Clustering.dedupClusters(
-      Dedup.minhashLsh(docs, "doc_id", "text", n = 3, threshold = 0.5))
-      .orderBy("doc_id").collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id"))
-    assert(lsh.toSeq == Seq(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L, 5L -> 1L))
-    val exact = Clustering.dedupClusters(
-      Dedup.ngramJaccard(docs, "doc_id", "text", n = 3, threshold = 0.5))
-      .orderBy("doc_id").collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id"))
-    assert(lsh.toSeq == exact.toSeq)
-  }
 }

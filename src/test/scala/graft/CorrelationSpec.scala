@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.SortedCdfOps
-import graft.profiler.Correlation
 
 /** `graft.profiler.Correlation`, with the sorted-CDF midrank
   * (`SortedCdfOps`) behind approximate Spearman. */
@@ -50,103 +49,5 @@ class CorrelationSpec extends SparkSuite {
     val many = graft.profiler.Correlation.matrix(df.repartition(17), Seq("a", "b"))
       .head().getDouble(3)
     assert(one == many)
-  }
-
-  test("nullCorrelation: coupled missingness 1, anti-coupled -1, no-null column degenerates") {
-    import spark.implicits._
-    val df = Seq(
-      (Option(1), Option("x"), Option.empty[Int], Option(9)),
-      (Option.empty[Int], Option.empty[String], Option(5), Option(9)),
-      (Option(2), Option("y"), Option.empty[Int], Option(9)),
-      (Option.empty[Int], Option.empty[String], Option(7), Option(9))
-    ).toDF("a", "b", "c", "full")
-    val out = graft.profiler.Correlation
-      .nullCorrelation(df, Seq("a", "b", "c", "full"))
-      .collect().map(r => (r.getString(0), r.getString(1)) -> Option(r.get(3)))
-      .toMap
-    assert(out(("a", "b")) == Some(1.0))   // always missing together
-    assert(out(("a", "c")) == Some(-1.0))  // exactly complementary
-    assert(out(("a", "full")).isEmpty)     // zero variance -> null
-  }
-
-  test("spearman: nonlinear monotone is exactly 1; reversed is -1; ties averaged") {
-    import spark.implicits._
-    // y = x^3: nonlinear but perfectly monotone -> Spearman exactly 1
-    val mono = (1 to 20).map(i => (i.toDouble, math.pow(i, 3))).toDF("x", "y")
-    val r1 = graft.profiler.Correlation.spearman(mono, Seq(("x", "y"))).collect()(0)
-    assert(r1.getLong(2) == 20L && r1.getDouble(3) == 1.0)
-    val anti = (1 to 20).map(i => (i.toDouble, -i.toDouble)).toDF("x", "y")
-    assert(graft.profiler.Correlation.spearman(anti, Seq(("x", "y")))
-      .collect()(0).getDouble(3) == -1.0)
-    // tie handling: x = (1,2,2,3) ranks (1, 2.5, 2.5, 4); with y equal
-    // to x the correlation is still exactly 1
-    val tied = Seq((1.0, 1.0), (2.0, 2.0), (2.0, 2.0), (3.0, 3.0)).toDF("x", "y")
-    assert(graft.profiler.Correlation.spearman(tied, Seq(("x", "y")))
-      .collect()(0).getDouble(3) == 1.0)
-  }
-
-  test("SortedCdfOps.midrank: bounds, interior buckets, tie runs") {
-    val splits = Array(1.0, 2.0, 2.0, 2.0, 3.0) // K = 5 → denominator 12
-    // below all splits: (0 + 0) / 12
-    assert(SortedCdfOps.midrank(0.5, splits) == 0.0)
-    // above all splits: (5 + 5) / 12
-    assert(SortedCdfOps.midrank(9.0, splits) == 10.0 / 12.0)
-    // between 1.0 and the 2.0-run: lower = upper = 1
-    assert(SortedCdfOps.midrank(1.5, splits) == 2.0 / 12.0)
-    // ON the 3-split tie run: lower 1, upper 4 → midpoint of the span
-    assert(SortedCdfOps.midrank(2.0, splits) == 5.0 / 12.0)
-    // exact match of a unique split: lower 0, upper 1
-    assert(SortedCdfOps.midrank(1.0, splits) == 1.0 / 12.0)
-  }
-
-  test("spearmanApprox: monotone ±1, matches exact within bound on ties") {
-    import spark.implicits._
-    // strictly monotone pair (ρ = 1), anti-monotone (ρ = −1), and a
-    // tie-heavy discrete pair compared against the exact twin
-    val rows = (1 to 2000).map { i =>
-      (i.toDouble, math.log(i.toDouble), -i.toDouble,
-        (i % 7).toDouble, ((i * 3) % 5).toDouble)
-    }
-    val df = rows.toDF("x", "lx", "nx", "t7", "t5")
-    val pairs = Seq(("x", "lx"), ("x", "nx"), ("t7", "t5"))
-    val ap = Correlation.spearmanApprox(df, pairs).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r).toMap
-    val ex = Correlation.spearman(df, pairs).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r).toMap
-    assert(math.abs(ap(("x", "lx")).getDouble(3) - 1.0) <= 0.01)
-    assert(math.abs(ap(("x", "nx")).getDouble(3) - (-1.0)) <= 0.01)
-    for (p <- pairs) {
-      assert(ap(p).getLong(2) == ex(p).getLong(2))
-      assert(math.abs(ap(p).getDouble(3) - ex(p).getDouble(3)) <= 0.02)
-    }
-  }
-
-  test("spearmanApprox: null pairs excluded; empty overlap yields null rho") {
-    import spark.implicits._
-    val df = Seq[(Option[Double], Option[Double])](
-      (Some(1.0), None), (None, Some(2.0)), (Some(3.0), None))
-      .toDF("a", "b")
-    val r = Correlation.spearmanApprox(df, Seq(("a", "b"))).head()
-    assert(r.getLong(2) == 0L && r.isNullAt(3))
-  }
-
-  test("spearman: exact mode is WindowGuard-enforced past maxRows; values unchanged below the bound") {
-    import spark.implicits._
-    val df = (1 to 50).map(i => (i.toDouble, i * i.toDouble)).toDF("x", "y")
-    // below the bound: a perfect monotone pair ranks to exactly 1.0
-    val ok = graft.profiler.Correlation
-      .spearman(df, Seq(("x", "y")), maxRows = 1000L).head()
-    assert(ok.getDouble(3) == 1.0)
-    // past the bound: the guard kills the query with the scale-path message
-    val fired = try {
-      graft.profiler.Correlation
-        .spearman(df, Seq(("x", "y")), maxRows = 10L).collect()
-      false
-    } catch {
-      case t: Throwable =>
-        Iterator.iterate(t)(_.getCause).takeWhile(_ != null).exists(e =>
-          Option(e.getMessage).exists(_.contains("metadata-sized")))
-    }
-    assert(fired)
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.TestSpark.sha256hex
 import graft.operators.Dedup
 
 /** `graft.operators.Dedup` (exact, shingle, MinHash, SimHash, winnowing and
@@ -125,1165 +124,5 @@ class DedupSpec extends SparkSuite {
     val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     assert(pairs.exists(p => p._1 == 1L && p._2 == 2L && p._3 == 0))
-  }
-
-  test("winnowing: shared substring of length >= k+w-1 shares a selected fingerprint") {
-    import spark.implicits._
-    val common = "the quick brown fox jumps over it"   // 33 chars >= 8+4-1
-    val df = Seq(
-      (1L, s"prefix one $common suffix alpha"),
-      (2L, s"totally different lead-in $common and tail"),
-      (3L, "no overlap with the others at all here")
-    ).toDF("doc_id", "text")
-    val fp = graft.operators.Dedup.winnowFingerprints(df, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(2))).groupBy(_._1)
-      .view.mapValues(_.map(_._2).toSet).toMap
-    assert((fp(1L) & fp(2L)).nonEmpty, "guarantee violated: no shared fingerprint")
-    // density: ~2/(w+1) of positions, never more than all of them
-    assert(fp(1L).size < 45)
-  }
-
-  test("winnowing enforces the 2^20-char packing cap with a loud error") {
-    import spark.implicits._
-    val df = Seq(
-      (1L, "x" * 100),
-      (2L, "ab" * (1 << 19)) // 2^20 chars: one past the packable maximum
-    ).toDF("doc_id", "text")
-    val ex = intercept[Exception] {
-      graft.operators.Dedup.winnowFingerprints(df, "doc_id", "text").count()
-    }
-    def messages(t: Throwable): List[String] =
-      if (t == null) Nil else Option(t.getMessage).toList ++ messages(t.getCause)
-    assert(messages(ex).exists(_.contains("winnowFingerprints")),
-      s"expected the packing-cap error, got: ${messages(ex).mkString(" | ")}")
-  }
-
-  test("winnowing is a pure function of the text (partitioning-independent)") {
-    import spark.implicits._
-    val df = (1L to 50L).map(i => (i, s"document number $i with some repeated text " * 3))
-      .toDF("doc_id", "text")
-    def run(p: Int) = graft.operators.Dedup.winnowFingerprints(
-      df.repartition(p), "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(run(1) == run(7))
-  }
-
-  test("winnowing: null text flows to the empty-fingerprint branch, not the cap error") {
-    import spark.implicits._
-    val df = Seq(
-      (1L, Some("the quick brown fox jumps over the lazy dog")),
-      (2L, None: Option[String]),
-      (3L, Some("short"))
-    ).toDF("doc_id", "text")
-    val out = Dedup.winnowFingerprints(df, "doc_id", "text")
-      .collect().map(_.getLong(0)).toSet
-    // doc 1 fingerprints; null doc 2 and sub-k doc 3 silently contribute none
-    assert(out == Set(1L))
-  }
-
-  test("winnowNearDup: verbatim-overlap pair found, unrelated pair absent, stop-fingerprints drop") {
-    import spark.implicits._
-    val passage = "a long shared boilerplate passage that both documents quote verbatim in full"
-    val df = Seq(
-      (1L, Some(s"$passage with a tiny suffix one")),
-      (2L, Some(s"$passage with a tiny suffix two")),
-      (3L, Some("completely different content about winnowing local fingerprints")),
-      (4L, None: Option[String])
-    ).toDF("doc_id", "text")
-    val pairs = Dedup.winnowNearDup(df, "doc_id", "text", threshold = 0.3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 2L)), "verbatim-overlap pair must surface")
-    assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L), "unrelated doc pairs nothing")
-    // stop-fingerprint removal: with maxHashFreq=0 every hash is ubiquitous,
-    // no fingerprints survive, no pairs (and no crash)
-    assert(Dedup.winnowNearDup(df, "doc_id", "text",
-      threshold = 0.0, maxHashFreq = Some(0)).count() == 0L)
-    // local guarantee: any >= w+k-1-char verbatim match shares a fingerprint,
-    // so the pair's intersection count is positive even at threshold 0
-    val c = Dedup.winnowNearDup(df, "doc_id", "text", threshold = 0.0)
-      .where(col("id_a") === 1L && col("id_b") === 2L).count()
-    assert(c == 1L)
-  }
-
-  test("spanDedup: corpus-repeated spans stripped, survivors reassembled in order") {
-    import spark.implicits._
-    // span window 2: docs 1 and 2 share span "a b"; "x y" is unique to doc 1
-    val df = Seq(
-      (1L, "a b x y"),
-      (2L, "a b q r"),
-      (3L, "solo words only here")
-    ).toDF("doc_id", "text")
-    val out = graft.operators.SpanDedup
-      .dropHotSpans(df, "doc_id", "text", spanWords = 2, minFreqToDrop = 2)
-      .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2), r.getLong(3)))).toMap
-    assert(out(1L) == (("x y", 2L, 1L)))
-    assert(out(2L) == (("q r", 2L, 1L)))
-    assert(out(3L) == (("solo words only here", 2L, 0L)))
-  }
-
-  test("spanDedup: null text yields empty clean_text and zero counts; odd tail span kept") {
-    import spark.implicits._
-    val df = Seq(
-      (1L, Option("a b c")),   // spans: "a b", "c" (short tail)
-      (2L, Option.empty[String]),
-      (3L, Option("a b"))      // makes "a b" hot at minFreq 2
-    ).toDF("doc_id", "text")
-    val out = graft.operators.SpanDedup
-      .dropHotSpans(df, "doc_id", "text", spanWords = 2, minFreqToDrop = 2)
-      .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2), r.getLong(3)))).toMap
-    assert(out(1L) == (("c", 2L, 1L)))
-    assert(out(2L) == (("", 0L, 0L)))
-    assert(out(3L) == (("", 1L, 1L)))
-  }
-
-  test("spanDedup: broadcast and join reassembly agree on a seeded corpus") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(42)
-    val vocab = Vector("alpha", "beta", "gamma", "delta")
-    val docs = (1L to 60L).map { i =>
-      i -> (1 to (3 + rnd.nextInt(12))).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" ")
-    }.toDF("doc_id", "text")
-    val a = graft.operators.SpanDedup
-      .dropHotSpans(docs, "doc_id", "text", spanWords = 3, minFreqToDrop = 2)
-      .orderBy("doc_id").collect().map(_.toSeq)
-    val b = graft.operators.SpanDedup
-      .dropHotSpansViaJoin(docs, "doc_id", "text", spanWords = 3, minFreqToDrop = 2)
-      .orderBy("doc_id").collect().map(_.toSeq)
-    assert(a.sameElements(b))
-    // with a 4-word vocab and 3-word spans, dedup must actually fire
-    assert(a.exists(r => r(3).asInstanceOf[Long] > 0))
-  }
-
-  test("contaminationRatio: hand case — full, partial, zero overlap; short doc omitted") {
-    import spark.implicits._
-    val train = Seq(
-      (1L, "alpha beta gamma delta"),          // trigrams: abc, bcd
-      (2L, "epsilon zeta eta")                 // one trigram
-    ).toDF("doc_id", "text")
-    val bench = Seq(
-      (10L, "alpha beta gamma"),               // 1 trigram, contaminated
-      (11L, "alpha beta gamma theta iota"),    // 3 trigrams, 1 contaminated
-      (12L, "mu nu xi"),                       // 1 trigram, clean
-      (13L, "too short")                       // < 3 tokens: omitted
-    ).toDF("doc_id", "text")
-    val out = graft.operators.Dedup
-      .contaminationRatio(train, bench, "doc_id", "text", n = 3)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
-    assert(out(10L) == ((1L, 1L, 1.0)))
-    assert(out(11L) == ((3L, 1L, 0.333333)))
-    assert(out(12L) == ((1L, 0L, 0.0)))
-    assert(!out.contains(13L))
-  }
-
-  test("spanDedup: hot-span relation above maxHotSpans fails fast") {
-    import spark.implicits._
-    val df = Seq((1L, "a a"), (2L, "a a"), (3L, "b b"), (4L, "b b"))
-      .toDF("doc_id", "text")
-    val ex = intercept[Exception] {
-      graft.operators.SpanDedup
-        .dropHotSpans(df, "doc_id", "text", spanWords = 2, minFreqToDrop = 2,
-          maxHotSpans = 1)
-        .collect()
-    }
-    assert(ex.getMessage.contains("maxHotSpans"),
-      s"expected the cap guard, got: ${ex.getMessage}")
-  }
-
-  test("ngramContainment: subset doc scores ~1 toward its superset") {
-    import spark.implicits._
-    val core = "alpha beta gamma delta epsilon zeta"
-    val df = Seq(
-      (1L, core),                                  // 4 shingles, all in 2
-      (2L, s"$core eta theta iota kappa"),         // superset of 1
-      (3L, "totally unrelated words only here now")
-    ).toDF("doc_id", "text")
-    val out = graft.operators.Dedup
-      .ngramContainment(df, "doc_id", "text", n = 3, threshold = 0.5)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getAs[Double]("containment"))
-      .toMap
-    assert(out((1L, 2L)) == 1.0) // doc 1 fully contained in doc 2
-    // reverse direction diluted: 4 shared / 8 shingles in doc 2
-    assert(out((2L, 1L)) == 0.5)
-    assert(!out.keys.exists(p => p._1 == 3L || p._2 == 3L))
-  }
-
-  test("ngramNovelty: unique vs shared trigram fractions") {
-    import spark.implicits._
-    val shared = "one two three four"
-    val df = Seq(
-      (1L, shared),                 // 2 shingles, both shared with doc 2
-      (2L, s"$shared five"),        // 3 shingles, 1 unique
-      (3L, "ab")                    // < n tokens: absent
-    ).toDF("doc_id", "text")
-    val out = graft.operators.Dedup.ngramNovelty(df, "doc_id", "text", n = 3)
-      .collect().map(r => r.getLong(0) ->
-        (r.getAs[Long]("n_ngrams"), r.getAs[Long]("n_unique"),
-          r.getAs[Double]("novelty"))).toMap
-    assert(out(1L) == (2L, 0L, 0.0))
-    assert(out(2L) == (3L, 1L, math.round(1.0 / 3.0 * 1e6) / 1e6))
-    assert(!out.contains(3L))
-  }
-
-  test("jaccardHistogram: bands partition the pair relation") {
-    import spark.implicits._
-    val base = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"
-    val df = Seq(
-      (1L, base), (2L, base),                 // J = 1 -> bucket 10
-      (3L, s"$base x1 x2 x3 x4 x5 x6")        // partial overlap with 1, 2
-    ).toDF("doc_id", "text")
-    val out = graft.operators.Dedup
-      .jaccardHistogram(df, "doc_id", "text", n = 3, minJaccard = 0.1)
-      .collect().map(r => r.getAs[Long]("bucket") ->
-        r.getAs[Long]("n_pairs")).toMap
-    assert(out(10L) == 1L)                    // the exact pair
-    assert(out.values.sum == 3L)              // all three pairs binned
-  }
-
-  test("normalizedExact: case/whitespace variants collapse, raw variants counted") {
-    import spark.implicits._
-    val df = Seq(
-      (1L, Some("Hello   World")),
-      (2L, Some("hello world")),      // same after normalization
-      (3L, Some("  hello world  ")),  // same after trim
-      (4L, Some("different text")),
-      (5L, None: Option[String])
-    ).toDF("doc_id", "text")
-    val out = graft.operators.Dedup.normalizedExact(df, "doc_id", "text")
-      .collect().map(r => r.getLong(0) ->
-        (r.getAs[Long]("dup_count"), r.getAs[Long]("n_raw_variants"))).toMap
-    assert(out(1L) == (3L, 3L))  // three raw variants, one normalized
-    assert(out(4L) == (1L, 1L))
-    assert(out(5L) == (1L, 0L))  // null text group counts no raw variants
-  }
-
-  test("dupGraphDegrees: hub degree visible in the histogram") {
-    import spark.implicits._
-    val shared = "w1 w2 w3 w4 w5 w6 w7 w8"
-    // three near-identical docs form a triangle: each node degree 2
-    val df = Seq(
-      (1L, shared), (2L, shared), (3L, shared),
-      (4L, "isolated totally different content here")
-    ).toDF("doc_id", "text")
-    val out = graft.operators.Dedup.dupGraphDegrees(df, "doc_id", "text")
-      .collect().map(r => r.getAs[Long]("degree") ->
-        r.getAs[Long]("n_nodes")).toMap
-    assert(out == Map(2L -> 3L))
-  }
-
-  test("minhashMergeAudit: least()-merged batch signatures equal the whole-set signature") {
-    import spark.implicits._
-    val df = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta"),
-      (2L, "alpha beta gamma something else entirely here now"),
-      (3L, "short doc") // fewer than n tokens in one half is fine
-    ).toDF("doc_id", "text")
-    val out = graft.operators.Dedup.minhashMergeAudit(df, "doc_id", "text")
-      .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
-    assert(out.size == 3 && out.values.forall(identity), out.toString)
-  }
-
-  test("minhashLsh array verify: equals exact jaccard on its pairs") {
-    import spark.implicits._
-    // near-dup pair (1 token changed), exact dup pair, unrelated doc
-    val docs = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog again and again"),
-      (2L, "the quick brown fox jumps over the lazy cat again and again"),
-      (3L, "the quick brown fox jumps over the lazy dog again and again"),
-      (4L, "completely different text about spark query engines at scale")
-    ).toDF("doc_id", "text")
-    val got = graft.operators.Dedup
-      .minhashLsh(docs, "doc_id", "text", n = 3, threshold = 0.3)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val exact = graft.operators.Dedup
-      .ngramJaccard(docs, "doc_id", "text", n = 3, threshold = 0.3)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(got.contains((1L, 3L)) && got((1L, 3L)) == 1.0)
-    // every LSH pair carries the EXACT jaccard of the exact twin
-    for ((k, j) <- got) assert(exact(k) == j)
-  }
-
-  test("winnowNearDup: absolute cap drops corpus-wide boilerplate fingerprints regardless of corpus fraction") {
-    import spark.implicits._
-    // 20 docs sharing one long verbatim boilerplate sentence (every doc —
-    // 100% document frequency) plus per-doc unique text; two docs (0, 1)
-    // additionally share a long unique passage
-    val boiler = "this boilerplate license header is identical everywhere"
-    val shared = "the two documents also share this exact long passage verbatim"
-    val docs = (0 until 20).map { i =>
-      // unique fillers share no 8-char k-gram across docs (each token
-      // embeds the doc id), so docs >= 2 overlap ONLY on the boilerplate
-      val extra = if (i <= 1) shared else s"u$i$i a$i$i b$i$i c$i$i d$i$i e$i$i f$i$i"
-      (i.toLong, s"$boiler $extra")
-    }.toDF("doc_id", "text")
-    // absolute cap 10 < 20 docs: the boilerplate fingerprints are dropped
-    // even though a 50%-relative cap would keep them; docs 0/1 still pair
-    // on the shared passage
-    val pairs = graft.operators.Dedup
-      .winnowNearDup(docs, "doc_id", "text", threshold = 0.3,
-        maxHashFreq = Some(10))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((0L, 1L)))
-    // no pair should exist purely from boilerplate (docs >= 2 share ONLY
-    // the capped boilerplate)
-    assert(pairs.forall { case (a, b) => a <= 1 && b <= 1 })
-  }
-
-  test("winnowNearDup: pre-flight candidate guard fails loudly instead of running the quadratic join") {
-    import spark.implicits._
-    val docs = (0 until 12).map(i =>
-      (i.toLong, "every document carries this same long shared passage of text"))
-      .toDF("doc_id", "text")
-    // all 12 docs share all fingerprints (df=12 <= cap 128): candidates =
-    // nf * 12*11/2, far above a bound of 3
-    val e = intercept[IllegalArgumentException] {
-      graft.operators.Dedup.winnowNearDup(
-        docs, "doc_id", "text", maxCandidatePairs = Some(3L))
-    }
-    assert(e.getMessage.contains("pre-flight"))
-    assert(e.getMessage.contains("maxCandidatePairs"))
-    // the same corpus under the default bound runs fine
-    assert(graft.operators.Dedup.winnowNearDup(docs, "doc_id", "text")
-      .count() == 12L * 11 / 2)
-  }
-
-  test("winnowNearDup prefix filter is lossless: matches brute-force Jaccard over seeded random corpora") {
-    import spark.implicits._
-    val rng = new scala.util.Random(73)
-    // template-heavy corpora (the regime that makes prefixes non-trivial):
-    // docs are built from a small shared phrase pool plus unique tails
-    val pool = Seq.fill(12)(Seq.fill(20)(('a' + rng.nextInt(26)).toChar).mkString)
-    for (round <- 1 to 3) {
-      val docs = (0 until 24).map { i =>
-        val phrases = Seq.fill(2 + rng.nextInt(3))(pool(rng.nextInt(pool.size)))
-        val tail = Seq.fill(10 + rng.nextInt(30))(('a' + rng.nextInt(26)).toChar).mkString
-        (i.toLong, (phrases :+ tail).mkString(" "))
-      }.toDF("doc_id", "text")
-      val got = graft.operators.Dedup
-        .winnowNearDup(docs, "doc_id", "text", threshold = 0.3)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      // brute force over the SAME capped fingerprint sets
-      val fpRows = graft.operators.Dedup
-        .winnowFingerprints(docs, "doc_id", "text")
-        .select(col("id"), col("hash")).distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val dfCount = fpRows.groupBy(_._2).view.mapValues(_.size).toMap
-      val sets = fpRows.filter(p => dfCount(p._2) <= 32)
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      val expect = (for {
-        a <- sets.keys; b <- sets.keys; if a < b
-        c = (sets(a) & sets(b)).size
-        if c > 0
-        j = math.rint(c.toDouble / (sets(a).size + sets(b).size - c) * 1e6) / 1e6
-        if j >= 0.3
-      } yield (a, b) -> j).toMap
-      assert(got == expect, s"round $round: $got vs $expect")
-    }
-  }
-
-  test("WinnowSelect expression: parity with the brute-force selection over random strings") {
-    // independent reference: hash every k-gram, pack, slice windows, min,
-    // distinct — the exact semantics the interpreted pipeline had
-    def brute(s: String, k: Int, w: Int): Set[Long] = {
-      if (s.length < k) return Set.empty
-      val keys = (1 to s.length - k + 1).map { i =>
-        var h = 0L
-        s.substring(i - 1, i - 1 + k).foreach(c => h = (h * 31 + c) % 2147483647L)
-        h * 1048576L + (1048575L - i)
-      }
-      (1 to math.max(keys.length - w + 1, 1))
-        .map(j => keys.slice(j - 1, j - 1 + w).min).toSet
-    }
-    val rng = new scala.util.Random(42)
-    def randStr(n: Int): String =
-      Seq.fill(n)((' ' + rng.nextInt(90)).toChar).mkString
-    for (_ <- 1 to 200) {
-      val s = randStr(rng.nextInt(60))
-      for ((k, w) <- Seq((8, 4), (3, 2), (5, 9), (1, 1))) {
-        val got = graft.functions.WinnowSelect
-          .select(org.apache.spark.unsafe.types.UTF8String.fromString(s), k, w)
-          .toLongArray().toSet
-        assert(got == brute(s, k, w),
-          s"mismatch for '$s' k=$k w=$w: $got vs ${brute(s, k, w)}")
-      }
-    }
-    // oversize document trips the packing-cap check
-    val big = org.apache.spark.unsafe.types.UTF8String
-      .fromString("x" * (1 << 20))
-    val e = intercept[IllegalArgumentException] {
-      graft.functions.WinnowSelect.select(big, 8, 4)
-    }
-    assert(e.getMessage.contains("packing cap"))
-    // null text flows to zero fingerprint rows through the DataFrame path
-    import spark.implicits._
-    val withNull = Seq((1L, "some document text here"), (2L, null))
-      .toDF("doc_id", "text")
-    val rows = graft.operators.Dedup
-      .winnowFingerprints(withNull, "doc_id", "text")
-      .groupBy("id").count().collect().map(r => r.getLong(0) -> r.getLong(1))
-    assert(rows.toMap.keySet == Set(1L))
-  }
-
-  test("substringDup: planted verbatim overlap is recovered with exact offsets and maximal length") {
-    import spark.implicits._
-    val rng = new scala.util.Random(41)
-    def noise(n: Int) = Seq.fill(n)(('a' + rng.nextInt(26)).toChar).mkString
-    val shared = "THE QUICK BROWN FOX JUMPS OVER THE LAZY DOG TWELVE TIMES" // 56 chars
-    val pre0 = noise(37); val pre1 = noise(81)
-    // 0 and 1 share exactly `shared` (the random flanks mismatch at both
-    // edges with probability 1 - 26^-1 per side; the uppercase alphabet is
-    // disjoint from the lowercase noise, so edges CANNOT extend); 2 is pure noise
-    val docs = Seq(
-      (0L, pre0 + shared + noise(40)),
-      (1L, pre1 + shared + noise(25)),
-      (2L, noise(150))).toDF("doc_id", "text")
-    val rows = graft.operators.Dedup
-      .substringDup(docs, "doc_id", "text", minLen = 30)
-      .collect()
-    assert(rows.length == 1)
-    val r = rows.head
-    assert((r.getLong(0), r.getLong(1)) == (0L, 1L))
-    assert(r.getAs[Long]("overlap_len") == shared.length.toLong)
-    assert(r.getAs[Long]("start_a") == pre0.length + 1L) // 1-based
-    assert(r.getAs[Long]("start_b") == pre1.length + 1L)
-  }
-
-  test("substringDup: detection is exhaustive above w+k-1 and the guards fire") {
-    import spark.implicits._
-    val rng = new scala.util.Random(42)
-    def noise(n: Int) = Seq.fill(n)(('a' + rng.nextInt(26)).toChar).mkString
-    // minLen below the winnowing guarantee is refused
-    val tiny = Seq((0L, "x")).toDF("doc_id", "text")
-    val e = intercept[IllegalArgumentException] {
-      graft.operators.Dedup.substringDup(tiny, "doc_id", "text", minLen = 5)
-    }
-    assert(e.getMessage.contains("w+k-1"))
-    // pre-flight guard: a corpus of identical docs under a tiny bound
-    val same = (0 until 10).map(i => (i.toLong, "all ten documents are this same sentence"))
-      .toDF("doc_id", "text")
-    val g = intercept[IllegalArgumentException] {
-      graft.operators.Dedup.substringDup(
-        same, "doc_id", "text", maxCandidatePairs = Some(2L))
-    }
-    assert(g.getMessage.contains("pre-flight"))
-    // exhaustive: EVERY planted overlap of length >= 30 across 6 pairs is
-    // found (winnowing theorem: any >= w+k-1 = 11 char match shares an
-    // anchor), and pure-noise pairs produce nothing
-    val spans = (0 until 6).map(i => noise(30 + i * 7))
-    val docs = spans.zipWithIndex.flatMap { case (s, i) =>
-      Seq((i * 2L, noise(20 + i) + s + noise(30)),
-        (i * 2L + 1, noise(50 - i) + s + noise(15 + i)))
-    }.toDF("doc_id", "text")
-    val got = graft.operators.Dedup
-      .substringDup(docs, "doc_id", "text", minLen = 30)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getAs[Long]("overlap_len")).toMap
-    val expect = spans.zipWithIndex.map { case (s, i) =>
-      (i * 2L, i * 2L + 1) -> s.length.toLong
-    }.toMap
-    assert(got.keySet == expect.keySet)
-    // maximality reports AT LEAST the planted span (a random flank char
-    // can coincidentally extend it — never shrink it)
-    expect.foreach { case (pair, len) => assert(got(pair) >= len) }
-  }
-
-  test("substringDupCoverage: overlapping spans from different partners union without double-counting") {
-    import spark.implicits._
-    val rng = new scala.util.Random(7)
-    def noise(n: Int) = Seq.fill(n)(('a' + rng.nextInt(26)).toChar).mkString
-    def block(n: Int) = Seq.fill(n)(('A' + rng.nextInt(26)).toChar).mkString
-    // A carries S1+S2+S3 contiguously; B shares S1+S2, C shares S2+S3.
-    // Disjoint alphabets (uppercase blocks vs lowercase noise) pin the
-    // extension boundaries exactly.
-    val s1 = block(34); val s2 = block(31); val s3 = block(37)
-    val docs = Seq(
-      (0L, noise(21) + s1 + s2 + s3 + noise(18)), // A
-      (1L, noise(40) + s1 + s2 + noise(33)), // B
-      (2L, noise(11) + s2 + s3 + noise(52))) // C
-      .toDF("doc_id", "text")
-    val cov = graft.operators.Dedup
-      .substringDupCoverage(docs, "doc_id", "text", minLen = 30)
-      .collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toMap
-    val total = (s1 + s2 + s3).length.toLong
-    // A: the two spans overlap on S2 — ONE island covering S1S2S3 exactly
-    assert(cov(0L) == ((1L, total, math.rint(total.toDouble / (21 + total + 18) * 1e6) / 1e6)))
-    assert(cov(1L)._2 == (s1 + s2).length.toLong)
-    assert(cov(2L)._2 == (s2 + s3).length.toLong)
-  }
-
-  test("substringContamination: leaked eval passages surface with both-side offsets; corpus-corpus pairs never do") {
-    import spark.implicits._
-    val rng = new scala.util.Random(11)
-    def noise(n: Int) = Seq.fill(n)(('a' + rng.nextInt(26)).toChar).mkString
-    val leak = "EVAL ANSWER FORTY TWO IS THE LEAKED PASSAGE HERE" // 48 chars
-    val pre = noise(29)
-    // corpus docs 0/1 share a long run with each other — must NOT appear
-    // (cross-table only); corpus doc 2 contains the eval passage
-    val shared = noise(44)
-    val corpus = Seq(
-      (0L, noise(10) + shared + noise(20)),
-      (1L, noise(33) + shared + noise(8)),
-      (2L, pre + leak + noise(31))).toDF("doc_id", "text")
-    val eval = Seq((100L, noise(17) + leak + noise(12))).toDF("doc_id", "text")
-    val rows = graft.operators.Dedup
-      .substringContamination(corpus, eval, "doc_id", "text", minLen = 30)
-      .collect()
-    assert(rows.length == 1)
-    val r = rows.head
-    assert(r.getLong(0) == 2L && r.getLong(1) == 100L)
-    assert(r.getAs[Long]("overlap_len") == leak.length.toLong)
-    assert(r.getAs[Long]("start_corpus") == pre.length + 1L)
-    assert(r.getAs[Long]("start_eval") == 18L)
-  }
-
-  test("selfRepeat: planted internal repeat found exactly; tandem repeats obey the overlap identity") {
-    import spark.implicits._
-    val rng = new scala.util.Random(23)
-    def noise(n: Int) = Seq.fill(n)(('a' + rng.nextInt(26)).toChar).mkString
-    val rpt = Seq.fill(25)(('A' + rng.nextInt(26)).toChar).mkString
-    val n1 = noise(14); val n2 = noise(40)
-    val docs = Seq(
-      (0L, n1 + rpt + n2 + rpt + noise(9)), // the repeat, twice
-      (1L, noise(120)), // no repeat
-      (2L, "AB" * 20)) // tandem: overlapping occurrences ARE allowed
-      .toDF("doc_id", "text")
-    val out = graft.operators.Dedup
-      .selfRepeat(docs, "doc_id", "text", minLen = 20)
-      .collect().map(r => r.getLong(0) ->
-        (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    assert(out.contains(0L) && !out.contains(1L))
-    assert(out(0L) == ((rpt.length.toLong, n1.length + 1L,
-      n1.length + rpt.length + n2.length + 1L)))
-    // tandem "ABAB…": a repeat at offset d has length 40 - d (overlapping
-    // self-alignment), so len + (start_2 - start_1) == 40 exactly
-    val (len2, s1, s2) = out(2L)
-    assert(len2 >= 30 && len2 + (s2 - s1) == 40L)
-  }
-
-  test("CommonExtend kernel: parity with a brute-force maximal extension over seeded random strings") {
-    import org.apache.spark.unsafe.types.UTF8String
-    val rng = new scala.util.Random(97)
-    val k = 4
-    def brute(a: String, i0: Int, b: String, j0: Int): Long = {
-      if (a.substring(i0, i0 + k) != b.substring(j0, j0 + k)) return -1L
-      var l = 0
-      while (i0 - l > 0 && j0 - l > 0 && a(i0 - l - 1) == b(j0 - l - 1)) l += 1
-      var r = k
-      while (i0 + r < a.length && j0 + r < b.length && a(i0 + r) == b(j0 + r)) r += 1
-      ((i0 - l + 1).toLong << 40) | ((j0 - l + 1).toLong << 20) | (l + r).toLong
-    }
-    for (round <- 1 to 300) {
-      // tiny alphabet so anchors match AND extensions terminate early
-      val a = Seq.fill(12 + rng.nextInt(30))(('a' + rng.nextInt(3)).toChar).mkString
-      val b = Seq.fill(12 + rng.nextInt(30))(('a' + rng.nextInt(3)).toChar).mkString
-      val i0 = rng.nextInt(a.length - k + 1)
-      val j0 = rng.nextInt(b.length - k + 1)
-      val got = graft.functions.CommonExtend.extend(
-        UTF8String.fromString(a), i0 + 1L, UTF8String.fromString(b), j0 + 1L, k)
-      val want = brute(a, i0, b, j0)
-      assert(got == want, s"round $round: a=$a i0=$i0 b=$b j0=$j0: $got vs $want")
-    }
-  }
-
-  test("property: CommonExtend ASCII byte fast path matches the UTF-16 reference (300 seeded rounds, mixed alphabets)") {
-    import org.apache.spark.unsafe.types.UTF8String
-    // the pre-r11 reference semantics, verbatim on java Strings
-    def ref(sa: String, sb: String, pa: Long, pb: Long, k: Int): Long = {
-      val i0 = pa.toInt - 1; val j0 = pb.toInt - 1
-      if (i0 < 0 || j0 < 0 || i0 + k > sa.length || j0 + k > sb.length)
-        return -1L
-      var t = 0
-      while (t < k) {
-        if (sa.charAt(i0 + t) != sb.charAt(j0 + t)) return -1L
-        t += 1
-      }
-      var l = 0
-      while (i0 - l > 0 && j0 - l > 0 &&
-        sa.charAt(i0 - l - 1) == sb.charAt(j0 - l - 1)) l += 1
-      var r = k
-      while (i0 + r < sa.length && j0 + r < sb.length &&
-        sa.charAt(i0 + r) == sb.charAt(j0 + r)) r += 1
-      (i0 - l + 1).toLong * (1L << 40) + (j0 - l + 1).toLong * (1L << 20) +
-        (l + r).toLong
-    }
-    val rng = new scala.util.Random(97)
-    val alphabets = Seq("ab", "abcxyz", "abé", "ab日本", "a b\tc")
-    for (round <- 0 until 300) {
-      val alpha = alphabets(round % alphabets.size)
-      def mk(n: Int): String =
-        (0 until n).map(_ => alpha(rng.nextInt(alpha.length))).mkString
-      val sa = mk(5 + rng.nextInt(40))
-      val sb = if (rng.nextBoolean()) sa.drop(rng.nextInt(3)) + mk(5)
-        else mk(5 + rng.nextInt(40))
-      val k = 1 + rng.nextInt(4)
-      val pa = 1L + rng.nextInt(math.max(1, sa.length - k + 1) + 2) // may be out of range
-      val pb = 1L + rng.nextInt(math.max(1, sb.length - k + 1) + 2)
-      val got = graft.functions.CommonExtend.extend(
-        UTF8String.fromString(sa), pa, UTF8String.fromString(sb), pb, k)
-      assert(got == ref(sa, sb, pa, pb, k),
-        s"round $round: alpha='$alpha' sa='$sa' sb='$sb' pa=$pa pb=$pb k=$k")
-    }
-  }
-
-  test("chunked substring family drives a >2^20-char document end-to-end with correct global offsets") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val rng = new scala.util.Random(23)
-    def rand(n: Int): String =
-      (0 until n).map(_ => ('a' + rng.nextInt(26)).toChar).mkString
-    // 90 random UPPERCASE chars: disjoint from the lowercase filler (no
-    // accidental anchors) and internally non-repetitive (no shifted
-    // partial self-alignments muddying the span census)
-    val passage =
-      (0 until 90).map(_ => ('A' + rng.nextInt(26)).toChar).mkString
-    val cap = 1 << 20
-    // digit sentinels at every copy boundary: extension can never cross
-    // them (each digit is unique per side), so spans are EXACTLY the
-    // planted passage — deterministic offsets, no filler-luck extension
-    val prefix = rand(cap + 50000)
-    val mid = rand(2000)
-    val big = prefix + "1" + passage + "2" + mid + "3" + passage + "4" + rand(1000)
-    val s1 = (prefix.length + 2).toLong            // 1-based global starts
-    val s2 = (prefix.length + passage.length + mid.length + 4).toLong
-    val small = rand(300) + "5" + passage + "6" + rand(100)
-    val sSmall = 302L
-    // a doc of exactly 2^20-1 chars is still ONE chunk (the widest text
-    // the position packing admits); the big doc splits
-    val edge = Seq((0L, "x" * (cap - 1)), (1L, big)).toDF("doc_id", "text")
-    val nChunks = Dedup.charChunks(edge, "doc_id", "text", 8)
-      .groupBy("id").count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(nChunks(0L) == 1L && nChunks(1L) == 2L, s"$nChunks")
-    // every member accepts the over-cap doc and reports GLOBAL offsets
-    val pair = Dedup.substringDup(
-      Seq((1L, big), (2L, small)).toDF("doc_id", "text"), "doc_id", "text")
-      .collect()
-    assert(pair.length == 1)
-    val r = pair.head
-    assert(r.getLong(0) == 1L && r.getLong(1) == 2L)
-    assert(r.getAs[Long]("overlap_len") == passage.length.toLong)
-    // two len-90 spans tie; the reported best takes the larger start_a
-    assert(r.getAs[Long]("start_a") == s2,
-      s"start_a=${r.getAs[Long]("start_a")} != $s2")
-    assert(r.getAs[Long]("start_b") == sSmall)
-    assert(r.getAs[Long]("n_spans") == 2L) // passage planted twice in big
-    // contamination, big doc as corpus: the reported span is its later
-    // copy (ties take the larger start_corpus), both copies counted
-    val leak = Dedup.substringContamination(
-      Seq((1L, big)).toDF("doc_id", "text"),
-      Seq((2L, small)).toDF("doc_id", "text"), "doc_id", "text")
-      .collect()
-    assert(leak.length == 1)
-    assert(leak.head.getAs[Long]("overlap_len") == passage.length.toLong)
-    assert(leak.head.getAs[Long]("start_corpus") == s2)
-    assert(leak.head.getAs[Long]("start_eval") == sSmall)
-    assert(leak.head.getAs[Long]("n_spans") == 2L)
-    // intra-doc: the two planted copies inside the big doc
-    val sr = Dedup.selfRepeat(
-      Seq((1L, big)).toDF("doc_id", "text"), "doc_id", "text")
-      .collect()
-    assert(sr.length == 1)
-    assert(sr.head.getAs[Long]("repeat_len") == passage.length.toLong)
-    assert(sr.head.getAs[Long]("start_1") == s1)
-    assert(sr.head.getAs[Long]("start_2") == s2)
-  }
-
-  test("decontamExecute: planted leak is cut from the corpus side only, untouched docs pass through") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val leak = "THE QUICK BROWN FOX JUMPS OVER THE LAZY DOG AGAIN" // 50 chars
-    // maximal extension absorbs the flanking spaces shared by both sides
-    // (" $leak " appears verbatim in corpus AND eval), so the cut span is
-    // 52 chars, not the bare 50-char leak
-    val corpusText = s"corpus prefix text here. $leak and a corpus tail."
-    val cleanExpect = "corpus prefix text here." + "and a corpus tail."
-    val corpus = Seq(
-      (1L, corpusText),
-      (2L, "an entirely unrelated corpus document body with no leak"))
-      .toDF("doc_id", "text")
-    val eval = Seq((101L, s"eval question: $leak end of eval."))
-      .toDF("doc_id", "text")
-    val out = Dedup.decontamExecute(corpus, eval, "doc_id", "text")
-      .orderBy("doc_id").collect()
-    assert(out.length == 2)
-    val r1 = out(0)
-    assert(r1.getAs[Long]("n_cut_spans") == 1L)
-    assert(r1.getAs[Long]("orig_len") == corpusText.length.toLong)
-    assert(r1.getAs[Long]("clean_len") == cleanExpect.length.toLong)
-    val expSha = spark.sql(
-      s"SELECT substring(sha2('${cleanExpect}', 256), 1, 16) s")
-      .head().getString(0)
-    assert(r1.getAs[String]("clean_sha") == expSha)
-    val r2 = out(1)
-    assert(r2.getAs[Long]("n_cut_spans") == 0L)
-    assert(r2.getAs[Long]("clean_len") == r2.getAs[Long]("orig_len"))
-  }
-
-  test("substringDupExecute: keep-first — larger doc id loses the shared run; overlapping cuts merge") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val run = "A SHARED VERBATIM PASSAGE OF SUFFICIENT LENGTH HERE" // 52
-    val a = s"first doc keeps this: $run."
-    val b = s"second doc loses it: $run!"
-    val df = Seq((1L, a), (2L, b), (3L, "no duplicates at all in here"))
-      .toDF("doc_id", "text")
-    val out = Dedup.substringDupExecute(df, "doc_id", "text")
-      .orderBy("doc_id").collect()
-    assert(out.length == 3)
-    // doc 1: the span carrier — untouched
-    assert(out(0).getAs[Long]("n_cut_spans") == 0L)
-    assert(out(0).getAs[Long]("clean_len") == a.length.toLong)
-    // doc 2: the shared run cut (maximal extension may absorb the
-    // surrounding equal chars; the remaining length is orig minus cut)
-    assert(out(1).getAs[Long]("n_cut_spans") == 1L)
-    assert(out(1).getAs[Long]("clean_len") < b.length.toLong - run.length + 8)
-    assert(out(2).getAs[Long]("n_cut_spans") == 0L)
-  }
-
-  test("cutIntervals semantics via decontamExecute: full-document leak yields clean_len 0 and sha of empty string") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val t = "ENTIRELY LEAKED DOCUMENT BODY WITH ENOUGH LENGTH TO QUALIFY"
-    val corpus = Seq((1L, t)).toDF("doc_id", "text")
-    val eval = Seq((101L, t)).toDF("doc_id", "text")
-    val r = Dedup.decontamExecute(corpus, eval, "doc_id", "text").head()
-    assert(r.getAs[Long]("clean_len") == 0L)
-    assert(r.getAs[Long]("n_cut_spans") == 1L)
-    val emptySha = spark.sql(
-      "SELECT substring(sha2('', 256), 1, 16) s").head().getString(0)
-    assert(r.getAs[String]("clean_sha") == emptySha)
-  }
-
-  test("jaccardDedupExecute: larger ids of duplicate pairs drop, cluster minimum survives, distinct docs pass through") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val dup = "alpha beta gamma delta epsilon zeta eta theta"
-    val docs = Seq(
-      (1L, dup), (2L, dup), (3L, dup),
-      (4L, "one two three four five six seven eight nine ten"))
-      .toDF("doc_id", "text")
-    val out = Dedup
-      .jaccardDedupExecute(docs, "doc_id", "text", n = 3, threshold = 0.5)
-      .orderBy("doc_id").collect()
-    assert(out.map(_.getAs[Long]("doc_id")).toSeq == Seq(1L, 4L))
-    assert(out(0).getAs[String]("text_sha") == sha256hex(dup))
-    assert(out(0).getAs[Long]("n_chars") == dup.length.toLong)
-  }
-
-  test("selfRepeatExecute: later occurrence of a repeated run is cut, earliest kept; clean docs untouched") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val p = "the quick brown fox jumps over the lazy dog. "
-    val uniq = "completely unique prose without any internal duplication"
-    val docs = Seq((1L, p + p), (2L, uniq)).toDF("doc_id", "text")
-    val out = Dedup.selfRepeatExecute(docs, "doc_id", "text")
-      .orderBy("doc_id").collect()
-    // doc 1: the single maximal repeat is the whole period at offsets
-    // 1 and |p|+1 -> the later copy [46, 91) is cut, leaving exactly p
-    assert(out(0).getAs[Long]("orig_len") == 2L * p.length)
-    assert(out(0).getAs[Long]("clean_len") == p.length.toLong)
-    assert(out(0).getAs[Long]("n_cut_spans") == 1L)
-    assert(out(0).getAs[String]("clean_sha") ==
-      sha256hex(p).substring(0, 16))
-    // doc 2: no >=20-char repeat -> identity
-    assert(out(1).getAs[Long]("clean_len") == uniq.length.toLong)
-    assert(out(1).getAs[Long]("n_cut_spans") == 0L)
-    assert(out(1).getAs[String]("clean_sha") ==
-      sha256hex(uniq).substring(0, 16))
-    // idempotence on this corpus: a second pass changes nothing
-    val again = Dedup.selfRepeatExecute(
-      Seq((1L, p), (2L, uniq)).toDF("doc_id", "text"), "doc_id", "text")
-      .orderBy("doc_id").collect()
-    assert(again.map(_.getAs[Long]("n_cut_spans")).toSeq == Seq(0L, 0L))
-  }
-
-  test("dedupSurvival: exact pair/removal/survivor counts per threshold, boundary inclusive") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val dup = "p q r s t u"
-    val docs = Seq(
-      (1L, dup), (2L, dup),            // J = 1.0
-      (3L, "a b c d e"), (4L, "a b c x y")) // one shared shingle of 5 -> J = 0.2
-      .toDF("doc_id", "text")
-    val out = Dedup.dedupSurvival(docs, "doc_id", "text")
-      .orderBy("threshold").collect()
-    assert(out.length == 9)
-    val byT = out.map(r => (math.rint(r.getAs[Double]("threshold") * 10).toInt,
-      (r.getAs[Long]("n_pairs"), r.getAs[Long]("n_removed"),
-        r.getAs[Long]("n_survivors")))).toMap
-    // t = 0.1 and 0.2 (inclusive boundary): both pairs fire
-    assert(byT(1) == ((2L, 2L, 2L)) && byT(2) == ((2L, 2L, 2L)))
-    // t = 0.3 .. 0.9: only the identical pair
-    (3 to 9).foreach(t => assert(byT(t) == ((1L, 1L, 3L)), s"t=$t"))
-  }
-
-  test("lshRecallCurve: the J=1 band is deterministically fully caught; bands partition the exact relation") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val dup = "alpha beta gamma delta epsilon zeta eta theta"
-    val docs = Seq(
-      (1L, dup), (2L, dup),
-      (3L, "one two three four five six seven eight"))
-      .toDF("doc_id", "text")
-    val out = Dedup.lshRecallCurve(docs, "doc_id", "text").collect()
-    // the only exact pair at J >= 0.5 is the identical one -> band 10,
-    // caught with certainty (J=1 => identical signatures)
-    assert(out.length == 1)
-    assert(out(0).getAs[Long]("band") == 10L &&
-      out(0).getAs[Long]("n_exact") == 1L &&
-      out(0).getAs[Long]("n_caught") == 1L &&
-      out(0).getAs[Double]("recall") == 1.0)
-  }
-
-  test("minhashDedupExecute: identical docs collapse to the minimum id — agrees with the exact executor here") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val dup = "alpha beta gamma delta epsilon zeta eta theta"
-    val docs = Seq(
-      (1L, dup), (2L, dup), (3L, dup),
-      (4L, "one two three four five six seven eight nine ten"))
-      .toDF("doc_id", "text")
-    val out = Dedup.minhashDedupExecute(docs, "doc_id", "text")
-      .orderBy("doc_id").collect()
-    // J=1 pairs have identical signatures -> identical band hashes ->
-    // deterministically caught; on this corpus LSH and exact agree
-    assert(out.map(_.getAs[Long]("doc_id")).toSeq == Seq(1L, 4L))
-    val exact = Dedup.jaccardDedupExecute(docs, "doc_id", "text")
-      .orderBy("doc_id").collect()
-    assert(out.map(_.getAs[Long]("doc_id")).toSeq ==
-      exact.map(_.getAs[Long]("doc_id")).toSeq)
-    assert(out(0).getAs[String]("text_sha") == sha256hex(dup))
-  }
-
-  test("dedupSurvival: band rollup agrees with a brute-force per-threshold replay") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val dup = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val near = "alpha beta gamma delta epsilon zeta eta theta iota KAPPA!"
-    val docs = Seq(
-      (1L, dup), (2L, dup), (3L, near),
-      (4L, "one two three four five six seven"),
-      (5L, "one two three four five six seven"),
-      (6L, "totally unrelated content over here"))
-      .toDF("doc_id", "text")
-    val out = Dedup.dedupSurvival(docs, "doc_id", "text")
-      .orderBy("threshold").collect()
-    assert(out.length == 9)
-    val pairs = Dedup.ngramJaccard(docs, "doc_id", "text", n = 3,
-      threshold = 0.1).collect()
-    for (r <- out) {
-      val t = r.getAs[Double]("threshold")
-      val hit = pairs.filter(_.getAs[Double]("jaccard") >= t)
-      assert(r.getAs[Long]("n_pairs") == hit.length.toLong,
-        s"n_pairs at t=$t")
-      assert(r.getAs[Long]("n_removed") ==
-        hit.map(_.getAs[Long]("id_b")).distinct.length.toLong,
-        s"n_removed at t=$t")
-      assert(r.getAs[Long]("n_survivors") ==
-        6L - hit.map(_.getAs[Long]("id_b")).distinct.length)
-    }
-    // monotone: pair and removal counts never increase with t
-    val np = out.map(_.getAs[Long]("n_pairs"))
-    assert(np.zip(np.tail).forall { case (a, b) => a >= b })
-  }
-
-  test("incrementalLsh: exact copy flagged by both stages at est 1.0; near variant by the near stage; novel and short docs pass") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
-    val b = "one two three four five six seven eight nine ten eleven twelve"
-    val state = Dedup.dedupState(
-      Seq((1L, a), (2L, b)).toDF("doc_id", "text"), "doc_id", "text")
-      .localCheckpoint(true)
-    val batch = Seq(
-      (10L, a),                                          // exact copy of 1
-      (11L, b + " thirteen"),                            // near variant of 2
-      (12L, "totally novel content nothing shared here at all with anyone"),
-      (13L, "tiny doc"))                                 // < 3 tokens: no signature
-      .toDF("doc_id", "text")
-    val out = Dedup.incrementalLsh(batch, state, "doc_id", "text",
-      threshold = 0.5).orderBy("id").collect()
-    assert(out.map(_.getAs[Long]("id")).toSeq == Seq(10L, 11L, 12L, 13L))
-    val byId = out.map(r => r.getAs[Long]("id") -> r).toMap
-    assert(byId(10L).getAs[Boolean]("dup_exact"))
-    assert(byId(10L).getAs[Boolean]("near_dup"))
-    assert(byId(10L).getAs[Long]("match_id") == 1L)
-    assert(byId(10L).getAs[Double]("est_jaccard") == 1.0)
-    assert(!byId(11L).getAs[Boolean]("dup_exact"))
-    assert(byId(11L).getAs[Boolean]("near_dup"))
-    assert(byId(11L).getAs[Long]("match_id") == 2L)
-    assert(byId(11L).getAs[Double]("est_jaccard") >= 0.5)
-    assert(!byId(12L).getAs[Boolean]("dup_exact") &&
-      !byId(12L).getAs[Boolean]("near_dup"))
-    assert(!byId(13L).getAs[Boolean]("dup_exact") &&
-      !byId(13L).getAs[Boolean]("near_dup"))
-    // the state relation is payload-free by construction — the executor
-    // cannot rescan earlier batches even by accident
-    assert(!state.columns.contains("text"))
-  }
-
-  test("crossDedupMatrix: shared distinct contents per source pair with content-set jaccard") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val docs = Seq(
-      (1L, "shared one", "a"), (2L, "shared two", "a"), (3L, "only a", "a"),
-      (4L, "shared one", "b"), (5L, "shared two", "b"),
-      (6L, "shared one", "c"), (7L, "only c", "c"),
-      (8L, "shared one", "a")) // within-source dup: distinct (h, g) collapses it
-      .toDF("doc_id", "text", "source")
-    val out = Dedup.crossDedupMatrix(docs, "text", "source")
-      .orderBy("source_a", "source_b").collect()
-    val m = out.map(r => ((r.getAs[String]("source_a"), r.getAs[String]("source_b")),
-      (r.getAs[Long]("n_a"), r.getAs[Long]("n_b"), r.getAs[Long]("n_shared")))).toMap
-    assert(m(("a", "b")) == ((3L, 2L, 2L)))
-    assert(m(("a", "c")) == ((3L, 2L, 1L)))
-    assert(m(("b", "c")) == ((2L, 2L, 1L)))
-    val ab = out.find(r => r.getAs[String]("source_a") == "a" &&
-      r.getAs[String]("source_b") == "b").get
-    assert(ab.getAs[Double]("content_jaccard") ==
-      BigDecimal(2.0 / 3.0).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-  }
-
-  test("minhashCalibration: identical docs land in band 10 with zero error; rollup preserves pair mass") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val dup = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val docs = Seq(
-      (1L, dup), (2L, dup),
-      (3L, "one two three four five six seven eight nine"),
-      (4L, "one two three four five six seven eight TEN"))
-      .toDF("doc_id", "text")
-    val out = Dedup.minhashCalibration(docs, "doc_id", "text")
-      .orderBy("est_band").collect()
-    val top = out.find(_.getAs[Long]("est_band") == 10L).get
-    assert(top.getAs[Double]("mean_est") == 1.0)
-    assert(top.getAs[Double]("mean_exact") == 1.0)
-    assert(top.getAs[Double]("max_abs_err") == 0.0)
-    val mass = out.map(_.getAs[Long]("n_pairs")).sum
-    val pairs = Dedup.calibrationPairs(
-      docs, "doc_id", "text", 3, 32, 8, Some(10000)).count()
-    assert(mass == pairs)
-  }
-
-  test("dupPairExplain: evidence string holds the smallest shared shingles; dedupRateByBatch counts first-occurrence-wins dups") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val dup = "alpha beta gamma delta epsilon"
-    val docs = Seq((1L, dup), (2L, dup), (3L, "zz yy xx ww vv"))
-      .toDF("doc_id", "text")
-    val ex = Dedup.dupPairExplain(docs, "doc_id", "text").collect()
-    assert(ex.length == 1)
-    assert(ex(0).getAs[Long]("n_shared") == 3L)
-    assert(ex(0).getAs[String]("shared_sample") ==
-      "alpha beta gamma|beta gamma delta|gamma delta epsilon")
-    // rate by batch: batch 0 holds the original + one dup; batch 1 is
-    // one cross-batch dup + one novel doc
-    val staged = Seq(
-      (1L, dup, 0L), (2L, dup, 0L),
-      (3L, dup, 1L), (4L, "completely new", 1L))
-      .toDF("doc_id", "text", "b")
-    val rate = Dedup.dedupRateByBatch(staged, "doc_id", "text", "b")
-      .orderBy("batch").collect()
-    assert(rate.map(r => (r.getAs[Long]("batch"), r.getAs[Long]("n_dups"))).toSeq ==
-      Seq((0L, 1L), (1L, 1L)))
-    assert(rate(0).getAs[Double]("dup_rate") == 0.5)
-  }
-
-  test("compactState: min-id representative per content, copy mass preserved, detection flags invariant") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val b = "one two three four five six seven eight nine ten"
-    val store = Dedup.dedupState(
-      Seq((1L, a), (2L, b), (7L, a), (9L, a)).toDF("doc_id", "text"),
-      "doc_id", "text").localCheckpoint(true)
-    val compact = Dedup.compactState(store).orderBy("id").collect()
-    assert(compact.map(r => (r.getAs[Long]("id"), r.getAs[Long]("n_copies"))).toSeq ==
-      Seq((1L, 3L), (2L, 1L)))
-    val batch = Seq((20L, a), (21L, "novel text here nothing shared at all"))
-      .toDF("doc_id", "text")
-    val full = Dedup.incrementalLsh(batch, store, "doc_id", "text")
-      .select("id", "dup_exact", "near_dup")
-    val comp = Dedup.incrementalLsh(
-      batch, Dedup.compactState(store).drop("n_copies"), "doc_id", "text")
-      .select("id", "dup_exact", "near_dup")
-    assert(full.exceptAll(comp).count() + comp.exceptAll(full).count() == 0L)
-  }
-
-  test("incrementalLsh with expectedItems runs no store-sized count at plan construction (the batch checkpoint is the only job)") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val docs = (0L until 300L).map(i =>
-      (i, s"tok${i % 40} alpha beta gamma delta epsilon tok${i % 7}"))
-      .toDF("doc_id", "text")
-    val state = Dedup.dedupState(docs.where(col("doc_id") < 200), "doc_id", "text")
-      .localCheckpoint(true)
-    val sc = spark.sparkContext
-    // AQE splits even the single batch-checkpoint action into several
-    // jobs, so the pin is DIFFERENTIAL: the counted fallback must cost
-    // strictly more construction-time jobs than the metadata-sized path
-    // (its extra jobs being exactly the store-sized distinct().count()).
-    sc.setJobGroup("r13-lazy-meta", "incrementalLsh with expectedItems", false)
-    val out = Dedup.incrementalLsh(
-      docs.where(col("doc_id") >= 200), state, "doc_id", "text",
-      expectedItems = Some(200L))
-    val metaJobs = sc.statusTracker.getJobIdsForGroup("r13-lazy-meta").length
-    sc.setJobGroup("r13-lazy-counted", "incrementalLsh counted fallback", false)
-    val counted = Dedup.incrementalLsh(
-      docs.where(col("doc_id") >= 200), state, "doc_id", "text")
-    val countedJobs = sc.statusTracker.getJobIdsForGroup("r13-lazy-counted").length
-    sc.clearJobGroup()
-    assert(countedJobs > metaJobs,
-      s"expectedItems did not remove the store count: $metaJobs vs $countedJobs")
-    // and the verdicts are identical to the counted path
-    assert(out.exceptAll(counted).count() + counted.exceptAll(out).count() == 0L)
-  }
-
-  test("StateStore: write/append maintain the row-count sidecar; compact preserves detection and refreshes it") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val docs = (0L until 120L).map(i =>
-      (i, s"alpha beta gamma delta tok${i % 10} epsilon zeta"))
-      .toDF("doc_id", "text")
-    val st = Dedup.dedupState(docs, "doc_id", "text").localCheckpoint(true)
-    val path = s"/tmp/graft_r13_store/p${ProcessHandle.current().pid()}"
-    val n1 = Dedup.StateStore.write(st.where(col("id") < 60), path)
-    assert(n1 == 60L && Dedup.StateStore.rows(spark, path).contains(60L))
-    val n2 = Dedup.StateStore.append(st.where(col("id") >= 60), path)
-    assert(n2 == 120L && Dedup.StateStore.rows(spark, path).contains(120L))
-    val readBack = Dedup.StateStore.read(spark, path)
-    assert(readBack.count() == 120L && !readBack.columns.contains("text"))
-    // compaction: docs with i%10 equal share identical text → 10
-    // distinct hashes survive, detection verdicts unchanged
-    val batch = (200L until 210L).map(i =>
-      (i, s"alpha beta gamma delta tok${i - 200} epsilon zeta"))
-      .toDF("doc_id", "text")
-    val beforeCompact = Dedup.incrementalLsh(
-      batch, readBack, "doc_id", "text",
-      expectedItems = Dedup.StateStore.rows(spark, path))
-      .localCheckpoint(true)
-    val nc = Dedup.StateStore.compact(spark, path)
-    assert(nc == 10L && Dedup.StateStore.rows(spark, path).contains(10L))
-    val afterCompact = Dedup.incrementalLsh(
-      batch, Dedup.StateStore.read(spark, path), "doc_id", "text",
-      expectedItems = Dedup.StateStore.rows(spark, path))
-    assert(beforeCompact.exceptAll(afterCompact).count() +
-      afterCompact.exceptAll(beforeCompact).count() == 0L)
-  }
-
-  test("StateStore.compact survives a stale __old leftover and keeps semantics") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_spec")
-    val path = s"$dir/store"
-    val docs = (1L to 40L).map(i =>
-      (i, s"content ${i % 10} shared tail of words")).toDF("id", "text")
-    val state = Dedup.dedupState(docs, "id", "text")
-    Dedup.StateStore.write(state, path)
-    // plant a stale __old (prior crash leftover) with DIFFERENT content —
-    // compact must clear it, not resurrect it
-    val stale = Dedup.dedupState(
-      Seq((999L, "stale")).toDF("id", "text"), "id", "text")
-    stale.write.parquet(s"${path}__old")
-    val before = Dedup.StateStore.rows(spark, path)
-    val n = Dedup.StateStore.compact(spark, path)
-    assert(n > 0 && Dedup.StateStore.rows(spark, path).contains(n))
-    // swap completed: no temp dirs remain, store readable, count sane
-    assert(!new java.io.File(s"${path}__old").exists())
-    assert(!new java.io.File(s"${path}__compacting").exists())
-    val ids = Dedup.StateStore.read(spark, path)
-      .select("id").as[Long].collect().toSet
-    assert(!ids.contains(999L), "stale __old content resurrected")
-    assert(before.exists(_ >= n), "compaction must not grow the store")
-  }
-
-  test("pairConfusion: orientation + duplicates collapse; hand-computed P/R/F1; empty-side NULLs") {
-    val s = spark
-    import s.implicits._
-    val pred = Seq((1L, 2L), (2L, 1L), (3L, 4L), (5L, 6L))
-      .toDF("id_a", "id_b")
-    val truth = Seq((2L, 1L), (3L, 4L), (7L, 8L)).toDF("id_a", "id_b")
-    val r = graft.operators.PairEval.pairConfusion(pred, truth)
-      .collect().head
-    assert(r.getAs[Long]("tp") == 2 && r.getAs[Long]("fp") == 1 &&
-      r.getAs[Long]("fn") == 1)
-    assert(r.getAs[Long]("n_truth") == 3 && r.getAs[Long]("n_pred") == 3)
-    assert(r.getAs[Double]("precision") == 0.666667 &&
-      r.getAs[Double]("recall") == 0.666667 &&
-      r.getAs[Double]("f1") == 0.666667)
-    val empty = graft.operators.PairEval.pairConfusion(
-      pred.where(lit(false)), truth).collect().head
-    assert(empty.getAs[Long]("fn") == 3 && empty.isNullAt(
-      empty.fieldIndex("precision")) && empty.getAs[Double]("recall") == 0.0)
-  }
-
-  private val texts = Seq(
-    "the quick brown fox jumps over the lazy dog",
-    "the quick brown fox jumps over the lazy dog the quick brown fox",
-    "a b", // fewer than 3 tokens -> null signature
-    "", // empty -> no tokens
-    "one two three", // exactly one shingle
-    "Vérité café naïve — unicode bytes exercise the hash",
-    "dup dup dup dup dup") // heavy duplicate shingles
-
-  test("MinhashSigs ≡ per-component array_min(transform(xxhash64)) on the same arrays") {
-    graft.functions.MinhashSigs.register(spark)
-    val k = 8
-    val df = texts.toDF("text")
-      .select(array_distinct(when(
-        size(split(col("text"), "\\s+")) >= 2,
-        transform(
-          sequence(lit(0), size(split(col("text"), "\\s+")) - 2),
-          i => array_join(slice(split(col("text"), "\\s+"), i + lit(1), lit(2)), " ")))
-        .otherwise(array())).as("sh"))
-      .localCheckpoint(true)
-    val oldCols = (0 until k).map(i =>
-      when(size(col("sh")) > 0,
-        array_min(transform(col("sh"), s => xxhash64(lit(i), s)))).as(s"o$i"))
-    val newCols = (0 until k).map(i =>
-      element_at(call_function("minhash_sigs", col("sh"), lit(k)), i + 1)
-        .as(s"n$i"))
-    val rows = df.select(oldCols ++ newCols: _*).collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      (0 until k).foreach { i =>
-        assert(r.isNullAt(i) == r.isNullAt(k + i), s"null mismatch at h$i: $r")
-        if (!r.isNullAt(i))
-          assert(r.getLong(i) == r.getLong(k + i), s"value mismatch at h$i: $r")
-      }
-    }
-  }
-
-  test("MinhashSigsTokens ≡ the full r15 shingle+signature chain (incl. <n tokens -> NULL)") {
-    graft.functions.MinhashSigs.register(spark)
-    val (n, k) = (3, 8)
-    val df = texts.toDF("text")
-      .select(graft.functions.TextFunctions.wsTokens(lower(col("text")))
-        .as("toks"))
-      .localCheckpoint(true)
-    val grams = when(
-      size(col("toks")) >= n,
-      transform(
-        sequence(lit(0), size(col("toks")) - n),
-        i => array_join(slice(col("toks"), i + lit(1), lit(n)), " "))
-    ).otherwise(array())
-    val oldCols = (0 until k).map(i =>
-      when(size(array_distinct(grams)) > 0,
-        array_min(transform(array_distinct(grams), s => xxhash64(lit(i), s))))
-        .as(s"o$i"))
-    val newCols = (0 until k).map(i =>
-      element_at(
-        call_function("minhash_sigs_tokens", col("toks"), lit(n), lit(k)),
-        i + 1).as(s"n$i"))
-    val rows = df.select(oldCols ++ newCols: _*).collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      (0 until k).foreach { i =>
-        assert(r.isNullAt(i) == r.isNullAt(k + i), s"null mismatch at h$i: $r")
-        if (!r.isNullAt(i))
-          assert(r.getLong(i) == r.getLong(k + i), s"value mismatch at h$i: $r")
-      }
-    }
   }
 }

@@ -25,43 +25,4 @@ class EntrySpec extends SparkSuite {
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
-
-  test("profile_all_tables: every catalog table contributes Size + Completeness") {
-    val out = SparkEntry.queries("profile_all_tables")(spark, sf001Dir)
-      .collect()
-    val tables = out.map(_.getString(0)).toSet
-    assert(tables == Set(
-      "customer", "documents", "embeddings", "events", "lineitem",
-      "nation", "orders", "part", "region", "supplier"))
-    // one Size row per table; Completeness only for Text/Numeric columns
-    // (embeddings' float array and the ms-timestamp columns are skipped)
-    val sizes = out.filter(_.getString(3) == "Size")
-    assert(sizes.length == 10 && sizes.forall(_.getDouble(4) > 0))
-    val perTableCols = out.filter(_.getString(3) == "Completeness")
-      .groupBy(_.getString(0)).view.mapValues(_.length).toMap
-    assert(perTableCols("lineitem") == 10) // 8 numeric + 2 text, shipdate skipped
-    assert(perTableCols("embeddings") == 2) // vec_id + label, array skipped
-    assert(perTableCols("events") == 5) // TIMESTAMP_NTZ ts is class-Skipped
-  }
-
-  test("corpus_card: the one-row summary matches hand-computed facts on a tiny corpus") {
-    val dir = sf001Dir
-    val card = SparkEntry.queries("corpus_card")(spark, dir).head()
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    assert(card.getAs[Long]("n_docs") == docs.count())
-    assert(card.getAs[Long]("n_langs") ==
-      docs.select("lang").distinct().count())
-    // declared-language mode matches a direct rollup
-    val top = docs.groupBy("lang").count()
-      .orderBy(col("count").desc, col("lang").asc).head()
-    assert(card.getAs[String]("top_lang") == top.getString(0))
-    assert(card.getAs[Double]("top_lang_share") ==
-      math.rint(top.getLong(1).toDouble / docs.count() * 1e6) / 1e6)
-    // share/dup-rate/quality are 6-dp doubles in [0, 1]
-    for (c <- Seq("top_lang_share", "exact_dup_rate", "mean_quality")) {
-      val v = card.getAs[Double](c)
-      assert(v >= 0.0 && v <= 1.0, s"$c = $v")
-    }
-    assert(card.getAs[Double]("p50_tokens") > 0.0)
-  }
 }

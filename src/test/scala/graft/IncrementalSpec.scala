@@ -97,31 +97,4 @@ class IncrementalSpec extends SparkSuite {
       moments.map("nan" -> _) ++ moments.map("huge" -> _) +
       ("big" -> "StandardDeviation") + ("k" -> "StandardDeviation"))
   }
-
-  test("segmented incremental: split+merge equals one-shot; null segment kept") {
-    import spark.implicits._
-    val df = Seq(
-      (Option("a"), Option(1.0)), (Option("a"), Option(3.0)),
-      (Option("b"), Option(10.0)), (Option.empty[String], Option(7.0)),
-      (Option("a"), Option.empty[Double])
-    ).toDF("seg", "x")
-    val p = graft.profiler.IncrementalProfiler
-    val oneShot = p.metricsBy(p.snapshotBy(df, "seg"))
-    val merged = p.metricsBy(p.mergeBy(Seq(
-      p.snapshotBy(df.limit(2), "seg"),
-      p.snapshotBy(df.except(df.limit(2)), "seg"))))
-    def exact(m: org.apache.spark.sql.DataFrame) = m
-      .where(col("name").isin("Completeness", "Mean", "Sum", "Minimum",
-        "Maximum", "Size"))
-      .collect()
-      .map(r => (Option(r.getString(0)), r.getString(1), r.getString(2)) ->
-        r.getDouble(3)).toMap
-    val a = exact(oneShot)
-    assert(a((Some("a"), "x", "Mean")) == 2.0)
-    assert(a((Some("a"), "x", "Completeness")) == 2.0 / 3)
-    assert(a((None, "x", "Sum")) == 7.0)
-    assert(a((Some("b"), "*", "Size")) == 1.0)
-    // exact metrics identical under split+merge (modulo row order)
-    assert(exact(merged) == a)
-  }
 }

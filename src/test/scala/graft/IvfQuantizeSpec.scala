@@ -59,63 +59,4 @@ class IvfQuantizeSpec extends SparkSuite {
     val r2 = out(1)
     assert(r2.isNullAt(2) && r2.isNullAt(6))
   }
-
-  test("randomProject: 16 deterministic coordinates per vector, exactly linear") {
-    import spark.implicits._
-    import graft.operators.Quantize
-    val v = (0 until 64).map(i => (i % 7 - 3).toFloat)
-    val df = Seq((1L, v), (2L, v.map(x => x * 2))).toDF("id", "vec")
-    val p = Quantize.randomProject(df, "id", "vec", outDims = 16)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(p.size == 32)
-    for (j <- 0 until 16) {
-      // doubling the vector doubles every coordinate (6-dp exact: inputs
-      // are small integers, folds are exact in double)
-      assert(math.abs(p((2L, j.toLong)) - 2.0 * p((1L, j.toLong))) < 1e-9,
-        s"dim $j not linear")
-    }
-    // determinism across invocations
-    val q = Quantize.randomProject(df, "id", "vec", outDims = 16)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(p == q)
-  }
-
-  test("productQuantize: centroid rows encode to themselves with zero distortion; others pick the nearest sub-codebook entry") {
-    import spark.implicits._
-    import graft.operators.Quantize
-    // two centroids (ids 0, 83): e0 = all 1.0, e83 = all -1.0; a probe
-    // at +0.9 must take centroid 0 in every subspace
-    val vecs = Seq(
-      (0L, Seq.fill(64)(1.0f)), (83L, Seq.fill(64)(-1.0f)),
-      (5L, Seq.fill(64)(0.9f)), (7L, Seq.fill(64)(-0.8f)))
-      .toDF("vec_id", "embedding")
-    val out = Quantize.productQuantize(
-      vecs, "vec_id", "embedding", col("vec_id") % 83 === 0)
-      .orderBy("vec_id").collect()
-    val byId = out.map(r => r.getAs[Long]("vec_id") ->
-      (r.getAs[String]("code"), r.getAs[Double]("distortion"))).toMap
-    assert(byId(0L) == (Seq.fill(8)("0").mkString("-"), 0.0))
-    assert(byId(83L) == (Seq.fill(8)("83").mkString("-"), 0.0))
-    assert(byId(5L)._1 == Seq.fill(8)("0").mkString("-"))
-    // 8 dims/subspace * 0.1^2 = 0.08 per subspace, 0.64 total
-    assert(math.abs(byId(5L)._2 - 0.64) < 1e-6)
-    assert(byId(7L)._1 == Seq.fill(8)("83").mkString("-"))
-  }
-
-  test("productQuantize: non-divisible and sub-m dims fail loudly instead of dropping trailing dims") {
-    import spark.implicits._
-    import graft.operators.Quantize
-    val bad = Seq((1L, Array(1.0f, 2.0f, 3.0f)), (2L, Array(4.0f, 5.0f, 6.0f)))
-      .toDF("vec_id", "embedding")
-    val e1 = intercept[IllegalArgumentException] {
-      Quantize.productQuantize(bad, "vec_id", "embedding",
-        col("vec_id") === 1L, m = 2)
-    }
-    assert(e1.getMessage.contains("not divisible"))
-    val e2 = intercept[IllegalArgumentException] {
-      Quantize.productQuantize(bad, "vec_id", "embedding",
-        col("vec_id") === 1L, m = 8)
-    }
-    assert(e2.getMessage.contains("not divisible"))
-  }
 }

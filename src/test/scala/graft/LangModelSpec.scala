@@ -31,111 +31,4 @@ class LangModelSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toMap
     assert(a == b)
   }
-
-  test("bigramScore: hand-computed Laplace model; sub-2-token docs omitted") {
-    import spark.implicits._
-    val df = Seq((1L, "a b a b"), (2L, "b a"), (3L, "x")).toDF("doc_id", "text")
-    val out = graft.operators.LangModel.bigramScore(df, "doc_id", "text")
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getDouble(2), r.getDouble(3)))).toMap
-    // V=3 (a,b,x); cb(a,b)=2, cb(b,a)=2; cw(a)=cw(b)=2 — every transition
-    // scores ln((2+1)/(2+3)) = ln(0.6)
-    val lp = math.rint(math.log(0.6) * 1e6) / 1e6
-    assert(out(1L)._1 == 3L && math.abs(out(1L)._2 - lp) < 1e-9)
-    assert(math.abs(out(1L)._3 - 1.666667) < 1e-6)
-    assert(out(2L)._1 == 1L)
-    // "x" has no transitions: omitted entirely
-    assert(!out.contains(3L))
-  }
-
-  test("trigramScore: repeated text scores far more probable than unique text; n_trigrams = tokens - 2") {
-    import spark.implicits._
-    import graft.operators.LangModel
-    val common = "the quick brown fox jumps over the lazy dog"
-    val docs = (1L to 10L).map(i => (i, common)) :+
-      (11L, "zyx wvu tsr qpo nml kji hgf edc bca")
-    val out = LangModel.trigramScore(docs.toDF("doc_id", "text"),
-      "doc_id", "text").orderBy("id").collect()
-    assert(out.forall(_.getAs[Long]("n_trigrams") == 7L))
-    val ppl = out.map(r =>
-      r.getAs[Long]("id") -> r.getAs[Double]("perplexity")).toMap
-    assert(ppl(1L) < ppl(11L) / 3,
-      s"repeated text should have much lower perplexity: $ppl")
-  }
-
-  test("kneserNeyScore: hand-replayed interpolated KN on a tiny corpus — continuation counts, discounting, decimal sums") {
-    import spark.implicits._
-    import graft.operators.LangModel
-    // corpus: one doc "a b c a b d" — trigrams abc, bca, cab, abd;
-    // bigram types ab(2) bc ca bd -> bt = 4
-    val docs = Seq((1L, "a b c a b d")).toDF("doc_id", "text")
-    val r = LangModel.kneserNeyScore(docs, "doc_id", "text").head()
-    assert(r.getAs[Long]("n_trigrams") == 4L)
-    // hand-computed interpolated KN (D = 0.75):
-    //   P(c|a,b) = P(d|a,b) = (0.25 + 0.75*2*P2)/2 with
-    //     P2 = (0.25 + 0.75*2*0.25)/2 = 0.3125      -> 0.359375
-    //   P(a|b,c) = P(b|c,a) = (0.25 + 0.75*1*0.4375)/1 = 0.578125
-    //     with P2 = (0.25 + 0.75*1*0.25)/1 = 0.4375
-    def q12(x: Double): BigDecimal =
-      BigDecimal(x).setScale(12, BigDecimal.RoundingMode.HALF_UP)
-    val slp = q12(math.log(0.359375)) * 2 + q12(math.log(0.578125)) * 2
-    val avg = BigDecimal(slp.toDouble / 4.0)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val ppl = BigDecimal(math.exp(-(slp.toDouble / 4.0)))
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    assert(r.getAs[Double]("avg_logprob") == avg)
-    assert(r.getAs[Double]("perplexity") == ppl)
-  }
-
-  test("kneserNeyCrossScore: level-by-level backoff for unseen contexts, OOV counted not smudged") {
-    import spark.implicits._
-    import graft.operators.LangModel
-    val train = Seq((1L, "a b c a b d")).toDF("doc_id", "text")
-    val score = Seq(
-      (10L, "a b c"),  // fully seen trigram -> highest order
-      (11L, "a b z"),  // unseen last word -> OOV
-      (12L, "x y c"),  // unseen bigram AND middle -> unigram level
-      (13L, "b d c"))  // c(bd)>0 but no trigram mass -> t12-null guard
-      .toDF("doc_id", "text")
-    val out = LangModel.kneserNeyCrossScore(train, score, "doc_id", "text")
-      .orderBy("id").collect()
-    def q12(x: Double): BigDecimal =
-      BigDecimal(x).setScale(12, BigDecimal.RoundingMode.HALF_UP)
-    def r6(x: BigDecimal): Double =
-      x.setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    // doc 10: P(c|a,b) = 0.359375 (the E191 hand computation)
-    assert(out(0).getAs[Long]("n_oov") == 0L)
-    assert(out(0).getAs[Double]("avg_logprob") == r6(q12(math.log(0.359375))))
-    // doc 11: z has no continuation mass -> 1 OOV, nothing scored
-    assert(out(1).getAs[Long]("n_trigrams") == 1L &&
-      out(1).getAs[Long]("n_oov") == 1L)
-    assert(out(1).isNullAt(out(1).fieldIndex("avg_logprob")))
-    assert(out(1).getAs[Double]("oov_rate") == 1.0)
-    // docs 12/13: both fall through to the unigram P(c) = 1/4 — doc 13
-    // via the t12-null guard (c(bd) > 0 but no trigram starts (b,d))
-    assert(out(2).getAs[Double]("avg_logprob") == r6(q12(math.log(0.25))))
-    assert(out(3).getAs[Double]("avg_logprob") == r6(q12(math.log(0.25))))
-    assert(out(3).getAs[Long]("n_oov") == 0L)
-  }
-
-  test("kneserNeyScore: document-final bigram occurrences no longer leak probability mass (continuation-consistent denominator)") {
-    import spark.implicits._
-    import graft.operators.LangModel
-    // doc 2 is exactly "a b": bigram (a,b) count = 2, but the context
-    // (a,b) has trigram mass 1 (only "a b c" in doc 1). The old raw-c12
-    // denominator divided by 2; the Chen-Goodman form divides by the
-    // trigram mass 1. Hand replay (D = 0.75, bt = 3 bigram types):
-    //   abc: p1 = 1/3, p2 = (0.25 + 0.75/3)/1 = 0.5,
-    //        p3 = (0.25 + 0.75*0.5)/1 = 0.625   (old: /2 = 0.3125)
-    //   xab: symmetric -> 0.625
-    val docs = Seq((1L, "x a b c"), (2L, "a b")).toDF("doc_id", "text")
-    val out = LangModel.kneserNeyScore(docs, "doc_id", "text").collect()
-    assert(out.length == 1 && out(0).getAs[Long]("id") == 1L)
-    assert(out(0).getAs[Long]("n_trigrams") == 2L)
-    val lp = BigDecimal(math.log(0.625))
-      .setScale(12, BigDecimal.RoundingMode.HALF_UP)
-    val avg = BigDecimal((lp * 2).toDouble / 2.0)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    assert(out(0).getAs[Double]("avg_logprob") == avg)
-  }
 }

@@ -33,33 +33,6 @@ class PackingSpec extends SparkSuite {
     // exclusive prefix: last cum_before + its tokens = grand total
     assert(one.last._2 >= 0)
   }
-
-  test("budget selection keeps the best-score prefix within the token budget") {
-    import spark.implicits._
-    val df = Seq(
-      (1L, 100L, 0.9), (2L, 200L, 0.8), (3L, 300L, 0.7),
-      (4L, 100L, 0.95), (5L, 999L, 0.6), (6L, 50L, null.asInstanceOf[Any])
-    ).map { case (id, t, s) => (id, t, Option(s).map(_.asInstanceOf[Double])) }
-      .toDF("doc_id", "n_tokens", "score")
-    // score order: 4 (cum 100) -> 1 (cum 200) -> 2 (cum 400) -> 3 (cum 700,
-    // over budget) -> 5; null-score doc 6 excluded entirely
-    val out = Packing.selectUnderBudget(df, "doc_id", "n_tokens", "score", budget = 650L)
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(3)))
-    assert(out.toSeq == Seq((1L, 200L), (2L, 400L), (4L, 100L)))
-  }
-
-  test("budget selection is independent of the partition count") {
-    import spark.implicits._
-    val rng = new scala.util.Random(11)
-    val df = (1L to 500L).map(i => (i, 10L + rng.nextInt(90), rng.nextInt(100) / 100.0))
-      .toDF("doc_id", "n_tokens", "score")
-    def run(p: Int) = Packing.selectUnderBudget(
-      df, "doc_id", "n_tokens", "score", budget = 5000L, numPartitions = Some(p))
-      .collect().map(r => (r.getLong(0), r.getLong(3))).toSet
-    val p1 = run(1)
-    assert(p1.nonEmpty && run(7) == p1 && run(32) == p1)
-  }
 }
 
 class DriftSpec extends SparkSuite {
@@ -98,43 +71,6 @@ class TfidfSpec extends SparkSuite {
     assert(out.filter(_._1 == 1L).map(_._2).toSeq == Seq("rare", "other"))
     // doc 3: "thing" (tf=2, df=2) beats "stuff" (tf=1, df=1)? ln(3/1)=1.1 vs 2*ln(3/2)=0.81
     assert(out.filter(_._1 == 3L).map(_._2).toSeq == Seq("stuff", "thing"))
-  }
-
-  test("textFeatureHash: unit norm; engineered sign-cancellation drops the zero vector; one aggregate exchange") {
-    val s = spark
-    import s.implicits._
-    // find two single-char tokens in the same bucket with opposite signs
-    // via the SAME hash the expression uses
-    def hb(t: String): (Long, Long) = {
-      val h = graft.functions.RollingHash.hash(
-        org.apache.spark.unsafe.types.UTF8String.fromString(t))
-      (h % 16, (h / 16) % 2)
-    }
-    val pool = ('a' to 'z').map(_.toString)
-    val pair = (for {
-      x <- pool; y <- pool if x < y
-      (bx, sx) = hb(x); (by, sy) = hb(y)
-      if bx == by && sx != sy
-    } yield (x, y)).headOption
-    assert(pair.isDefined, "26 letters must yield a colliding opposite-sign pair")
-    val (x, y) = pair.get
-    val docs = Seq(
-      (1L, "alpha beta gamma"), (2L, "alpha beta gamma"),
-      (3L, s"$x $y")).toDF("doc_id", "text")
-    val out = graft.operators.FeatureHash
-      .textFeatureHash(docs, "doc_id", "text").collect()
-      .map(r => r.getLong(0) -> (0 until 16).map(b => r.getAs[Double](s"v$b")))
-      .toMap
-    assert(!out.contains(3L), "perfect sign cancellation has no direction")
-    assert(out(1L) == out(2L), "identical text -> identical vector")
-    val n2 = out(1L).map(v => v * v).sum
-    assert(math.abs(n2 - 1.0) < 1e-4, s"unit norm, got $n2")
-    val plan = graft.operators.FeatureHash
-      .textFeatureHash(docs, "doc_id", "text")
-      .queryExecution.executedPlan.toString()
-    assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1,
-      s"one map-side-combined aggregate on the doc id:\n$plan")
-    assert(!plan.contains("Exchange SinglePartition"), plan)
   }
 }
 
@@ -188,24 +124,6 @@ class AsOfSpec extends SparkSuite {
         .where(col("type") === "buy").head()
       assert(out.getDouble(5) == 2.0, s"partitions=$p")
     }
-  }
-
-  test("rangeJoin: overlapping intervals each match; half-open bounds; cap trips") {
-    import spark.implicits._
-    val facts = Seq(0.5, 1.0, 2.0, 2.5, 10.0).toDF("v")
-    // [0,2) and [1,3) overlap on [1,2): 1.0 sits in both; 2.0 is
-    // excluded from a (hi-exclusive) but in b; 10.0 matches none
-    val ivals = Seq(("a", 0.0, 2.0), ("b", 1.0, 3.0)).toDF("name", "lo", "hi")
-    val out = graft.operators.AsOf
-      .rangeJoin(facts, "v", ivals, "lo", "hi", bucketWidth = 1.0)
-      .collect().map(r => (r.getDouble(0), r.getString(1))).toSet
-    assert(out == Set((0.5, "a"), (1.0, "a"), (1.0, "b"), (2.0, "b"), (2.5, "b")))
-    val ex = intercept[Exception] {
-      graft.operators.AsOf.rangeJoin(
-        facts, "v", Seq(("wide", 0.0, 1e9)).toDF("name", "lo", "hi"),
-        "lo", "hi", bucketWidth = 1.0, maxBucketsPerInterval = 100).collect()
-    }
-    assert(ex.getMessage.contains("rangeJoin"), s"got: ${ex.getMessage}")
   }
 }
 

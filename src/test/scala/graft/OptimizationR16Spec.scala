@@ -2,8 +2,100 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-class ExactQuantilesSpec extends SparkSuite {
+/** Round-16 OPTIMIZATION pins — every pin asserts an optimized path is
+  * bit-identical to the expression chain it replaced (the optimization
+  * round's contract: results must not change).
+  *
+  *  - [[graft.functions.MinhashSigs]] ≡ 32 × array_min(transform(sh,
+  *    xxhash64(lit(i), sh))) — the interpreted-lambda shape it replaced;
+  *  - [[graft.functions.MinhashSigsTokens]] ≡ the full r15 chain
+  *    (shingle transform/array_join → array_distinct → per-component
+  *    array_min(transform(xxhash64))), including the <n-tokens → NULL
+  *    and empty-shingle-set semantics;
+  *  - [[graft.streaming.StreamingProfile.adaptiveStatePartitions]] —
+  *    input-derived, no local-core constant: tiny inputs collapse to one
+  *    state store, 100 TB derives partitions past any core count. */
+class OptimizationR16Spec extends SparkSuite {
   import spark.implicits._
+
+  private val texts = Seq(
+    "the quick brown fox jumps over the lazy dog",
+    "the quick brown fox jumps over the lazy dog the quick brown fox",
+    "a b", // fewer than 3 tokens -> null signature
+    "", // empty -> no tokens
+    "one two three", // exactly one shingle
+    "Vérité café naïve — unicode bytes exercise the hash",
+    "dup dup dup dup dup") // heavy duplicate shingles
+
+  test("MinhashSigs ≡ per-component array_min(transform(xxhash64)) on the same arrays") {
+    graft.functions.MinhashSigs.register(spark)
+    val k = 8
+    val df = texts.toDF("text")
+      .select(array_distinct(when(
+        size(split(col("text"), "\\s+")) >= 2,
+        transform(
+          sequence(lit(0), size(split(col("text"), "\\s+")) - 2),
+          i => array_join(slice(split(col("text"), "\\s+"), i + lit(1), lit(2)), " ")))
+        .otherwise(array())).as("sh"))
+      .localCheckpoint(true)
+    val oldCols = (0 until k).map(i =>
+      when(size(col("sh")) > 0,
+        array_min(transform(col("sh"), s => xxhash64(lit(i), s)))).as(s"o$i"))
+    val newCols = (0 until k).map(i =>
+      element_at(call_function("minhash_sigs", col("sh"), lit(k)), i + 1)
+        .as(s"n$i"))
+    val rows = df.select(oldCols ++ newCols: _*).collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      (0 until k).foreach { i =>
+        assert(r.isNullAt(i) == r.isNullAt(k + i), s"null mismatch at h$i: $r")
+        if (!r.isNullAt(i))
+          assert(r.getLong(i) == r.getLong(k + i), s"value mismatch at h$i: $r")
+      }
+    }
+  }
+
+  test("MinhashSigsTokens ≡ the full r15 shingle+signature chain (incl. <n tokens -> NULL)") {
+    graft.functions.MinhashSigs.register(spark)
+    val (n, k) = (3, 8)
+    val df = texts.toDF("text")
+      .select(graft.functions.TextFunctions.wsTokens(lower(col("text")))
+        .as("toks"))
+      .localCheckpoint(true)
+    val grams = when(
+      size(col("toks")) >= n,
+      transform(
+        sequence(lit(0), size(col("toks")) - n),
+        i => array_join(slice(col("toks"), i + lit(1), lit(n)), " "))
+    ).otherwise(array())
+    val oldCols = (0 until k).map(i =>
+      when(size(array_distinct(grams)) > 0,
+        array_min(transform(array_distinct(grams), s => xxhash64(lit(i), s))))
+        .as(s"o$i"))
+    val newCols = (0 until k).map(i =>
+      element_at(
+        call_function("minhash_sigs_tokens", col("toks"), lit(n), lit(k)),
+        i + 1).as(s"n$i"))
+    val rows = df.select(oldCols ++ newCols: _*).collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      (0 until k).foreach { i =>
+        assert(r.isNullAt(i) == r.isNullAt(k + i), s"null mismatch at h$i: $r")
+        if (!r.isNullAt(i))
+          assert(r.getLong(i) == r.getLong(k + i), s"value mismatch at h$i: $r")
+      }
+    }
+  }
+
+  test("adaptiveStatePartitions derives from input bytes, not a core-count constant") {
+    val f = graft.streaming.StreamingProfile.adaptiveStatePartitions _
+    assert(f(0L, 32L << 20) == 1) // empty input -> one store
+    assert(f(2L << 20, 32L << 20) == 1) // sf0.1 events (~2 MB) -> one store
+    assert(f((32L << 20) + 1, 32L << 20) == 2) // just past one unit
+    // 100 TB derives ~3.3M partitions — far past any cluster's cores, so
+    // the production path is bounded by the cluster, never by this knob
+    assert(f(100L * (1L << 40), 32L << 20) > 3000000)
+  }
 
   test("ExactQuantiles ≡ the percentile aggregate, bit-for-bit, over seeded random frames") {
     val rng = new scala.util.Random(1016)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.TestSpark.{sf001, sf001Dir, sfEmb}
+import graft.TestSpark.sf001Dir
 import graft.operators.Similarity
 import graft.profiler.{Profiler, ProfilerConfig}
 
@@ -801,76 +801,5 @@ class PlanAuditSpec extends SparkSuite {
       .filter(_.contains("Exchange")).mkString("\n")
     assert(!exchanges.contains("payload#"),
       s"image payload reaches a shuffle:\n$exchanges")
-  }
-
-  test("round-14 plan audit: C4/dup-line are shuffle-free map-only; EL2N selects via physical top-k") {
-    val s = spark
-    import s.implicits._
-    val docs = (1 to 40)
-      .map(i => (i.toLong, ("alpha beta gamma delta epsilon " * (3 + i % 5)).trim))
-      .toDF("doc_id", "text")
-    // the whole C4/dup-line battery must stay inside the scan projection:
-    // no exchange, no join, no explode-shuffle — the 100 TB contract
-    for (df <- Seq(
-        graft.operators.CorpusStats.c4Rules(docs, "doc_id", "text"),
-        graft.operators.CorpusStats.c4FilterExecute(docs, "doc_id", "text"),
-        graft.operators.CorpusStats.dupLineStats(docs, "doc_id", "text"))) {
-      val p = df.queryExecution.executedPlan.toString
-      assert(!p.contains("Exchange"), s"expected a shuffle-free plan:\n$p")
-      assert(!p.contains("Join"), s"expected a join-free plan:\n$p")
-    }
-    // EL2N selection must be TakeOrderedAndProject (per-partition heaps,
-    // k rows per partition cross the network), never a global Sort+Limit
-    val el2n = graft.operators.QualityModel
-      .el2nSelect(docs, "doc_id", "text", topK = 5)
-    val ep = el2n.queryExecution.executedPlan.toString
-    assert(ep.contains("TakeOrderedAndProject"), s"\n$ep")
-  }
-
-  test("round-15 plan audit: flesch/dup-line are shuffle-free map-only; prune/D4 windows are keyed, never single-partition") {
-    val s = spark
-    import s.implicits._
-    val docs = (1 to 40)
-      .map(i => (i.toLong, ("alpha beta gamma delta epsilon. " * (3 + i % 5)).trim))
-      .toDF("doc_id", "text")
-    def plan(df: org.apache.spark.sql.DataFrame): String =
-      df.queryExecution.executedPlan.toString
-    // E235: pure scan projection — no Exchange, no Join
-    val fp = plan(graft.operators.CorpusStats
-      .fleschReadability(docs, "doc_id", "text"))
-    assert(!fp.contains("Exchange") && !fp.contains("Join"), s"\n$fp")
-    // E229/E234: per-cluster windows keyed by centroid — a global
-    // (single-partition) window must never appear
-    val emb = sfEmb
-    val pp = plan(graft.operators.Similarity.prototypePrune(
-      emb, "vec_id", "embedding", col("vec_id") % 83 === 0))
-    assert(pp.contains("Window") && !pp.contains("Exchange SinglePartition"),
-      s"\n$pp")
-    val d4 = plan(graft.operators.Similarity.d4Select(
-      emb, "vec_id", "embedding", col("vec_id") % 83 === 0))
-    assert(d4.contains("Window") && !d4.contains("Exchange SinglePartition"),
-      s"\n$d4")
-  }
-
-  test("plan pins: scriptProfile is a shuffle-free codegen scan; domainCaps shuffles ONCE on the domain key") {
-    val s = spark
-    import s.implicits._
-    val docs = sf001("documents")
-    def plan(df: org.apache.spark.sql.DataFrame): String =
-      df.queryExecution.executedPlan.toString()
-    val sp = plan(graft.operators.CorpusStats
-      .scriptProfile(docs, "doc_id", "text"))
-    assert(!sp.contains("Exchange"), s"script profile must not shuffle:\n$sp")
-    assert(!sp.contains("Window") && !sp.contains("Sort"),
-      s"script profile is argmax algebra, never a sort/window:\n$sp")
-    val dc = plan(graft.operators.Curate.domainCaps(
-      docs.withColumn("u",
-        concat(lit("https://"), col("source"), lit(".co.uk/p"))),
-      "doc_id", "u", cap = 10L))
-    assert("Exchange hashpartitioning".r.findAllIn(dc).size == 1,
-      s"domain caps must shuffle exactly once, keyed on the domain:\n$dc")
-    assert(!dc.contains("Exchange SinglePartition") &&
-      !dc.contains("CartesianProduct"),
-      s"no global collapse or cross join:\n$dc")
   }
 }

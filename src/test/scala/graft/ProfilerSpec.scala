@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
-import graft.TestSpark.sf001
 import graft.profiler._
 
 /** Hand-computed expectations per analyzer, with the null-heavy / empty /
@@ -202,40 +201,5 @@ class ProfilerSpec extends SparkSuite {
     val pq = spark.read.parquet(dir)
     assert(ScanMetrics.spreadTarget(pq) == 0)
     assert(ScanMetrics.spreadCheckpoint(pq) eq pq)
-  }
-
-  test("spread gating: cheap Plain-only batteries skip the repartition exchange") {
-    import graft.profiler.{AggKind, ScanMetrics}
-    val li = sf001("lineitem")
-    // count/min/max/completeness slots: no Sketch/Distinct, nothing heavy
-    val cheap = ScanMetrics.slots(
-      li.schema, graft.profiler.ProfilerConfig(),
-      Set("size", "completeness", "minimum", "maximum"))
-    assert(cheap.forall(s => s.kind == AggKind.Plain && !s.heavy))
-    // decimal-sum battery is flagged heavy -> spread() fires for it
-    val heavy = ScanMetrics.slots(
-      li.schema, graft.profiler.ProfilerConfig(), Set("sum", "mean", "stddev_pop"))
-    assert(heavy.nonEmpty && heavy.forall(_.heavy))
-  }
-
-  test("inferredTypes: promotion rule over all five classes") {
-    import spark.implicits._
-    val df = Seq(
-      (Option("true"), Option("1"), Option("1.5"), Option("x"), Option.empty[String]),
-      (Option("false"), Option("-2"), Option("2."), Option("1"), Option.empty[String]),
-      (Option("true"), Option("+3"), Option("3"), Option("y"), Option.empty[String]),
-      (Option.empty[String], Option("4"), Option("-0.25e2"), Option("z"), Option.empty[String])
-    ).toDF("b", "i", "f", "s", "u")
-    val out = graft.profiler.TypeInference
-      .inferredTypes(df, Seq("b", "i", "f", "s", "u"))
-      .collect().map(r => r.getString(0) -> r).toMap
-    assert(out("b").getString(1) == "Boolean" && out("b").getLong(7) == 1L)
-    assert(out("i").getString(1) == "Integral")
-    // mixed integral+fractional promotes to Fractional ("1e3" without a
-    // dot would NOT match the fractional pattern — "-0.25e2" does)
-    assert(out("f").getString(1) == "Fractional" && out("f").getLong(4) == 1L)
-    assert(out("s").getString(1) == "String")
-    assert(out("u").getString(1) == "Unknown" && out("u").getLong(7) == 4L)
-    assert(out.values.forall(_.getLong(2) == 4L))
   }
 }

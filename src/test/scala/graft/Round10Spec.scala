@@ -1,15 +1,14 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+
+import graft.TestSpark.sf001
 
 /** Round-10 additions (VERDICT r9 tasks + ADVICE): the absolute
   * hot-fingerprint cap and pre-flight candidate guard on winnowNearDup,
   * the WindowGuard-enforced exact Spearman, ParquetLayout's relative-dir
   * handling and footer-parallelism knob. */
-class Round10Spec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
+class Round10Spec extends SparkSuite {
   test("winnowNearDup: absolute cap drops corpus-wide boilerplate fingerprints regardless of corpus fraction") {
     import spark.implicits._
     // 20 docs sharing one long verbatim boilerplate sentence (every doc —
@@ -152,7 +151,7 @@ class Round10Spec extends AnyFunSuite {
   }
 
   test("ZOrderLayout.pruneReport: z-order reads fewer row groups than linear for identical results") {
-    val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+    val li = sf001("lineitem")
       .select(col("l_partkey"), col("l_suppkey"))
     val rep = graft.sources.ZOrderLayout
       .pruneReport(spark, li, "l_partkey", "l_suppkey",

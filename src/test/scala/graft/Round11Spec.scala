@@ -1,14 +1,13 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+
+import graft.TestSpark.sha256hex
 
 /** Round-11 additions (VERDICT r10 tasks): KLL-approx scale lanes for
   * the event family — interarrivalStatsApprox, sessionStatsApprox,
   * timeToConvertApprox — whose exact twins are now spot-verifier-only. */
-class Round11Spec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
+class Round11Spec extends SparkSuite {
   test("interarrivalStatsApprox: scalars exact, quantiles are true gaps at the right rank (sub-compaction regime)") {
     import spark.implicits._
     import graft.operators.Events
@@ -615,10 +614,6 @@ class Round11Spec extends AnyFunSuite {
       "SELECT substring(sha2('', 256), 1, 16) s").head().getString(0)
     assert(r.getAs[String]("clean_sha") == emptySha)
   }
-
-  private def sha256hex(s: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   test("qualityFilterExecute: keep set is exactly z >= 0 under the trained weights; invalid docs dropped; sha pinned") {
     import spark.implicits._

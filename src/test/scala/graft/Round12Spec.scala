@@ -1,15 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-12 behavior pins: the ADVICE r11 fixes (PQ dim guard, KN
   * continuation-consistent denominator, recall@k short-list cap, MMR
   * pool guard + checkpointed greedy state, dedup_survival rollup
   * shape) and the round's new operators. */
-class Round12Spec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
+class Round12Spec extends SparkSuite {
   test("productQuantize: non-divisible and sub-m dims fail loudly instead of dropping trailing dims") {
     import spark.implicits._
     import graft.operators.Quantize

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark.sf001
 
 /** Round-13 behavior pins: the declared no-oracle→audit-twin map
   * (VERDICT r12 task 7), the metadata-priced bloom sizing for the
@@ -9,9 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * r12), the signature-typed store for the media lanes (task 6), and
   * the DPR-regime (hugeQueries) parity of the ANN hard-negative miner
   * (ADVICE r12). */
-class Round13Spec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
+class Round13Spec extends SparkSuite {
   test("auditTwins is total: every no-oracle query key is pinned by a declared audit that exists and is itself fully oracled") {
     val qs = SparkEntry.queries.keySet
     val oracled = SparkEntry.oracleSql.keySet
@@ -137,7 +136,7 @@ class Round13Spec extends AnyFunSuite {
 
   test("hardNegativesAnn hugeQueries=true returns the identical relation to the broadcast plan") {
     import graft.operators.Similarity
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val emb = sf001("embeddings")
     val small = Similarity.hardNegativesAnn(
       emb, "vec_id", "embedding", "label",
       centroidPred = col("vec_id") % 83 === 0,

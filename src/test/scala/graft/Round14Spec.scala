@@ -1,17 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.{sf001Dir, testdata}
 import graft.operators.Dedup
-import graft.profiler.{Profiler, ProfilerConfig, Runner, TableCatalog}
+import graft.profiler.{ProfilerConfig, Runner, TableCatalog}
 
 /** Round-14 pins: tableParallelism under a wide catalog (VERDICT r13
   * task 8), StateStore.compact crash-safety (ADVICE r13), and the
   * Scratch nonce contract (ADVICE r13). */
-class Round14Spec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
+class Round14Spec extends SparkSuite {
   /** 64 small in-memory tables — wide-catalog shape without file I/O, so
     * the spec measures orchestration (scheduler round-trips), which is
     * exactly what tableParallelism exists to overlap. */
@@ -79,9 +77,9 @@ class Round14Spec extends AnyFunSuite {
   }
 
   test("Scratch: per-run nonce paths, dataset-scoped, JVM-stable") {
-    val a = Scratch.dir("graft_spec_fam", "/root/testdata/sf0.01")
-    val b = Scratch.dir("graft_spec_fam", "/root/testdata/sf0.1")
-    val c = Scratch.dir("graft_spec_fam", "/root/testdata/sf0.01")
+    val a = Scratch.dir("graft_spec_fam", s"$testdata/sf0.01")
+    val b = Scratch.dir("graft_spec_fam", s"$testdata/sf0.1")
+    val c = Scratch.dir("graft_spec_fam", s"$testdata/sf0.01")
     assert(a == c, "same family+dataset must reuse the same path in one JVM")
     assert(a != b, "different datasets must not share state")
     assert(a.startsWith("/tmp/graft_spec_fam/p"), a)
@@ -204,7 +202,7 @@ class Round14Spec extends AnyFunSuite {
   test("semDedup from persisted index ≡ in-plan (verdicts and executor output)") {
     val s = spark
     import org.apache.spark.sql.functions.col
-    val emb = s.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val emb = s.read.parquet(s"$sf001Dir/embeddings.parquet")
       .localCheckpoint(true)
     val path = java.nio.file.Files
       .createTempDirectory("graft_semdedup_idx").toString

@@ -1,20 +1,15 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark.{fuzzDocs, sf001Dir, sfEmb}
 
 /** Round-15 pins: prototype pruning (E229) artifact ≡ in-plan + quota
   * invariants + the staleness guard, the training-dynamics trio
   * (E230-E232) invariants, the stream-stream interval join's batch
   * equivalence (E233), and the ADVICE r14 degenerate-input fixes
   * (kcenterCoreset, ScaleGen.replicateK). */
-class Round15Spec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
-  private def sfEmb =
-    spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .localCheckpoint(true)
-
+class Round15Spec extends SparkSuite {
   test("prototypePrune: from persisted index ≡ in-plan; per-cluster quota and rank invariants") {
     val emb = sfEmb
     val path = java.nio.file.Files
@@ -68,17 +63,6 @@ class Round15Spec extends AnyFunSuite {
         threshold = 0.35, index = Some(idx)).collect()
     }
     assert(e2.getMessage.contains("stale"), e2.getMessage)
-  }
-
-  private def fuzzDocs(n: Int) = {
-    val s = spark
-    import s.implicits._
-    (1 to n).map { i =>
-      val filler =
-        if (i % 3 == 0) "the and is of to in it you that was " * 12
-        else "zxqj vwpk mntr abcd efgh " * (4 + i % 7)
-      (i.toLong, filler.trim + (if (i % 2 == 0) "." else ""))
-    }.toDF("doc_id", "text")
   }
 
   test("rhoLossSelect: train-split only, rho = loss_train - loss_irr, descending, rank contiguous") {
@@ -144,7 +128,7 @@ class Round15Spec extends AnyFunSuite {
   }
 
   test("streaming interval join ≡ batch interval join (single-source replay)") {
-    val dir = "/root/testdata/sf0.001"
+    val dir = sf001Dir
     val streamed = graft.streaming.StreamingProfile.replayParquet(
       spark, s"$dir/events.parquet",
       df => graft.streaming.StreamingProfile.intervalJoin(

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark.{sf001, sfEmb}
 
 /** Round-16 pins: the served-index MEMBERSHIP guard (ADVICE r15 — a
   * duplicate row offsetting a missing vector must fail, not silently
@@ -9,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * following the join window (ADVICE r15), the E238 registered-domain
   * PSL rule-class table + cap invariants, the E239 script-profile
   * static expectations, and the E237 data-recipe manifest invariants. */
-class Round16Spec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
-  private def sfEmb =
-    spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .localCheckpoint(true)
-
+class Round16Spec extends SparkSuite {
   test("served-index guard is MEMBERSHIP: duplicate rows offsetting a missing vector fail loudly") {
     val emb = sfEmb
     val path = java.nio.file.Files
@@ -195,7 +190,7 @@ class Round16Spec extends AnyFunSuite {
   test("plan pins: scriptProfile is a shuffle-free codegen scan; domainCaps shuffles ONCE on the domain key") {
     val s = spark
     import s.implicits._
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = sf001("documents")
     def plan(df: org.apache.spark.sql.DataFrame): String =
       df.queryExecution.executedPlan.toString()
     val sp = plan(graft.operators.CorpusStats
@@ -280,7 +275,7 @@ class Round16Spec extends AnyFunSuite {
       "equal timestamps must order by the unique event id")
     // chain invariants on the real table: versions contiguous from 1,
     // valid_to = next valid_from, exactly one open row per user
-    val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    val ev = sf001("events")
     val big = graft.operators.Events.scd2History(
       ev.withColumn("ts_us", graft.operators.Events.tsMicros(ev, "ts")),
       "user_id", "ts_us", "event_id", "event_type")
@@ -334,7 +329,7 @@ class Round16Spec extends AnyFunSuite {
   }
 
   test("kAnonymity: classes partition the table; suppression executor is verdict-consistent") {
-    val cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
+    val cust = sf001("customer")
     val n = cust.count()
     val audit = graft.operators.Privacy.kAnonymity(
       cust, Seq("c_nationkey", "c_mktsegment"),
@@ -400,7 +395,7 @@ class Round16Spec extends AnyFunSuite {
   }
 
   test("hedgeMix: multiplicative recurrence; absent domains coast; probs normalize per round") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = sf001("documents")
     val out = graft.operators.QualityModel
       .hedgeMix(docs, "doc_id", "text", "lang", "source")
       .collect()
@@ -475,7 +470,7 @@ class Round16Spec extends AnyFunSuite {
   test("domainQuantileNorm: percentiles span [0,1] per domain; selection is quality-monotone; singleton domains rank 0") {
     val s = spark
     import s.implicits._
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = sf001("documents")
       // plant a singleton domain (one valid doc)
       .unionByName(Seq((90001L, "lone doc with the and is of tokens", "en",
         "solo_domain", 35L)).toDF("doc_id", "text", "lang", "source", "n_chars"))
@@ -553,7 +548,7 @@ class Round16Spec extends AnyFunSuite {
     assert(r.getAs[Double]("z") == -1.0, r.toString)
     assert(!r.getAs[Boolean]("drift"))
     // a sample against itself: every value ties evenly, U = mu -> z = 0
-    val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+    val li = sf001("lineitem")
     val same = graft.profiler.Checks.mannWhitneyDrift(
       li, li, "l_extendedprice").collect().head
     assert(same.getAs[Double]("z") == 0.0 && !same.getAs[Boolean]("drift"))
@@ -581,7 +576,7 @@ class Round16Spec extends AnyFunSuite {
     out.groupBy(_.getLong(0)).foreach { case (id, rows) =>
       assert(rows.length <= 2, s"id $id exceeded the window bound")
     }
-    val cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
+    val cust = sf001("customer")
       .select(col("c_custkey").as("rid"), col("c_name").as("name"))
     val plan = graft.operators.FuzzyJoin
       .sortedNeighborhood(cust, "rid", "name")
@@ -665,7 +660,7 @@ class Round16Spec extends AnyFunSuite {
       s"exact pair wins, tie to the smaller id: ${out(101L)}")
     assert(!out(102L)._3 && out(102L)._2 < 0.9,
       s"weak best match rejected: ${out(102L)}")
-    val cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
+    val cust = sf001("customer")
     val plan = graft.operators.FuzzyJoin.jaroWinklerBest(
       cust.select(col("c_custkey").as("d"), col("c_name").as("n")),
       cust.select(col("c_custkey").as("c"), col("c_name").as("n")),

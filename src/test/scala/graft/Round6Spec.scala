@@ -1,13 +1,11 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
+import graft.TestSpark.{sf001, sf001Dir}
 import graft.operators.{Dedup, Events, Similarity}
 
-class Round6Spec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
+class Round6Spec extends SparkSuite {
   test("winnowing: null text flows to the empty-fingerprint branch, not the cap error") {
     import spark.implicits._
     val df = Seq(
@@ -210,7 +208,7 @@ class Round6Spec extends AnyFunSuite {
 
   test("spread gating: cheap Plain-only batteries skip the repartition exchange") {
     import graft.profiler.{AggKind, ScanMetrics}
-    val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+    val li = sf001("lineitem")
     // count/min/max/completeness slots: no Sketch/Distinct, nothing heavy
     val cheap = ScanMetrics.slots(
       li.schema, graft.profiler.ProfilerConfig(),
@@ -247,7 +245,7 @@ class Round6Spec extends AnyFunSuite {
   }
 
   test("profile_all_tables: every catalog table contributes Size + Completeness") {
-    val out = SparkEntry.queries("profile_all_tables")(spark, "/root/testdata/sf0.001")
+    val out = SparkEntry.queries("profile_all_tables")(spark, sf001Dir)
       .collect()
     val tables = out.map(_.getString(0)).toSet
     assert(tables == Set(

@@ -1,18 +1,17 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
+import graft.TestSpark.sf001Dir
 import graft.operators.{Clustering, CorpusStats, Events}
 
 /** Round-7 operator specs: E118 tsProfile, E119 interarrivalStats,
   * E120 hourlyActivity, E121 volumeCusum, E122 assocRules,
   * E123 docFrequency, E124 dedupYield, E125 tokenizerFertility,
   * E126 sessionStats. */
-class Round7Spec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
+class Round7Spec extends SparkSuite {
   private val usPerDay = 86400000000L
+
   private val usPerHour = 3600000000L
 
   test("tsProfile: completeness, span, cardinality on a long ts column") {
@@ -377,7 +376,7 @@ class Round7Spec extends AnyFunSuite {
 
   test("partitionPruningAudit: all properties hold on a lang-partitioned stage") {
     val out = graft.sources.FormatRoundtrip.partitionPruningAudit(
-      spark, "/root/testdata/sf0.001/documents.parquet", "lang", "en")
+      spark, s"$sf001Dir/documents.parquet", "lang", "en")
       .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
     assert(out.size == 3 && out.values.forall(identity), out.toString)
   }
@@ -593,7 +592,7 @@ class Round7Spec extends AnyFunSuite {
 
   test("schemaEvolutionAudit: merged read preserves rows, nulls and values") {
     val out = graft.sources.FormatRoundtrip.schemaEvolutionAudit(
-      spark, "/root/testdata/sf0.001/documents.parquet")
+      spark, s"$sf001Dir/documents.parquet")
       .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
     assert(out.size == 4 && out.values.forall(identity), out.toString)
   }

@@ -1,17 +1,15 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
+import graft.TestSpark.guardFires
 import graft.functions.SortedCdfOps
 import graft.profiler.Correlation
 
 /** Round-8 specs: SortedCdf mid-rank lookup, KLL-approximate Spearman
   * (E103 scale mode), the array-intersection MinHash verify stage, and
   * the qualityWeightedSample domain clamp. */
-class Round8Spec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
+class Round8Spec extends SparkSuite {
   test("SortedCdfOps.midrank: bounds, interior buckets, tie runs") {
     val splits = Array(1.0, 2.0, 2.0, 2.0, 3.0) // K = 5 → denominator 12
     // below all splits: (0 + 0) / 12
@@ -79,11 +77,6 @@ class Round8Spec extends AnyFunSuite {
 
   test("WindowGuard: oversize window input kills the query loudly, values unchanged below bound") {
     import spark.implicits._
-    def guardFires(f: => Unit): Boolean = try { f; false } catch {
-      case t: Throwable =>
-        Iterator.iterate(t)(_.getCause).takeWhile(_ != null).exists(e =>
-          Option(e.getMessage).exists(_.contains("metadata-sized")))
-    }
     // 200 distinct scores against a bound of 100: the histogram window
     // stage itself must raise (no silent single-task data window)
     val many = spark.range(200).select(

@@ -1,20 +1,13 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+
+import graft.TestSpark.{guardFires, sf001Dir}
 
 /** Round-9 additions: WindowGuard coverage on the KS distinct-value
   * window, the DOUBLE-rendered join-cardinality estimate, and the
   * KLL-approximate MAD outlier screen. */
-class Round9Spec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
-  private def guardFires(f: => Unit): Boolean = try { f; false } catch {
-    case t: Throwable =>
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).exists(e =>
-        Option(e.getMessage).exists(_.contains("metadata-sized")))
-  }
-
+class Round9Spec extends SparkSuite {
   test("madOutliersApprox / iqrOutliersApprox: exact on sub-k data (KLL retains everything below k=200)") {
     import spark.implicits._
     // 1..100 plus two far outliers; n=102 < k, so sketch quantiles are
@@ -38,7 +31,7 @@ class Round9Spec extends AnyFunSuite {
   }
 
   test("corpus_card: the one-row summary matches hand-computed facts on a tiny corpus") {
-    val dir = "/root/testdata/sf0.001"
+    val dir = sf001Dir
     val card = SparkEntry.queries("corpus_card")(spark, dir).head()
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     assert(card.getAs[Long]("n_docs") == docs.count())
@@ -228,7 +221,7 @@ class Round9Spec extends AnyFunSuite {
   }
 
   test("ParquetLayout: footer counts match scans, table names resolve for files and part-dirs") {
-    val dir = "/root/testdata/sf0.001"
+    val dir = sf001Dir
     val roll = graft.sources.ParquetLayout.tableRollup(spark, dir)
       .collect().map(r => r.getString(0) -> r).toMap
     assert(roll.keySet == Set("region", "nation", "customer", "supplier",

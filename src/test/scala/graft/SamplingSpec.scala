@@ -95,305 +95,4 @@ class SamplingSpec extends SparkSuite {
     // deterministicSample drops NULL keys for the same reason
     assert(Sampling.deterministicSample(df, "doc_id", 1.0).count() == 2)
   }
-
-  test("shuffle shards: dense 1..n positions per shard, stable across partitionings") {
-    import spark.implicits._
-    val df = (1L to 300L).toDF("doc_id")
-    val a = Sampling.shuffleShards(df, "doc_id", nShards = 8)
-      .select("doc_id", "shard", "pos").collect()
-      .map(r => (r.getLong(0), (r.getInt(1), r.getLong(2)))).toMap
-    // positions within a shard are exactly 1..size
-    a.values.groupBy(_._1).foreach { case (_, rows) =>
-      val ps = rows.map(_._2).toSeq.sorted
-      assert(ps == (1L to ps.size))
-    }
-    // pure function of the key: repartitioned input, same assignment
-    val b = Sampling.shuffleShards(df.repartition(13), "doc_id", nShards = 8)
-      .select("doc_id", "shard", "pos").collect()
-      .map(r => (r.getLong(0), (r.getInt(1), r.getLong(2)))).toMap
-    assert(a == b)
-  }
-
-  // deterministic skewed corpus for the mixture tests: 400 "en", 50 "de",
-  // 50 "fr" keyed rows
-  private def mixtureCorpus = {
-    import spark.implicits._
-    ((1L to 400L).map(i => (i, "en")) ++
-      (401L to 450L).map(i => (i, "de")) ++
-      (451L to 500L).map(i => (i, "fr")))
-      .toDF("doc_id", "lang")
-  }
-
-  test("mixtureResample: alpha=1 with the default target is the identity") {
-    // p_i = q_i at alpha 1, so rate_i = q_i * N / n_i = 1 for every stratum
-    val df = mixtureCorpus
-    val out = graft.operators.Sampling.mixtureResample(
-      df, "doc_id", org.apache.spark.sql.functions.col("lang"), alpha = 1.0)
-    assert(out.count() == 500L)
-  }
-
-  test("mixtureResample: alpha<1 downsamples the dominant stratum, keeps low-resource") {
-    import spark.implicits._
-    val out = graft.operators.Sampling.mixtureResample(
-      mixtureCorpus, "doc_id", org.apache.spark.sql.functions.col("lang"), alpha = 0.5)
-      .groupBy("lang").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    // q_en=0.8 -> sqrt=0.894427; de/fr sqrt(0.1)=0.316228; S=1.526883
-    // rate_en = 0.894427/1.526883 * 500/400 = 0.732225 -> bound 7322
-    // rate_de/fr = 0.316228/1.526883 * 500/50 = 2.07 -> capped at 1
-    assert(out("de") == 50L && out("fr") == 50L, s"low-resource must keep all: $out")
-    assert(out("en") < 400L && out("en") > 200L, s"dominant must downsample: $out")
-  }
-
-  test("mixtureResample: kept dominant-stratum set is nested across alphas") {
-    import spark.implicits._
-    val col = org.apache.spark.sql.functions.col _
-    def kept(alpha: Double): Set[Long] = graft.operators.Sampling.mixtureResample(
-      mixtureCorpus, "doc_id", col("lang"), alpha)
-      .where(col("lang") === "en").select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    val flat = kept(0.25) // flatter mixture -> lower dominant rate
-    val mid = kept(0.5)
-    assert(flat.subsetOf(mid), "lower-rate sample must be a strict subset")
-    assert(flat.size < mid.size)
-  }
-
-  test("mixtureResample: a stratum whose share quantizes to zero is kept, not dropped") {
-    import spark.implicits._
-    // dominant stratum of 30 rows + a single-row stratum: at alpha=0.05
-    // the tiny share^alpha still quantizes fine, so force the floor path
-    // directly — share small enough that pow(q, 2.5) < 5e-7 rounds to 0
-    // at scale 6 without the clamp (1/31 ^ 2.5 = 1.9e-4... use synthetic
-    // extreme: alpha high + tiny share is the easiest trigger)
-    val df = ((1L to 10000L).map(i => (i, "big")) ++ Seq((10001L, "tiny")))
-      .toDF("doc_id", "lang")
-    // share_tiny = 1/10001; ^2.5 = 1e-10 -> quantizes to 0.000000 -> floor
-    val out = graft.operators.Sampling.mixtureResample(
-      df, "doc_id", org.apache.spark.sql.functions.col("lang"), alpha = 2.5)
-      .where(org.apache.spark.sql.functions.col("lang") === "tiny")
-    // floored weight -> tiny rate still caps via target/n ratio; the row
-    // must survive (rate_tiny = (1e-6/S) * 10001 / 1 ~ 0.01 -> bound 100;
-    // kept iff its bucket < bound — but never the 0-bound wipeout). The
-    // operative assertion: the bound is nonzero, so membership follows
-    // the hash like any other stratum instead of unconditional drop.
-    // With one row we assert the stronger end-to-end property at alpha
-    // close to 0, where smoothing flattens and tiny strata keep all.
-    val flat = graft.operators.Sampling.mixtureResample(
-      df, "doc_id", org.apache.spark.sql.functions.col("lang"), alpha = 0.01)
-      .where(org.apache.spark.sql.functions.col("lang") === "tiny")
-    assert(flat.count() == 1L, "near-uniform smoothing must keep the tiny stratum")
-    assert(out.count() <= 1L) // and the floor path must not crash or overcount
-  }
-
-  test("leakageSafeSplit: cluster members share one label keyed by the canonical id") {
-    import spark.implicits._
-    val fns = org.apache.spark.sql.functions
-    val docs = (1L to 10L).map(i => (i, s"doc$i")).toDF("doc_id", "text")
-    // cluster {1,2,3} via pairs (1,2),(2,3); {7,8} via (7,8); rest singletons
-    val clusters = Seq((1L, 1L), (2L, 1L), (3L, 1L), (7L, 7L), (8L, 7L))
-      .toDF("doc_id", "cluster_id")
-    val splits = Seq("train" -> 0.9, "valid" -> 0.05, "test" -> 0.05)
-    val out = graft.operators.Sampling.leakageSafeSplit(
-      docs, "doc_id", clusters, splits)
-      .select("doc_id", "split").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out.size == 10)
-    assert(out(1L) == out(2L) && out(2L) == out(3L), "cluster {1,2,3} must share a label")
-    assert(out(7L) == out(8L), "cluster {7,8} must share a label")
-    // the shared label is the hashSplit label of the CANONICAL id, and
-    // singletons keep their plain hashSplit label
-    val plain = graft.operators.Sampling.hashSplit(docs, "doc_id", splits)
-      .select("doc_id", "split").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out(3L) == plain(1L), "cluster label must be the canonical id's label")
-    assert(out(8L) == plain(7L))
-    Seq(4L, 5L, 6L, 9L, 10L).foreach(i => assert(out(i) == plain(i)))
-  }
-
-  test("mixtureResample: null stratum and null key rows are dropped") {
-    import spark.implicits._
-    val df = (Seq((1L, Option("en")), (2L, Option.empty[String])) ++
-      (3L to 30L).map(i => (i, Option("en"))))
-      .toDF("doc_id", "lang")
-      .union(Seq((Option.empty[Long], Option("en"))).toDF("doc_id", "lang"))
-    val out = graft.operators.Sampling.mixtureResample(
-      df, "doc_id", org.apache.spark.sql.functions.col("lang"), alpha = 1.0)
-      .collect()
-    assert(out.forall(r => !r.isNullAt(0) && r.getString(1) == "en"))
-    assert(out.length == 29) // 29 non-null-keyed en rows; null lang + null key gone
-  }
-
-  test("topKByScore: per-group cut, score-desc order, deterministic tie-break") {
-    import spark.implicits._
-    val df = Seq(
-      ("g1", 1L, 0.9), ("g1", 2L, 0.5), ("g1", 3L, 0.9), ("g1", 4L, 0.1),
-      ("g2", 5L, 0.2)
-    ).toDF("g", "id", "score")
-    val out = graft.operators.Sampling
-      .topKByScore(df, "g", "id", col("score"), k = 2)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    // g1 keeps the two 0.9s (tie broken by id asc is irrelevant at k=2,
-    // but 0.5 and 0.1 must be cut); g2 keeps its only row
-    assert(out == Set(("g1", 1L), ("g1", 3L), ("g2", 5L)))
-  }
-
-  test("quantileBuckets: equal-population quartiles, null value gets null bucket") {
-    import spark.implicits._
-    val df = ((1 to 8).map(i => (i.toLong, Option(i.toDouble))) :+
-      ((9L, Option.empty[Double]))).toDF("doc_id", "v")
-    val out = graft.operators.Sampling.quantileBuckets(df, "doc_id", "v", 4)
-      .collect().map(r => r.getLong(0) -> Option(r.get(2))).toMap
-    // bounds (p25/p50/p75 of 1..8): 2.75, 4.5, 6.25
-    assert(out(1L) == Some(0) && out(2L) == Some(0))
-    assert(out(3L) == Some(1) && out(4L) == Some(1))
-    assert(out(5L) == Some(2) && out(6L) == Some(2))
-    assert(out(7L) == Some(3) && out(8L) == Some(3))
-    assert(out(9L).isEmpty)
-  }
-
-  test("qualityWeightedSample: deterministic, monotone in score, null-safe") {
-    import spark.implicits._
-    val df = (1L to 200L).map(i => (i, (i % 11).toDouble / 10.0))
-      .toDF("doc_id", "score")
-    val s1 = graft.operators.Sampling
-      .qualityWeightedSample(df, "doc_id", "score")
-      .select("doc_id").as[Long].collect().toSet
-    val s2 = graft.operators.Sampling
-      .qualityWeightedSample(df, "doc_id", "score")
-      .select("doc_id").as[Long].collect().toSet
-    assert(s1 == s2) // pure function of (key, score)
-    // score 0 can never be kept, score 1.0 always kept
-    assert(!s1.exists(id => id % 11 == 0))
-    assert((1L to 200L).filter(_ % 11 == 10).forall(s1.contains))
-    // null/NaN scores drop instead of sampling
-    val withNull = Seq((1L, Some(0.5)), (2L, None: Option[Double]))
-      .toDF("doc_id", "score")
-    assert(graft.operators.Sampling
-      .qualityWeightedSample(withNull, "doc_id", "score")
-      .where(col("doc_id") === 2L).count() == 0L)
-    // a RAISED score can only ADD docs (monotone keep rule)
-    val boosted = df.select(col("doc_id"),
-      least(col("score") + 0.3, lit(1.0)).as("score"))
-    val s3 = graft.operators.Sampling
-      .qualityWeightedSample(boosted, "doc_id", "score")
-      .select("doc_id").as[Long].collect().toSet
-    assert(s1.subsetOf(s3))
-  }
-
-  test("qualityWeightedSample: out-of-domain scores clamp, not wrap") {
-    import spark.implicits._
-    val df = Seq(
-      (1L, 1.7), (2L, 1.7), (3L, 1.7),   // > 1 → keep-always
-      (4L, -0.3), (5L, -0.3),            // < 0 → drop-always
-      (6L, Double.NaN)                   // NaN → drop
-    ).toDF("doc_id", "score")
-    val kept = graft.operators.Sampling
-      .qualityWeightedSample(df, "doc_id", "score")
-      .select("doc_id").as[Long].collect().toSet
-    assert(kept == Set(1L, 2L, 3L))
-  }
-
-  test("dsirWeights: target-like docs score above raw-like docs; feature count and empty-doc contracts hold") {
-    import spark.implicits._
-    // target docs speak "alpha beta", raw-only docs speak "gamma delta";
-    // two probe docs mix them at opposite ratios
-    val docs = (
-      (0 until 8).map(i => (i.toLong, "alpha beta alpha beta alpha", true)) ++
-      (8 until 16).map(i => (i.toLong, "gamma delta gamma delta gamma", false)) ++
-      Seq(
-        (16L, "alpha beta alpha beta gamma", false), // target-leaning probe
-        (17L, "gamma delta gamma delta alpha", false), // raw-leaning probe
-        (18L, "", false), // zero features
-        (19L, "solo", false)) // 1 token, 0 bigrams
-      ).toDF("doc_id", "text", "is_t")
-    val w = graft.operators.Sampling
-      .dsirWeights(docs, "doc_id", "text", col("is_t"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    // n_feats = tokens + bigrams = 2n - 1
-    assert(w(0L)._1 == 9L)
-    assert(w(18L)._1 == 0L && w(18L)._2 == 0.0)
-    assert(w(19L)._1 == 1L)
-    // the target-leaning probe outscores the raw-leaning one, and both sit
-    // between the pure-target and pure-raw scores
-    assert(w(16L)._2 > w(17L)._2)
-    assert(w(0L)._2 > w(16L)._2 && w(17L)._2 > w(8L)._2)
-  }
-
-  test("dsirSelect: returns k rows ranked by descending key, weights consistent with dsirWeights") {
-    import spark.implicits._
-    val docs = (0 until 30).map { i =>
-      val t = if (i % 3 == 0) "alpha beta alpha beta" else "gamma delta epsilon zeta"
-      (i.toLong, t, i % 3 == 0)
-    }.toDF("doc_id", "text", "is_t")
-    val sel = graft.operators.Sampling
-      .dsirSelect(docs, "doc_id", "text", col("is_t"), k = 7)
-      .collect()
-    assert(sel.length == 7)
-    val keys = sel.map(_.getDouble(2))
-    assert(keys.zip(keys.tail).forall { case (a, b) => a >= b })
-    val w = graft.operators.Sampling
-      .dsirWeights(docs, "doc_id", "text", col("is_t"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    sel.foreach(r => assert(r.getDouble(1) == w(r.getLong(0))))
-  }
-
-  test("unimaxAllocation: waterfilling — small domains take their count, the freed budget re-spreads") {
-    import spark.implicits._
-    import graft.operators.Sampling
-    val docs = (Seq.fill(5)("a") ++ Seq.fill(10)("b") ++ Seq.fill(100)("c"))
-      .zipWithIndex.map { case (d, i) => (i.toLong, d) }.toDF("id", "dom")
-    val rows = Sampling.unimaxAllocation(docs, "dom", budget = 30L)
-      .collect().map(r => r.getString(0) ->
-        ((r.getLong(1), r.getLong(2), r.getBoolean(3)))).toMap
-    // sorted (a:5, b:10, c:100); shares: 30/3=10 -> a takes 5 (sat);
-    // 25/2=12 -> b takes 10 (sat); 15/1=15 -> c takes 15 (unsat)
-    assert(rows("a") == ((5L, 5L, true)))
-    assert(rows("b") == ((10L, 10L, true)))
-    assert(rows("c") == ((100L, 15L, false)))
-  }
-
-  test("shardManifest: routing is deterministic, digest is order-free and content-sensitive") {
-    import spark.implicits._
-    import graft.operators.Sampling
-    val docs = (1L to 50L).map(i => (i, s"document body number $i"))
-    val m1 = Sampling.shardManifest(docs.toDF("doc_id", "text"),
-      "doc_id", "text", nShards = 4).orderBy("shard").collect()
-    // permuted input -> identical manifest (XOR digest is commutative)
-    val m2 = Sampling.shardManifest(
-      scala.util.Random.shuffle(docs).toDF("doc_id", "text"),
-      "doc_id", "text", nShards = 4).orderBy("shard").collect()
-    assert(m1.map(_.toSeq).toSeq == m2.map(_.toSeq).toSeq)
-    assert(m1.map(_.getAs[Long]("n_docs")).sum == 50L)
-    // one changed byte in one doc flips exactly that shard's digest
-    val mutated = docs.map { case (i, t) =>
-      (i, if (i == 7L) t + "!" else t) }
-    val m3 = Sampling.shardManifest(mutated.toDF("doc_id", "text"),
-      "doc_id", "text", nShards = 4).orderBy("shard").collect()
-    val changed = m1.zip(m3).count { case (a, b) =>
-      a.getAs[Long]("digest") != b.getAs[Long]("digest") }
-    assert(changed == 1, s"exactly one shard digest should change: $changed")
-  }
-
-  test("temperatureMix: alpha=0.3 upweights the tail; weights normalize; hand-computed scores") {
-    import spark.implicits._
-    import graft.operators.Sampling
-    val docs = ((1 to 90).map(i => (i.toLong, "en")) ++
-      (91 to 100).map(i => (i.toLong, "fr")))
-      .toDF("doc_id", "lang")
-    val out = Sampling.temperatureMix(docs, "lang", alpha = 0.3,
-      targetTotal = 1000L)
-      .orderBy("domain").collect()
-    def q6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val se = q6(math.exp(0.3 * math.log(90.0)))
-    val sf = q6(math.exp(0.3 * math.log(10.0)))
-    val z = BigDecimal(se) + BigDecimal(sf)
-    assert(out(0).getAs[String]("domain") == "en")
-    assert(out(0).getAs[Double]("weight") == q6(se / z.toDouble))
-    assert(out(1).getAs[Double]("weight") == q6(sf / z.toDouble))
-    // tail boosted above proportional, head below
-    assert(out(1).getAs[Double]("boost") > 1.0 &&
-      out(0).getAs[Double]("boost") < 1.0)
-    assert(out.map(_.getAs[Long]("target_n")).sum <= 1000L)
-  }
 }

@@ -35,116 +35,4 @@ class SearchSpec extends SparkSuite {
       .collect().map(_.getLong(0))
     assert(out.toSeq == Seq(1L, 2L))
   }
-
-  test("rrfFuse: hand-computed fusion, ids missing from one list, ties by id") {
-    import spark.implicits._
-    // list1 ranks: a=1, b=2, c=3 ; list2 ranks: b=1, a=2 (no c)
-    val l1 = Seq(("a", 1), ("b", 2), ("c", 3)).toDF("id", "rank")
-    val l2 = Seq(("b", 1), ("a", 2)).toDF("id", "rank")
-    val out = graft.operators.Search.rrfFuse(Seq(l1, l2), "id", "rank", k0 = 60, k = 3)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-    def rr(r: Int) = math.rint(1e12 / (60.0 + r)) / 1e12
-    val sA = math.rint((rr(1) + rr(2)) * 1e6) / 1e6
-    val sC = math.rint(rr(3) * 1e6) / 1e6
-    // a and b tie exactly (1/61+1/62 both) -> id ASC breaks it
-    assert(out(0) == (("a", 2L, sA)))
-    assert(out(1) == (("b", 2L, sA)))
-    assert(out(2) == (("c", 1L, sC)))
-  }
-
-  test("ndcgAtK: pooled-judgment semantics — unjudged gain 0, ideal ranks the pool, quantized terms") {
-    import spark.implicits._
-    import graft.operators.Search
-    // query 1: pool = {a:1.0, b:0.5, c:0.2}; system returns b,a,d (d unjudged)
-    val sys = Seq((1L, "b", 0.9), (1L, "a", 0.8), (1L, "d", 0.7))
-      .toDF("query_id", "item", "score")
-    val qrels = Seq((1L, "a", 1.0), (1L, "b", 0.5), (1L, "c", 0.2))
-      .toDF("query_id", "item", "rel")
-    val out = Search.ndcgAtK(sys, qrels, "query_id", "item", "score", "rel")
-      .collect()
-    assert(out.length == 1)
-    val r = out(0)
-    assert(r.getAs[Long]("n_retrieved") == 3L)
-    // replicate the contract: gain*disc quantized HALF_UP at 12dp,
-    // summed, 6-dp at the readout
-    def q12(x: Double): BigDecimal =
-      BigDecimal(x).setScale(12, BigDecimal.RoundingMode.HALF_UP)
-    def r6(x: BigDecimal): Double =
-      x.setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val d = (1 to 3).map(i => 1.0 / (math.log(i + 1.0) / math.log(2.0)))
-    val dcg = q12(0.5 * d(0)) + q12(1.0 * d(1)) + q12(0.0 * d(2))
-    val idcg = q12(1.0 * d(0)) + q12(0.5 * d(1)) + q12(0.2 * d(2))
-    assert(r.getAs[Double]("dcg") == r6(dcg))
-    assert(r.getAs[Double]("idcg") == r6(idcg))
-    val ndcg = BigDecimal(dcg.toDouble / idcg.toDouble)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    assert(r.getAs[Double]("ndcg") == ndcg)
-    // a perfect run scores 1.0
-    val perfect = Search.ndcgAtK(
-      Seq((1L, "a", 0.9), (1L, "b", 0.8), (1L, "c", 0.7))
-        .toDF("query_id", "item", "score"),
-      qrels, "query_id", "item", "score", "rel").head()
-    assert(perfect.getAs[Double]("ndcg") == 1.0)
-  }
-
-  test("bm25MultiTopK: df stopping drops common terms, rarest-first term budget, shorter docs outrank") {
-    import spark.implicits._
-    import graft.operators.Search
-    val corpus = Seq(
-      (1L, "apple banana cherry"),
-      (2L, "apple banana"),
-      (3L, "apple zebra"),
-      (4L, "unrelated words here"))
-      .toDF("doc_id", "text")
-    val queries = Seq((100L, "banana zebra")).toDF("doc_id", "text")
-    val out = Search.bm25MultiTopK(
-      corpus, queries, "doc_id", "text", maxDf = 2L, maxTermsPerQuery = 2)
-      .orderBy(col("score").desc, col("doc_id")).collect()
-    // apple (df=3) is stopped; zebra (df=1) and banana (df=2) survive.
-    // zebra's idf dominates -> doc 3 first; banana: doc 2 (shorter)
-    // outranks doc 1; doc 4 matches nothing
-    assert(out.map(_.getAs[Long]("doc_id")).toSeq == Seq(3L, 2L, 1L))
-    assert(out.forall(_.getAs[Long]("n_terms") == 1L))
-    assert(out(0).getAs[Long]("query_id") == 100L)
-    assert(out(1).getAs[Double]("score") > out(2).getAs[Double]("score"))
-    // term budget: maxTermsPerQuery=1 keeps only the rarest term (zebra)
-    val one = Search.bm25MultiTopK(
-      corpus, queries, "doc_id", "text", maxDf = 2L, maxTermsPerQuery = 1)
-      .collect()
-    assert(one.map(_.getAs[Long]("doc_id")).toSeq == Seq(3L))
-  }
-
-  test("recallCurve: per-k intersection over ranked lists, mean and worst-query recall") {
-    import spark.implicits._
-    import graft.operators.Search
-    val exact = Seq((1L, "a", 0.9), (1L, "b", 0.8), (1L, "c", 0.7))
-      .toDF("query_id", "item", "score")
-    val sys = Seq((1L, "a", 0.9), (1L, "x", 0.85), (1L, "b", 0.8))
-      .toDF("query_id", "item", "score")
-    val out = Search.recallCurve(
-      sys, exact, "query_id", "item", "score", kMax = 3)
-      .orderBy("k").collect()
-    assert(out.map(_.getAs[Int]("k")).toSeq == Seq(1, 2, 3))
-    assert(out.map(_.getAs[Long]("n_queries")).toSeq == Seq(1L, 1L, 1L))
-    assert(out.map(_.getAs[Double]("mean_recall")).toSeq ==
-      Seq(1.0, 0.5, 0.666667))
-    assert(out.map(_.getAs[Double]("min_recall")).toSeq ==
-      Seq(1.0, 0.5, 0.666667))
-  }
-
-  test("recallCurve: a query whose exact list is shorter than k can reach recall 1.0") {
-    import spark.implicits._
-    import graft.operators.Search
-    // exact has only 2 items; a perfect approximate run must score 1.0
-    // at every k, including k = 3 > |exact| (old code gave 2/3)
-    val exact = Seq((1L, "a", 0.9), (1L, "b", 0.8))
-      .toDF("query_id", "item", "score")
-    val sys = Seq((1L, "a", 0.9), (1L, "b", 0.8), (1L, "z", 0.1))
-      .toDF("query_id", "item", "score")
-    val out = Search.recallCurve(
-      sys, exact, "query_id", "item", "score", kMax = 3)
-      .orderBy("k").collect()
-    assert(out.map(_.getAs[Double]("mean_recall")).toSeq == Seq(1.0, 1.0, 1.0))
-    assert(out.map(_.getAs[Double]("min_recall")).toSeq == Seq(1.0, 1.0, 1.0))
-  }
 }

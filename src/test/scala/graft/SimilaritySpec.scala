@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.TestSpark.{sf001, sf001Dir, sfEmb}
 import graft.operators.Similarity
 
 class SimilaritySpec extends SparkSuite {
@@ -97,742 +96,5 @@ class SimilaritySpec extends SparkSuite {
       graft.functions.VectorOps.vectorDot(col("a"), col("b")).as("native"))
       .collect()
     rows.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
-  }
-
-  test("centroid update: exact decimal means, independent of partitioning") {
-    import spark.implicits._
-    val df = Seq(
-      (0L, Seq(1.0f, 0.0f)), (1L, Seq(0.9f, 0.1f)), (2L, Seq(0.8f, 0.2f)),
-      (10L, Seq(0.0f, 1.0f)), (11L, Seq(0.1f, 0.9f))
-    ).toDF("vec_id", "embedding")
-    def run(p: Int) = graft.operators.Similarity.centroidUpdate(
-      df.repartition(p), "vec_id", "embedding", col("vec_id") % 10 === 0)
-      .collect().map(r => ((r.getLong(0), r.getInt(1)), (r.getDouble(2), r.getLong(3)))).toMap
-    val a = run(1)
-    // cell 0 holds {0,1,2}: dim-0 mean (1.0f+0.9f+0.8f)/3 rounded to 6 dp
-    assert(a((0L, 0))._2 == 3L)
-    assert(math.abs(a((0L, 0))._1 - 0.9) < 1e-6)
-    assert(a((10L, 1))._2 == 2L)
-    assert(run(13) == a) // decimal sums: order/partition-independent
-  }
-
-  test("hot-bucket diagnostics: mega-cluster visible, clean corpus reports zero") {
-    import spark.implicits._
-    // 20 identical vectors = one mega-cluster colliding in every band
-    val clones = (1L to 20L).map(i => (i, Seq(1.0f, 0.0f, 0.0f, 0.0f)))
-    val spreadOut = (21L to 30L).map { i =>
-      val v = Array.fill(4)(0.0f); v(((i % 4)).toInt) = i.toFloat
-      (i, v.toSeq)
-    }
-    val df = (clones ++ spreadOut).toDF("vec_id", "embedding")
-    val hot = Similarity.cosineNearDupDiagnostics(
-      df, "vec_id", "embedding", bands = 8, bitsPerBand = 4, maxBucketFreq = 10)
-      .head()
-    assert(hot.getLong(0) > 0, "mega-cluster must surface as hot buckets")
-    assert(hot.getLong(2) >= 20L, "max bucket holds the whole clone cluster")
-    // the clones alone, capped generously: nothing hot
-    val clean = Similarity.cosineNearDupDiagnostics(
-      spreadOut.toDF("vec_id", "embedding"),
-      "vec_id", "embedding", bands = 8, bitsPerBand = 4, maxBucketFreq = 10)
-      .head()
-    assert(clean.getLong(0) == 0L && clean.getLong(1) == 0L)
-  }
-
-  test("capped cosineNearDupPairs bounds candidates on a clone-heavy corpus") {
-    import spark.implicits._
-    val clones = (1L to 50L).map(i => (i, Seq(1.0f, 0.0f, 0.0f, 0.0f)))
-    val df = clones.toDF("vec_id", "embedding")
-    // cap below the cluster size: every band bucket is hot, zero candidates
-    val out = Similarity.cosineNearDupPairs(
-      df, "vec_id", "embedding", top = 1000, bands = 8, bitsPerBand = 4,
-      maxBucketFreq = Some(10))
-    assert(out.count() == 0L)
-    // and the diagnostic explains why (the route-to-clustering signal)
-    val diag = Similarity.cosineNearDupDiagnostics(
-      df, "vec_id", "embedding", bands = 8, bitsPerBand = 4, maxBucketFreq = 10)
-      .head()
-    assert(diag.getLong(0) > 0)
-  }
-
-  test("dimStats: dead and scale-skewed dimensions visible") {
-    import spark.implicits._
-    val df = Seq(
-      (1L, Array(0.0f, 1.0f, 100.0f)),
-      (2L, Array(0.0f, 3.0f, -100.0f))
-    ).toDF("vec_id", "embedding")
-    val out = graft.operators.Similarity.dimStats(df, "embedding")
-      .collect().map(r => r.getAs[Long]("dim") -> r).toMap
-    assert(out(0L).getAs[Long]("n_zero") == 2L) // dead dim
-    assert(out(0L).getAs[Double]("mean") == 0.0)
-    assert(out(1L).getAs[Double]("mean") == 2.0)
-    assert(out(2L).getAs[Double]("min_x") == -100.0)
-    assert(out(2L).getAs[Double]("max_x") == 100.0)
-  }
-
-  test("clusterBalance: uniform cells maximize effective clusters; skew collapses it") {
-    import spark.implicits._
-    // 4 well-separated centroid ids among 40 vectors: ids 0,10,20,30 are
-    // centroids (pred: id % 10 == 0); each vector is one-hot so every
-    // group of 10 assigns to its own centroid -> perfectly uniform
-    val vecs = (0 until 40).map { i =>
-      val arr = Array.fill(4)(0.0f); arr(i / 10) = 1.0f
-      (i.toLong, arr)
-    }
-    val df = vecs.toDF("vec_id", "embedding")
-    val r = graft.operators.Similarity.clusterBalance(
-      df, "vec_id", "embedding", col("vec_id") % 10 === 0).head()
-    assert(r.getAs[Long]("n_clusters") == 4L)
-    assert(r.getAs[Long]("n_assigned") == 40L)
-    assert(r.getAs[Double]("effective_clusters") == 4.0) // uniform
-    assert(r.getAs[Double]("max_share") == 0.25)
-  }
-
-  test("effectiveDims: degenerate axes collapse the participation ratio") {
-    import spark.implicits._
-    // two informative axes with equal variance, two dead axes -> PR = 2
-    val df = Seq(
-      (1L, Array(1.0f, 0.0f, 5.0f, 7.0f)),
-      (2L, Array(-1.0f, 0.0f, 5.0f, 7.0f)),
-      (3L, Array(1.0f, 0.0f, 5.0f, 7.0f)),
-      (4L, Array(-1.0f, 0.0f, 5.0f, 7.0f))
-    ).toDF("vec_id", "embedding")
-    val r = graft.operators.Similarity.effectiveDims(df, "embedding").head()
-    assert(r.getAs[Long]("n_dims") == 4L)
-    assert(r.getAs[Double]("total_variance") == 1.0) // only dim 0 varies
-    assert(r.getAs[Double]("effective_dims") == 1.0)
-    assert(r.getAs[Double]("dim_utilization") == 0.25)
-  }
-
-  test("semDedup: a duplicate clique collapses to its farthest-from-centroid member; clusters are scoped") {
-    import spark.implicits._
-    // centroids: c0 = (1,0) [id 0], c1 = (0,1) [id 100]. Cluster 0 holds a
-    // duplicate clique (the centroid vector itself + three near-identical
-    // members) with centroid-cosines ordered 0 > 1 > 2 > 3; cluster 1
-    // holds a near-centroid member (pairs with its own centroid vector)
-    // and a dissimilar one that pairs with nothing.
-    val vecs = Seq(
-      (0L, Array(1f, 0f)),
-      (100L, Array(0f, 1f)),
-      (1L, Array(1f, 0.10f)),
-      (2L, Array(1f, 0.12f)),
-      (3L, Array(1f, 0.14f)),
-      (4L, Array(0.10f, 1f)),
-      (5L, Array(0.9f, 1f))) // assigned c1 (cos .74 vs .67); below τ with all
-      .toDF("vec_id", "embedding")
-    val out = graft.operators.Similarity
-      .semDedup(vecs, "vec_id", "embedding",
-        col("vec_id").isin(0L, 100L), threshold = 0.99)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(3))).toMap
-    assert(out.size == 7)
-    // clique {0,1,2,3}: the farthest-from-centroid member survives, every
-    // closer member loses at least one pair and is removed
-    assert(out(0L)._1 == 0L && out(0L)._2) // the centroid vector: closest of all — removed
-    assert(out(1L)._2 && out(2L)._2)
-    assert(!out(3L)._2) // farthest of the clique — kept
-    // cluster 1: {100, 4} pair (cos .995) — the centroid vector is closer
-    // to itself, so IT is removed and 4 kept; 5 pairs with nothing
-    assert(out(100L)._2)
-    assert(!out(4L)._2 && out(4L)._1 == 100L)
-    assert(out(5L)._1 == 100L && !out(5L)._2)
-  }
-
-  test("hardNegatives: same-label vectors are excluded even when they dominate the top") {
-    import spark.implicits._
-    import graft.operators.Similarity
-    // query (id 0, label 1); ids 1-3 label 1 nearly identical to the
-    // query; ids 4-5 label 2 less similar — the negatives MUST be 4, 5
-    def vec(theta: Double): Seq[Float] =
-      Seq(math.cos(theta).toFloat, math.sin(theta).toFloat) ++
-        Seq.fill(62)(0.0f)
-    val emb = Seq(
-      (0L, vec(0.0), 1), (1L, vec(0.01), 1), (2L, vec(0.02), 1),
-      (3L, vec(0.03), 1), (4L, vec(0.5), 2), (5L, vec(0.7), 2))
-      .toDF("vec_id", "embedding", "label")
-    val out = Similarity.hardNegatives(
-      emb, "vec_id", "embedding", "label", col("vec_id") === 0L, k = 2)
-      .orderBy("neighbor_id").collect()
-    assert(out.map(_.getAs[Long]("neighbor_id")).toSeq == Seq(4L, 5L))
-    assert(out.forall(_.getAs[Int]("neighbor_label") == 2))
-    assert(out.forall(_.getAs[Int]("query_label") == 1))
-  }
-
-  test("semDedupExecute: duplicate pair keeps the farthest-from-centroid member; unassigned vectors survive") {
-    import spark.implicits._
-    import graft.operators.Similarity
-    // centroid = id 0; ids 0, 1, 3 form a duplicate clique at threshold
-    // 0.9 and the pairwise-loser rule keeps only the farthest-from-
-    // centroid member (id 3): id 0 (cos 1.0, the centroid itself is a
-    // corpus member) and id 1 lose their pairs; id 5 is far from all;
-    // id 7 is the zero vector (never assigned, never removable)
-    val emb = Seq(
-      (0L, Array(1.0f, 0.0f)),
-      (1L, Array(0.9f, 0.1f)),
-      (3L, Array(0.8f, 0.3f)),
-      (5L, Array(0.0f, 1.0f)),
-      (7L, Array(0.0f, 0.0f)))
-      .toDF("vec_id", "embedding")
-    val verdict = Similarity.semDedup(
-      emb, "vec_id", "embedding", col("vec_id") === 0L, threshold = 0.9)
-      .collect().map(r =>
-        r.getAs[Long]("vec_id") -> r.getAs[Boolean]("removed")).toMap
-    assert(verdict(0L) && verdict(1L) && !verdict(3L) && !verdict(5L),
-      s"verdict=$verdict")
-    val kept = Similarity.semDedupExecute(
-      emb, "vec_id", "embedding", col("vec_id") === 0L, threshold = 0.9)
-      .orderBy("vec_id").collect()
-    assert(kept.map(_.getAs[Long]("vec_id")).toSeq == Seq(3L, 5L, 7L))
-    // content witness: dims + 6-dp norm
-    val k3 = kept.find(_.getAs[Long]("vec_id") == 3L).get
-    assert(k3.getAs[Long]("n_dims") == 2L)
-    assert(math.abs(k3.getAs[Double]("norm") -
-      math.rint(math.sqrt(0.8 * 0.8 + 0.3 * 0.3) * 1e6) / 1e6) < 1e-12)
-  }
-
-  test("mmrDiversify: a near-dup of the first pick is deferred behind a diverse lower-relevance candidate") {
-    import spark.implicits._
-    import graft.operators.Similarity
-    val emb = Seq(
-      (10L, Array(1.0f, 0.0f)),   // a
-      (11L, Array(0.9f, 0.1f)),   // b — near-dup of a
-      (12L, Array(0.0f, 1.0f)))   // c — orthogonal
-      .toDF("vec_id", "embedding")
-    val pool = Seq((1L, 10L, 0.95), (1L, 11L, 0.94), (1L, 12L, 0.6))
-      .toDF("query_id", "neighbor_id", "cos")
-    val out = Similarity.mmrDiversify(
-      pool, emb, "query_id", "neighbor_id", "cos", "vec_id", "embedding",
-      lambda = 0.7, k = 3)
-      .orderBy("rank").collect()
-    // pure-relevance order would be a, b, c; MMR picks a, then c
-    // (0.7*0.6 - 0.3*0 = 0.42 beats b's 0.7*0.94 - 0.3*~0.99 ~= 0.36)
-    assert(out.map(_.getAs[Long]("neighbor_id")).toSeq == Seq(10L, 12L, 11L))
-    assert(out.map(_.getAs[Int]("rank")).toSeq == Seq(1, 2, 3))
-    assert(out(0).getAs[Double]("rel") == 0.95)
-  }
-
-  test("knnLabelEval: leave-one-out majority vote; rank and vote ties break deterministically") {
-    import spark.implicits._
-    import graft.operators.Similarity
-    val emb = Seq(
-      (1L, Array(1.0f, 0.0f), 0),
-      (2L, Array(0.9f, 0.1f), 0),
-      (4L, Array(0.0f, 1.0f), 1),
-      (5L, Array(0.1f, 0.9f), 1),
-      (7L, Array(0.7f, 0.7f), 1))
-      .toDF("vec_id", "embedding", "label")
-    val out = Similarity.knnLabelEval(
-      emb, "vec_id", "embedding", "label",
-      col("vec_id") === 1L || col("vec_id") === 7L, k = 2)
-      .orderBy("query_id").collect()
-    // query 1: top-2 = {2 (same class), 7} -> 1-1 vote tie -> label 0
-    assert(out(0).getAs[Long]("true_label") == 0L &&
-      out(0).getAs[Long]("pred_label") == 0L &&
-      out(0).getAs[Boolean]("correct"))
-    // query 7 sits symmetric between the classes: cos ties rank by id
-    // (2 then 5), the 1-1 vote ties to the smaller label -> pred 0,
-    // true 1 -> incorrect (pins BOTH tie-breaks)
-    assert(out(1).getAs[Long]("true_label") == 1L &&
-      out(1).getAs[Long]("pred_label") == 0L &&
-      !out(1).getAs[Boolean]("correct"))
-  }
-
-  test("clusterPurity: majority label and 6-dp purity per nearest-centroid cluster") {
-    import spark.implicits._
-    import graft.operators.Similarity
-    val emb = Seq(
-      (1L, Array(1.0f, 0.0f), 0),
-      (2L, Array(0.9f, 0.1f), 0),
-      (4L, Array(0.0f, 1.0f), 1),
-      (5L, Array(0.1f, 0.9f), 1),
-      (7L, Array(0.7f, 0.7f), 1))
-      .toDF("vec_id", "embedding", "label")
-    val out = Similarity.clusterPurity(
-      emb, "vec_id", "embedding", "label",
-      col("vec_id") === 1L || col("vec_id") === 4L)
-      .orderBy("centroid_id").collect()
-    // 7 is equidistant from both centroids -> assignment ties to the
-    // smaller centroid id -> cluster 1 = {1, 2, 7}: majority 0, 2/3
-    assert(out(0).getAs[Long]("centroid_id") == 1L &&
-      out(0).getAs[Long]("n_members") == 3L &&
-      out(0).getAs[Long]("majority_label") == 0L &&
-      out(0).getAs[Long]("n_majority") == 2L &&
-      out(0).getAs[Double]("purity") == 0.666667)
-    assert(out(1).getAs[Long]("centroid_id") == 4L &&
-      out(1).getAs[Long]("n_members") == 2L &&
-      out(1).getAs[Double]("purity") == 1.0)
-  }
-
-  test("silhouette: centroids score 1, midpoints 0, tight members near 1; per-cluster rollup") {
-    import spark.implicits._
-    import graft.operators.Similarity
-    val emb = Seq(
-      (1L, Array(1.0f, 0.0f)),  // centroid A
-      (2L, Array(0.9f, 0.1f)),  // tight member of A
-      (4L, Array(0.0f, 1.0f)),  // centroid B
-      (5L, Array(0.1f, 0.9f)),  // tight member of B
-      (7L, Array(0.7f, 0.7f)))  // equidistant -> a = b -> s = 0
-      .toDF("vec_id", "embedding")
-    val out = Similarity.silhouette(
-      emb, "vec_id", "embedding",
-      col("vec_id") === 1L || col("vec_id") === 4L)
-      .orderBy("centroid_id").collect()
-    // cluster A holds {1, 2, 7} (7 ties to the smaller centroid id)
-    assert(out(0).getAs[Long]("centroid_id") == 1L &&
-      out(0).getAs[Long]("n_members") == 3L)
-    // 7's a = b -> 0 is the cluster's worst member
-    assert(out(0).getAs[Double]("min_silhouette") == 0.0)
-    // cluster B = {4, 5}: the centroid scores exactly 1 (a = 0, b = 1),
-    // the tight member is near 1 -> mean and min both high
-    assert(out(1).getAs[Long]("centroid_id") == 4L &&
-      out(1).getAs[Long]("n_members") == 2L)
-    assert(out(1).getAs[Double]("min_silhouette") > 0.98)
-    assert(out(1).getAs[Double]("mean_silhouette") > 0.99 &&
-      out(1).getAs[Double]("mean_silhouette") <= 1.0)
-  }
-
-  test("mmrDiversify: pool larger than maxPoolPerQuery fails loudly") {
-    import spark.implicits._
-    import graft.operators.Similarity
-    val emb = (1L to 30L).map(i => (i, Array(i.toFloat, 1.0f)))
-      .toDF("vec_id", "embedding")
-    val pool = (1L to 30L).map(i => (1L, i, 0.5))
-      .toDF("query_id", "neighbor_id", "cos")
-    val e = intercept[IllegalArgumentException] {
-      Similarity.mmrDiversify(
-        pool, emb, "query_id", "neighbor_id", "cos", "vec_id", "embedding",
-        lambda = 0.7, k = 3, maxPoolPerQuery = 10)
-    }
-    assert(e.getMessage.contains("maxPoolPerQuery"))
-  }
-
-  test("hardNegativesAnn: label cut before the heap; unprobed cells are invisible; probing all cells recovers the brute result") {
-    import spark.implicits._
-    import graft.operators.Similarity
-    // two cells: centroid 100 = (1,0), centroid 200 = (0,1)
-    val emb = Seq(
-      (100L, Array(1.0f, 0.0f), 0),  // centroid A, SAME label as query
-      (200L, Array(0.0f, 1.0f), 1),  // centroid B, cross-label
-      (97L, Array(1.0f, 0.05f), 0),  // the query (97 % 97 == 0)
-      (1L, Array(0.95f, 0.1f), 1),   // cell A, cross-label -> negative
-      (2L, Array(0.9f, 0.2f), 0),    // cell A, same label -> cut
-      (3L, Array(0.05f, 1.0f), 1))   // cell B, cross-label
-      .toDF("vec_id", "embedding", "label")
-    def run(nprobe: Int) = Similarity.hardNegativesAnn(
-      emb, "vec_id", "embedding", "label",
-      centroidPred = col("vec_id") % 100 === 0 && col("vec_id") > 0,
-      queryPred = col("vec_id") === 97, nprobe = nprobe, k = 10)
-      .orderBy(col("cos").desc, col("neighbor_id"))
-      .collect()
-    val one = run(1)
-    // nprobe=1 probes only cell A: the cross-label vector in cell B is
-    // invisible (that is what makes it ANN), and the same-label cell-A
-    // vectors never reach the heap
-    assert(one.map(_.getAs[Long]("neighbor_id")).toSeq == Seq(1L))
-    assert(one.forall(_.getAs[Int]("neighbor_label") != 0))
-    // nprobe=2 probes both cells: now equals the brute-force result
-    val two = run(2)
-    val brute = Similarity.hardNegatives(
-      emb, "vec_id", "embedding", "label", col("vec_id") === 97, k = 10)
-      .orderBy(col("cos").desc, col("neighbor_id"))
-      .collect()
-    assert(two.map(r => (r.getAs[Long]("neighbor_id"), r.getAs[Double]("cos"))).toSeq ==
-      brute.map(r => (r.getAs[Long]("neighbor_id"), r.getAs[Double]("cos"))).toSeq)
-  }
-
-  test("kmeansTrain: iteration 1 assigns like nearestCentroid; centroids move to cluster means; the curve tightens") {
-    import spark.implicits._
-    import graft.operators.Similarity
-    // two tight direction-clusters in 2D; init centroids are one member
-    // of each (ids 100, 200)
-    val emb = Seq(
-      (100L, Array(1.0f, 0.0f)), (1L, Array(0.9f, 0.1f)),
-      (2L, Array(0.95f, 0.05f)),
-      (200L, Array(0.0f, 1.0f)), (3L, Array(0.1f, 0.9f)),
-      (4L, Array(0.05f, 0.95f)))
-      .toDF("vec_id", "embedding")
-    val initPred = col("vec_id") >= 100L
-    val out = Similarity.kmeansTrain(emb, "vec_id", "embedding", initPred,
-      iters = 3)
-      .orderBy("iter", "centroid_id").collect()
-    // 3 iters x 2 centroids, counts stable at 3 apiece
-    assert(out.length == 6)
-    assert(out.forall(_.getAs[Long]("n_members") == 3L))
-    // iteration-1 members match the fixed-centroid assignment operator
-    val nc = Similarity.nearestCentroid(emb, "vec_id", "embedding", initPred)
-    val byCell = nc.groupBy("centroid_id").count().orderBy("centroid_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(byCell == Seq((100L, 3L), (200L, 3L)))
-    // moving the centroid to the cluster mean cannot loosen the cluster:
-    // mean cosine is non-decreasing for each centroid across iterations
-    Seq(100L, 200L).foreach { c =>
-      val curve = out.filter(_.getAs[Long]("centroid_id") == c)
-        .map(_.getAs[Double]("mean_cos"))
-      assert(curve.zip(curve.tail).forall { case (x, y) => y >= x },
-        s"curve for $c: ${curve.toSeq}")
-    }
-  }
-
-  test("embeddingOutliers: the far member of a tight cluster is flagged; singleton clusters never are") {
-    import spark.implicits._
-    import graft.operators.Similarity
-    // cluster around (1,0): 15 tight members + one far. The outlier
-    // inflates its own cluster sigma, and with population stddev the
-    // largest reachable |z| among n points is (n-1)/sqrt(n) — so n must
-    // be ~11+ for a z < -3 flag to be possible at all (n=16 here).
-    val tight = (1L to 14L).map(i =>
-      (i, Array(1.0f, (if (i % 2 == 0) 1 else -1) * 0.01f * (i % 3).toFloat)))
-    val emb = ((100L, Array(1.0f, 0.0f)) +: tight :+
-      ((5001L, Array(0.75f, 0.66f))) :+ // cos ~0.75 to (1,0): far
-      ((200L, Array(0.0f, 1.0f))))
-      .toDF("vec_id", "embedding")
-    val out = Similarity.embeddingOutliers(
-      emb, "vec_id", "embedding", col("vec_id") % 100 === 0)
-      .orderBy("vec_id").collect()
-    val flagged = out.filter(_.getAs[Boolean]("is_outlier"))
-      .map(_.getAs[Long]("vec_id")).toSeq
-    assert(flagged == Seq(5001L), s"flagged=$flagged")
-    // the singleton cluster (vector 200 alone): sigma undefined, z null
-    val lone = out.find(_.getAs[Long]("vec_id") == 200L).get
-    assert(lone.isNullAt(lone.fieldIndex("z")))
-    assert(!lone.getAs[Boolean]("is_outlier"))
-  }
-
-  test("hardNegativesAnn hugeQueries=true returns the identical relation to the broadcast plan") {
-    import graft.operators.Similarity
-    val emb = sf001("embeddings")
-    val small = Similarity.hardNegativesAnn(
-      emb, "vec_id", "embedding", "label",
-      centroidPred = col("vec_id") % 83 === 0,
-      queryPred = col("vec_id") % 97 === 0)
-    val huge = Similarity.hardNegativesAnn(
-      emb, "vec_id", "embedding", "label",
-      centroidPred = col("vec_id") % 83 === 0,
-      queryPred = col("vec_id") % 97 === 0,
-      hugeQueries = true)
-    assert(small.exceptAll(huge).count() + huge.exceptAll(small).count() == 0L)
-  }
-
-  test("semDedup from persisted index ≡ in-plan (verdicts and executor output)") {
-    val s = spark
-    import org.apache.spark.sql.functions.col
-    val emb = s.read.parquet(s"$sf001Dir/embeddings.parquet")
-      .localCheckpoint(true)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_semdedup_idx").toString
-    graft.operators.Similarity.writeIvfIndex(
-      emb, "vec_id", "embedding", col("vec_id") % 83 === 0, path)
-    val idx = graft.operators.Similarity.readIvfIndex(s, path)
-    def run(i: Option[(org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame)]) =
-      graft.operators.Similarity.semDedupExecute(
-        emb, "vec_id", "embedding", col("vec_id") % 83 === 0,
-        threshold = 0.35, index = i)
-    val a = run(None)
-    val b = run(Some(idx))
-    assert(a.exceptAll(b).count() + b.exceptAll(a).count() == 0L,
-      "artifact-served semdedup must be bit-identical to in-plan")
-  }
-
-  test("kcenterCoreset: Gonzalez trajectory on a hand-computable configuration") {
-    val s = spark
-    import s.implicits._
-    val vecs = Seq(
-      (1L, Array(1f, 0f, 0f, 0f)),
-      (2L, Array(0.999f, 0.045f, 0f, 0f)), // near-duplicate of 1 — never picked
-      (3L, Array(0f, 1f, 0f, 0f)),         // orthogonal to the seed
-      (4L, Array(0.7f, 0.7f, 0f, 0f))      // between 1 and 3
-    ).toDF("vec_id", "embedding")
-    val out = graft.operators.Similarity
-      .kcenterCoreset(vecs, "vec_id", "embedding", k = 3)
-      .orderBy("step").collect()
-    assert(out.map(_.getLong(1)).toSeq == Seq(1L, 3L, 4L))
-    assert(out(0).isNullAt(2), "seed has no prior set")
-    assert(out(1).getDouble(2) == 0.0,  "3 is orthogonal to the seed")
-    assert(math.abs(out(2).getDouble(2) - 0.707107) < 1e-6)
-  }
-
-  test("prototypePrune: from persisted index ≡ in-plan; per-cluster quota and rank invariants") {
-    val emb = sfEmb
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_proto_idx").toString
-    graft.operators.Similarity.writeIvfIndex(
-      emb, "vec_id", "embedding", col("vec_id") % 83 === 0, path)
-    val idx = graft.operators.Similarity.readIvfIndex(spark, path)
-    def run(i: Option[(org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame)]) =
-      graft.operators.Similarity.prototypePrune(
-        emb, "vec_id", "embedding", col("vec_id") % 83 === 0,
-        keepFrac = 0.7, index = i)
-    val a = run(None).localCheckpoint(true)
-    val b = run(Some(idx))
-    assert(a.exceptAll(b).count() + b.exceptAll(a).count() == 0L,
-      "artifact-served prototype pruning must be bit-identical to in-plan")
-    // quota: per cluster, kept = ceil(0.7 * n); ranks contiguous 1..n
-    val rows = a.collect()
-    rows.groupBy(_.getLong(1)).foreach { case (cid, rs) =>
-      val n = rs.length.toLong
-      assert(rs.forall(_.getLong(4) == n), s"cluster $cid n_cluster mismatch")
-      assert(rs.map(_.getLong(3)).sorted.toSeq == (1L to n),
-        s"cluster $cid ranks not contiguous")
-      val kept = rs.count(_.getBoolean(5)).toLong
-      assert(kept == math.ceil(0.7 * n).toLong,
-        s"cluster $cid kept $kept of $n")
-      // hardest kept: every kept rank below every dropped rank
-      val (k, d) = rs.partition(_.getBoolean(5))
-      assert(d.isEmpty || k.map(_.getLong(3)).max < d.map(_.getLong(3)).min)
-    }
-  }
-
-  test("prototypePrune/semDedup: a stale (partial) index fails loudly instead of passing partial verdicts") {
-    val emb = sfEmb
-    val cut = emb.agg(expr("percentile(vec_id, 0.5)")).head().getDouble(0)
-    val partial = emb.where(col("vec_id") <= cut)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_stale_idx").toString
-    graft.operators.Similarity.writeIvfIndex(
-      partial, "vec_id", "embedding", col("vec_id") % 83 === 0, path)
-    val idx = graft.operators.Similarity.readIvfIndex(spark, path)
-    val e1 = intercept[IllegalArgumentException] {
-      graft.operators.Similarity.prototypePrune(
-        emb, "vec_id", "embedding", col("vec_id") % 83 === 0,
-        index = Some(idx)).collect()
-    }
-    assert(e1.getMessage.contains("stale"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      graft.operators.Similarity.semDedup(
-        emb, "vec_id", "embedding", col("vec_id") % 83 === 0,
-        threshold = 0.35, index = Some(idx)).collect()
-    }
-    assert(e2.getMessage.contains("stale"), e2.getMessage)
-  }
-
-  test("d4Select: from-index ≡ in-plan; survivors-only quota; removed rows never kept") {
-    val emb = sfEmb
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_d4_idx").toString
-    graft.operators.Similarity.writeIvfIndex(
-      emb, "vec_id", "embedding", col("vec_id") % 83 === 0, path)
-    val idx = graft.operators.Similarity.readIvfIndex(spark, path)
-    def run(i: Option[(org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame)]) =
-      graft.operators.Similarity.d4Select(
-        emb, "vec_id", "embedding", col("vec_id") % 83 === 0,
-        threshold = 0.35, keepFrac = 0.7, index = i)
-    val a = run(None).localCheckpoint(true)
-    val b = run(Some(idx))
-    assert(a.exceptAll(b).count() + b.exceptAll(a).count() == 0L,
-      "artifact-served D4 must be bit-identical to in-plan")
-    val rows = a.collect()
-    assert(rows.exists(_.getBoolean(3)), "no semdedup removals at sf0.001")
-    rows.filter(_.getBoolean(3)).foreach { r =>
-      assert(r.isNullAt(4) && r.isNullAt(5) && !r.getBoolean(6),
-        s"removed row ranked or kept: $r")
-    }
-    rows.filterNot(_.getBoolean(3)).groupBy(_.getLong(1))
-      .foreach { case (cid, rs) =>
-        val n = rs.length.toLong
-        assert(rs.forall(_.getLong(5) == n))
-        assert(rs.map(_.getLong(4)).sorted.toSeq == (1L to n))
-        assert(rs.count(_.getBoolean(6)).toLong ==
-          math.ceil(0.7 * n).toLong, s"cluster $cid quota")
-      }
-  }
-
-  test("kcenterCoreset degrades to a shorter trajectory on degenerate input (ADVICE r14)") {
-    val s = spark
-    import s.implicits._
-    val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
-    assert(graft.operators.Similarity
-      .kcenterCoreset(empty, "vec_id", "embedding", k = 4).count() == 0L)
-    val three = Seq(
-      (1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f)),
-      (3L, Array(1.0f, 1.0f)), (4L, Array(0.0f, 0.0f)) // zero-norm: dropped
-    ).toDF("vec_id", "embedding")
-    val tr = graft.operators.Similarity
-      .kcenterCoreset(three, "vec_id", "embedding", k = 8)
-      .orderBy("step").collect()
-    assert(tr.length == 3, s"expected 3-step trajectory, got ${tr.length}")
-    assert(tr.map(_.getLong(1)).toSet == Set(1L, 2L, 3L))
-  }
-
-  test("served-index guard is MEMBERSHIP: duplicate rows offsetting a missing vector fail loudly") {
-    val emb = sfEmb
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_dup_idx").toString
-    graft.operators.Similarity.writeIvfIndex(
-      emb, "vec_id", "embedding", col("vec_id") % 83 === 0, path)
-    val (cents, assign) = graft.operators.Similarity.readIvfIndex(spark, path)
-    val ids = assign.agg(min("neighbor_id"), max("neighbor_id")).head()
-    val (lo, hi) = (ids.getLong(0), ids.getLong(1))
-    assert(lo != hi, "need at least two assigned vectors for the forgery")
-    // forge: drop the max id, duplicate the min id — ROW COUNT unchanged
-    // (the r15 guard passed this and silently omitted the max vector)
-    val forged = assign.where(col("neighbor_id") =!= hi)
-      .unionByName(assign.where(col("neighbor_id") === lo))
-      .localCheckpoint(true)
-    assert(forged.count() == assign.count(), "forgery must preserve count")
-    val e1 = intercept[IllegalArgumentException] {
-      graft.operators.Similarity.prototypePrune(
-        emb, "vec_id", "embedding", col("vec_id") % 83 === 0,
-        index = Some((cents, forged))).collect()
-    }
-    assert(e1.getMessage.contains("stale"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      graft.operators.Similarity.semDedup(
-        emb, "vec_id", "embedding", col("vec_id") % 83 === 0,
-        threshold = 0.35, index = Some((cents, forged))).collect()
-    }
-    assert(e2.getMessage.contains("stale"), e2.getMessage)
-    // full-coverage duplicates (no missing vector) also fail: dup rows
-    // would double-count pairs in the verdict
-    val dupOnly = assign
-      .unionByName(assign.where(col("neighbor_id") === lo))
-      .localCheckpoint(true)
-    val e3 = intercept[IllegalArgumentException] {
-      graft.operators.Similarity.prototypePrune(
-        emb, "vec_id", "embedding", col("vec_id") % 83 === 0,
-        index = Some((cents, dupOnly))).collect()
-    }
-    assert(e3.getMessage.contains("stale"), e3.getMessage)
-  }
-
-  test("bitextMine: hand-computed margins; one best row per source; threshold verdict") {
-    val s = spark
-    import s.implicits._
-    // src id 0 = [1,0]; tgts: id 1 = [1,0] (cos 1), id 3 = [0,1] (cos 0)
-    // avg_fwd(0) = (1+0)/2 = 0.5; avg_bwd(1) = 1, avg_bwd(3) = 0
-    // margin(0,1) = 1/((0.5+1)/2) = 1.333333 -> best + accepted
-    val emb = Seq(
-      (0L, Seq(1f, 0f)), (1L, Seq(1f, 0f)), (3L, Seq(0f, 1f))
-    ).toDF("vec_id", "embedding")
-    val rows = graft.operators.Similarity.bitextMine(
-      emb, "vec_id", "embedding",
-      srcPred = col("vec_id") % 2 === 0, tgtPred = col("vec_id") % 2 === 1,
-      k = 2, threshold = 1.02).collect()
-    assert(rows.length == 1)
-    val r = rows.head
-    assert(r.getAs[Long]("src_id") == 0L && r.getAs[Long]("tgt_id") == 1L)
-    assert(r.getAs[Double]("cos") == 1.0 &&
-      r.getAs[Double]("avg_fwd") == 0.5 && r.getAs[Double]("avg_bwd") == 1.0)
-    assert(r.getAs[Double]("margin") == 1.333333 && r.getAs[Boolean]("accepted"))
-    // real table: exactly one row per source; with the threshold set to
-    // the observed median margin, BOTH verdict branches must appear
-    // (margins skew above 1 by construction — the numerator is the
-    // argmax candidate, the denominator a k-NN mean — so a both-branch
-    // gate threshold is a distribution property, pinned here)
-    val margins = graft.operators.Similarity.bitextMine(
-      sfEmb, "vec_id", "embedding",
-      srcPred = col("vec_id") % 10 === 0, tgtPred = col("vec_id") % 2 === 1)
-      .collect().map(_.getAs[Double]("margin")).sorted
-    assert(margins.distinct.length > 1, "degenerate margin distribution")
-    val med = margins(margins.length / 2)
-    val real = graft.operators.Similarity.bitextMine(
-      sfEmb, "vec_id", "embedding",
-      srcPred = col("vec_id") % 10 === 0, tgtPred = col("vec_id") % 2 === 1,
-      threshold = med)
-      .collect()
-    assert(real.map(_.getAs[Long]("src_id")).distinct.length == real.length)
-    assert(real.forall(r0 =>
-      r0.getAs[Boolean]("accepted") == (r0.getAs[Double]("margin") >= med)))
-    assert(real.exists(_.getAs[Boolean]("accepted")) &&
-      real.exists(!_.getAs[Boolean]("accepted")),
-      "median threshold must exercise both verdict branches")
-  }
-
-  test("bitextMine from the persisted index: cell-restricted candidates; forged index fails the membership guard") {
-    val emb = sfEmb
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_bitext_idx").toString
-    graft.operators.Similarity.writeIvfIndex(
-      emb, "vec_id", "embedding", col("vec_id") % 83 === 0, path)
-    val idx = graft.operators.Similarity.readIvfIndex(spark, path)
-    val served = graft.operators.Similarity.bitextMine(
-      emb, "vec_id", "embedding",
-      srcPred = col("vec_id") % 10 === 0, tgtPred = col("vec_id") % 2 === 1,
-      index = Some(idx)).collect()
-    assert(served.nonEmpty)
-    assert(served.map(_.getAs[Long]("src_id")).distinct.length == served.length,
-      "one best pair per source")
-    // every served pair must be a brute candidate pair with the same cos
-    // (cells only restrict candidates; they never change a cosine)
-    val brute = graft.operators.Similarity.bitextMine(
-      emb, "vec_id", "embedding",
-      srcPred = col("vec_id") % 10 === 0, tgtPred = col("vec_id") % 2 === 1)
-      .collect().map(r =>
-        (r.getAs[Long]("src_id"), r.getAs[Long]("tgt_id")) -> r.getAs[Double]("cos"))
-      .toMap
-    served.foreach { r =>
-      val key = (r.getAs[Long]("src_id"), r.getAs[Long]("tgt_id"))
-      brute.get(key).foreach(c => assert(c == r.getAs[Double]("cos"),
-        s"cell restriction changed a cosine at $key"))
-    }
-    // forged artifact (duplicate offsetting a missing vector) fails loudly
-    val (cents, assign) = idx
-    val ids = assign.agg(min("neighbor_id"), max("neighbor_id")).head()
-    val forged = assign.where(col("neighbor_id") =!= ids.getLong(1))
-      .unionByName(assign.where(col("neighbor_id") === ids.getLong(0)))
-      .localCheckpoint(true)
-    val e = intercept[IllegalArgumentException] {
-      graft.operators.Similarity.bitextMine(
-        emb, "vec_id", "embedding",
-        srcPred = col("vec_id") % 10 === 0, tgtPred = col("vec_id") % 2 === 1,
-        index = Some((cents, forged))).collect()
-    }
-    assert(e.getMessage.contains("stale"), e.getMessage)
-  }
-
-  test("semanticContamination: eval side excluded; planted duplicate flags; broadcast argmax plan") {
-    val s = spark
-    import s.implicits._
-    val emb = Seq(
-      (0L, Seq(1f, 0f, 0f)),   // eval (97 divides 0)
-      (1L, Seq(1f, 0f, 0f)),   // exact duplicate of eval 0 -> contaminated
-      (2L, Seq(0f, 1f, 0f))    // orthogonal -> clean
-    ).toDF("vec_id", "embedding")
-    val out = graft.operators.Similarity.semanticContamination(
-      emb, "vec_id", "embedding", col("vec_id") % 97 === 0, threshold = 0.9)
-      .collect().map(r => r.getAs[Long]("vec_id") ->
-        (r.getAs[Long]("eval_id"), r.getAs[Double]("cos"),
-          r.getAs[Boolean]("contaminated"))).toMap
-    assert(!out.contains(0L), "eval vectors are not corpus rows")
-    assert(out(1L) == ((0L, 1.0, true)) && out(2L)._3 == false)
-    assert(out(2L)._2 == 0.0)
-    val plan = graft.operators.Similarity.semanticContamination(
-      sfEmb, "vec_id", "embedding", col("vec_id") % 97 === 0)
-      .queryExecution.executedPlan.toString()
-    assert(plan.contains("BroadcastNestedLoopJoin") ||
-      plan.contains("BroadcastExchange"),
-      s"eval set must broadcast — the corpus never shuffles for scoring:\n$plan")
-    assert(!plan.contains("Exchange SinglePartition") &&
-      !plan.contains("SortMergeJoin"), plan)
-  }
-
-  test("knnShapley: hand-computed closed form; per-point values and test counts") {
-    val s = spark
-    import s.implicits._
-    // query (id 0, label 1); train t1 nearest (label 1), t2 (label 0),
-    // t3 farthest (label 1); K=10 > N=3:
-    //   s3 = 1/3, s2 = s3 + (0-1)/10, s1 = s2 + (1-0)/10
-    val emb = Seq(
-      (0L, Seq(1f, 0f), 1L),
-      (1L, Seq(10f, 1f), 1L),
-      (2L, Seq(1f, 1f), 0L),
-      (3L, Seq(1f, 10f), 1L)
-    ).toDF("vec_id", "embedding", "label")
-    val out = graft.operators.Similarity.knnShapley(
-      emb, "vec_id", "embedding", "label", col("vec_id") === 0)
-      .collect().map(r => r.getAs[Long]("vec_id") ->
-        (r.getAs[Long]("n_tests"), r.getAs[Double]("shapley"))).toMap
-    assert(out.keySet == Set(1L, 2L, 3L))
-    assert(out.values.forall(_._1 == 1L))
-    assert(out(3L)._2 == 0.333333, out(3L).toString)
-    assert(out(2L)._2 == 0.233333, out(2L).toString)
-    assert(out(1L)._2 == 0.333333, out(1L).toString)
-    // real slice: every train point is valued against every test point
-    val real = graft.operators.Similarity.knnShapley(
-      sfEmb, "vec_id", "embedding", "label", col("vec_id") % 97 === 0)
-    val nq = sfEmb.where(col("vec_id") % 97 === 0).count()
-    val rows = real.collect()
-    assert(rows.nonEmpty && rows.forall(_.getAs[Long]("n_tests") == nq))
-    assert(rows.forall(r => math.abs(r.getAs[Double]("shapley")) <= 1.0))
   }
 }

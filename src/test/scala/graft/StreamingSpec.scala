@@ -94,172 +94,4 @@ class StreamingSpec extends SparkSuite {
     assert(streamed.nonEmpty)
     assert(streamed.toSeq == batch.toSeq)
   }
-
-  test("continuous profiling: streamed micro-batch merge equals the direct profile") {
-    val li = s"$sf001Dir/lineitem.parquet"
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .where(col("name") =!= "ApproxCountDistinct" &&
-        !col("name").startsWith("ApproxQuantiles"))
-      .select(col("instance"), col("name"), round(col("value"), 6))
-      .collect().map(_.toString).sorted.toSeq
-    val streamed = rows(graft.streaming.StreamingProfile
-      .continuousIncrementalProfile(spark, li, "l_orderkey", nBatches = 3))
-    val direct = rows(graft.profiler.IncrementalProfiler.metrics(
-      graft.profiler.IncrementalProfiler.snapshot(spark.read.parquet(li))))
-    assert(streamed.nonEmpty && streamed == direct)
-  }
-
-  test("sessionize carries state across micro-batches (no fragmented sessions)") {
-    import spark.implicits._
-    import graft.streaming.{SessionEvent, StreamingProfile}
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[SessionEvent]
-    val name = "r6_sessions_mb"
-    val q = StreamingProfile.sessionize(input.toDS(), gapMinutes = 1)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try {
-      input.addData(SessionEvent(1L, 0L), SessionEvent(1L, 30000000L)) // 0s, 30s
-      q.processAllAvailable()
-      val b1 = spark.table(name).as[(Long, Long, Long)].collect().toSeq
-      assert(b1 == Seq((1L, 0L, 2L)))
-      // 60s: within the 1-minute gap of the 30s event — a stateless batch
-      // would emit a FRESH session (1, 60s, 1); the stateful merge must
-      // extend the existing one
-      input.addData(SessionEvent(1L, 60000000L))
-      q.processAllAvailable()
-      val b2 = spark.table(name).as[(Long, Long, Long)].collect().toSeq.drop(b1.size)
-      assert(b2 == Seq((1L, 0L, 3L)),
-        s"expected the extended session as the superseding emission, got $b2")
-    } finally { q.stop() }
-  }
-
-  test("dedupWithinWatermark: dup inside horizon dropped; evicted key re-emits") {
-    import spark.implicits._
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = Files.createTempDirectory("graft_wm").toString
-    def stage(n: Int, rows: Seq[(Long, java.sql.Timestamp)]): Unit = {
-      val tmp = s"$dir/_w$n"
-      rows.toDF("event_id", "evt").coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head.toPath
-      Files.move(part, Paths.get(s"$dir/$n.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-      Thread.sleep(10) // distinct mtimes: the file source replays in order
-    }
-    def ts(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 ${10 + min / 60}%02d:${min % 60}%02d:00")
-    // batch1: A@10:00 (state expiry 11:00), B@10:05 -> watermark 9:05
-    stage(1, Seq((1L, ts(0)), (2L, ts(5))))
-    // batch2: dup A @10:30 (key still in state -> dropped), C@12:30 ->
-    // watermark 11:30, strictly past A's 11:00 expiry -> A evicted
-    stage(2, Seq((1L, ts(30)), (3L, ts(150))))
-    // batch3: advances nothing new; state cleanup runs at batch END, so
-    // A's eviction (11:00 expiry < 11:30 watermark) lands here
-    stage(3, Seq((4L, ts(155))))
-    // batch4: dup A @12:40 (not late, state evicted) -> RE-EMITTED — the
-    // bounded-state trade this operator buys its memory bound with
-    stage(4, Seq((1L, ts(160))))
-    val out = graft.streaming.StreamingProfile.replayParquet(
-      spark, s"$dir/*.parquet",
-      stream => graft.streaming.StreamingProfile.dedupWithinWatermark(
-        stream, Seq("event_id"), "evt", "1 hour").select("event_id"),
-      "append", maxFilesPerTrigger = Some(1))
-      .collect().map(_.getLong(0)).toSeq.sorted
-    assert(out == Seq(1L, 1L, 2L, 3L, 4L),
-      s"expected one in-horizon drop and one post-eviction re-emit, got $out")
-  }
-
-  test("streamingStateDedup: a real streaming replay flags exact copies and near variants against the frozen store") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    import graft.streaming.StreamingProfile
-    val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
-    val b = "one two three four five six seven eight nine ten eleven twelve"
-    val state = Dedup.dedupState(
-      Seq((1L, a), (2L, b)).toDF("doc_id", "text"), "doc_id", "text")
-      .localCheckpoint(true)
-    val dir = new java.io.File("target/tmp/r12stream")
-    org.apache.commons.io.FileUtils.deleteQuietly(dir)
-    Seq((10L, a), (11L, b + " thirteen"), (12L, "nothing shared with anyone here at all"))
-      .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(dir.getPath)
-    val out = StreamingProfile.replayParquet(
-      spark, dir.getPath + "/*.parquet",
-      df => StreamingProfile.streamingStateDedup(
-        df.withColumn("_evt", timestamp_seconds(col("doc_id"))),
-        state, "doc_id", "text", "_evt"),
-      "append")
-      .orderBy("id", "kind").collect()
-    val kinds = out.map(r => (r.getAs[Long]("id"), r.getAs[String]("kind"))).toSeq
-    assert(kinds == Seq((10L, "exact"), (10L, "near"), (11L, "near")))
-    val near10 = out.find(r => r.getAs[Long]("id") == 10L &&
-      r.getAs[String]("kind") == "near").get
-    assert(near10.getAs[Long]("match_id") == 1L &&
-      near10.getAs[Double]("est_jaccard") == 1.0)
-  }
-
-  test("streaming interval join ≡ batch interval join (single-source replay)") {
-    val dir = sf001Dir
-    val streamed = graft.streaming.StreamingProfile.replayParquet(
-      spark, s"$dir/events.parquet",
-      df => graft.streaming.StreamingProfile.intervalJoin(
-        df.withColumn("ts",
-          timestamp_micros(graft.operators.Events.tsMicros(df, "ts"))),
-        leftType = "view", rightType = "click", windowMinutes = 240),
-      "append")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    val ev = raw.withColumn("ts_us",
-      graft.operators.Events.tsMicros(raw, "ts"))
-    val l = ev.where(col("event_type") === "view")
-      .select(col("event_id").as("l_event_id"), col("user_id"),
-        col("ts_us").as("l_us"))
-    val r = ev.where(col("event_type") === "click")
-      .select(col("event_id").as("r_event_id"),
-        col("user_id").as("r_user_id"), col("ts_us").as("r_us"))
-    val batch = l.join(r,
-      col("user_id") === col("r_user_id") &&
-        col("r_us") >= col("l_us") &&
-        col("r_us") <= col("l_us") + lit(240L * 60L * 1000000L))
-      .select("user_id", "l_event_id", "r_event_id", "l_us", "r_us")
-    assert(streamed.exceptAll(batch).count() +
-      batch.exceptAll(streamed).count() == 0L,
-      "stream-stream interval join must equal the batch interval join")
-    assert(batch.count() > 0, "trivial: batch join empty at sf0.001")
-  }
-
-  test("intervalJoin: watermark delay follows windowMinutes (and an explicit override wins)") {
-    // a STREAMING source: on a batch child the Dataset API's eager
-    // analysis runs EliminateEventTimeWatermark immediately, so watermark
-    // nodes are only observable on a genuinely streaming plan
-    val events = spark.readStream.format("rate")
-      .option("rowsPerSecond", "1").load()
-      .select(col("value").as("event_id"),
-        (col("value") % 5).as("user_id"),
-        when(col("value") % 2 === 0, lit("view")).otherwise(lit("click"))
-          .as("event_type"),
-        col("timestamp").as("ts"))
-    def delaysMin(windowMinutes: Int, watermarkMinutes: Int = 0): Seq[Long] =
-      graft.streaming.StreamingProfile
-        .intervalJoin(events, "view", "click",
-          windowMinutes, watermarkMinutes)
-        .queryExecution.analyzed.collect {
-          case e: org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark =>
-            e.delay.microseconds / 60000000L
-        }
-    assert(delaysMin(240) == Seq(240L, 240L),
-      "watermark must follow the join window on BOTH legs")
-    assert(delaysMin(90, watermarkMinutes = 30) == Seq(30L, 30L),
-      "an explicit watermark override wins")
-    // narrow window still tolerates ordinary lateness (60-minute floor)
-    assert(delaysMin(5) == Seq(60L, 60L))
-  }
-
-  test("adaptiveStatePartitions derives from input bytes, not a core-count constant") {
-    val f = graft.streaming.StreamingProfile.adaptiveStatePartitions _
-    assert(f(0L, 32L << 20) == 1) // empty input -> one store
-    assert(f(2L << 20, 32L << 20) == 1) // sf0.1 events (~2 MB) -> one store
-    assert(f((32L << 20) + 1, 32L << 20) == 2) // just past one unit
-    // 100 TB derives ~3.3M partitions — far past any cluster's cores, so
-    // the production path is bounded by the cluster, never by this knob
-    assert(f(100L * (1L << 40), 32L << 20) > 3000000)
-  }
 }

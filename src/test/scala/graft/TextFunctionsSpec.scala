@@ -66,117 +66,4 @@ class TextFunctionsSpec extends SparkSuite {
     import org.apache.spark.unsafe.types.UTF8String
     assert(out(2) == RollingHash.hash(UTF8String.fromString("hello world")))
   }
-
-  test("url canonicalization: case, www, default ports, fragments, trailing slash") {
-    import spark.implicits._
-    import graft.functions.UrlFunctions
-    val cases = Seq(
-      ("HTTP://WWW.Example.COM:80/Page#frag", "http://example.com/Page", "example.com"),
-      ("https://sub.Site.ORG:443/a/b/", "https://sub.site.org/a/b", "site.org"),
-      ("https://plain.com/", "https://plain.com", "plain.com"),
-      ("ftp://Files.Net", "ftp://files.net", "files.net"),
-      ("https://www.x.io:8080/q", "https://x.io:8080/q", "x.io") // non-default port kept
-    ).toDF("raw", "want_url", "want_dom")
-    val bad = cases.where(
-      UrlFunctions.normalizeUrl(col("raw")) =!= col("want_url") ||
-        UrlFunctions.domain(col("raw")) =!= col("want_dom"))
-      .select(col("raw"), UrlFunctions.normalizeUrl(col("raw")), UrlFunctions.domain(col("raw")))
-      .collect()
-    assert(bad.isEmpty, bad.mkString("\n"))
-  }
-
-  test("tokenize ids: vocab rank order, OOV = 0, order-stable fingerprint, empty docs") {
-    import spark.implicits._
-    // freq: a=4, b=3, c=1 -> ids a=1, b=2; vocabSize=2 makes c OOV
-    val df = Seq((1L, "a b a b"), (2L, "a a c b"), (3L, "")).toDF("doc_id", "text")
-    val out = TextFunctions.tokenizeIds(df, "doc_id", "text", vocabSize = 2)
-      .orderBy("id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    // doc1: ids 1,2,1,2 sum 6 oov 0; doc2: 1,1,0,2 sum 4 oov 1; doc3 empty
-    assert(out.toSeq == Seq((1L, 4L, 0L, 6L), (2L, 4L, 1L, 4L), (3L, 0L, 0L, 0L)))
-    // fingerprint is a pure function of the sequence (partitioning-independent)
-    val a = TextFunctions.tokenizeIds(df, "doc_id", "text", 2)
-      .collect().map(r => r.getLong(0) -> r.getString(4)).toMap
-    val b = TextFunctions.tokenizeIds(df.repartition(7), "doc_id", "text", 2)
-      .collect().map(r => r.getLong(0) -> r.getString(4)).toMap
-    assert(a == b)
-  }
-
-  test("bigram top-k counts adjacent pairs with (freq DESC, bigram ASC) tie-break") {
-    import spark.implicits._
-    val df = Seq("a b a b c", "a b", "x").toDF("text")
-    val out = TextFunctions.bigramTopK(df, "text", k = 3).collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    assert(out.toSeq == Seq(("a b", 3L), ("b a", 1L), ("b c", 1L)))
-  }
-
-  test("deflate_len: deterministic, bounded, repetitive text far denser than noise") {
-    import spark.implicits._
-    graft.functions.Compress.register(spark)
-    val rnd = new scala.util.Random(7)
-    val noise = (1 to 2000).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
-    val repet = "spam keyword " * 154 // ~2000 chars of pure repetition
-    val df = Seq(
-      (1L, Option(repet)), (2L, Option(noise)), (3L, Option("")),
-      (4L, Option.empty[String])
-    ).toDF("doc_id", "text")
-    val out = df.select(col("doc_id"), expr("deflate_len(text)").as("n"))
-      .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1 else r.getInt(1))).toMap
-    assert(out(4L) == -1, "null text -> null length")
-    assert(out(3L) >= 0 && out(3L) <= 8, "empty text compresses to the deflate epilogue")
-    assert(out(1L) > 0 && out(2L) > 0)
-    // repetition compresses an order of magnitude below random text
-    assert(out(1L) * 5 < out(2L), s"repetitive ${out(1L)} !<< noise ${out(2L)}")
-    // deterministic across evaluations (and across codegen/eval paths)
-    val again = df.select(expr("deflate_len(text)")).collect()
-    val again2 = df.select(expr("deflate_len(text)")).collect()
-    assert(again.map(_.toSeq.headOption).sameElements(again2.map(_.toSeq.headOption)))
-  }
-
-  test("collocationsPmi: hand-computed PMI; minFreq drops hapax pairs") {
-    import spark.implicits._
-    // bigrams: "a b" x3 (doc1), "b a" x2 (doc1) + x1 (doc2), "c d" x1
-    // -> n=7, cx(a)=cy(b)=cx(b)=cy(a)=3
-    val df = Seq((1L, "a b a b a b"), (2L, "b a"), (3L, "c d")).toDF("doc_id", "text")
-    val out = graft.functions.TextFunctions
-      .collocationsPmi(df, "text", minFreq = 2, k = 10)
-      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    assert(!out.contains("c d"))
-    val pmi = math.rint(math.log(7.0 / 3.0) * 1e6) / 1e6
-    assert(out("a b") == ((3L, pmi)))
-    assert(out("b a") == ((3L, pmi)))
-    assert(out.size == 2)
-  }
-
-  test("htmlStrip: tags out, whitespace collapsed, entities untouched") {
-    import spark.implicits._
-    val df = Seq(
-      "<p>hello   <b>world</b></p>",
-      "no tags here",
-      "<div class=\"x\">a&amp;b</div>"
-    ).toDF("t").select(graft.functions.TextFunctions.htmlStrip(col("t")).as("c"))
-    val out = df.as[String].collect()
-    assert(out(0) == "hello world")
-    assert(out(1) == "no tags here")
-    assert(out(2) == "a&amp;b") // entity decoding is out of scope
-  }
-
-  test("sentenceCount / meanSentenceChars: terminator runs, blank runs dropped") {
-    import spark.implicits._
-    val df = Seq(
-      (1L, Some("One two. Three!  Four five six?")),
-      (2L, Some("no terminator at all")),
-      (3L, Some("...")),
-      (4L, None: Option[String])
-    ).toDF("doc_id", "text")
-    val out = df.select(col("doc_id"),
-      graft.functions.TextFunctions.sentenceCount(col("text")).as("n"),
-      graft.functions.TextFunctions.meanSentenceChars(col("text")).as("m"))
-      .collect().map(r => r.getLong(0) ->
-        (Option(r.get(1)), Option(r.get(2)))).toMap
-    assert(out(1L)._1.contains(3L))
-    assert(out(2L)._1.contains(1L))
-    assert(out(3L)._1.contains(0L) && out(3L)._2.isEmpty) // only terminators
-    assert(out(4L)._1.isEmpty) // null text stays null
-  }
 }

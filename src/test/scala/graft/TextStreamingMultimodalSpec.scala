@@ -86,137 +86,6 @@ class MultimodalSpec extends SparkSuite {
     assert(frames.map(_.getLong(0)).toSeq == Seq(2L, 2L))
     assert(frames.map(_.getLong(2)).toSeq == Seq(256L, 44L))
   }
-
-  test("bmpDHash: deterministic, orientation-aware, perturbation-local; imageNearDup pairs identical and near-identical images only") {
-    import spark.implicits._
-    import graft.multimodal.Multimodal
-    // determinism + self-consistency
-    val a = Multimodal.syntheticBmp(7L, 16, 16)
-    assert(Multimodal.bmpDHash(a) == Multimodal.bmpDHash(
-      Multimodal.syntheticBmp(7L, 16, 16)))
-    // a one-pixel perturbation stays within a few bits; a different seed
-    // lands ~32 bits away
-    val near = Multimodal.syntheticBmp(7L, 16, 16, perturb = 99L)
-    val far = Multimodal.syntheticBmp(8L, 16, 16)
-    def ham(x: Long, y: Long) = java.lang.Long.bitCount(x ^ y)
-    val (ha, hn, hf) = (Multimodal.bmpDHash(a).get,
-      Multimodal.bmpDHash(near).get, Multimodal.bmpDHash(far).get)
-    assert(ham(ha, hn) <= 4, s"near variant drifted ${ham(ha, hn)} bits")
-    assert(ham(ha, hf) > 5, s"unrelated image too close: ${ham(ha, hf)}")
-    // top-down BMP (negative height) hashes like its bottom-up twin
-    val td = a.clone()
-    // rewrite height field to -16 and reverse pixel rows
-    def p32(buf: Array[Byte], off: Int, v: Int): Unit = (0 to 3).foreach(i =>
-      buf(off + i) = ((v >> (8 * i)) & 0xFF).toByte)
-    p32(td, 22, -16)
-    val rowSize = ((16 * 3 + 3) / 4) * 4
-    (0 until 16).foreach { r =>
-      System.arraycopy(a, 54 + (16 - 1 - r) * rowSize, td, 54 + r * rowSize, rowSize)
-    }
-    assert(Multimodal.bmpDHash(td).contains(ha))
-    // non-images and truncated payloads drop out
-    assert(Multimodal.bmpDHash("BM not an image".getBytes).isEmpty)
-    assert(Multimodal.bmpDHash(a.take(60)).isEmpty)
-    // end-to-end pairing: identical (1,2), near (3), unrelated (4)
-    val bin = Seq(
-      (1L, Multimodal.syntheticBmp(1L, 16, 16)),
-      (2L, Multimodal.syntheticBmp(1L, 16, 16)),
-      (3L, Multimodal.syntheticBmp(1L, 16, 16, perturb = 42L)),
-      (4L, Multimodal.syntheticBmp(999L, 16, 16)),
-      (5L, "just text".getBytes))
-      .toDF("doc_id", "payload")
-    val pairs = Multimodal.imageNearDup(bin, maxHamming = 5)
-      .orderBy("id_a", "id_b").collect()
-    assert(pairs.map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSeq ==
-      Seq((1L, 2L), (1L, 3L), (2L, 3L)))
-    assert(pairs.head.getAs[Int]("hamming") == 0)
-  }
-
-  test("wavDHash + audioNearDup: envelope hash pairs identical and perturbed clips, not unrelated ones; imageDedupExecute keeps the minimum id") {
-    import spark.implicits._
-    import graft.multimodal.Multimodal
-    val a = Multimodal.syntheticWav(3L)
-    assert(Multimodal.wavDHash(a) == Multimodal.wavDHash(Multimodal.syntheticWav(3L)))
-    val near = Multimodal.syntheticWav(3L, perturb = 7L)
-    val far = Multimodal.syntheticWav(4L)
-    def ham(x: Long, y: Long) = java.lang.Long.bitCount(x ^ y)
-    val (ha, hn, hf) = (Multimodal.wavDHash(a).get,
-      Multimodal.wavDHash(near).get, Multimodal.wavDHash(far).get)
-    assert(ham(ha, hn) <= 4, s"perturbed clip drifted ${ham(ha, hn)} bits")
-    assert(ham(ha, hf) > 5, s"unrelated clip too close: ${ham(ha, hf)}")
-    assert(Multimodal.wavDHash("RIFFxxxxWAVEfmt not audio".getBytes).isEmpty)
-    assert(Multimodal.wavDHash(a.take(45)).isEmpty)
-    val bin = Seq(
-      (1L, Multimodal.syntheticWav(1L)),
-      (2L, Multimodal.syntheticWav(1L)),
-      (3L, Multimodal.syntheticWav(1L, perturb = 9L)),
-      (4L, Multimodal.syntheticWav(77L)))
-      .toDF("doc_id", "payload")
-    val pairs = Multimodal.audioNearDup(bin, maxHamming = 5)
-      .orderBy("id_a", "id_b").collect()
-    assert(pairs.map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSeq ==
-      Seq((1L, 2L), (1L, 3L), (2L, 3L)))
-    // executor: the image trio keeps exactly its minimum id
-    val ibin = Seq(
-      (5L, Multimodal.syntheticBmp(1L, 16, 16)),
-      (6L, Multimodal.syntheticBmp(1L, 16, 16)),
-      (7L, Multimodal.syntheticBmp(1L, 16, 16, perturb = 3L)),
-      (8L, Multimodal.syntheticBmp(50L, 16, 16)))
-      .toDF("doc_id", "payload")
-    val kept = Multimodal.imageDedupExecute(ibin, maxHamming = 5)
-      .orderBy("doc_id").collect()
-    assert(kept.map(_.getAs[Long]("doc_id")).toSeq == Seq(5L, 8L))
-    assert(kept.forall(_.getAs[String]("fingerprint").length == 16))
-    // audio executor: identical/near trio keeps min id, unrelated kept
-    val keptA = Multimodal.audioDedupExecute(bin, maxHamming = 5)
-      .orderBy("doc_id").collect()
-    assert(keptA.map(_.getAs[Long]("doc_id")).toSeq == Seq(1L, 4L))
-  }
-
-  test("wavDHash rejects a RIFF/WAVE with a LIST chunk between fmt and data instead of hashing metadata as PCM (ADVICE r12)") {
-    import graft.multimodal.Multimodal
-    val good = Multimodal.syntheticWav(7L, 2080)
-    assert(Multimodal.wavDHash(good).isDefined)
-    // splice a 12-byte LIST chunk between fmt and data
-    val listChunk = "LIST".getBytes("US-ASCII") ++
-      Array[Byte](4, 0, 0, 0) ++ "INFO".getBytes("US-ASCII")
-    val spliced = good.slice(0, 36) ++ listChunk ++ good.drop(36)
-    // fix RIFF size field (bytes 4-7, little-endian)
-    val riffSize = spliced.length - 8
-    (0 until 4).foreach(i => spliced(4 + i) = ((riffSize >> (8 * i)) & 0xFF).toByte)
-    assert(Multimodal.wavDHash(spliced).isEmpty,
-      "non-canonical chunk layout must be rejected, not mis-hashed")
-    // truncated declared data size bounds the hash window: appending
-    // trailing junk after the data chunk must not change the hash
-    val junk = good ++ Array.fill[Byte](64)(0x55)
-    assert(Multimodal.wavDHash(junk) == Multimodal.wavDHash(good),
-      "bytes beyond the declared data chunk must not reach the hash")
-  }
-
-  test("audio signature store rides incrementalSimhash: planted identical clip caught exact+near, perturbed clip caught near-only") {
-    import spark.implicits._
-    import graft.multimodal.Multimodal
-    import graft.operators.Dedup
-    val known = (0L until 40L).map(i =>
-      (i, Multimodal.syntheticWav(i / 4L, 2080)))
-      .toDF("doc_id", "payload")
-    // 100: byte-identical re-ingest of clip 0; 101: level-local edit of
-    // clip 0 (perturb ≠ 0 zeroes one 32-sample region)
-    val batch = Seq(
-      (100L, Multimodal.syntheticWav(0L, 2080)),
-      (101L, Multimodal.syntheticWav(0L, 2080, perturb = 9L)),
-      (102L, Multimodal.syntheticWav(999L, 2080)))
-      .toDF("doc_id", "payload")
-    val out = Dedup.incrementalSimhash(
-      Multimodal.audioDedupState(batch),
-      Multimodal.audioDedupState(known),
-      maxHamming = 5, expectedItems = Some(40L))
-      .collect().map(r => r.getLong(0) ->
-        ((r.getBoolean(1), r.getBoolean(2)))).toMap
-    assert(out(100L) == ((true, true)), s"identical clip: ${out(100L)}")
-    assert(out(101L) == ((false, true)), s"perturbed clip: ${out(101L)}")
-    assert(out(102L) == ((false, false)), s"fresh clip: ${out(102L)}")
-  }
 }
 
 class PiiSpec extends SparkSuite {
