@@ -34,7 +34,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Implemented as a native [[TypedImperativeAggregate]] (ObjectHashAggregate
   * with the live summary as the buffer, serialization only at shuffle
-  * boundaries — the KllAggs pattern). The compress step subtracts the
+  * boundaries — the plan shape of Spark's `kll_sketch_agg_double`). Not
+  * Spark's `approx_top_k`: its DataSketches frequent-items estimates may
+  * overcount, and the guarantees above need Misra–Gries's never-overcount
+  * summary. The compress step subtracts the
   * (k+1)-th largest count from every counter and drops the non-positive
   * (for a single overflow insert that is the classic decrement; for a
   * merge of two summaries it is the mergeable-summaries step), removing

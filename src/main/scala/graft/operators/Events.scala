@@ -240,8 +240,8 @@ object Events {
     * delta buffer (∝ converters in ONE task) becomes a grouped KLL
     * sketch aggregation with k-bounded state, and p50/p90 are CDF reads
     * off each transition's sketch via the distributed
-    * `graft_kll_quantiles` scalar — the relation never leaves the
-    * executors un-reduced and no group buffers more than sketch bytes.
+    * `kll_sketch_get_quantile_double` scalar — the relation never leaves
+    * the executors un-reduced and no group buffers more than sketch bytes.
     * Reported quantiles are TRUE delta values at rank p ± ε
     * (`rank_eps`, 99% confidence). Randomized compaction → no hash
     * oracle; `time_to_convert_audit` pins counts by equality and
@@ -255,17 +255,15 @@ object Events {
     require(stages.size >= 2, "need at least two stages for a transition")
     val spark = events.sparkSession
     import spark.implicits._
-    graft.functions.KllAggs.register(spark)
-    val eps = math.rint(org.apache.datasketches.kll.KllDoublesSketch
-      .newHeapInstance(graft.functions.KllAggs.K)
-      .getNormalizedRankError(false) * 1e6) / 1e6
+    // rank error of the built-in's default k = 200
+    val eps = math.rint(org.apache.datasketches.kll.KllSketch
+      .getNormalizedRankError(200, false) * 1e6) / 1e6
     val deltas = convertDeltas(events, userCol, tsCol, typeCol, stages)
     val agg = deltas.groupBy("i").agg(
       count(lit(1)).as("n_users"),
-      graft.functions.KllAggs.kllSketchAgg(col("delta_s")).as("sk"))
+      kll_sketch_agg_double(col("delta_s")).as("sk"))
       .select(col("i"), col("n_users"),
-        call_function("graft_kll_quantiles", col("sk"),
-          array(lit(0.5), lit(0.9))).as("q"))
+        kll_sketch_get_quantile_double(col("sk"), array(lit(0.5), lit(0.9))).as("q"))
       .select(col("i"), col("n_users"),
         round(element_at(col("q"), 1), 6).as("p50_s"),
         round(element_at(col("q"), 2), 6).as("p90_s"))
@@ -675,7 +673,6 @@ object Events {
     import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
     val spark = events.sparkSession
     import spark.implicits._
-    graft.functions.KllAggs.register(spark)
     val gaps = gapRelation(events, userCol, tsUsCol, tieCol)
     val row = gaps.agg(
       count(lit(1)).as("n_gaps"),
@@ -683,8 +680,7 @@ object Events {
       min(col("gap_us")).as("min_gap_us"),
       max(col("gap_us")).as("max_gap_us"),
       sum(col("gap_us")).as("sum_gap_us"),
-      graft.functions.KllAggs.kllSketchAgg(col("gap_us").cast(DoubleType))
-        .as("sk")).head()
+      kll_sketch_agg_double(col("gap_us").cast(DoubleType)).as("sk")).head()
     val nGaps = row.getAs[Long]("n_gaps")
     def r6(v: Double): Double = math.rint(v * 1e6) / 1e6
     if (nGaps == 0L) {
@@ -831,7 +827,6 @@ object Events {
     import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
     val spark = sessions.sparkSession
     import spark.implicits._
-    graft.functions.KllAggs.register(spark)
     val row = sessions.agg(
       count(lit(1)).as("n_sessions"),
       countDistinct(col(userCol)).as("n_users"),
@@ -839,8 +834,7 @@ object Events {
         .as("n_single_event"),
       sum(col("n_events")).as("tot_events"),
       sum(col("duration_us")).as("tot_duration_us"),
-      graft.functions.KllAggs
-        .kllSketchAgg(col("duration_us").cast(DoubleType)).as("sk")).head()
+      kll_sketch_agg_double(col("duration_us").cast(DoubleType)).as("sk")).head()
     val n = row.getAs[Long]("n_sessions")
     def r6(v: Double): Double = math.rint(v * 1e6) / 1e6
     if (n == 0L) {

@@ -477,7 +477,6 @@ object Checks {
     import org.apache.datasketches.memory.Memory
     import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
     val spark = before.sparkSession
-    graft.functions.KllAggs.register(spark)
     def side(df: org.apache.spark.sql.DataFrame, tag: Int) = df
       .select(col(valueCol).cast(DoubleType).as("v"))
       .where(col("v").isNotNull)
@@ -485,15 +484,16 @@ object Checks {
     val rows = side(before, 0).unionAll(side(after, 1))
       .groupBy("side")
       .agg(
-        graft.functions.KllAggs.kllSketchAgg(col("v")).as("kll"),
+        kll_sketch_agg_double(col("v")).as("kll"),
         count(lit(1)).as("n"))
       .collect()
       .map(r => r.getInt(0) -> ((r.getAs[Array[Byte]]("kll"), r.getLong(2))))
       .toMap
     import spark.implicits._
+    // the sketch skips NaN: an all-NaN side is as empty as a missing one
     def sk(tag: Int): Option[(KllDoublesSketch, Long)] = rows.get(tag).map {
       case (bytes, n) => (KllDoublesSketch.heapify(Memory.wrap(bytes)), n)
-    }
+    }.filterNot(_._1.isEmpty)
     (sk(0), sk(1)) match {
       case (Some((sa, na)), Some((sb, nb))) =>
         val cand = (sa.getSortedView.getQuantiles ++ sb.getSortedView.getQuantiles)
@@ -505,7 +505,8 @@ object Checks {
           math.rint(d * 1e6) / 1e6, math.rint(eps * 1e6) / 1e6))
           .toDF("n_a", "n_b", "n_candidates", "ks_d_approx", "rank_eps")
       case _ =>
-        // one or both sides empty: no distribution to compare
+        // one or both sides without a non-NaN value: no distribution to
+        // compare (n still counts every non-null value, NaN included)
         Seq((rows.get(0).map(_._2).getOrElse(0L),
           rows.get(1).map(_._2).getOrElse(0L), 0L))
           .toDF("n_a", "n_b", "n_candidates")

@@ -223,9 +223,10 @@ object Correlation {
       pairs: Seq[(String, String)],
       k: Int = 1024): DataFrame = {
     require(pairs.nonEmpty, "need at least one column pair")
+    import org.apache.datasketches.kll.KllDoublesSketch
+    import org.apache.datasketches.memory.Memory
     val spark = dfIn.sparkSession
     import spark.implicits._
-    graft.functions.KllAggs.register(spark)
     graft.functions.SortedCdfOps.register(spark)
     val df = ScanMetrics.spread(dfIn)
 
@@ -235,15 +236,15 @@ object Correlation {
     // pass 1: pairwise-complete sketches, all pairs in one aggregation
     val sketchAggs = pairs.zipWithIndex.flatMap { case ((a, b), i) =>
       Seq(
-        graft.functions.KllAggs.kllSketchAgg(
-          completeCase(a, b)(col(a).cast(DoubleType))).as(s"ska_$i"),
-        graft.functions.KllAggs.kllSketchAgg(
-          completeCase(a, b)(col(b).cast(DoubleType))).as(s"skb_$i"))
+        kll_sketch_agg_double(completeCase(a, b)(col(a).cast(DoubleType))).as(s"ska_$i"),
+        kll_sketch_agg_double(completeCase(a, b)(col(b).cast(DoubleType))).as(s"skb_$i"))
     }
     val sketchRow = df.agg(sketchAggs.head, sketchAggs.tail: _*).head()
     val ps = (1 to k).map(i => i.toDouble / (k + 1))
-    def splitsOf(bytes: Array[Byte]): Option[Seq[Double]] =
-      graft.functions.KllAggs.quantiles(bytes, ps)
+    def splitsOf(bytes: Array[Byte]): Option[Seq[Double]] = {
+      val sk = KllDoublesSketch.heapify(Memory.wrap(bytes))
+      if (sk.isEmpty) None else Some(ps.map(p => sk.getQuantile(p)))
+    }
 
     // pass 2: per-pair double Pearson moments over mid-rank lookups
     val momentAggs = pairs.zipWithIndex.flatMap { case ((a, b), i) =>

@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * State per numeric column:
   * `(instance, n, nn, dec_sum, oor, dec_sum_sq, oor_sq, mn, mx, hll, kll)`
   * — every field merges associatively (sums, min/max, Apache DataSketches
-  * HLL union via `hll_union_agg`, KLL quantile-sketch merge via
-  * [[graft.functions.KllAggs]]). A year of daily 300 GB snapshots merges
+  * HLL union via `hll_union_agg`, DataSketches KLL quantile-sketch merge
+  * via `kll_merge_agg_double`). A year of daily 300 GB snapshots merges
   * in milliseconds; the reference (and Deequ 1.0.2) must rescan the table.
   * The state covers the full mergeable half of the scan battery — Size,
   * Completeness, Sum, Mean, StandardDeviation, Minimum, Maximum exactly,
@@ -37,7 +37,6 @@ object IncrementalProfiler {
     * instance (and segment) — a single shuffle of partial states: the
     * [[ColumnState]] fields plus this path's mergeable sketches. */
   private def snapshotKeyed(df: DataFrame, seg: Option[String]): DataFrame = {
-    graft.functions.KllAggs.register(df.sparkSession)
     val cols = df.schema.fields
       .filter(f => ColumnClass.of(f.dataType) == ColumnClass.Numeric)
       .map(_.name).toSeq.filterNot(seg.contains)
@@ -48,9 +47,10 @@ object IncrementalProfiler {
       // DataSketches HLL takes int/long/string/binary only; the string
       // form of a double is injective, so distinct counts are preserved
       hll_sketch_agg(col("v").cast("string")).as("hll"),
-      // mergeable KLL quantile sketch — percentile_approx buffers cannot
-      // be persisted across batches; this can (see KllAggs)
-      graft.functions.KllAggs.kllSketchAgg(col("v")).as("kll"))
+      // mergeable KLL quantile sketch (k = 200, ~1.65% rank error) —
+      // percentile_approx buffers cannot be persisted across batches;
+      // serialized KLL bytes can, and merge with bounded error
+      kll_sketch_agg_double(col("v")).as("kll"))
     // single-row-group sources serialize the stack+partial phase — see
     // ScanMetrics.spread; all state fields are order-independent
     ScanMetrics.spread(df)
@@ -79,7 +79,6 @@ object IncrementalProfiler {
     * nn > 0) poisons the merged total to null rather than being silently
     * skipped by `sum`'s null-ignoring semantics. */
   private def mergeKeyed(states: Seq[DataFrame], keys: Seq[String]): DataFrame = {
-    states.foreach(s => graft.functions.KllAggs.register(s.sparkSession))
     val aggs = Seq(
       sum(col("n")).as("n"),
       sum(col("nn")).as("nn"),
@@ -92,7 +91,7 @@ object IncrementalProfiler {
       min(col("mn")).as("mn"),
       max(col("mx")).as("mx"),
       hll_union_agg(col("hll")).as("hll"),
-      graft.functions.KllAggs.kllMergeAgg(col("kll")).as("kll"))
+      kll_merge_agg_double(col("kll")).as("kll"))
     states.reduce(_ unionByName _)
       .groupBy(keys.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
@@ -117,6 +116,7 @@ object IncrementalProfiler {
   private def metricsKeyed(
       state: DataFrame, quantiles: Int, segmented: Boolean): DataFrame = {
     import org.apache.datasketches.hll.HllSketch
+    import org.apache.datasketches.kll.KllDoublesSketch
     import org.apache.datasketches.memory.Memory
     val ps = ScanMetrics.quantilePs(quantiles)
     val rows = Seq.newBuilder[(String, String, String, Double)]
@@ -134,13 +134,13 @@ object IncrementalProfiler {
         rows += ((seg, inst, MetricNames.ApproxCountDistinct,
           Math.round(HllSketch.heapify(Memory.wrap(b)).getEstimate).toDouble))
       }
-      bytes("kll").foreach { b =>
-        graft.functions.KllAggs.quantiles(b, ps).foreach { qs =>
-          ps.zip(qs).foreach { case (p, q) =>
-            rows += ((seg, inst, MetricNames.approxQuantile(p), q))
+      bytes("kll").map(b => KllDoublesSketch.heapify(Memory.wrap(b)))
+        .filterNot(_.isEmpty).foreach { sk =>
+          // inclusive ranks, the sketch's default search criterion
+          ps.foreach { p =>
+            rows += ((seg, inst, MetricNames.approxQuantile(p), sk.getQuantile(p)))
           }
         }
-      }
     }
     maxN.foreach { case (seg, n) => rows += ((seg, "*", MetricNames.Size, n.toDouble)) }
     state.sparkSession.createDataFrame(rows.result())

@@ -125,19 +125,16 @@ object RobustStats {
     import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
     val spark = df.sparkSession
     import spark.implicits._
-    graft.functions.KllAggs.register(spark)
     val src = ScanMetrics.spread(df.select(cols.map(col): _*)) // §2.3 projection (r17)
-    val skAggs = cols.flatMap { c => Seq(
-      graft.functions.KllAggs.kllSketchAgg(col(c).cast(DoubleType))
-        .as(s"k_$c"),
-      count(col(c)).as(s"cnt_$c")) }
+    val skAggs = cols.map(c => kll_sketch_agg_double(col(c).cast(DoubleType)).as(s"k_$c"))
     val skRow = src.agg(skAggs.head, skAggs.tail: _*).head()
     val inc = QuantileSearchCriteria.INCLUSIVE
+    // the sketch skips NaN as well as null: an all-NaN column has no
+    // bounds, exactly like an all-null one
     val bounds: Seq[(String, (Double, Double, Double))] = cols.flatMap { c =>
-      if (skRow.getAs[Long](s"cnt_$c") == 0L) None
+      val sk = KllDoublesSketch.heapify(Memory.wrap(skRow.getAs[Array[Byte]](s"k_$c")))
+      if (sk.isEmpty) None
       else {
-        val sk = KllDoublesSketch.heapify(
-          Memory.wrap(skRow.getAs[Array[Byte]](s"k_$c")))
         val q = sk.getQuantiles(Array(pLo, pHi), inc)
         Some(c -> ((q(0), q(1), sk.getNormalizedRankError(false))))
       }
@@ -255,10 +252,8 @@ object RobustStats {
     import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
     val spark = df.sparkSession
     import spark.implicits._
-    graft.functions.KllAggs.register(spark)
     val aggs = cols.flatMap { c => Seq(
-      graft.functions.KllAggs.kllSketchAgg(col(c).cast(DoubleType))
-        .as(s"k_$c"),
+      kll_sketch_agg_double(col(c).cast(DoubleType)).as(s"k_$c"),
       count(col(c)).as(s"n_$c")) }
     val row = ScanMetrics.spread(df.select(cols.map(col): _*))
       .agg(aggs.head, aggs.tail: _*).head()
@@ -267,13 +262,13 @@ object RobustStats {
     def r6(v: Double): Double = math.rint(v * 1e6) / 1e6
     cols.map { c =>
       val n = row.getAs[Long](s"n_$c")
-      if (n == 0L)
+      val sk = KllDoublesSketch.heapify(Memory.wrap(row.getAs[Array[Byte]](s"k_$c")))
+      // empty sketch: all null or all NaN (the sketch skips both)
+      if (sk.isEmpty)
         (c, Option.empty[Double], Option.empty[Double],
           Option.empty[Double], Option.empty[Double], 0L, 0L,
           Option.empty[Double])
       else {
-        val sk = KllDoublesSketch.heapify(
-          Memory.wrap(row.getAs[Array[Byte]](s"k_$c")))
         val q = sk.getQuantiles(Array(0.25, 0.75), inc)
         val (q1, q3) = (q(0), q(1))
         val (lo, hi) = (q1 - 1.5 * (q3 - q1), q3 + 1.5 * (q3 - q1))
@@ -375,7 +370,8 @@ object RobustStats {
     * values at rank 0.5 ± ε, tail counts are within ε·n. KLL compaction
     * is randomized → no hash oracle; `mad_outliers_audit` pins every
     * bound against the exact twin. Schema mirrors [[madOutliers]]
-    * (+ rank_eps); all-null columns yield null stats and zero counts. */
+    * (+ rank_eps); all-null and all-NaN columns yield null stats and
+    * zero counts. */
   def madOutliersApprox(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "madOutliersApprox needs at least one column")
     import org.apache.datasketches.kll.KllDoublesSketch
@@ -383,11 +379,10 @@ object RobustStats {
     import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
     val spark = df.sparkSession
     import spark.implicits._
-    graft.functions.KllAggs.register(spark)
     val src = ScanMetrics.spread(df.select(cols.map(col): _*)) // §2.3 projection (r17)
     def sketchPass(exprs: Seq[(String, Column)]): Map[String, (KllDoublesSketch, Long)] = {
       val aggs = exprs.flatMap { case (name, e) => Seq(
-        graft.functions.KllAggs.kllSketchAgg(e).as(s"k_$name"),
+        kll_sketch_agg_double(e).as(s"k_$name"),
         count(e).as(s"n_$name")) }
       val row = src.agg(aggs.head, aggs.tail: _*).head()
       exprs.map { case (name, _) =>
@@ -399,9 +394,10 @@ object RobustStats {
     val inc = QuantileSearchCriteria.INCLUSIVE
     val exc = QuantileSearchCriteria.EXCLUSIVE
     val xs = sketchPass(cols.map(c => c -> col(c).cast(DoubleType)))
+    // an empty sketch (all null or all NaN) has no median
     val med: Map[String, Option[Double]] = cols.map { c =>
-      val (sk, n) = xs(c)
-      c -> (if (n == 0L) None else Some(sk.getQuantile(0.5, inc)))
+      val (sk, _) = xs(c)
+      c -> (if (sk.isEmpty) None else Some(sk.getQuantile(0.5, inc)))
     }.toMap
     val devCols = cols.flatMap(c => med(c).map(m =>
       c -> abs(col(c).cast(DoubleType) - lit(m))))
@@ -494,7 +490,7 @@ object RobustStats {
     * is bounded by per-group DISTINCT values — right for metadata-sized
     * value domains (lengths, scores). At 100 TB with adversarial group
     * counts the documented scale path is the same battery over KLL
-    * sketches (graft_kll_merge_agg, E19) — approximate per-group
+    * sketches (`kll_sketch_agg_double`, E19) — approximate per-group
     * quantiles, this exact pass as the spot-verifier. Null group values
     * form their own group; null values are ignored by both engines'
     * quantile aggregates. */
@@ -511,14 +507,15 @@ object RobustStats {
 
   /** [[groupedQuantiles]]' 100 TB mode (E82, r8) — the documented scale
     * path made a declared operator: per-group KLL sketches
-    * (graft_kll_sketch_agg, the E19 mergeable state) instead of exact
+    * (`kll_sketch_agg_double`, the E19 mergeable state) instead of exact
     * per-group value buffers, so per-group memory is the fixed ~3 KB
     * sketch regardless of group size or value cardinality, and the
     * estimates are extracted WHERE THE GROUP ROWS SIT by the
-    * graft_kll_quantiles scalar (no driver collect — adversarial group
-    * counts never funnel through one node). One groupBy pass, identical
-    * output schema to the exact twin; values are approximate (KLL
-    * ~1.65% rank error) → no hash oracle, `grouped_quantiles_audit`
+    * `kll_sketch_get_quantile_double` scalar (no driver collect —
+    * adversarial group counts never funnel through one node; an
+    * all-null group reports n 0 and null quantiles). One groupBy pass,
+    * identical output schema to the exact twin; values are approximate
+    * (KLL ~1.65% rank error) → no hash oracle, `grouped_quantiles_audit`
     * pins the per-group rank bound against the data and the group/count
     * parity against the exact twin. */
   def groupedQuantilesApprox(
@@ -526,14 +523,13 @@ object RobustStats {
       ps: Seq[Double]): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p >= 0 && p <= 1),
       "percentiles must be in [0, 1]")
-    graft.functions.KllAggs.register(df.sparkSession)
     df.groupBy(col(groupCol))
       .agg(
         count(col(valueCol)).as("n"),
-        graft.functions.KllAggs.kllSketchAgg(
-          col(valueCol).cast(DoubleType)).as("_sk"))
-      .withColumn("_qs", call_function("graft_kll_quantiles",
-        col("_sk"), lit(ps.toArray)))
+        kll_sketch_agg_double(col(valueCol).cast(DoubleType)).as("_sk"))
+      // an empty sketch (all-null group) has no quantiles: null, not an error
+      .withColumn("_qs", when(kll_sketch_get_n_double(col("_sk")) > 0,
+        kll_sketch_get_quantile_double(col("_sk"), lit(ps.toArray))))
       .select(col(groupCol) +: col("n") +: ps.zipWithIndex.map {
         case (p, i) =>
           round(element_at(col("_qs"), i + 1), 6).as(s"p${(p * 100).round}")

@@ -55,6 +55,32 @@ class IncrementalSpec extends SparkSuite {
     }
   }
 
+  test("a KLL state serialized from a DataSketches heap sketch still merges") {
+    import org.apache.datasketches.kll.KllDoublesSketch
+    import org.apache.datasketches.memory.Memory
+    import spark.implicits._
+    // snapshots persisted before the built-in KLL aggregate carried the
+    // bytes of an updated k = 200 heap sketch
+    val older = (1 to 1000).map(_.toDouble)
+    val newer = (1001 to 3000).map(_.toDouble)
+    val heap = KllDoublesSketch.newHeapInstance(200)
+    older.foreach(v => heap.update(v))
+    val persisted = IncrementalProfiler.snapshot(older.toDF("x"))
+      .withColumn("kll", lit(heap.toByteArray))
+    val merged = IncrementalProfiler.merge(
+      Seq(persisted, IncrementalProfiler.snapshot(newer.toDF("x"))))
+    val sk = KllDoublesSketch.heapify(Memory.wrap(merged.head().getAs[Array[Byte]]("kll")))
+    assert(sk.getN == 3000L)
+    // values are 1..3000, so a value's exact inclusive rank is value / 3000
+    val eps = sk.getNormalizedRankError(false)
+    val ps = graft.profiler.ScanMetrics.quantilePs(10)
+    val est = metricMap(IncrementalProfiler.metrics(merged))
+    ps.foreach { p =>
+      val q = est(("x", s"ApproxQuantiles-$p"))
+      assert(math.abs(q / 3000 - p) <= eps, s"p=$p est=$q eps=$eps")
+    }
+  }
+
   test("scan battery and incremental snapshot derive bit-identical exact metrics") {
     import spark.implicits._
     val fams = Set("size", "completeness", "minimum", "maximum", "mean", "sum", "stddev_pop")

@@ -412,18 +412,15 @@ class PlanAuditSpec extends SparkSuite {
     // exact aggregate iqrOutliersApprox / winsorizedStatsApprox /
     // madOutliersApprox submit per column (they then collect the k-bounded
     // sketch bytes — the R14 metadata-sized collect).
-    graft.functions.KllAggs.register(spark)
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
     val pass = graft.profiler.ScanMetrics.spread(li).agg(
-      graft.functions.KllAggs.kllSketchAgg(col("l_quantity").cast("double"))
-        .as("k_q"),
+      kll_sketch_agg_double(col("l_quantity").cast("double")).as("k_q"),
       count(col("l_quantity")).as("n_q"),
-      graft.functions.KllAggs.kllSketchAgg(
-        col("l_extendedprice").cast("double")).as("k_p"),
+      kll_sketch_agg_double(col("l_extendedprice").cast("double")).as("k_p"),
       count(col("l_extendedprice")).as("n_p"))
     val p = plan(pass)
     assert(p.contains("ObjectHashAggregate"), s"\n$p")
-    assert(p.contains("partial_graft_kll_sketch_agg"),
+    assert(p.contains("partial_kll_sketch_agg_double"),
       s"sketch aggregate lost its map-side partial phase:\n$p")
     assert(!p.contains("percentile"), s"exact percentile crept back in:\n$p")
     assert(!p.contains("Window") && !p.contains("Sort "),

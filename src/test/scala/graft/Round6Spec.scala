@@ -1211,6 +1211,12 @@ class Round6Spec extends SparkSuite {
     val r = graft.profiler.Checks.ksDriftApprox(before, after, "v").head()
     assert(r.getLong(0) == 5L && r.getLong(1) == 0L)
     assert(r.isNullAt(3) && r.isNullAt(4))
+    // an all-NaN side has no value the sketch keeps: the same empty-side
+    // branch, with n still counting its non-null rows (as ksDrift does)
+    val nans = Seq.fill(50)(Double.NaN).toDF("v")
+    val rn = graft.profiler.Checks.ksDriftApprox(before, nans, "v").head()
+    assert(rn.getLong(0) == 5L && rn.getLong(1) == 50L && rn.getLong(2) == 0L)
+    assert(rn.isNullAt(3) && rn.isNullAt(4))
   }
 
   test("functionalDependencies: g3 violations, perfect FD, null-lhs group") {

@@ -22,12 +22,16 @@ class Round9Spec extends SparkSuite {
     assert(i.getDouble(1) == 26.0 && i.getDouble(2) == 77.0)  // q1, q3
     assert(i.getAs[Long]("n_below") == 0L)
     assert(i.getAs[Long]("n_above") == 2L)
-    // all-null column: null stats, zero counts (mirrors the exact twins)
+    // all-null and all-NaN columns (the sketch skips both): null stats,
+    // zero counts (mirrors the exact twins)
     val nulls = Seq.fill(5)(Option.empty[Double]).toDF("x")
-    val nm = graft.profiler.RobustStats.madOutliersApprox(nulls, Seq("x")).head()
-    assert(nm.isNullAt(1) && nm.getAs[Long]("n_above") == 0L)
-    val ni = graft.profiler.RobustStats.iqrOutliersApprox(nulls, Seq("x")).head()
-    assert(ni.isNullAt(1) && ni.getAs[Long]("n_below") == 0L)
+    val nans = Seq.fill(50)(Double.NaN).toDF("x")
+    for (empty <- Seq(nulls, nans)) {
+      val nm = graft.profiler.RobustStats.madOutliersApprox(empty, Seq("x")).head()
+      assert(nm.isNullAt(1) && nm.getAs[Long]("n_above") == 0L)
+      val ni = graft.profiler.RobustStats.iqrOutliersApprox(empty, Seq("x")).head()
+      assert(ni.isNullAt(1) && ni.getAs[Long]("n_below") == 0L)
+    }
   }
 
   test("corpus_card: the one-row summary matches hand-computed facts on a tiny corpus") {
@@ -264,10 +268,12 @@ class Round9Spec extends SparkSuite {
     assert(rows("WinsorizedClipped-0.01-0.99") == 1.0)  // only 100 clips
     assert(rows("WinsorizedMean-0.01-0.99") == 50.49)   // (5050-1)/100
     assert(rows.contains("WinsorizedRankEps"))
-    // all-null column contributes no rows (mirrors the exact twin)
+    // all-null and all-NaN columns contribute no rows (mirrors the exact twin)
     val nulls = Seq.fill(3)(Option.empty[Double]).toDF("x")
-    assert(graft.profiler.RobustStats
-      .winsorizedStatsApprox(nulls, Seq("x")).count() == 0L)
+    val nans = Seq.fill(50)(Double.NaN).toDF("x")
+    for (empty <- Seq(nulls, nans))
+      assert(graft.profiler.RobustStats
+        .winsorizedStatsApprox(empty, Seq("x")).count() == 0L)
   }
 
   test("ksDrift: distinct-value window is guarded — oversize input raises, bounded input unchanged") {
